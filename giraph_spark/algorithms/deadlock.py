@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.algorithms.paths import bfs
-from giraph_spark.pregel import PregelRun, _checkpointed_jrdd
+from giraph_spark.pregel import LineageCuts, PregelRun
 
 
 def bracha_toueg_free(
@@ -107,9 +107,10 @@ def bracha_toueg_free(
     )
     frontier = free
     remaining = group_sizes.repartition(num_partitions, "src").persist()
+    free0, remaining0 = free, remaining  # round-0 caches, dropped at the end
     supersteps = 0
     converged = False
-    cuts: list[DataFrame] = []
+    cuts = LineageCuts()
     # ONE action per round: |free| is materialized anyway, and the frontier
     # size is its delta from the previous round — no separate count job
     free_count = free.count()
@@ -125,45 +126,34 @@ def bracha_toueg_free(
             .groupBy("src", "tag")
             .agg(F.count(F.lit(1)).alias("granted"))
         )
-        new_remaining = (
-            remaining.join(grants, ["src", "tag"], "left")
-            .select(
-                "src",
-                "tag",
-                (F.col("remaining") - F.coalesce("granted", F.lit(0))).alias("remaining"),
-            )
-        )
-        # a vertex unblocks when ANY of its groups is fully granted
-        unblocked = (
-            new_remaining.where(F.col("remaining") <= 0)
-            .select(F.col("src").alias("id"))
-            .distinct()
-        )
         # every round: cut lineage on all three carried DataFrames — the
         # free/frontier/remaining plans reference EACH OTHER across rounds
         # (branching factor 2), so un-cut growth is exponential in the
-        # round count; the cut tables are tiny (<=|V| + |groups| rows)
-        new_frontier = unblocked.join(free, "id", "left_anti").localCheckpoint(
-            eager=True
+        # round count; the cut tables are tiny (<=|V| + |groups| rows).
+        # Each cut frees its slot's previous round, so the order matters:
+        # remaining reads the old frontier, the frontier reads the old free
+        remaining = cuts.cut(
+            remaining.join(grants, ["src", "tag"], "left").select(
+                "src",
+                "tag",
+                (F.col("remaining") - F.coalesce("granted", F.lit(0))).alias("remaining"),
+            ),
+            "remaining",
         )
-        new_remaining_cut = new_remaining.localCheckpoint(eager=True)
+        # a vertex unblocks when ANY of its groups is fully granted
+        unblocked = (
+            remaining.where(F.col("remaining") <= 0)
+            .select(F.col("src").alias("id"))
+            .distinct()
+        )
+        frontier = cuts.cut(unblocked.join(free, "id", "left_anti"), "frontier")
         # coalesce: the narrow union SUMS partition counts, so the free
         # accumulator would otherwise widen every round (no-op while
         # within num_partitions)
-        new_free = (
-            free.union(new_frontier).coalesce(num_partitions).localCheckpoint(eager=True)
-        )
-        new_count = new_free.count()
+        free = cuts.cut(free.union(frontier).coalesce(num_partitions), "free")
+        new_count = free.count()
         frontier_count = new_count - free_count
         free_count = new_count
-        remaining.unpersist()
-        # release the blocks of the PREVIOUS round's cuts (superseded now)
-        for df in cuts:
-            jrdd = _checkpointed_jrdd(df)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-        cuts = [new_frontier, new_remaining_cut, new_free]
-        free, frontier, remaining = new_free, new_frontier, new_remaining_cut
 
     result = verts.join(
         free.withColumn("is_free", F.lit(True)), "id", "left"
@@ -172,11 +162,9 @@ def bracha_toueg_free(
     # and the round-0 persisted frames are released below, so the result
     # must not depend on them for recompute
     result = result.localCheckpoint(eager=True)
-    for df in cuts:  # final round's cuts, superseded by the result cut
-        jrdd = _checkpointed_jrdd(df)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-    for df in (verts, notified, en, free, remaining):
+    for slot in ("remaining", "frontier", "free"):
+        cuts.release(slot)
+    for df in (verts, notified, en, free0, remaining0):
         df.unpersist()
     return PregelRun(vertices=result, supersteps=supersteps, converged=converged)
 

@@ -571,7 +571,7 @@ def _trussness_peel(
             _t0 = time.time()
             # lazy cut + ONE agg that both materializes the frontier's
             # checkpoint blocks and counts total + support>0 rows (the
-            # step_precut idiom — saves the separate eager-cut job)
+            # superstep loop's lazy-cut idiom — saves an eager-cut job)
             removed = sup.where(F.col("support") < k - 2).select(
                 "u", "v", "support"
             ).localCheckpoint(eager=False)

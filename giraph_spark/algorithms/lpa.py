@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, run_supersteps
+from giraph_spark.pregel import PregelRun, run_supersteps, temp_views
 
 
 def label_propagation(
@@ -104,88 +104,81 @@ def label_propagation(
     # two-stage mode (count per (dst, label), map-side combined, then
     # max_by argmax with the deterministic smaller-label tie-break) and
     # every join-strategy hint carry over verbatim.
-    import uuid
+    with temp_views(spark, "lpa", "edges", "edges_dst", "state", "new") as (
+        ev, edv, sv, nv
+    ):
+        e.createOrReplaceTempView(ev)
+        vote_expr = "sum(j._w)" if weight_col is not None else "count(1)"
+        wcol = ", ve._w AS _w" if weight_col is not None else ""
+        wcol_full = ", e._w AS _w" if weight_col is not None else ""
 
-    uid = uuid.uuid4().hex[:8]
-    ev, edv, sv, nv = (
-        f"lpa_edges_{uid}",
-        f"lpa_edges_dst_{uid}",
-        f"lpa_state_{uid}",
-        f"lpa_new_{uid}",
-    )
-    e.createOrReplaceTempView(ev)
-    vote_expr = "sum(j._w)" if weight_col is not None else "count(1)"
-    wcol = ", ve._w AS _w" if weight_col is not None else ""
-    wcol_full = ", e._w AS _w" if weight_col is not None else ""
+        def _tail_sql(source_cte: str) -> str:
+            return f"""c AS (
+            SELECT dst, label, {vote_expr.replace('j.', '')} AS cnt
+            FROM {source_cte} GROUP BY dst, label
+          ),
+          m AS (
+            SELECT dst, max_by(label, struct(cnt, -label)) AS new_label
+            FROM c GROUP BY dst
+          )
+          SELECT /*+ SHUFFLE_HASH(m) */ v.id,
+                 coalesce(m.new_label, v.label) AS label,
+                 (coalesce(m.new_label, v.label) != v.label) AS _changed
+          FROM {sv} v LEFT JOIN m ON v.id = m.dst"""
 
-    def _tail_sql(source_cte: str) -> str:
-        return f"""c AS (
-        SELECT dst, label, {vote_expr.replace('j.', '')} AS cnt
-        FROM {source_cte} GROUP BY dst, label
-      ),
-      m AS (
-        SELECT dst, max_by(label, struct(cnt, -label)) AS new_label
-        FROM c GROUP BY dst
-      )
-      SELECT /*+ SHUFFLE_HASH(m) */ v.id,
-             coalesce(m.new_label, v.label) AS label,
-             (coalesce(m.new_label, v.label) != v.label) AS _changed
-      FROM {sv} v LEFT JOIN m ON v.id = m.dst"""
-
-    full_sql = f"""WITH j AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.label AS label{wcol_full}
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-      ),
-      """ + _tail_sql("j")
-    # incremental: frontier = vertices whose label changed last round;
-    # affected dsts = their out-neighborhood (frontier shuffled to the
-    # cached src-partitioned table — O(frontier)); votes recounted only
-    # for edges INTO affected dsts via a semi-join against the
-    # dst-partitioned copy (affected shuffled, edges stay put)
-    incr_sql = f"""WITH ch AS (SELECT id AS src FROM {sv} WHERE _changed),
-      aff AS (
-        SELECT /*+ SHUFFLE_HASH(ch) */ DISTINCT e.dst AS dst
-        FROM {ev} e JOIN ch ON e.src = ch.src
-      ),
-      ve AS (
-        SELECT /*+ SHUFFLE_HASH(aff) */ ed.*
-        FROM {edv} ed LEFT SEMI JOIN aff ON ed.dst = aff.dst
-      ),
-      j AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ ve.dst AS dst, v.label AS label{wcol}
-        FROM ve JOIN {sv} v ON ve.src = v.id
-      ),
-      """ + _tail_sql("j")
-    agg_sql = (
-        f"SELECT sum(CASE WHEN _changed THEN 1 ELSE 0 END) AS c, "
-        f"count(1) AS n FROM {nv}"
-    )
-
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        prev_changed = box["changed"]
-        use_incr = (
-            incremental_threshold is not None
-            and prev_changed is not None
-            and box["n"] is not None
-            and 0 < prev_changed <= incremental_threshold * box["n"]
+        full_sql = f"""WITH j AS (
+            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.label AS label{wcol_full}
+            FROM {ev} e JOIN {sv} v ON e.src = v.id
+          ),
+          """ + _tail_sql("j")
+        # incremental: frontier = vertices whose label changed last round;
+        # affected dsts = their out-neighborhood (frontier shuffled to the
+        # cached src-partitioned table — O(frontier)); votes recounted only
+        # for edges INTO affected dsts via a semi-join against the
+        # dst-partitioned copy (affected shuffled, edges stay put)
+        incr_sql = f"""WITH ch AS (SELECT id AS src FROM {sv} WHERE _changed),
+          aff AS (
+            SELECT /*+ SHUFFLE_HASH(ch) */ DISTINCT e.dst AS dst
+            FROM {ev} e JOIN ch ON e.src = ch.src
+          ),
+          ve AS (
+            SELECT /*+ SHUFFLE_HASH(aff) */ ed.*
+            FROM {edv} ed LEFT SEMI JOIN aff ON ed.dst = aff.dst
+          ),
+          j AS (
+            SELECT /*+ SHUFFLE_HASH(v) */ ve.dst AS dst, v.label AS label{wcol}
+            FROM ve JOIN {sv} v ON ve.src = v.id
+          ),
+          """ + _tail_sql("j")
+        agg_sql = (
+            f"SELECT sum(CASE WHEN _changed THEN 1 ELSE 0 END) AS c, "
+            f"count(1) AS n FROM {nv}"
         )
-        if use_incr and box["e_dst"] is None:
-            box["e_dst"] = e.repartition(num_partitions, "dst").persist()
-            box["e_dst"].createOrReplaceTempView(edv)
-        vertices.createOrReplaceTempView(sv)
-        new_state = spark.sql(incr_sql if use_incr else full_sql)
-        # lazy cut materialized by the aggregate below (step_precut)
-        new_state = new_state.localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        row = spark.sql(agg_sql).collect()[0]
-        box["changed"] = int(row["c"] or 0)
-        box["n"] = int(row["n"])
-        return new_state, {
-            "changed": box["changed"],
-            "incremental": bool(use_incr),
-        }
 
-    try:
+        def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
+            prev_changed = box["changed"]
+            use_incr = (
+                incremental_threshold is not None
+                and prev_changed is not None
+                and box["n"] is not None
+                and 0 < prev_changed <= incremental_threshold * box["n"]
+            )
+            if use_incr and box["e_dst"] is None:
+                box["e_dst"] = e.repartition(num_partitions, "dst").persist()
+                box["e_dst"].createOrReplaceTempView(edv)
+            vertices.createOrReplaceTempView(sv)
+            new_state = spark.sql(incr_sql if use_incr else full_sql)
+            # lazy cut materialized by the aggregate below (adopted)
+            new_state = new_state.localCheckpoint(eager=False)
+            new_state.createOrReplaceTempView(nv)
+            row = spark.sql(agg_sql).collect()[0]
+            box["changed"] = int(row["c"] or 0)
+            box["n"] = int(row["n"])
+            return new_state, {
+                "changed": box["changed"],
+                "incremental": bool(use_incr),
+            }
+
         run = run_supersteps(
             spark,
             state,
@@ -196,14 +189,7 @@ def label_propagation(
             checkpoint_interval=checkpoint_interval,
             resume=resume,
             verbose=verbose,
-            step_precut=True,
         )
-    finally:
-        for view in (ev, edv, sv, nv):
-            try:
-                spark.catalog.dropTempView(view)
-            except Exception:  # noqa: BLE001 — view may never have been created
-                pass
     e.unpersist()
     if box["e_dst"] is not None:
         box["e_dst"].unpersist()
@@ -234,31 +220,27 @@ def max_label_propagation(
     )
 
     # one spark.sql() text per superstep — the WCC shape with max/greatest
-    import uuid
+    with temp_views(spark, "maxlp", "edges", "state", "new") as (ev, sv, nv):
+        e.createOrReplaceTempView(ev)
+        step_sql = f"""WITH g AS (
+            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, max(v.label) AS msg
+            FROM {ev} e JOIN {sv} v ON e.src = v.id
+            WHERE v.changed
+            GROUP BY e.dst
+          )
+          SELECT /*+ SHUFFLE_HASH(g) */ v.id,
+                 greatest(v.label, coalesce(g.msg, v.label)) AS label,
+                 (coalesce(g.msg, v.label) > v.label) AS changed
+          FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
+        count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
 
-    uid = uuid.uuid4().hex[:8]
-    ev, sv, nv = f"maxlp_edges_{uid}", f"maxlp_state_{uid}", f"maxlp_new_{uid}"
-    e.createOrReplaceTempView(ev)
-    step_sql = f"""WITH g AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, max(v.label) AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-        WHERE v.changed
-        GROUP BY e.dst
-      )
-      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-             greatest(v.label, coalesce(g.msg, v.label)) AS label,
-             (coalesce(g.msg, v.label) > v.label) AS changed
-      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
-    count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
+        def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
+            vertices.createOrReplaceTempView(sv)
+            new_state = spark.sql(step_sql).localCheckpoint(eager=False)
+            new_state.createOrReplaceTempView(nv)
+            row = spark.sql(count_sql).collect()[0]
+            return new_state, {"changed": int(row["c"] or 0)}
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        vertices.createOrReplaceTempView(sv)
-        new_state = spark.sql(step_sql).localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        row = spark.sql(count_sql).collect()[0]
-        return new_state, {"changed": int(row["c"] or 0)}
-
-    try:
         run = run_supersteps(
             spark,
             state,
@@ -266,14 +248,7 @@ def max_label_propagation(
             max_supersteps=max_supersteps,
             halt=lambda stats, i: stats["changed"] == 0,
             verbose=verbose,
-            step_precut=True,
         )
-    finally:
-        for view in (ev, sv, nv):
-            try:
-                spark.catalog.dropTempView(view)
-            except Exception:  # noqa: BLE001 — view may never have been created
-                pass
     e.unpersist()
     return PregelRun(
         vertices=run.vertices.select("id", "label"),

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import normalize_edge_weights, out_degrees, vertices_from_edges
-from giraph_spark.pregel import PregelRun, gather_messages, run_supersteps
+from giraph_spark.pregel import PregelRun, run_supersteps, temp_views
 
 
 def pagerank(
@@ -181,76 +181,72 @@ def pagerank(
     #   probe the co-partitioned state.
     # The salted variant reproduces gather_messages' retry-safe two-level
     # reduction (content-hashed salt, pregel.py:104-114) in SQL.
-    import uuid
+    with temp_views(spark, "pr", "edges", "state", "new") as (ev, sv, nv):
+        e.createOrReplaceTempView(ev)
+        if salt and salt > 1:
+            gather_cte = f"""m AS (
+            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.rank * e.weight AS msg
+            FROM {ev} e JOIN {sv} v ON e.src = v.id
+          ),
+          s1 AS (
+            SELECT dst, sum(msg) AS msg
+            FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
+          ),
+          g AS (SELECT dst, sum(msg) AS msg FROM s1 GROUP BY dst)"""
+        else:
+            gather_cte = f"""g AS (
+            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, sum(v.rank * e.weight) AS msg
+            FROM {ev} e JOIN {sv} v ON e.src = v.id
+            GROUP BY e.dst
+          )"""
+        step_sql = (
+            "WITH " + gather_cte + f"""
+          SELECT /*+ SHUFFLE_HASH(g) */ v.id,
+                 {{d}} * coalesce(g.msg, 0.0) + {{base}} AS rank,
+                 v.is_sink,
+                 {{d}} * coalesce(g.msg, 0.0) + {{base}} - v.rank AS _delta
+          FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
+        )
+        agg_sql = f"""
+          SELECT sum(rank) AS all_sum,
+                 sum(CASE WHEN is_sink THEN rank ELSE 0.0 END) AS sink_sum,
+                 sum(abs(_delta)) AS l1,
+                 max(abs(_delta)) AS linf,
+                 sqrt(avg(_delta * _delta)) AS rmse
+          FROM {nv}"""
 
-    uid = uuid.uuid4().hex[:8]
-    ev, sv, nv = f"pr_edges_{uid}", f"pr_state_{uid}", f"pr_new_{uid}"
-    e.createOrReplaceTempView(ev)
-    if salt and salt > 1:
-        gather_cte = f"""m AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.rank * e.weight AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-      ),
-      s1 AS (
-        SELECT dst, sum(msg) AS msg
-        FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
-      ),
-      g AS (SELECT dst, sum(msg) AS msg FROM s1 GROUP BY dst)"""
-    else:
-        gather_cte = f"""g AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, sum(v.rank * e.weight) AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-        GROUP BY e.dst
-      )"""
-    step_sql = (
-        "WITH " + gather_cte + f"""
-      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-             {{d}} * coalesce(g.msg, 0.0) + {{base}} AS rank,
-             v.is_sink,
-             {{d}} * coalesce(g.msg, 0.0) + {{base}} - v.rank AS _delta
-      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
-    )
-    agg_sql = f"""
-      SELECT sum(rank) AS all_sum,
-             sum(CASE WHEN is_sink THEN rank ELSE 0.0 END) AS sink_sum,
-             sum(abs(_delta)) AS l1,
-             max(abs(_delta)) AS linf,
-             sqrt(avg(_delta * _delta)) AS rmse
-      FROM {nv}"""
+        def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
+            if box["sink_sum"] is None:  # resume from a snapshot this setup never saw
+                box["all_sum"], box["sink_sum"] = _sums(vertices)
+            all_sum, sink_sum = box["all_sum"], box["sink_sum"]
+            base = d * sink_sum / n_vertices + (1.0 - d) * all_sum / n_vertices
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        if box["sink_sum"] is None:  # resume from a snapshot this setup never saw
-            box["all_sum"], box["sink_sum"] = _sums(vertices)
-        all_sum, sink_sum = box["all_sum"], box["sink_sum"]
-        base = d * sink_sum / n_vertices + (1.0 - d) * all_sum / n_vertices
+            vertices.createOrReplaceTempView(sv)
+            new_state = spark.sql(step_sql.format(d=repr(d), base=repr(base)))
+            # LAZY lineage cut BEFORE the action: the convergence aggregate
+            # below materializes the checkpoint blocks in ITS job, so the
+            # loop adopts the cut and the superstep costs exactly one Spark
+            # job (a separate eager-cut job measured ~120 ms of the sf0.1
+            # superstep floor)
+            new_state = new_state.localCheckpoint(eager=False)
+            new_state.createOrReplaceTempView(nv)
+            # ONE action: next-iteration sums + all convergence reducers
+            row = spark.sql(agg_sql).collect()[0]
+            box["all_sum"], box["sink_sum"] = float(row["all_sum"]), float(row["sink_sum"] or 0.0)
+            stats = {
+                "all_sum": box["all_sum"],
+                "sink_sum": box["sink_sum"],
+                "l1": float(row["l1"]),
+                "l1_mean": float(row["l1"]) / n_vertices,
+                "linf": float(row["linf"]),
+                "rmse": float(row["rmse"]),
+            }
+            return new_state, stats
 
-        vertices.createOrReplaceTempView(sv)
-        new_state = spark.sql(step_sql.format(d=repr(d), base=repr(base)))
-        # LAZY lineage cut BEFORE the action: the convergence aggregate
-        # below materializes the checkpoint blocks in ITS job, so the
-        # superstep costs exactly one Spark job (the loop's step_precut
-        # mode skips the separate eager-cut job — measured ~120 ms of
-        # the sf0.1 superstep floor)
-        new_state = new_state.localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        # ONE action: next-iteration sums + all convergence reducers
-        row = spark.sql(agg_sql).collect()[0]
-        box["all_sum"], box["sink_sum"] = float(row["all_sum"]), float(row["sink_sum"] or 0.0)
-        stats = {
-            "all_sum": box["all_sum"],
-            "sink_sum": box["sink_sum"],
-            "l1": float(row["l1"]),
-            "l1_mean": float(row["l1"]) / n_vertices,
-            "linf": float(row["linf"]),
-            "rmse": float(row["rmse"]),
-        }
-        return new_state, stats
+        halt = None
+        if tolerance is not None:
+            halt = lambda stats, i: stats[convergence] < tolerance  # noqa: E731
 
-    halt = None
-    if tolerance is not None:
-        halt = lambda stats, i: stats[convergence] < tolerance  # noqa: E731
-
-    try:
         run = run_supersteps(
             spark,
             state,
@@ -261,18 +257,7 @@ def pagerank(
             checkpoint_interval=checkpoint_interval,
             resume=resume,
             verbose=verbose,
-            # precut mode cuts lineage every superstep by construction
-            # (the step pre-issues a lazy localCheckpoint its own
-            # convergence aggregate materializes), so there is no
-            # cut-interval knob here
-            step_precut=True,
         )
-    finally:
-        for view in (ev, sv, nv):
-            try:
-                spark.catalog.dropTempView(view)
-            except Exception:  # noqa: BLE001 — view may never have been created
-                pass
     e.unpersist()
     return PregelRun(
         vertices=run.vertices.select("id", "rank"),
@@ -307,94 +292,28 @@ def pagerank_random_walk(
     (:126-129). Convergence = aggregated L1 of |p' - p| vs ``tolerance``.
     Ranks sum to 1 (vs the mass-N convention of ``pagerank``).
 
-    ``salt`` / ``pre_partitioned`` match :func:`pagerank` (two-level
-    gather on power-law hubs; skip the per-run exchange for a bucketed
-    input) — identical knob surface so a caller can swap variants at
-    100x scale without re-tuning.
+    The update conserves mass, so C = 1 and D is the sink mass of
+    :func:`pagerank` divided by N: the iteration IS ``pagerank`` with
+    ``damping = 1 - t``, scaled by 1/N, and its L1 is pagerank's
+    ``l1_mean``. It runs as exactly that; ``history`` carries pagerank's
+    stats (``l1_mean`` is this variant's L1). ``salt`` /
+    ``pre_partitioned`` are pagerank's.
     """
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    deg = out_degrees(edges)
-    e = (
-        edges.select("src", "dst")
-        .join(deg, "src")
-        .withColumn("weight", F.lit(1.0) / F.col("out_degree").cast("double"))
-        .drop("out_degree")
-    )
-    if not pre_partitioned:
-        e = e.repartition(num_partitions, "src")
-    e = e.persist()
-    verts = vertices_from_edges(edges)
-    sinks = verts.join(
-        edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-    )
-    n_vertices = verts.count()
-    if n_vertices == 0:
-        empty = verts.select("id", F.lit(0.0).alias("rank"))
-        return PregelRun(vertices=empty, supersteps=0, converged=True)
-    state = (
-        verts.join(sinks.withColumn("is_sink", F.lit(True)), "id", "left")
-        .select(
-            "id",
-            F.lit(1.0 / n_vertices).alias("rank"),
-            F.coalesce("is_sink", F.lit(False)).alias("is_sink"),
-        )
-        .repartition(num_partitions, "id")
-    )
-    t = float(teleport)
-    # one-superstep-lag aggregators over the initial distribution
-    box = {"cum": 1.0, "dangling": None}
-
-    def step(vertices: DataFrame, superstep: int):
-        if box["dangling"] is None:
-            r0 = vertices.agg(
-                F.sum("rank").alias("c"),
-                F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)).alias("d"),
-            ).collect()[0]
-            box["cum"], box["dangling"] = float(r0["c"]), float(r0["d"] or 0.0)
-        cum, dang = box["cum"], box["dangling"]
-
-        msgs = e.join(
-            vertices.select(F.col("id").alias("src"), "rank").hint("shuffle_hash"),
-            "src",
-        ).select("dst", (F.col("rank") * F.col("weight")).alias("msg"))
-        gathered = gather_messages(msgs, [("msg", "sum")], key="dst", salt=salt)
-        base = (1.0 - t) * dang / n_vertices + t / n_vertices
-        raw = (
-            F.lit(1.0 - t) * F.coalesce(F.col("msg"), F.lit(0.0)) + F.lit(base)
-        ) / F.lit(cum)
-        new_state = (
-            vertices.join(
-                gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
-                "id",
-                "left",
-            )
-            .select(
-                "id",
-                raw.alias("rank"),
-                "is_sink",
-                (raw - F.col("rank")).alias("_delta"),
-            )
-            .persist()
-        )
-        row = new_state.agg(
-            F.sum("rank").alias("c"),
-            F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)).alias("d"),
-            F.sum(F.abs("_delta")).alias("l1"),
-        ).collect()[0]
-        box["cum"], box["dangling"] = float(row["c"]), float(row["d"] or 0.0)
-        return new_state, {"cum": box["cum"], "l1": float(row["l1"])}
-
-    halt = None
-    if tolerance is not None:
-        halt = lambda stats, i: stats["l1"] < tolerance  # noqa: E731
-    run = run_supersteps(
-        spark, state, step, max_supersteps=max_supersteps, halt=halt,
+    run = pagerank(
+        spark,
+        edges,
+        damping=1.0 - float(teleport),
+        max_supersteps=max_supersteps,
+        tolerance=tolerance,
+        convergence="l1_mean",
+        salt=salt,
+        num_partitions=num_partitions,
+        pre_partitioned=pre_partitioned,
         verbose=verbose,
     )
-    e.unpersist()
+    n = run.vertices.count()
     return PregelRun(
-        vertices=run.vertices.select("id", "rank"),
+        vertices=run.vertices.select("id", (F.col("rank") / F.lit(max(n, 1))).alias("rank")),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, run_supersteps
+from giraph_spark.pregel import PregelRun, run_supersteps, temp_views
 
 
 def connected_components(
@@ -104,48 +104,44 @@ def connected_components(
     # the shrinking changed-frontier — sort-merge would re-sort the
     # edges each round. The salted variant is gather_messages' retry-
     # safe content-hashed two-level min (pregel.py:104-114) in SQL.
-    import uuid
+    with temp_views(spark, "wcc", "edges", "state", "new") as (ev, sv, nv):
+        e.createOrReplaceTempView(ev)
+        if salt and salt > 1:
+            gather_cte = f"""m AS (
+            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.component AS msg
+            FROM {ev} e JOIN {sv} v ON e.src = v.id
+            WHERE v.changed
+          ),
+          s1 AS (
+            SELECT dst, min(msg) AS msg
+            FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
+          ),
+          g AS (SELECT dst, min(msg) AS msg FROM s1 GROUP BY dst)"""
+        else:
+            gather_cte = f"""g AS (
+            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, min(v.component) AS msg
+            FROM {ev} e JOIN {sv} v ON e.src = v.id
+            WHERE v.changed
+            GROUP BY e.dst
+          )"""
+        step_sql = (
+            "WITH " + gather_cte + f"""
+          SELECT /*+ SHUFFLE_HASH(g) */ v.id,
+                 least(v.component, coalesce(g.msg, v.component)) AS component,
+                 (coalesce(g.msg, v.component) < v.component) AS changed
+          FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
+        )
+        count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
 
-    uid = uuid.uuid4().hex[:8]
-    ev, sv, nv = f"wcc_edges_{uid}", f"wcc_state_{uid}", f"wcc_new_{uid}"
-    e.createOrReplaceTempView(ev)
-    if salt and salt > 1:
-        gather_cte = f"""m AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.component AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-        WHERE v.changed
-      ),
-      s1 AS (
-        SELECT dst, min(msg) AS msg
-        FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
-      ),
-      g AS (SELECT dst, min(msg) AS msg FROM s1 GROUP BY dst)"""
-    else:
-        gather_cte = f"""g AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, min(v.component) AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-        WHERE v.changed
-        GROUP BY e.dst
-      )"""
-    step_sql = (
-        "WITH " + gather_cte + f"""
-      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-             least(v.component, coalesce(g.msg, v.component)) AS component,
-             (coalesce(g.msg, v.component) < v.component) AS changed
-      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
-    )
-    count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
+        def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
+            vertices.createOrReplaceTempView(sv)
+            # lazy cut: the frontier-count action below writes the checkpoint
+            # blocks in the same job, and the loop adopts it
+            new_state = spark.sql(step_sql).localCheckpoint(eager=False)
+            new_state.createOrReplaceTempView(nv)
+            row = spark.sql(count_sql).collect()[0]
+            return new_state, {"changed": int(row["c"] or 0)}
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        vertices.createOrReplaceTempView(sv)
-        # lazy cut: the frontier-count action below writes the checkpoint
-        # blocks in the same job (step_precut mode)
-        new_state = spark.sql(step_sql).localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        row = spark.sql(count_sql).collect()[0]
-        return new_state, {"changed": int(row["c"] or 0)}
-
-    try:
         run = run_supersteps(
             spark,
             state,
@@ -156,14 +152,7 @@ def connected_components(
             checkpoint_interval=checkpoint_interval,
             resume=resume,
             verbose=verbose,
-            step_precut=True,
         )
-    finally:
-        for view in (ev, sv, nv):
-            try:
-                spark.catalog.dropTempView(view)
-            except Exception:  # noqa: BLE001 — view may never have been created
-                pass
     e.unpersist()
     return PregelRun(
         vertices=run.vertices.select("id", "component"),

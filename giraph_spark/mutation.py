@@ -22,10 +22,10 @@ order — nondeterministic on a real cluster. We resolve conflicting adds
 by the minimum over the value columns, which is deterministic across
 runs and parallelism levels (strictly stronger than the reference).
 
-The ``run_mutable_supersteps`` driver threads (vertices, edges) through
-the loop and applies the resolver between supersteps — the analog of
-``graph/GraphTaskManager`` draining the mutation stores before the next
-superstep begins.
+The ``run_mutable_supersteps`` step adapter threads (vertices, edges)
+through the superstep loop and applies the resolver between supersteps —
+the analog of ``graph/GraphTaskManager`` draining the mutation stores
+before the next superstep begins.
 """
 
 from __future__ import annotations
@@ -37,7 +37,12 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from giraph_spark.pregel import PregelRun
+from giraph_spark.pregel import (
+    PregelRun,
+    _checkpointed_jrdd,
+    _gated_release,
+    run_supersteps,
+)
 
 
 @dataclass
@@ -182,79 +187,51 @@ def run_mutable_supersteps(
     requests are applied *between* supersteps in the resolver order
     above — exactly when the reference drains its mutation stores
     (``worker/BspServiceWorker.finishSuperstep``). The edge table is
-    re-persisted only on supersteps that actually mutate it.
+    re-cut only on supersteps that actually mutate it. Runs on
+    :func:`run_supersteps` (which cuts the vertex state); the result's
+    ``edges`` attribute is the final edge table.
     """
-    import time
+    sc = spark.sparkContext
+    box: dict[str, Any] = {"edges": edges.persist(), "cut": None, "stale": None}
 
-    from giraph_spark.pregel import _checkpointed_jrdd
+    def vertex_step(v: DataFrame, superstep: int):
+        # the superseded edge cut: the loop has cut the vertex state that
+        # was built on it, so nothing reads it any more
+        _gated_release(sc, box["stale"])
+        box["stale"] = None
+        e = box["edges"]
+        new_v, stats, changes, msg_targets = step(v, e, superstep)
+        if changes is not None and not changes.empty():
+            new_v, new_e = resolve_mutations(
+                new_v,
+                e,
+                changes,
+                message_targets=msg_targets,
+                default_value=default_value,
+                create_on_message=create_on_message,
+                recreate_removed_on_message=recreate_removed_on_message,
+            )
+            new_e = new_e.localCheckpoint(eager=True)
+            e.unpersist()
+            # new_v's lazy plan still reads the old edge cut: free it only
+            # once the loop has cut new_v (next step, or after the loop)
+            box["stale"], box["cut"] = box["cut"], _checkpointed_jrdd(new_e)
+            box["edges"] = new_e
+        elif create_on_message and msg_targets is not None:
+            new_v, _ = resolve_mutations(
+                new_v,
+                e,
+                GraphChanges(),
+                message_targets=msg_targets,
+                default_value=default_value,
+                recreate_removed_on_message=recreate_removed_on_message,
+            )
+        return new_v, stats
 
-    v = vertices.persist()
-    e = edges.persist()
-    history: list[dict[str, Any]] = []
-    converged = False
-    superstep = 0
-    prev_v_cut = None  # java RDDs behind the previous lineage cuts —
-    prev_e_cut = None  # released explicitly (unpersist() won't free them)
-    # fixed-shape superstep plans: adaptive re-planning only adds driver
-    # latency here (see run_supersteps for the measured A/B)
-    from giraph_spark.pregel import restore_aqe, suppress_aqe
-
-    suppress_aqe(spark)  # refcounted: safe under overlapping loops
-    try:
-        while superstep < max_supersteps:
-            t0 = time.time()
-            new_v, stats, changes, msg_targets = step(v, e, superstep)
-            stats = dict(stats or {})
-            release_e = None  # superseded edge cut; freed only after new_v
-            if changes is not None and not changes.empty():
-                new_v, new_e = resolve_mutations(
-                    new_v,
-                    e,
-                    changes,
-                    message_targets=msg_targets,
-                    default_value=default_value,
-                    create_on_message=create_on_message,
-                    recreate_removed_on_message=recreate_removed_on_message,
-                )
-                new_e = new_e.localCheckpoint(eager=True)
-                e.unpersist()
-                # do NOT release the superseded edge cut yet: new_v's lazy
-                # plan (built by step/resolver against the OLD e) has not
-                # materialized — freeing its blocks now would fail the
-                # new_v localCheckpoint below with "checkpoint block not found"
-                release_e = prev_e_cut
-                prev_e_cut = _checkpointed_jrdd(new_e)
-                e = new_e
-            elif create_on_message and msg_targets is not None:
-                new_v, _ = resolve_mutations(
-                    new_v,
-                    e,
-                    GraphChanges(),
-                    message_targets=msg_targets,
-                    default_value=default_value,
-                    recreate_removed_on_message=recreate_removed_on_message,
-                )
-            new_v = new_v.localCheckpoint(eager=True)
-            if release_e is not None:
-                release_e.unpersist(False)
-            if prev_v_cut is not None:
-                prev_v_cut.unpersist(False)
-            prev_v_cut = _checkpointed_jrdd(new_v)
-            if not stats:
-                stats["rows"] = new_v.count()
-            stats["superstep"] = superstep
-            stats["seconds"] = time.time() - t0
-            history.append(stats)
-            if verbose:
-                print(f"[mutable-pregel] superstep={superstep} {stats}")
-            v.unpersist()
-            v = new_v
-            superstep += 1
-            if halt is not None and halt(stats, superstep):
-                converged = True
-                break
-    finally:
-        restore_aqe(spark)
-    run = PregelRun(vertices=v, supersteps=superstep, converged=converged, history=history)
-    run.edges = e  # type: ignore[attr-defined]
+    run = run_supersteps(
+        spark, vertices, vertex_step, max_supersteps=max_supersteps, halt=halt,
+        verbose=verbose,
+    )
+    _gated_release(sc, box["stale"])
+    run.edges = box["edges"]  # type: ignore[attr-defined]
     return run

@@ -33,8 +33,11 @@ fan-in on mega-hubs.
 
 from __future__ import annotations
 
+import logging
 import time
-from collections.abc import Callable
+import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -42,6 +45,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.checkpoint import CheckpointManager
+
+_log = logging.getLogger("giraph_spark")
 
 # aggregate functions usable at BOTH levels of a salted two-level gather —
 # exactly the MessageCombiner contract: commutative + associative
@@ -200,6 +205,23 @@ def materialize_count(df: DataFrame, pred_col: str) -> int:
         F.sum(F.when(F.col(pred_col), 1).otherwise(0)).alias("c")
     ).collect()[0]
     return int(row["c"] or 0)
+
+
+@contextmanager
+def temp_views(spark: SparkSession, prefix: str, *roles: str) -> Iterator[list[str]]:
+    """Unique temp-view names for one SQL-text superstep loop, one per
+    role (``{prefix}_{role}_{uid}``), dropped on exit. The uid keeps two
+    concurrent runs on one session from overwriting each other's views."""
+    uid = uuid.uuid4().hex[:8]
+    names = [f"{prefix}_{role}_{uid}" for role in roles]
+    try:
+        yield names
+    finally:
+        for name in names:
+            try:
+                spark.catalog.dropTempView(name)
+            except Exception:  # noqa: BLE001 — view may never have been created
+                pass
 
 
 # --- refcounted AQE suppression ------------------------------------------
@@ -481,21 +503,10 @@ def run_supersteps(
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
     resume: bool = False,
-    lineage_cut_interval: int = 1,
     hooks: WorkerHooks | None = None,
     verbose: bool = False,
-    step_precut: bool = False,
 ) -> PregelRun:
     """Drive the BSP loop.
-
-    ``step_precut=True`` declares that ``step`` returns a LAZILY
-    localCheckpoint'ed frame whose own convergence action materializes
-    the checkpoint blocks (``df.localCheckpoint(eager=False)`` issued
-    BEFORE the step's aggregate). The loop then skips both its persist
-    and its separate eager-cut job — one Spark job per superstep instead
-    of two — and keeps only the block-release bookkeeping. Measured at
-    sf0.1: the dedicated localCheckpoint job plus its driver gap was
-    ~120 ms of the ~430 ms superstep floor.
 
     ``step(vertices, superstep)`` returns ``(new_vertices, stats)`` and must
     have issued exactly the actions it needs (typically ONE ``agg`` that
@@ -505,6 +516,15 @@ def run_supersteps(
     decision of BspServiceMaster.java:1654-1679. Snapshots + per-partition
     lineage metrics are written every ``checkpoint_interval`` supersteps;
     with ``resume=True`` the loop continues from the newest valid snapshot.
+
+    Lineage cut, one rule: every superstep's state is a localCheckpoint.
+    If ``step`` returns a lazy cut (``localCheckpoint(eager=False)``
+    issued BEFORE its aggregate) that its own action materialized, the
+    loop adopts it — one Spark job per superstep. Any other frame (an
+    un-cut derived plan, or a lazy cut the step's action never scanned)
+    is cut eagerly here and the frame it cut is unpersisted. Either way
+    the previous cut's blocks are then freed, the partition width is
+    bounded, and a snapshot is taken when due.
 
     Lineage-cut invalidation: each cut explicitly releases the PREVIOUS
     cut's localCheckpoint blocks, so a ``step``/``halt`` closure must not
@@ -524,31 +544,32 @@ def run_supersteps(
     the per-superstep local cut only bounds plan growth. local[*] runs
     can ignore this (one JVM = no partial loss).
 
-    Concurrency: the loop toggles the session-wide
-    ``spark.sql.adaptive.enabled`` conf for its duration (see the inline
-    rationale below) and assumes a SINGLE-THREADED driver — queries run
-    concurrently on the same SparkSession from other threads would
-    silently lose AQE's skew handling while a loop is active, and two
-    interleaved loops could restore a stale value. Run concurrent
-    driver-side work on a separate ``spark.newSession()`` clone (its conf
-    is independent) if that pattern is ever needed.
+    Concurrency: the loop turns the session-wide
+    ``spark.sql.adaptive.enabled`` conf off for its duration (refcounted
+    by ``suppress_aqe``, so overlapping loops on one session restore the
+    user's value only when the last one ends); queries run concurrently
+    on the same session from other threads lose AQE's skew handling
+    while a loop is active.
+
+    ``verbose=True`` logs each superstep's stats at INFO on the
+    ``giraph_spark`` logger (DEBUG otherwise).
     """
     ckpt = (
         CheckpointManager(spark, checkpoint_dir, checkpoint_interval)
         if checkpoint_dir
         else None
     )
+    sc = spark.sparkContext
+    level = logging.INFO if verbose else logging.DEBUG
     superstep = 0
     if resume and ckpt is not None:
         found = ckpt.latest()
         if found is not None:
             superstep, vertices, _m = found
-            if verbose:
-                print(f"[pregel] resuming from checkpoint superstep={superstep}")
+            _log.log(level, "resuming from checkpoint superstep=%d", superstep)
 
     current = vertices.persist()
     start_partitions = current.rdd.getNumPartitions()
-    est_partitions = start_partitions  # maintained from each cut's java RDD
     # AQE off for the loop: superstep plans are fixed-shape (explicit
     # shuffle_hash hints, explicit partition counts, salting for skew),
     # so adaptive re-planning adds only its latency — AQE materializes
@@ -559,7 +580,7 @@ def run_supersteps(
     history: list[dict[str, Any]] = []
     converged = False
     last_saved = superstep if (resume and ckpt is not None) else None
-    prev_cut_jrdd = None  # java RDD behind the previous lineage cut
+    cut_jrdd = None  # java RDD behind the live lineage cut
     suppress_aqe(spark)  # refcounted: safe under overlapping loops
     try:
         # inside the try so a raising hook cannot leak AQE=false into the
@@ -571,9 +592,17 @@ def run_supersteps(
             if hooks is not None and hooks.pre_superstep is not None:
                 hooks.pre_superstep(current, superstep)
             new_vertices, stats = step(current, superstep)
-            if not step_precut:
-                new_vertices = new_vertices.persist()
-            if not stats:  # ensure materialization even if step ran no action
+            # adopt or cut: a returned input is never adopted (its handle
+            # is the live cut, freed below)
+            jrdd = None if new_vertices is current else _checkpointed_jrdd(new_vertices)
+            if jrdd is None or not jrdd.isCheckpointed():
+                cut = new_vertices.localCheckpoint(eager=True)
+                new_vertices.unpersist()
+                # a lazy cut the step never scanned was filled by this
+                # job; the new cut no longer reads it
+                _gated_release(sc, jrdd)
+                new_vertices, jrdd = cut, _checkpointed_jrdd(cut)
+            if not stats:
                 stats = {"rows": new_vertices.count()}
             stats = dict(stats)
             stats["superstep"] = superstep
@@ -581,81 +610,37 @@ def run_supersteps(
             if hooks is not None and hooks.post_superstep is not None:
                 hooks.post_superstep(new_vertices, superstep, stats)
             history.append(stats)
-            if verbose:
-                print(f"[pregel] superstep={superstep} {stats}")
+            _log.log(level, "superstep=%d %s", superstep, stats)
 
             superstep += 1
             current.unpersist()
             current = new_vertices
+            # the previous cut's blocks: localCheckpoint blocks are not
+            # freed by DataFrame.unpersist, so a long run would otherwise
+            # hold every superstep's state
+            _gated_release(sc, cut_jrdd)
+            cut_jrdd = jrdd
+            # defensive width bound: a step that unions frames (narrow
+            # union sums partition counts) would otherwise compound the
+            # width superstep over superstep until the cut materializes
+            # tens of thousands of tiny blocks. The coalesce is narrow and
+            # lands on the INPUT of the next step, so its cut materializes
+            # at the bounded width (8x headroom; the cut's java RDD gives
+            # the width without re-analyzing the plan)
+            try:
+                width = int(cut_jrdd.getNumPartitions())
+            except Exception:  # noqa: BLE001
+                width = start_partitions
+            if width > 8 * max(start_partitions, 1):
+                current = current.coalesce(start_partitions)
 
             if ckpt is not None and ckpt.should_save(superstep):
                 reloaded = ckpt.save(current, superstep, stats)
                 last_saved = superstep
-                if step_precut:
-                    # the reliable snapshot replaces the precut state:
-                    # release this superstep's (and the pending previous)
-                    # checkpoint blocks now — nothing reads them again
-                    _gated_release(spark.sparkContext, _checkpointed_jrdd(current))
-                    _gated_release(spark.sparkContext, prev_cut_jrdd)
-                    prev_cut_jrdd = None
-                current.unpersist()
+                # the reliable snapshot replaces the cut: nothing reads it
+                _gated_release(sc, cut_jrdd)
+                cut_jrdd = None
                 current = reloaded.persist()
-            elif step_precut:
-                # the step's action already materialized this superstep's
-                # checkpoint blocks — just swap the release handles
-                _gated_release(spark.sparkContext, prev_cut_jrdd)
-                prev_cut_jrdd = _checkpointed_jrdd(current)
-                if prev_cut_jrdd is not None:
-                    try:
-                        est_partitions = int(prev_cut_jrdd.getNumPartitions())
-                    except Exception:  # noqa: BLE001
-                        est_partitions = start_partitions
-                # same defensive width bound as the eager-cut branch below:
-                # a step that unions frames compounds partition width every
-                # superstep until the cut materializes tens of thousands of
-                # tiny blocks. The coalesce is narrow and lands on the INPUT
-                # of the next step, so its cut materializes at the bounded
-                # width (one superstep of lag, 8x headroom — same contract
-                # as the est_partitions probe documented below)
-                if est_partitions > 8 * max(start_partitions, 1):
-                    current = current.coalesce(start_partitions)
-                    est_partitions = start_partitions
-            elif lineage_cut_interval and superstep % lineage_cut_interval == 0:
-                # bound Catalyst analysis time across iterations (risk register:
-                # iterative-plan blowup; Giraph analog: checkpoint frequency).
-                # Measured: without the cut, analysis grows ~+3s/superstep on a
-                # 16M-edge graph, while the cut itself reuses the cached
-                # partitions and costs well under a second — hence every step.
-                # defensive width bound: a step that unions frames (narrow
-                # union sums partition counts) would otherwise compound the
-                # width superstep over superstep until the cut materializes
-                # tens of thousands of tiny blocks; coalesce is narrow (no
-                # shuffle) and a no-op while the width stays sane
-                persisted = current  # keep a handle: unpersist must target the
-                # CACHED frame, not a coalesce built on top of it (coalesce is
-                # a different plan — unpersisting it is a no-op and leaks)
-                # width probe: use the PREVIOUS cut's width (a plain java-RDD
-                # call) instead of converting `current` to a python RDD every
-                # superstep (DataFrame.rdd re-analyzes the plan and builds a
-                # pickle pipeline — a measurable slice of the per-superstep
-                # driver floor). One step of lag is safe: the bound is
-                # defensive with 8x headroom, so a union-growing step coalesces
-                # at the NEXT cut instead of this one.
-                if est_partitions > 8 * max(start_partitions, 1):
-                    current = current.coalesce(start_partitions)
-                cut = current.localCheckpoint(eager=True)
-                persisted.unpersist()
-                current = cut
-                # release the PREVIOUS cut's checkpointed RDD: unlike persist(),
-                # localCheckpoint blocks are not freed by DataFrame.unpersist,
-                # so a long run would otherwise hold every superstep's state
-                _gated_release(spark.sparkContext, prev_cut_jrdd)
-                prev_cut_jrdd = _checkpointed_jrdd(cut)
-                if prev_cut_jrdd is not None:
-                    try:
-                        est_partitions = int(prev_cut_jrdd.getNumPartitions())
-                    except Exception:  # noqa: BLE001
-                        est_partitions = start_partitions
 
             if halt is not None and halt(stats, superstep):
                 converged = True

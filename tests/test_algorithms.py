@@ -108,6 +108,11 @@ def test_pagerank_random_walk_knob_parity(spark):
         assert got.keys() == base.keys()
         assert all(abs(got[k] - base[k]) <= 1e-12 * max(1.0, abs(base[k])) for k in base), kw
     assert sum(base.values()) == pytest.approx(1.0, abs=1e-9)
+    # the random walk is pagerank(damping = 1 - teleport) scaled by 1/N
+    pr = {r["id"]: r["rank"]
+          for r in pagerank(spark, edges, damping=0.85, max_supersteps=12).vertices.collect()}
+    assert pr.keys() == base.keys()
+    assert all(abs(pr[k] / len(pr) - base[k]) <= 1e-12 for k in base)
 
 
 def test_pagerank_matches_numpy_oracle_exactly(spark):

@@ -181,6 +181,79 @@ def test_lineage_cut_bounds_partition_width(spark):
     assert run.vertices.rdd.getNumPartitions() <= 8 * 4
 
 
+def _jobs_per_superstep(spark, step, supersteps, tag, **kwargs):
+    """Run ``step`` on a 50-row state with each superstep in its own job
+    group; returns (run, Spark jobs issued per superstep)."""
+    from giraph_spark.pregel import WorkerHooks, run_supersteps
+
+    sc = spark.sparkContext
+    v0 = spark.createDataFrame([(i, float(i)) for i in range(50)], "id long, x double")
+    hooks = WorkerHooks(
+        pre_superstep=lambda df, i: sc.setJobGroup(f"{tag}-{i}", f"{tag} ss={i}")
+    )
+    try:
+        run = run_supersteps(spark, v0, step, supersteps, hooks=hooks, **kwargs)
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001 — job events land
+    tracker = sc.statusTracker()
+    return run, [len(tracker.getJobIdsForGroup(f"{tag}-{i}")) for i in range(supersteps)]
+
+
+def test_loop_adopts_materialized_lazy_cut(spark, caplog):
+    """A step whose own aggregate materializes its lazy cut costs exactly
+    one Spark job per superstep: the loop adopts the cut instead of
+    cutting again. verbose=True logs each superstep at INFO."""
+    import logging
+
+    from giraph_spark.pregel import _checkpointed_jrdd
+
+    def step(vertices, superstep):
+        nv = vertices.select("id", (F.col("x") + 1).alias("x")).localCheckpoint(
+            eager=False
+        )
+        return nv, {"sum": nv.agg(F.sum("x")).collect()[0][0]}
+
+    with caplog.at_level(logging.INFO, logger="giraph_spark"):
+        run, jobs = _jobs_per_superstep(spark, step, 4, "adopt", verbose=True)
+    assert jobs == [1, 1, 1, 1]
+    assert [h["sum"] for h in run.history] == [1275.0 + 50 * i for i in range(4)]
+    assert _checkpointed_jrdd(run.vertices).isCheckpointed()
+    lines = [r.getMessage() for r in caplog.records if r.name == "giraph_spark"]
+    assert [m.split()[0] for m in lines] == [f"superstep={i}" for i in range(4)]
+
+
+def test_loop_cuts_uncut_frame(spark):
+    """A step that returns an un-cut derived frame is cut by the loop: one
+    extra (eager-cut) job per superstep, and the result is a cut."""
+    from giraph_spark.pregel import _checkpointed_jrdd
+
+    def step(vertices, superstep):
+        nv = vertices.select("id", (F.col("x") + 1).alias("x"))
+        return nv, {"sum": nv.agg(F.sum("x")).collect()[0][0]}
+
+    run, jobs = _jobs_per_superstep(spark, step, 4, "cut")
+    assert jobs == [2, 2, 2, 2]
+    assert _checkpointed_jrdd(run.vertices).isCheckpointed()
+    assert run.vertices.agg(F.sum("x")).collect()[0][0] == 1225.0 + 50 * 4
+
+
+def test_loop_cuts_unscanned_lazy_cut(spark):
+    """A lazy cut the step's action never scanned is not adopted: the loop
+    cuts it eagerly, so no superstep reads a freed checkpoint block
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND would raise here)."""
+
+    def step(vertices, superstep):
+        nv = vertices.select("id", (F.col("x") + 1).alias("x")).localCheckpoint(
+            eager=False
+        )
+        return nv, {"n": vertices.count()}  # the action scans the INPUT
+
+    run, _ = _jobs_per_superstep(spark, step, 5, "unscanned")
+    assert run.supersteps == 5
+    assert run.vertices.agg(F.sum("x")).collect()[0][0] == 1225.0 + 50 * 5
+
+
 def test_bare_checkpoint_values_schema_release(spark):
     """bare_checkpoint: same rows/schema as the input, a true leaf plan
     (no origin references — the iterated-planning fix), and release()
