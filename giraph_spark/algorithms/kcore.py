@@ -15,11 +15,15 @@ a handful); the edge set only shrinks, so late rounds are cheap.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import LineageCuts
+from giraph_spark.pregel import LineageCuts, aqe_off
+
+_log = logging.getLogger("giraph_spark")
 
 
 def k_core(
@@ -406,24 +410,21 @@ def trussness(
     # off every submitted stage belongs to the awaited job, so
     # program-order release is sound; the empty-frontier probe skip and
     # the one-round release deferral below are additional layers.
-    from giraph_spark.pregel import restore_aqe, suppress_aqe
-
-    suppress_aqe(spark)  # refcounted: safe under overlapping loops
     try:
-        return _trussness_peel(
-            spark,
-            edges,
-            symmetrize_input=symmetrize_input,
-            num_partitions=num_partitions,
-            max_rounds=max_rounds,
-            deep_cut_interval=deep_cut_interval,
-            deep_dir=deep_dir,
-            broadcast_frontier_max=broadcast_frontier_max,
-            verbose=verbose,
-            orient_frontier=orient_frontier,
-        )
+        with aqe_off(spark):
+            return _trussness_peel(
+                spark,
+                edges,
+                symmetrize_input=symmetrize_input,
+                num_partitions=num_partitions,
+                max_rounds=max_rounds,
+                deep_cut_interval=deep_cut_interval,
+                deep_dir=deep_dir,
+                broadcast_frontier_max=broadcast_frontier_max,
+                verbose=verbose,
+                orient_frontier=orient_frontier,
+            )
     finally:
-        restore_aqe(spark)
         _hadoop_rm(spark, scratch_parent if scratch_parent is not None else deep_dir)
 
 
@@ -445,6 +446,7 @@ def _trussness_peel(
 
     from giraph_spark.algorithms.triangles import _oriented, _triangle_list_from
 
+    level = logging.INFO if verbose else logging.DEBUG
     cuts = LineageCuts()
     if symmetrize_input:
         from giraph_spark.graph import clean_symmetric
@@ -497,12 +499,11 @@ def _trussness_peel(
             .collect()[0]
         )
         orient_frontier = float(drow["mx"]) > 20.0 * float(drow["av"] or 1.0)
-        if verbose:
-            print(
-                f"[trussness] degree skew max={drow['mx']} avg={drow['av']:.1f}"
-                f" -> orient_frontier={orient_frontier}",
-                flush=True,
-            )
+        _log.log(
+            level,
+            "trussness degree skew max=%s avg=%.1f -> orient_frontier=%s",
+            drow["mx"], float(drow["av"] or 0.0), orient_frontier,
+        )
     if orient_frontier:
         # STATIC per-edge pivot by initial symmetric degree, computed ONCE
         # (u, v, pu, pv) with pu = the lower-degree endpoint: probing the
@@ -670,13 +671,11 @@ def _trussness_peel(
             deferred_release = sup_release
             sup, sup_release = new_sup, new_release
             n -= n_rm
-            if verbose:
-                print(
-                    f"[trussness] round={rounds} k={k} removed={n_rm} "
-                    f"left={n} t_frontier={_t1 - _t0:.2f} "
-                    f"t_update={_t2 - _t1:.2f}",
-                    flush=True,
-                )
+            _log.log(
+                level,
+                "trussness round=%s k=%s removed=%s left=%s t_frontier=%.2f t_update=%.2f",
+                rounds, k, n_rm, n, _t1 - _t0, _t2 - _t1,
+            )
             if n == 0:
                 break
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, run_supersteps, temp_views
+from giraph_spark.pregel import PregelRun, aqe_off, run_supersteps, temp_views
 
 
 def label_propagation(
@@ -79,34 +79,36 @@ def label_propagation(
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if weight_col is not None:
-        from giraph_spark.graph import symmetrize_weighted
+    # AQE off from the edge persist() on: a cache planned adaptively
+    # re-runs its query stages as jobs of their own when first read
+    with aqe_off(spark), temp_views(
+        spark, "lpa", "edges", "edges_dst", "state", "new"
+    ) as (ev, edv, sv, nv):
+        if weight_col is not None:
+            from giraph_spark.graph import symmetrize_weighted
 
-        e = (
-            symmetrize_weighted(edges, weight_col)
-            if symmetrize_input
-            else edges.select("src", "dst", weight_col)
-        )
-        e = e.select("src", "dst", F.col(weight_col).cast("long").alias("_w"))
-    else:
-        e = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
-    e = e.repartition(num_partitions, "src").persist()
+            e = (
+                symmetrize_weighted(edges, weight_col)
+                if symmetrize_input
+                else edges.select("src", "dst", weight_col)
+            )
+            e = e.select("src", "dst", F.col(weight_col).cast("long").alias("_w"))
+        else:
+            e = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
+        e = e.repartition(num_partitions, "src").persist()
 
-    state = vertices_from_edges(e).select("id", F.col("id").alias("label"))
+        state = vertices_from_edges(e).select("id", F.col("id").alias("label"))
 
-    # one-superstep-lagged aggregator (MasterCompute-style): last round's
-    # changed count decides this round's full-vs-incremental plan
-    box: dict[str, Any] = {"changed": None, "n": None, "e_dst": None}
+        # one-superstep-lagged aggregator (MasterCompute-style): last round's
+        # changed count decides this round's full-vs-incremental plan
+        box: dict[str, Any] = {"changed": None, "n": None, "e_dst": None}
 
-    # Each superstep is ONE spark.sql() text instead of ~15 DataFrame-API
-    # py4j round trips — same rationale and measurement as the PageRank
-    # step (pagerank.py: ~117 ms/superstep of plan-building py4j). The
-    # two-stage mode (count per (dst, label), map-side combined, then
-    # max_by argmax with the deterministic smaller-label tie-break) and
-    # every join-strategy hint carry over verbatim.
-    with temp_views(spark, "lpa", "edges", "edges_dst", "state", "new") as (
-        ev, edv, sv, nv
-    ):
+        # Each superstep is ONE spark.sql() text instead of ~15 DataFrame-API
+        # py4j round trips — same rationale and measurement as the PageRank
+        # step (pagerank.py: ~117 ms/superstep of plan-building py4j). The
+        # two-stage mode (count per (dst, label), map-side combined, then
+        # max_by argmax with the deterministic smaller-label tie-break) and
+        # every join-strategy hint carry over verbatim.
         e.createOrReplaceTempView(ev)
         vote_expr = "sum(j._w)" if weight_col is not None else "count(1)"
         wcol = ", ve._w AS _w" if weight_col is not None else ""
@@ -213,14 +215,14 @@ def max_label_propagation(
     spark = edges.sparkSession  # view resolution — see label_propagation
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select("src", "dst").repartition(num_partitions, "src").persist()
+    with aqe_off(spark), temp_views(spark, "maxlp", "edges", "state", "new") as (ev, sv, nv):
+        e = edges.select("src", "dst").repartition(num_partitions, "src").persist()
 
-    state = vertices_from_edges(e).select(
-        "id", F.col("id").alias("label"), F.lit(True).alias("changed")
-    )
+        state = vertices_from_edges(e).select(
+            "id", F.col("id").alias("label"), F.lit(True).alias("changed")
+        )
 
-    # one spark.sql() text per superstep — the WCC shape with max/greatest
-    with temp_views(spark, "maxlp", "edges", "state", "new") as (ev, sv, nv):
+        # one spark.sql() text per superstep — the WCC shape with max/greatest
         e.createOrReplaceTempView(ev)
         step_sql = f"""WITH g AS (
             SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, max(v.label) AS msg

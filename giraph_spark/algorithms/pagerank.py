@@ -24,17 +24,84 @@ on src==id so only the small rank state reshuffles), one gather
 one update join, and ONE driver action computing next-iteration allSum /
 sinkSum and all three convergence metrics in a single aggregate (the
 per-superstep aggregator gather of master/MasterCompute.java:41-47).
+
+Set-up is ONE Spark job, planned with AQE off (``_init_piece``): the edge
+table is hash-partitioned by src (a bucketed table already is) and cached,
+its weight a ``count(*) OVER (PARTITION BY src)`` window on that
+partitioning — no degree join; every vertex and its sink flag come from one
+``groupBy(id)`` over the edges' src and dst rows — no distinct, anti-join
+or broadcast. The initial state is a lazy ``localCheckpoint`` that the
+set-up aggregate (vertex count, mass, sink mass) fills together with the
+edge cache, and ``run_supersteps`` adopts it as superstep 0's cut: a
+5-superstep call is 6 jobs.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from giraph_spark.graph import normalize_edge_weights, out_degrees, vertices_from_edges
-from giraph_spark.pregel import PregelRun, run_supersteps, temp_views
+from giraph_spark.graph import normalize_edge_weights
+from giraph_spark.pregel import (
+    PregelRun,
+    _checkpointed_jrdd,
+    _gated_release,
+    aqe_off,
+    run_supersteps,
+    temp_views,
+)
+
+
+def _init_piece(
+    edges: DataFrame,
+    num_partitions: int,
+    weighted: bool = False,
+    pre_partitioned: bool = False,
+    init_ranks: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The init piece (PageRankInitializeAndNormalizeEdgesPiece.java:
+    70-83) as two lazy frames: the static edge table (src, dst, weight),
+    hash-partitioned by ``src`` and cached, each source's out-weights
+    normalized to sum 1; and the initial state (id, rank, is_sink),
+    hash-partitioned by ``id``. The state reads the cached edges, so one
+    action over it computes both — with no join and no broadcast.
+    """
+    e = edges.select("src", "dst", "weight") if weighted else edges.select("src", "dst")
+    # static for the whole run: hash-partition by the scatter key once and
+    # cache, so each superstep's scatter join reshuffles only the rank state;
+    # a bucketed input table already IS partitioned that way — skip the
+    # exchange entirely (storage.write_bucketed_edges). The weight is a
+    # window over src, which that partitioning already clusters: no
+    # exchange and no degree join
+    if not pre_partitioned:
+        e = e.repartition(num_partitions, "src")
+    if weighted:
+        e = normalize_edge_weights(e)
+    else:
+        out_degree = F.count(F.lit(1)).over(Window.partitionBy("src"))
+        e = e.withColumn("weight", F.lit(1.0) / out_degree)
+    e = e.persist()
+
+    # every id an edge touches (message-target-only vertices included,
+    # :81), from ONE groupBy over its src and dst rows: a vertex is a sink
+    # when it has no src row
+    ends = e.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("src").alias("id"), F.lit(False).alias("is_sink")),
+                F.struct(F.col("dst").alias("id"), F.lit(True).alias("is_sink")),
+            )
+        )
+    )
+    state = ends.groupBy("id").agg(F.bool_and("is_sink").alias("is_sink"))
+    rank = F.lit(1.0)
+    if init_ranks is not None:
+        state = state.join(init_ranks.select("id", F.col("rank").alias("_warm")), "id", "left")
+        rank = F.coalesce("_warm", rank)
+    state = state.select("id", rank.alias("rank"), "is_sink")
+    return e, state.repartition(num_partitions, "id")
 
 
 def pagerank(
@@ -80,108 +147,82 @@ def pagerank(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # --- init piece -------------------------------------------------------
-    if weighted:
-        e = normalize_edge_weights(edges.select("src", "dst", "weight"))
-    else:
-        deg = out_degrees(edges)
-        e = (
-            edges.select("src", "dst")
-            .join(deg, "src")
-            .withColumn("weight", F.lit(1.0) / F.col("out_degree").cast("double"))
-            .drop("out_degree")
+    # AQE off from the first set-up query: an adaptive plan would run the
+    # set-up aggregate and fill the lazy cut below as query-stage jobs
+    # of their own
+    with aqe_off(spark), temp_views(spark, "pr", "edges", "state", "new") as (ev, sv, nv):
+        e, setup_cut = _init_piece(
+            edges, num_partitions, weighted=weighted,
+            pre_partitioned=pre_partitioned, init_ranks=init_ranks,
         )
-    # static for the whole run: hash-partition by the scatter key once and
-    # cache, so each superstep's scatter join reshuffles only the rank state;
-    # a bucketed input table already IS partitioned that way — skip the
-    # exchange entirely (storage.write_bucketed_edges)
-    if not pre_partitioned:
-        e = e.repartition(num_partitions, "src")
-    e = e.persist()
-
-    verts = vertices_from_edges(edges)
-    sinks = verts.join(edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti")
-    state = verts.join(sinks.withColumn("is_sink", F.lit(True)), "id", "left")
-    if init_ranks is not None:
-        state = state.join(
-            init_ranks.select("id", F.col("rank").alias("_warm")), "id", "left"
-        ).select(
-            "id",
-            F.coalesce("_warm", F.lit(1.0)).alias("rank"),
-            F.coalesce("is_sink", F.lit(False)).alias("is_sink"),
-        )
-    else:
-        state = state.select(
-            "id",
-            F.lit(1.0).alias("rank"),
-            F.coalesce("is_sink", F.lit(False)).alias("is_sink"),
-        )
-    state = state.repartition(num_partitions, "id")
-
-    # ONE setup aggregate replaces verts.count() + the warm path's total
-    # scan + the first superstep's in-loop _sums job: vertex count, sink
-    # count, and (for the warm path) total / sink mass all come from the
-    # same scan, so superstep 0 starts with the aggregator box already
-    # initialized (fresh start: every rank is exactly 1.0)
-    srow = state.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("is_sink").cast("long")).alias("n_sinks"),
-        F.sum("rank").alias("mass"),
-        F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
-            "sink_mass"
-        ),
-    ).collect()[0]
-    n_vertices = int(srow["n"])
-    if n_vertices == 0:
-        return PregelRun(vertices=state.select("id", "rank"), supersteps=0, converged=True)
-    init_sink_sum = float(srow["sink_mass"] or 0.0)
-    if init_ranks is not None:
-        # this formulation CONSERVES the initial mass (new = d·(msgs +
-        # sink/N) + (1-d)·allSum/N), so an arbitrary warm vector must be
-        # rescaled to the reference's mass-N convention or the fixpoint
-        # itself would be scaled by the mass ratio
-        total = float(srow["mass"] or 0.0)
-        if total > 0:
-            state = state.withColumn(
-                "rank", F.col("rank") * F.lit(n_vertices / total)
-            )
-            init_sink_sum = init_sink_sum * (n_vertices / total)
-
-    d = float(damping)
-    # aggregator state visible to the *next* superstep (one-superstep lag,
-    # master/MasterCompute.java:41-47). On resume the loop starts from a
-    # snapshot this setup never saw, so the box must fall back to the
-    # lazy in-loop _sums; otherwise it is fully initialized here.
-    box: dict[str, float] = {
-        "all_sum": float(n_vertices),
-        "sink_sum": None if resume else init_sink_sum,
-    }  # type: ignore[assignment]
-
-    def _sums(df: DataFrame) -> tuple[float, float]:
-        r = df.agg(
-            F.sum("rank").alias("all_sum"),
+        # the initial state is the first lineage cut: ONE set-up aggregate
+        # fills it (and the edge cache under it) and returns the vertex
+        # count and the total / sink mass, so superstep 0 starts with the
+        # aggregator box already initialized (fresh start: every rank is
+        # exactly 1.0); run_supersteps adopts the filled cut as superstep
+        # 0's input
+        setup_cut = setup_cut.localCheckpoint(eager=False)
+        srow = setup_cut.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("rank").alias("mass"),
             F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
-                "sink_sum"
+                "sink_mass"
             ),
         ).collect()[0]
-        return float(r["all_sum"]), float(r["sink_sum"] or 0.0)
+        n_vertices = int(srow["n"])
+        if n_vertices == 0:
+            e.unpersist()
+            return PregelRun(vertices=setup_cut.select("id", "rank"), supersteps=0, converged=True)
+        state = setup_cut
+        init_sink_sum = float(srow["sink_mass"] or 0.0)
+        if init_ranks is not None:
+            # this formulation CONSERVES the initial mass (new = d·(msgs +
+            # sink/N) + (1-d)·allSum/N), so an arbitrary warm vector must be
+            # rescaled to the reference's mass-N convention or the fixpoint
+            # itself would be scaled by the mass ratio. The rescale is an
+            # un-cut input the loop persists; superstep 0's cut stops
+            # reading the set-up cut, which is freed after the loop
+            total = float(srow["mass"] or 0.0)
+            if total > 0:
+                state = state.withColumn(
+                    "rank", F.col("rank") * F.lit(n_vertices / total)
+                )
+                init_sink_sum = init_sink_sum * (n_vertices / total)
 
-    # The step is issued as ONE spark.sql() text per superstep instead of
-    # ~a dozen DataFrame-API calls: each Column/DataFrame builder is its
-    # own py4j round trip, measured ~117 ms of the ~430 ms sf0.1
-    # superstep floor; a SQL string ships the whole plan in one call and
-    # parses/analyzes JVM-side (measured 442 -> 335 ms/superstep, ranks
-    # identical to 1e-10 — FP reorder noise only). Join strategy hints
-    # match the DataFrame formulation exactly:
-    # - SHUFFLE_HASH(v) on the scatter join: sort-merge would re-sort the
-    #   (static, cached, already src-partitioned) edge table every
-    #   superstep; hash-building the much smaller per-superstep rank
-    #   state streams the edges untouched.
-    # - SHUFFLE_HASH(g) on the update join: build the gathered messages,
-    #   probe the co-partitioned state.
-    # The salted variant reproduces gather_messages' retry-safe two-level
-    # reduction (content-hashed salt, pregel.py:104-114) in SQL.
-    with temp_views(spark, "pr", "edges", "state", "new") as (ev, sv, nv):
+        d = float(damping)
+        # aggregator state visible to the *next* superstep (one-superstep lag,
+        # master/MasterCompute.java:41-47). On resume the loop starts from a
+        # snapshot this setup never saw, so the box must fall back to the
+        # lazy in-loop _sums; otherwise it is fully initialized here.
+        box: dict[str, float] = {
+            "all_sum": float(n_vertices),
+            "sink_sum": None if resume else init_sink_sum,
+        }  # type: ignore[assignment]
+
+        def _sums(df: DataFrame) -> tuple[float, float]:
+            r = df.agg(
+                F.sum("rank").alias("all_sum"),
+                F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
+                    "sink_sum"
+                ),
+            ).collect()[0]
+            return float(r["all_sum"]), float(r["sink_sum"] or 0.0)
+
+        # The step is issued as ONE spark.sql() text per superstep instead of
+        # ~a dozen DataFrame-API calls: each Column/DataFrame builder is its
+        # own py4j round trip, measured ~117 ms of the ~430 ms sf0.1
+        # superstep floor; a SQL string ships the whole plan in one call and
+        # parses/analyzes JVM-side (measured 442 -> 335 ms/superstep, ranks
+        # identical to 1e-10 — FP reorder noise only). Join strategy hints
+        # match the DataFrame formulation exactly:
+        # - SHUFFLE_HASH(v) on the scatter join: sort-merge would re-sort the
+        #   (static, cached, already src-partitioned) edge table every
+        #   superstep; hash-building the much smaller per-superstep rank
+        #   state streams the edges untouched.
+        # - SHUFFLE_HASH(g) on the update join: build the gathered messages,
+        #   probe the co-partitioned state.
+        # The salted variant reproduces gather_messages' retry-safe two-level
+        # reduction (content-hashed salt, pregel.py:104-114) in SQL.
         e.createOrReplaceTempView(ev)
         if salt and salt > 1:
             gather_cte = f"""m AS (
@@ -258,6 +299,8 @@ def pagerank(
             resume=resume,
             verbose=verbose,
         )
+        if state is not setup_cut:  # the loop did not adopt the set-up cut
+            _gated_release(spark.sparkContext, _checkpointed_jrdd(setup_cut))
     e.unpersist()
     return PregelRun(
         vertices=run.vertices.select("id", "rank"),

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, run_supersteps, temp_views
+from giraph_spark.pregel import PregelRun, aqe_off, run_supersteps, temp_views
 
 
 def connected_components(
@@ -69,42 +69,44 @@ def connected_components(
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if pre_partitioned:
-        e = edges.select("src", "dst")
-    else:
-        e = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
-        e = e.repartition(num_partitions, "src")
-    e = e.persist()
+    # AQE off from the edge persist() on: a cache planned adaptively
+    # re-runs its query stages as jobs of their own when first read
+    with aqe_off(spark), temp_views(spark, "wcc", "edges", "state", "new") as (ev, sv, nv):
+        if pre_partitioned:
+            e = edges.select("src", "dst")
+        else:
+            e = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
+            e = e.repartition(num_partitions, "src")
+        e = e.persist()
 
-    # superstep 0 of the init piece: min(own id, neighbor ids); vertices are
-    # marked changed so everyone scatters once
-    verts = vertices_from_edges(e)
-    if init_components is None:
-        state = verts.select(
-            "id", F.col("id").alias("component"), F.lit(True).alias("changed")
-        )
-    else:
-        state = (
-            verts.join(
-                init_components.select("id", F.col("component").alias("_c0")),
-                "id",
-                "left",
+        # superstep 0 of the init piece: min(own id, neighbor ids); vertices are
+        # marked changed so everyone scatters once
+        verts = vertices_from_edges(e)
+        if init_components is None:
+            state = verts.select(
+                "id", F.col("id").alias("component"), F.lit(True).alias("changed")
             )
-            .select(
-                "id",
-                F.least("id", F.coalesce("_c0", F.col("id"))).alias("component"),
-                F.lit(True).alias("changed"),
+        else:
+            state = (
+                verts.join(
+                    init_components.select("id", F.col("component").alias("_c0")),
+                    "id",
+                    "left",
+                )
+                .select(
+                    "id",
+                    F.least("id", F.coalesce("_c0", F.col("id"))).alias("component"),
+                    F.lit(True).alias("changed"),
+                )
             )
-        )
 
-    # ONE spark.sql() text per superstep instead of ~ten DataFrame-API
-    # py4j round trips — same rationale and measurement as the PageRank
-    # step (pagerank.py: ~117 ms/superstep of pure plan-building py4j).
-    # SHUFFLE_HASH(v): stream the static cached edge table, hash-build
-    # the shrinking changed-frontier — sort-merge would re-sort the
-    # edges each round. The salted variant is gather_messages' retry-
-    # safe content-hashed two-level min (pregel.py:104-114) in SQL.
-    with temp_views(spark, "wcc", "edges", "state", "new") as (ev, sv, nv):
+        # ONE spark.sql() text per superstep instead of ~ten DataFrame-API
+        # py4j round trips — same rationale and measurement as the PageRank
+        # step (pagerank.py: ~117 ms/superstep of pure plan-building py4j).
+        # SHUFFLE_HASH(v): stream the static cached edge table, hash-build
+        # the shrinking changed-frontier — sort-merge would re-sort the
+        # edges each round. The salted variant is gather_messages' retry-
+        # safe content-hashed two-level min (pregel.py:104-114) in SQL.
         e.createOrReplaceTempView(ev)
         if salt and salt > 1:
             gather_cte = f"""m AS (

@@ -33,6 +33,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from giraph_spark.pregel import partition_width
+
 Stats = dict[str, Any]
 Piece = Callable[[DataFrame, int], tuple[DataFrame, Stats]]
 Block = Callable[[], Iterator[Piece]]
@@ -127,9 +129,11 @@ def filtering(pred: Column, block: Block) -> Block:
                 # a narrow union SUMS partition counts, so chained
                 # filtering pieces (e.g. striped blocks) double the
                 # width per piece — rebound to the input's width
-                # (coalesce is narrow: no shuffle)
-                n = v.rdd.getNumPartitions()
-                return merged.coalesce(max(n, 1)), stats
+                # (coalesce is narrow: no shuffle). An input whose plan
+                # does not know its width (superstep 0's file or local
+                # scan) is left to the loop's width bound
+                n = partition_width(v)
+                return (merged.coalesce(n) if n else merged), stats
 
             yield wrapped
 

@@ -21,18 +21,27 @@ importable by the worker Python — ``session.get_spark`` prepends the
 repo root to ``PYTHONPATH`` before the JVM launches so the daemon's
 environment carries it.
 
-Fork-safety: none of these imports starts threads at import time
-(numpy's BLAS pool, pandas' numexpr, and Arrow's IO pool all
-initialise lazily on first use), so the fork in ``pyspark.daemon``
-stays single-threaded.  If any import fails we fall through and let
-workers import lazily as before — a slow warm-up, never a wrong
-answer.
+Fork-safety: an OpenBLAS-backed numpy starts its BLAS thread pool when
+the library loads, at ``import numpy`` (numpy 1.26: nproc - 1 threads),
+and a child forked from a multi-threaded process can hang on a lock one
+of those threads held.  So ``_prewarm`` sets ``OPENBLAS_NUM_THREADS=1``
+before the import (``setdefault``: a value the user exported still
+wins), and numpy then starts no thread; each forked worker is one task
+slot, so single-threaded BLAS is what it would use anyway.  The one
+thread the other imports start is pyarrow's jemalloc background thread,
+and jemalloc re-initialises its own locks in a forked child.  If any
+import fails we fall through and let workers import lazily as before — a
+slow warm-up, never a wrong answer.
 """
 
 from __future__ import annotations
 
+import os
+
 
 def _prewarm() -> None:
+    # before numpy loads OpenBLAS, which sizes its thread pool at load
+    os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
     try:  # pragma: no cover - executed inside the daemon process
         import numpy  # noqa: F401
         import pandas  # noqa: F401

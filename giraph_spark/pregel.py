@@ -263,6 +263,37 @@ def restore_aqe(spark) -> None:
             _AQE_STATE[id(spark)] = (depth - 1, saved)
 
 
+@contextmanager
+def aqe_off(spark: SparkSession) -> Iterator[None]:
+    """AQE off for the ``with`` body (refcounted ``suppress_aqe`` /
+    ``restore_aqe``); the caller's value is back even if the body raises.
+    An engine call enters it at its top, so its set-up — the edge
+    ``persist()``, the initial state and any lazy cut over them — is
+    planned without adaptive query stages, each of which would be a job
+    of its own."""
+    suppress_aqe(spark)
+    try:
+        yield
+    finally:
+        restore_aqe(spark)
+
+
+def partition_width(df: DataFrame) -> int:
+    """``df``'s partition count without running a job: a cut's java RDD,
+    else the output partitioning of the (non-adaptive) physical plan.
+    0 when the plan does not know it (a file or local-table scan).
+    ``df.rdd.getNumPartitions()`` would instead convert to a Python RDD,
+    which under AQE materializes every query stage."""
+    jrdd = _checkpointed_jrdd(df)
+    try:
+        if jrdd is not None:
+            return int(jrdd.getNumPartitions())
+        plan = df._jdf.queryExecution().executedPlan()  # noqa: SLF001
+        return int(plan.outputPartitioning().numPartitions())
+    except Exception:  # noqa: BLE001
+        return 0
+
+
 # --- job-completion-gated checkpoint-block release -----------------------
 #
 # Releasing a localCheckpoint block that a still-running task reads aborts
@@ -526,6 +557,16 @@ def run_supersteps(
     the previous cut's blocks are then freed, the partition width is
     bounded, and a snapshot is taken when due.
 
+    The input follows the same rule: a ``vertices`` frame that is a cut
+    already materialized (e.g. a lazy cut the caller's set-up aggregate
+    filled) is adopted as superstep 0's cut, so the loop owns its blocks
+    and frees them like any other cut — after superstep 0, or when a
+    ``resume`` snapshot replaces it; the caller must not read it after
+    the call. Any other input is persisted and filled by superstep 0's
+    own job. The width bound's base is the input's partition count read
+    from its physical plan (no job), or the first cut's when the plan
+    does not know it (a file scan).
+
     Lineage-cut invalidation: each cut explicitly releases the PREVIOUS
     cut's localCheckpoint blocks, so a ``step``/``halt`` closure must not
     retain and later re-execute a DataFrame derived from an earlier
@@ -544,12 +585,14 @@ def run_supersteps(
     the per-superstep local cut only bounds plan growth. local[*] runs
     can ignore this (one JVM = no partial loss).
 
-    Concurrency: the loop turns the session-wide
-    ``spark.sql.adaptive.enabled`` conf off for its duration (refcounted
-    by ``suppress_aqe``, so overlapping loops on one session restore the
-    user's value only when the last one ends); queries run concurrently
+    Concurrency: the session-wide ``spark.sql.adaptive.enabled`` conf is
+    off for the whole engine call (``aqe_off``, refcounted, so
+    overlapping calls on one session restore the user's value only when
+    the last one ends, also when a call raises). The SQL-text algorithms
+    enter the scope at their top, so their set-up is planned without AQE
+    too; the loop's own scope nests inside it. Queries run concurrently
     on the same session from other threads lose AQE's skew handling
-    while a loop is active.
+    while a call is active.
 
     ``verbose=True`` logs each superstep's stats at INFO on the
     ``giraph_spark`` logger (DEBUG otherwise).
@@ -562,102 +605,100 @@ def run_supersteps(
     sc = spark.sparkContext
     level = logging.INFO if verbose else logging.DEBUG
     superstep = 0
-    if resume and ckpt is not None:
-        found = ckpt.latest()
-        if found is not None:
-            superstep, vertices, _m = found
-            _log.log(level, "resuming from checkpoint superstep=%d", superstep)
-
-    current = vertices.persist()
-    start_partitions = current.rdd.getNumPartitions()
-    # AQE off for the loop: superstep plans are fixed-shape (explicit
-    # shuffle_hash hints, explicit partition counts, salting for skew),
-    # so adaptive re-planning adds only its latency — AQE materializes
-    # query stages one at a time with a driver re-plan between them,
-    # measured ~60ms/superstep at sf0.1 (interleaved 5-rep A/B medians:
-    # 490 -> 433 ms/superstep). Restored after the loop so one-shot
-    # analytics queries keep AQE's skew-join safety net.
     history: list[dict[str, Any]] = []
     converged = False
-    last_saved = superstep if (resume and ckpt is not None) else None
-    cut_jrdd = None  # java RDD behind the live lineage cut
-    suppress_aqe(spark)  # refcounted: safe under overlapping loops
-    try:
-        # inside the try so a raising hook cannot leak AQE=false into the
-        # shared session (the finally below always restores it)
-        if hooks is not None and hooks.pre_application is not None:
-            hooks.pre_application(current)
-        while superstep < max_supersteps:
-            t0 = time.time()
-            if hooks is not None and hooks.pre_superstep is not None:
-                hooks.pre_superstep(current, superstep)
-            new_vertices, stats = step(current, superstep)
-            # adopt or cut: a returned input is never adopted (its handle
-            # is the live cut, freed below)
-            jrdd = None if new_vertices is current else _checkpointed_jrdd(new_vertices)
-            if jrdd is None or not jrdd.isCheckpointed():
-                cut = new_vertices.localCheckpoint(eager=True)
-                new_vertices.unpersist()
-                # a lazy cut the step never scanned was filled by this
-                # job; the new cut no longer reads it
-                _gated_release(sc, jrdd)
-                new_vertices, jrdd = cut, _checkpointed_jrdd(cut)
-            if not stats:
-                stats = {"rows": new_vertices.count()}
-            stats = dict(stats)
-            stats["superstep"] = superstep
-            stats["seconds"] = time.time() - t0
-            if hooks is not None and hooks.post_superstep is not None:
-                hooks.post_superstep(new_vertices, superstep, stats)
-            history.append(stats)
-            _log.log(level, "superstep=%d %s", superstep, stats)
-
-            superstep += 1
-            current.unpersist()
-            current = new_vertices
-            # the previous cut's blocks: localCheckpoint blocks are not
-            # freed by DataFrame.unpersist, so a long run would otherwise
-            # hold every superstep's state
-            _gated_release(sc, cut_jrdd)
-            cut_jrdd = jrdd
-            # defensive width bound: a step that unions frames (narrow
-            # union sums partition counts) would otherwise compound the
-            # width superstep over superstep until the cut materializes
-            # tens of thousands of tiny blocks. The coalesce is narrow and
-            # lands on the INPUT of the next step, so its cut materializes
-            # at the bounded width (8x headroom; the cut's java RDD gives
-            # the width without re-analyzing the plan)
-            try:
-                width = int(cut_jrdd.getNumPartitions())
-            except Exception:  # noqa: BLE001
-                width = start_partitions
-            if width > 8 * max(start_partitions, 1):
-                current = current.coalesce(start_partitions)
-
-            if ckpt is not None and ckpt.should_save(superstep):
-                reloaded = ckpt.save(current, superstep, stats)
-                last_saved = superstep
-                # the reliable snapshot replaces the cut: nothing reads it
+    # AQE off for the whole call (see Concurrency above): superstep plans
+    # are fixed-shape (explicit shuffle_hash hints, explicit partition
+    # counts, salting for skew), so adaptive re-planning adds only its
+    # latency — AQE materializes query stages one at a time with a driver
+    # re-plan between them, measured ~60ms/superstep at sf0.1
+    # (interleaved 5-rep A/B medians: 490 -> 433 ms/superstep)
+    with aqe_off(spark):
+        # a materialized input cut is adopted: the loop owns its blocks
+        jrdd = _checkpointed_jrdd(vertices)
+        cut_jrdd = jrdd if jrdd is not None and jrdd.isCheckpointed() else None
+        if resume and ckpt is not None:
+            found = ckpt.latest()
+            if found is not None:
+                superstep, vertices, _m = found
+                # the snapshot replaces the input: nothing reads its cut
                 _gated_release(sc, cut_jrdd)
                 cut_jrdd = None
-                current = reloaded.persist()
+                _log.log(level, "resuming from checkpoint superstep=%d", superstep)
+        last_saved = superstep if (resume and ckpt is not None) else None
+        current = vertices if cut_jrdd is not None else vertices.persist()
+        # 0 (a file scan's plan) falls back to the first cut's width
+        start_partitions = partition_width(current)
+        try:
+            if hooks is not None and hooks.pre_application is not None:
+                hooks.pre_application(current)
+            while superstep < max_supersteps:
+                t0 = time.time()
+                if hooks is not None and hooks.pre_superstep is not None:
+                    hooks.pre_superstep(current, superstep)
+                new_vertices, stats = step(current, superstep)
+                # adopt or cut: a returned input is never adopted (its
+                # handle is the live cut, freed below)
+                jrdd = None if new_vertices is current else _checkpointed_jrdd(new_vertices)
+                if jrdd is None or not jrdd.isCheckpointed():
+                    cut = new_vertices.localCheckpoint(eager=True)
+                    new_vertices.unpersist()
+                    # a lazy cut the step never scanned was filled by this
+                    # job; the new cut no longer reads it
+                    _gated_release(sc, jrdd)
+                    new_vertices, jrdd = cut, _checkpointed_jrdd(cut)
+                if not stats:
+                    stats = {"rows": new_vertices.count()}
+                stats = dict(stats)
+                stats["superstep"] = superstep
+                stats["seconds"] = time.time() - t0
+                if hooks is not None and hooks.post_superstep is not None:
+                    hooks.post_superstep(new_vertices, superstep, stats)
+                history.append(stats)
+                _log.log(level, "superstep=%d %s", superstep, stats)
 
-            if halt is not None and halt(stats, superstep):
-                converged = True
-                break
+                superstep += 1
+                current.unpersist()
+                current = new_vertices
+                # the previous cut's blocks: localCheckpoint blocks are not
+                # freed by DataFrame.unpersist, so a long run would
+                # otherwise hold every superstep's state
+                _gated_release(sc, cut_jrdd)
+                cut_jrdd = jrdd
+                # defensive width bound: a step that unions frames (narrow
+                # union sums partition counts) would otherwise compound the
+                # width superstep over superstep until the cut materializes
+                # tens of thousands of tiny blocks. The coalesce is narrow
+                # and lands on the INPUT of the next step, so its cut
+                # materializes at the bounded width (8x headroom)
+                width = partition_width(current)
+                start_partitions = start_partitions or width
+                if width > 8 * start_partitions:
+                    current = current.coalesce(start_partitions)
 
-        # final snapshot — but never overwrite the directory the current state
-        # was just reloaded from (write-into-source)
-        if ckpt is not None and history and last_saved != superstep:
-            ckpt.save(current, superstep, history[-1])
-        if hooks is not None and hooks.post_application is not None:
-            hooks.post_application(current)
-    finally:
-        restore_aqe(spark)
-        # opportunistic, non-forcing: free any release whose watched
-        # work has finished (the loop's own releases are usually freed
-        # inline; this catches ones deferred past a straggler)
-        drain_releases()
+                if ckpt is not None and ckpt.should_save(superstep):
+                    reloaded = ckpt.save(current, superstep, stats)
+                    last_saved = superstep
+                    # the reliable snapshot replaces the cut: nothing reads it
+                    _gated_release(sc, cut_jrdd)
+                    cut_jrdd = None
+                    current = reloaded.persist()
+
+                if halt is not None and halt(stats, superstep):
+                    converged = True
+                    break
+
+            # final snapshot — but never overwrite the directory the
+            # current state was just reloaded from (write-into-source)
+            if ckpt is not None and history and last_saved != superstep:
+                ckpt.save(current, superstep, history[-1])
+            if hooks is not None and hooks.post_application is not None:
+                hooks.post_application(current)
+        finally:
+            # opportunistic, non-forcing: free any release whose watched
+            # work has finished (the loop's own releases are usually
+            # freed inline; this catches ones deferred past a straggler)
+            drain_releases()
     return PregelRun(
         vertices=current, supersteps=superstep, converged=converged, history=history
     )

@@ -181,13 +181,14 @@ def test_lineage_cut_bounds_partition_width(spark):
     assert run.vertices.rdd.getNumPartitions() <= 8 * 4
 
 
-def _jobs_per_superstep(spark, step, supersteps, tag, **kwargs):
-    """Run ``step`` on a 50-row state with each superstep in its own job
-    group; returns (run, Spark jobs issued per superstep)."""
+def _jobs_per_superstep(spark, step, supersteps, tag, v0=None, **kwargs):
+    """Run ``step`` on a 50-row state (or ``v0``) with each superstep in its
+    own job group; returns (run, Spark jobs issued per superstep)."""
     from giraph_spark.pregel import WorkerHooks, run_supersteps
 
     sc = spark.sparkContext
-    v0 = spark.createDataFrame([(i, float(i)) for i in range(50)], "id long, x double")
+    if v0 is None:
+        v0 = spark.createDataFrame([(i, float(i)) for i in range(50)], "id long, x double")
     hooks = WorkerHooks(
         pre_superstep=lambda df, i: sc.setJobGroup(f"{tag}-{i}", f"{tag} ss={i}")
     )
@@ -252,6 +253,110 @@ def test_loop_cuts_unscanned_lazy_cut(spark):
     run, _ = _jobs_per_superstep(spark, step, 5, "unscanned")
     assert run.supersteps == 5
     assert run.vertices.agg(F.sum("x")).collect()[0][0] == 1225.0 + 50 * 5
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    return {int(k) for k in sc._jsc.getPersistentRDDs()}  # noqa: SLF001
+
+
+def test_loop_adopts_materialized_input_cut(spark):
+    """An input that is a materialized cut is adopted as superstep 0's
+    cut: superstep 0 costs one job (no persist fill, no re-cut), and the
+    loop frees the input's blocks like any other cut."""
+    from giraph_spark.pregel import _checkpointed_jrdd, flush_releases
+
+    v0 = spark.createDataFrame([(i, float(i)) for i in range(50)], "id long, x double")
+    v0 = v0.localCheckpoint(eager=False)
+    assert v0.agg(F.sum("x")).collect()[0][0] == 1225.0  # fills the cut
+    input_id = _checkpointed_jrdd(v0).id()
+    assert input_id in _persistent_rdd_ids(spark.sparkContext)
+
+    def step(vertices, superstep):
+        nv = vertices.select("id", (F.col("x") + 1).alias("x")).localCheckpoint(
+            eager=False
+        )
+        return nv, {"sum": nv.agg(F.sum("x")).collect()[0][0]}
+
+    run, jobs = _jobs_per_superstep(spark, step, 3, "adopt-input", v0=v0)
+    flush_releases()
+    assert jobs == [1, 1, 1]
+    assert [h["sum"] for h in run.history] == [1275.0, 1325.0, 1375.0]
+    assert input_id not in _persistent_rdd_ids(spark.sparkContext)
+
+
+def test_engine_calls_setup_is_one_job(spark):
+    """Each SQL-text engine call plans its set-up without AQE and folds it
+    into one job: a 5-superstep PageRank issues at most 1 + 5 Spark jobs,
+    WCC and LPA at most one per superstep plus one."""
+    from giraph_spark.algorithms import label_propagation
+
+    sc = spark.sparkContext
+    edges = _edges_df(spark, _random_digraph(11, 60, 240))
+
+    def jobs(tag, call):
+        sc.setJobGroup(tag, tag)
+        try:
+            run = call()
+        finally:
+            sc._jsc.clearJobGroup()  # noqa: SLF001
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return run, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    run, n = jobs("jobs-pr", lambda: pagerank(spark, edges, max_supersteps=5))
+    assert run.supersteps == 5 and n <= 6, n
+    run, n = jobs("jobs-wcc", lambda: connected_components(spark, edges, max_supersteps=5))
+    assert n <= run.supersteps + 1, (n, run.supersteps)
+    run, n = jobs("jobs-lpa", lambda: label_propagation(spark, edges, max_supersteps=5))
+    assert n <= run.supersteps + 1, (n, run.supersteps)
+
+
+def test_engine_calls_restore_callers_aqe(spark):
+    """spark.sql.adaptive.enabled reads the caller's value after each
+    engine call, also after a call that raises inside its AQE-off scope."""
+    from pyspark.errors import AnalysisException
+
+    from giraph_spark.algorithms import label_propagation
+
+    key = "spark.sql.adaptive.enabled"
+    user_val = spark.conf.get(key)
+    edges = _edges_df(spark, _random_digraph(12, 30, 90))
+    bad = spark.createDataFrame([(1, 2)], "a long, b long")
+    calls = [
+        lambda e: pagerank(spark, e, max_supersteps=2),
+        lambda e: connected_components(spark, e, max_supersteps=2),
+        lambda e: label_propagation(spark, e, max_supersteps=2),
+    ]
+    try:
+        for caller_val in ("false", "true"):
+            spark.conf.set(key, caller_val)
+            for call in calls:
+                call(edges)
+                assert spark.conf.get(key) == caller_val
+                with pytest.raises(AnalysisException):
+                    call(bad)
+                assert spark.conf.get(key) == caller_val
+    finally:
+        spark.conf.set(key, user_val)
+
+
+def test_pagerank_resume_frees_setup_cut(spark, tmp_path):
+    """A resume=True PageRank replaces its set-up cut with the snapshot and
+    frees it: the only checkpoint left registered is the result's."""
+    from giraph_spark.pregel import flush_releases
+
+    sc = spark.sparkContext
+    edges = _edges_df(spark, _random_digraph(13, 40, 160))
+    ckpt = str(tmp_path / "ck")
+    pagerank(spark, edges, max_supersteps=3, checkpoint_dir=ckpt, checkpoint_interval=3)
+    flush_releases()
+    before = _persistent_rdd_ids(sc)
+    run = pagerank(
+        spark, edges, max_supersteps=4, checkpoint_dir=ckpt, checkpoint_interval=3,
+        resume=True,
+    )
+    flush_releases()
+    assert run.supersteps == 4 and len(run.history) == 1
+    assert len(_persistent_rdd_ids(sc) - before) == 1  # the result's cut
 
 
 def test_bare_checkpoint_values_schema_release(spark):
@@ -530,6 +635,19 @@ def test_daemon_warm_wiring(spark):
     )
     assert repo_root in os.environ.get("PYTHONPATH", "").split(os.pathsep)
     daemon_warm._prewarm()  # must not raise (degrades lazily, never fails)
+
+
+def test_daemon_warm_blas_single_threaded(monkeypatch):
+    """_prewarm caps OpenBLAS at one thread before numpy loads it (the
+    daemon forks after), unless the user already chose a value."""
+    from giraph_spark import daemon_warm
+
+    monkeypatch.setenv("OPENBLAS_NUM_THREADS", "3")
+    daemon_warm._prewarm()
+    assert os.environ["OPENBLAS_NUM_THREADS"] == "3"
+    monkeypatch.delenv("OPENBLAS_NUM_THREADS")
+    daemon_warm._prewarm()
+    assert os.environ["OPENBLAS_NUM_THREADS"] == "1"
 
 
 def test_aqe_suppression_refcounted(spark):

@@ -9,6 +9,8 @@ scale-critical properties the docs claim:
   never re-sorted), and the gather aggregate has a partial_ (map-side
   combine) phase
 - the triangle wedge join is degeneracy-oriented (no raw sym self-join)
+- the PageRank set-up plan has no BroadcastExchange, and on a bucketed
+  input no Exchange on the edge side
 
 Writes the full explains + a PASS/FAIL summary to stdout; run as
     python tools/plan_audit.py > BENCH/runs/plan_audit_rN.txt
@@ -103,6 +105,33 @@ def main() -> None:
                    "partial_sum" in p, p))
     checks.append(("sql-text superstep: no nested-loop/cartesian",
                    "NestedLoop" not in p and "Cartesian" not in p, p))
+
+    # 2c. PageRank set-up: one job with no broadcast (the out-degree is a
+    # window, the sink flag one groupBy), and a bucketed input's edge side
+    # needs no exchange (the window's partition key is the bucket key)
+    import tempfile
+
+    from giraph_spark import storage
+    from giraph_spark.algorithms.pagerank import _init_piece
+    from giraph_spark.pregel import aqe_off
+
+    with tempfile.TemporaryDirectory(prefix="plan_audit_") as loc, aqe_off(spark):
+        storage.write_bucketed_edges(edges, "audit_bucketed", buckets=8, location=loc)
+        e_setup, state = _init_piece(edges, 8)
+        p = explain_str(state)
+        e_setup.unpersist()
+        checks.append(("pagerank setup: no BroadcastExchange (no degree/sink joins)",
+                       "BroadcastExchange" not in p, p))
+        e_setup, state = _init_piece(storage.read_bucketed_edges(spark, "audit_bucketed"), 8,
+                                     pre_partitioned=True)
+        p = explain_str(state)
+        e_setup.unpersist()
+        # the operator tree's lines under the cached edge table
+        edge_side = p.split("\n\n", 1)[0].split("InMemoryRelation", 1)[-1]
+        checks.append(("pagerank setup, bucketed input: no BroadcastExchange, no edge-side "
+                       "Exchange",
+                       "BroadcastExchange" not in p and "Bucketed: true" in p
+                       and "Scan parquet" in edge_side and "Exchange" not in edge_side, p))
 
     # 3. triangles: oriented wedge join, no cartesian
     from giraph_spark.algorithms.triangles import _oriented, _triangle_list_from
