@@ -7,20 +7,21 @@ master finalize ``master/BspServiceMaster.java:1600-1623``, frequency knob
 ``conf/GiraphConstants.java:896``; restart-equivalence semantics tested by
 ``giraph-examples/src/test/.../TestCheckpointing.java:99-147``).
 
-In Spark the snapshot doubles as the iterative-plan lineage cut: the
-reloaded parquet DataFrame has a fresh one-node logical plan, bounding
-Catalyst analysis time across supersteps.
+Like ``storeCheckpoint()``, a snapshot is a copy written in one job: the
+loop keeps computing from the lineage cut it wrote and reads a snapshot
+back only on resume. Per-partition row counts come from parquet footers.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _snap_dir(root: str, superstep: int) -> str:
@@ -41,19 +42,18 @@ class CheckpointManager:
     def should_save(self, superstep: int) -> bool:
         return superstep > 0 and superstep % self.interval == 0
 
-    def save(self, vertices: DataFrame, superstep: int, stats: dict[str, Any]) -> DataFrame:
-        """Snapshot the vertex state; returns the reloaded DataFrame (fresh
-        lineage). Metrics include per-partition row counts — the
-        'per-partition lineage' record the north rule requires."""
+    def save(self, vertices: DataFrame, superstep: int, stats: dict[str, Any]) -> None:
+        """Snapshot the vertex state in one write job. Metrics include
+        per-partition row counts — the 'per-partition lineage' record the
+        north rule requires — read from the part files' parquet footers."""
         d = _snap_dir(self.directory, superstep)
+        data = os.path.join(d, "data.parquet")
         t0 = time.time()
-        vertices.write.mode("overwrite").parquet(os.path.join(d, "data.parquet"))
-        reloaded = self.spark.read.parquet(os.path.join(d, "data.parquet"))
-        per_part = [
-            {"partition": int(r["pid"]), "rows": int(r["rows"])}
-            for r in reloaded.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
+        vertices.write.mode("overwrite").parquet(data)
+        per_part = [  # part-NNNNN-...: NNNNN is the writing task's partition
+            {"partition": int(os.path.basename(f).split("-")[1]),
+             "rows": pq.read_metadata(f).num_rows}
+            for f in sorted(glob.glob(os.path.join(data, "part-*")))
         ]
         metrics = {
             "superstep": superstep,
@@ -65,7 +65,6 @@ class CheckpointManager:
         }
         with open(os.path.join(d, "metrics.json"), "w") as f:
             json.dump(metrics, f, indent=1)
-        return reloaded
 
     def latest(self) -> tuple[int, DataFrame, dict[str, Any]] | None:
         """Newest valid snapshot, or None. Validity = parquet _SUCCESS

@@ -18,8 +18,8 @@ Maps the reference's execution model onto Spark:
                          converged / max supersteps
                          (master/BspServiceMaster.java:1654-1679)
 - checkpoint/restart   = CheckpointManager snapshots (BspServiceWorker
-                         .storeCheckpoint():1249); the snapshot is also the
-                         lineage cut that bounds Catalyst plan growth
+                         .storeCheckpoint():1249); the loop keeps computing
+                         from the lineage cut it wrote
 - hub-skew salting     = two-level gather aggregation (our analog of
                          partition balancing, partition/PartitionBalancer.java,
                          required because a web graph's ``groupBy(dst)``
@@ -575,10 +575,12 @@ def run_supersteps(
     vertices`` after the loop).
 
     Fault tolerance at cluster scale: ``localCheckpoint`` blocks are
-    executor-local and NOT fault-tolerant — between reliable snapshots,
-    one lost executor aborts the run (the job then restarts from the
-    newest ``checkpoint_dir`` snapshot via ``resume=True``, Giraph's
-    checkpoint-restart contract, BspServiceMaster superstep recovery).
+    executor-local and NOT fault-tolerant — one lost executor aborts the
+    run, which then restarts from the newest ``checkpoint_dir`` snapshot
+    via ``resume=True`` (Giraph's checkpoint-restart contract,
+    BspServiceMaster superstep recovery). A snapshot is one write job and
+    the loop keeps computing from the cut it wrote, so this holds in the
+    superstep after a snapshot too: no task retry heals a loss there.
     On a 1000-executor cluster size ``checkpoint_interval`` by
     (executor MTBF / superstep time): the cost of a reliable snapshot
     every k supersteps buys losing at most k supersteps of work, while
@@ -677,19 +679,15 @@ def run_supersteps(
                     current = current.coalesce(start_partitions)
 
                 if ckpt is not None and ckpt.should_save(superstep):
-                    reloaded = ckpt.save(current, superstep, stats)
+                    ckpt.save(current, superstep, stats)
                     last_saved = superstep
-                    # the reliable snapshot replaces the cut: nothing reads it
-                    _gated_release(sc, cut_jrdd)
-                    cut_jrdd = None
-                    current = reloaded.persist()
 
                 if halt is not None and halt(stats, superstep):
                     converged = True
                     break
 
-            # final snapshot — but never overwrite the directory the
-            # current state was just reloaded from (write-into-source)
+            # final snapshot, unless this superstep is saved already (by
+            # the loop, or on resume the directory the state is read from)
             if ckpt is not None and history and last_saved != superstep:
                 ckpt.save(current, superstep, history[-1])
             if hooks is not None and hooks.post_application is not None:

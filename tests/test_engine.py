@@ -58,19 +58,78 @@ def test_checkpoint_resume_equivalence(spark, tmp_path):
     assert len(resumed.history) < len(full.history)
 
 
+def test_resume_after_lost_cut(spark, tmp_path, monkeypatch):
+    """Checkpoint-restart contract: the snapshot at superstep 2 is a copy
+    of the cut the loop keeps computing from. Losing that cut's blocks
+    right after the save (a lost executor) may abort the run; resume=True
+    from the snapshot then gives the uninterrupted answer."""
+    from py4j.protocol import Py4JJavaError
+
+    from giraph_spark.pregel import _checkpointed_jrdd
+
+    real_save = CheckpointManager.save
+
+    def save_then_lose_cut(self, vertices, superstep, stats):
+        out = real_save(self, vertices, superstep, stats)
+        if superstep == 2:
+            _checkpointed_jrdd(vertices).unpersist(True)
+        return out
+
+    # a path plus chords: WCC needs more than 2 supersteps to converge
+    pairs = [(i, i + 1) for i in range(24)] + _random_digraph(3, 24, 12)
+    edges = _edges_df(spark, sorted(set(pairs)))
+    algos = {
+        "pagerank": (lambda **kw: pagerank(spark, edges, max_supersteps=6, **kw), "rank"),
+        "wcc": (lambda **kw: connected_components(spark, edges, **kw), "component"),
+    }
+    for name, (call, col) in algos.items():
+        want = {r["id"]: r[col] for r in call().vertices.collect()}
+        ck = str(tmp_path / f"lost-{name}")
+        with monkeypatch.context() as m:
+            m.setattr(CheckpointManager, "save", save_then_lose_cut)
+            try:
+                call(checkpoint_dir=ck, checkpoint_interval=2)
+                finished = True
+            except Py4JJavaError as e:  # the lost cut aborts the run
+                assert "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in str(e)
+                finished = False
+        saved = CheckpointManager(spark, ck).latest()[0]
+        assert finished or saved == 2, (name, saved)
+        resumed = call(checkpoint_dir=ck, checkpoint_interval=2, resume=True)
+        got = {r["id"]: r[col] for r in resumed.vertices.collect()}
+        assert got.keys() == want.keys()
+        if name == "pagerank":
+            assert all(abs(got[k] - want[k]) <= 1e-12 for k in want)
+        else:
+            assert got == want
+        assert [h["superstep"] for h in resumed.history] == list(
+            range(saved, resumed.supersteps)
+        )
+
+
 def test_checkpoint_metrics_record_per_partition_lineage(spark, tmp_path):
-    ck = str(tmp_path / "ck2")
-    edges = _edges_df(spark, _random_digraph(5, 60, 120))
-    pagerank(spark, edges, max_supersteps=4, checkpoint_dir=ck, checkpoint_interval=2)
-    snaps = sorted(os.listdir(ck))
-    assert snaps  # at least superstep=2 and final
+    """Each snapshot's metrics.json has one entry per written part file:
+    distinct partition ids below the state's width, rows summing to the
+    vertex count."""
+    import glob
     import json
 
-    with open(os.path.join(ck, snaps[0], "metrics.json")) as f:
-        m = json.load(f)
-    assert m["rows"] > 0
-    assert m["partitions"] and all("rows" in p for p in m["partitions"])
-    assert "l1" in m["stats"]
+    ck = str(tmp_path / "ck2")
+    edges = _edges_df(spark, _random_digraph(5, 60, 120))
+    run = pagerank(spark, edges, max_supersteps=4, checkpoint_dir=ck, checkpoint_interval=2)
+    width = run.vertices.rdd.getNumPartitions()
+    n = run.vertices.count()
+    snaps = sorted(os.listdir(ck))
+    assert snaps == ["superstep=00002", "superstep=00004"]
+    for snap in snaps:
+        with open(os.path.join(ck, snap, "metrics.json")) as f:
+            m = json.load(f)
+        parts = m["partitions"]
+        pids = [p["partition"] for p in parts]
+        assert len(set(pids)) == len(pids) and all(0 <= p < width for p in pids)
+        assert len(parts) == len(glob.glob(os.path.join(ck, snap, "data.parquet", "part-*")))
+        assert m["rows"] == sum(p["rows"] for p in parts) == n
+        assert "l1" in m["stats"]
 
 
 def test_checkpoint_latest_skips_invalid(spark, tmp_path):
@@ -284,10 +343,12 @@ def test_loop_adopts_materialized_input_cut(spark):
     assert input_id not in _persistent_rdd_ids(spark.sparkContext)
 
 
-def test_engine_calls_setup_is_one_job(spark):
+def test_engine_calls_setup_is_one_job(spark, tmp_path):
     """Each SQL-text engine call plans its set-up without AQE and folds it
     into one job: a 5-superstep PageRank issues at most 1 + 5 Spark jobs,
-    WCC and LPA at most one per superstep plus one."""
+    WCC and LPA at most one per superstep plus one. A snapshot is one
+    write job: snapshotting every 3 supersteps adds 2 (at 3 and the final
+    5), and the resume to superstep 7 is at most 7 jobs."""
     from giraph_spark.algorithms import label_propagation
 
     sc = spark.sparkContext
@@ -304,6 +365,13 @@ def test_engine_calls_setup_is_one_job(spark):
 
     run, n = jobs("jobs-pr", lambda: pagerank(spark, edges, max_supersteps=5))
     assert run.supersteps == 5 and n <= 6, n
+    ck = {"checkpoint_dir": str(tmp_path / "ck-jobs"), "checkpoint_interval": 3}
+    run, n = jobs("jobs-pr-ck", lambda: pagerank(spark, edges, max_supersteps=5, **ck))
+    assert run.supersteps == 5 and n <= 8, n
+    run, n = jobs(
+        "jobs-pr-resume", lambda: pagerank(spark, edges, max_supersteps=7, resume=True, **ck)
+    )
+    assert run.supersteps == 7 and n <= 7, n
     run, n = jobs("jobs-wcc", lambda: connected_components(spark, edges, max_supersteps=5))
     assert n <= run.supersteps + 1, (n, run.supersteps)
     run, n = jobs("jobs-lpa", lambda: label_propagation(spark, edges, max_supersteps=5))

@@ -35,6 +35,21 @@ def to_multiset(df: pd.DataFrame):
     return cols, sorted(rows, key=repr)
 
 
+def duckdb_memory_limit_mb() -> int:
+    """Half of the memory available now (``MemAvailable``), at most 48 GB;
+    48 GB where /proc/meminfo is unreadable. The other half is left to
+    the Spark JVM and its Python workers."""
+    cap_mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return min(cap_mb, int(line.split()[1]) // 2048)  # kB -> MB, halved
+    except OSError:
+        pass
+    return cap_mb
+
+
 def main() -> int:
     args = sys.argv[1:]
     jobs = 1
@@ -71,9 +86,11 @@ def main() -> int:
     # sf0.1 trussness oracle's unrolled CTE chain pins >100 GiB of
     # materialized intermediates without it (observed OOM at the block
     # pin limit). A sub-RAM memory_limit makes it go out-of-core early
-    # instead of dying at the wall.
+    # instead of dying at the wall — or being killed by the OS first.
     con.execute("SET temp_directory='/tmp/duckdb_oracle_spill'")
-    con.execute("SET memory_limit='48GB'")
+    limit_mb = duckdb_memory_limit_mb()
+    con.execute(f"SET memory_limit='{limit_mb}MB'")
+    print(f"duckdb memory_limit={limit_mb}MB")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
