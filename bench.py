@@ -64,12 +64,10 @@ def main() -> None:
     # (a) is Python-process work and (b) is pure JVM codegen on a
     # JVM-generated edge table (no Python workers involved), so the two
     # warm-ups run CONCURRENTLY on separate driver threads and the phase
-    # costs max(a, b) instead of a + b (measured 11.2 s -> ~6 s).
-    # Session-conf interplay: the pagerank thread suppresses AQE for its
-    # duration (refcounted, pregel.suppress_aqe), so the corpus count may
-    # plan with AQE off depending on interleaving — benign for a single
-    # narrow map+count, and the measured phases below run after both
-    # threads have joined and restored the conf.
+    # costs max(a, b) instead of a + b (measured 11.2 s -> ~6 s). The
+    # pagerank thread turns AQE off in its own cloned session only
+    # (pregel.engine_session), so the corpus count plans with the
+    # session's conf whatever the interleaving.
     import threading
 
     warm_errs: list[BaseException] = []

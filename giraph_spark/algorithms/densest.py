@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import clean_symmetric, vertices_from_edges
-from giraph_spark.pregel import run_supersteps
+from giraph_spark.pregel import engine_session, rebind, run_supersteps
 
 
 @dataclass
@@ -65,6 +65,8 @@ def densest_subgraph(
     (symmetrized, self-loops dropped). Deterministic: the removal
     threshold factor ``2*(1+eps)`` is computed once in IEEE double and
     every engine replaying the same comparisons peels identically."""
+    home = edges.sparkSession
+    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     factor = 2.0 * (1.0 + float(eps))
@@ -155,7 +157,7 @@ def densest_subgraph(
         ).alias("in_densest"),
     )
     return DensestResult(
-        vertices=out,
+        vertices=rebind(out, home),
         best_density=best_density,
         best_round=best_round,
         rounds=run.supersteps,

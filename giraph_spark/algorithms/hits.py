@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import dedup_edges, vertices_from_edges
-from giraph_spark.pregel import PregelRun, gather_messages, run_supersteps
+from giraph_spark.pregel import PregelRun, engine_session, gather_messages, rebind, run_supersteps
 
 
 def hits(
@@ -53,6 +53,8 @@ def hits(
     the angular movement of the power iteration); otherwise exactly
     ``max_supersteps`` iterations run (RepeatBlock semantics).
     """
+    home = edges.sparkSession
+    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -68,7 +70,7 @@ def hits(
         empty = verts.select(
             "id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub")
         )
-        return PregelRun(vertices=empty, supersteps=0, converged=True)
+        return PregelRun(vertices=rebind(empty, home), supersteps=0, converged=True)
 
     init = 1.0 / (n_vertices ** 0.5)  # already L2-normalized
     state = verts.select(
@@ -160,7 +162,7 @@ def hits(
     e_fwd.unpersist()
     e_rev.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("id", "auth", "hub"),
+        vertices=rebind(run.vertices.select("id", "auth", "hub"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,
@@ -187,6 +189,8 @@ def eigenvector_centrality(
     action per superstep; ``tolerance`` halts on angular movement
     1 - cos(x', x).
     """
+    home = edges.sparkSession
+    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -197,7 +201,7 @@ def eigenvector_centrality(
     n_vertices = verts.count()
     if n_vertices == 0:
         return PregelRun(
-            vertices=verts.select("id", F.lit(0.0).alias("score")),
+            vertices=rebind(verts.select("id", F.lit(0.0).alias("score")), home),
             supersteps=0,
             converged=True,
         )
@@ -258,7 +262,7 @@ def eigenvector_centrality(
     _release_prev()
     e_fwd.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("id", "score"),
+        vertices=rebind(run.vertices.select("id", "score"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,
@@ -290,6 +294,8 @@ def salsa(
     degree-weighted edges exchanged once per orientation, two algebraic
     saltable gathers + ONE action per superstep.
     """
+    home = edges.sparkSession
+    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -315,7 +321,7 @@ def salsa(
     n_vertices = verts.count()
     if n_vertices == 0:
         empty = verts.select("id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub"))
-        return PregelRun(vertices=empty, supersteps=0, converged=True)
+        return PregelRun(vertices=rebind(empty, home), supersteps=0, converged=True)
 
     init = 1.0 / n_vertices  # L1-normalized start
     state = verts.select(
@@ -391,7 +397,7 @@ def salsa(
     e_fwd.unpersist()
     e_rev.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("id", "auth", "hub"),
+        vertices=rebind(run.vertices.select("id", "auth", "hub"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,
@@ -429,6 +435,8 @@ def katz_centrality(
     and the optional tolerance halt reuses the SAME driver action that
     materializes the state (L1 movement), so no extra job.
     """
+    home = edges.sparkSession
+    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -494,7 +502,7 @@ def katz_centrality(
     _release_prev()
     e_fwd.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("id", "katz"),
+        vertices=rebind(run.vertices.select("id", "katz"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,

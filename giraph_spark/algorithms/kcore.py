@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import LineageCuts, aqe_off
+from giraph_spark.pregel import LineageCuts, engine_session, rebind
 
 _log = logging.getLogger("giraph_spark")
 
@@ -388,6 +388,19 @@ def trussness(
     import tempfile
     import uuid
 
+    # the peel runs in the call's own session, AQE off (engine_session).
+    # AQE is the root cause of the release-vs-read race observed in the
+    # r4 sf0.1 sweep (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND): when a round's
+    # frontier materializes EMPTY, AQE's empty-relation propagation
+    # replans the decrement join away, the awaited action returns without
+    # ever needing the already-submitted support-scan shuffle stage, and
+    # that orphaned stage — whose tasks are not interrupted by default —
+    # then reads the support blocks the loop has already released. With
+    # AQE off every submitted stage belongs to the awaited job, so
+    # program-order release is sound; the empty-frontier probe skip and
+    # the one-round release deferral below are additional layers.
+    home = edges.sparkSession
+    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     scratch_parent: str | None = None
@@ -397,22 +410,9 @@ def trussness(
         deep_cut_dir = tempfile.mkdtemp(prefix="giraph_truss_deepcut_")
         scratch_parent = deep_cut_dir  # we created it — we remove it
     deep_dir = os.path.join(deep_cut_dir, f"truss_{uuid.uuid4().hex[:12]}")
-
-    # AQE off for the peel (restored below), same discipline as
-    # run_supersteps: the round plans are fixed-shape, and AQE is the
-    # root cause of the release-vs-read race observed in the r4 sf0.1
-    # sweep (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND): when a round's frontier
-    # materializes EMPTY, AQE's empty-relation propagation replans the
-    # decrement join away, the awaited action returns without ever
-    # needing the already-submitted support-scan shuffle stage, and that
-    # orphaned stage — whose tasks are not interrupted by default — then
-    # reads the support blocks the loop has already released. With AQE
-    # off every submitted stage belongs to the awaited job, so
-    # program-order release is sound; the empty-frontier probe skip and
-    # the one-round release deferral below are additional layers.
     try:
-        with aqe_off(spark):
-            return _trussness_peel(
+        return rebind(
+            _trussness_peel(
                 spark,
                 edges,
                 symmetrize_input=symmetrize_input,
@@ -423,7 +423,9 @@ def trussness(
                 broadcast_frontier_max=broadcast_frontier_max,
                 verbose=verbose,
                 orient_frontier=orient_frontier,
-            )
+            ),
+            home,
+        )
     finally:
         _hadoop_rm(spark, scratch_parent if scratch_parent is not None else deep_dir)
 

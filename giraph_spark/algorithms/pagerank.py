@@ -25,15 +25,16 @@ one update join, and ONE driver action computing next-iteration allSum /
 sinkSum and all three convergence metrics in a single aggregate (the
 per-superstep aggregator gather of master/MasterCompute.java:41-47).
 
-Set-up is ONE Spark job, planned with AQE off (``_init_piece``): the edge
-table is hash-partitioned by src (a bucketed table already is) and cached,
-its weight a ``count(*) OVER (PARTITION BY src)`` window on that
-partitioning — no degree join; every vertex and its sink flag come from one
-``groupBy(id)`` over the edges' src and dst rows — no distinct, anti-join
-or broadcast. The initial state is a lazy ``localCheckpoint`` that the
-set-up aggregate (vertex count, mass, sink mass) fills together with the
-edge cache, and ``run_supersteps`` adopts it as superstep 0's cut: a
-5-superstep call is 6 jobs.
+Set-up is ONE Spark job, planned with AQE off in the call's own session
+(``engine_session``; ``_init_piece``): the edge table is hash-partitioned
+by src (a bucketed table already is) and cached, its weight a
+``count(*) OVER (PARTITION BY src)`` window on that partitioning — no
+degree join; every vertex and its sink flag come from one ``groupBy(id)``
+over the edges' src and dst rows — no distinct, anti-join or broadcast.
+The initial state is a lazy ``localCheckpoint`` that the set-up aggregate
+(vertex count, mass, sink mass) fills together with the edge cache, and
+``run_supersteps`` adopts it as superstep 0's cut: a 5-superstep call is
+6 jobs.
 """
 
 from __future__ import annotations
@@ -48,9 +49,9 @@ from giraph_spark.pregel import (
     PregelRun,
     _checkpointed_jrdd,
     _gated_release,
-    aqe_off,
+    engine_session,
+    rebind,
     run_supersteps,
-    temp_views,
 )
 
 
@@ -138,172 +139,167 @@ def pagerank(
     """
     if convergence not in ("l1", "l1_mean", "linf", "rmse"):
         raise ValueError(f"unknown convergence type {convergence!r}")
-    # the superstep runs as spark.sql over temp views, so the views and
-    # the SQL must resolve in the SAME session: inside foreachBatch the
-    # frames belong to a CLONED session whose temp-view catalog is
-    # isolated from the outer session's — always work in the session
-    # that owns the edge frame (identical to `spark` everywhere else)
-    spark = edges.sparkSession
+    home = edges.sparkSession
+    spark, edges, init_ranks = engine_session(edges, init_ranks)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # AQE off from the first set-up query: an adaptive plan would run the
-    # set-up aggregate and fill the lazy cut below as query-stage jobs
-    # of their own
-    with aqe_off(spark), temp_views(spark, "pr", "edges", "state", "new") as (ev, sv, nv):
-        e, setup_cut = _init_piece(
-            edges, num_partitions, weighted=weighted,
-            pre_partitioned=pre_partitioned, init_ranks=init_ranks,
+    ev, sv, nv = "pr_edges", "pr_state", "pr_new"
+    e, setup_cut = _init_piece(
+        edges, num_partitions, weighted=weighted,
+        pre_partitioned=pre_partitioned, init_ranks=init_ranks,
+    )
+    # the initial state is the first lineage cut: ONE set-up aggregate
+    # fills it (and the edge cache under it) and returns the vertex
+    # count and the total / sink mass, so superstep 0 starts with the
+    # aggregator box already initialized (fresh start: every rank is
+    # exactly 1.0); run_supersteps adopts the filled cut as superstep
+    # 0's input
+    setup_cut = setup_cut.localCheckpoint(eager=False)
+    srow = setup_cut.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("rank").alias("mass"),
+        F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
+            "sink_mass"
+        ),
+    ).collect()[0]
+    n_vertices = int(srow["n"])
+    if n_vertices == 0:
+        e.unpersist()
+        return PregelRun(
+            vertices=rebind(setup_cut.select("id", "rank"), home), supersteps=0,
+            converged=True,
         )
-        # the initial state is the first lineage cut: ONE set-up aggregate
-        # fills it (and the edge cache under it) and returns the vertex
-        # count and the total / sink mass, so superstep 0 starts with the
-        # aggregator box already initialized (fresh start: every rank is
-        # exactly 1.0); run_supersteps adopts the filled cut as superstep
-        # 0's input
-        setup_cut = setup_cut.localCheckpoint(eager=False)
-        srow = setup_cut.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("rank").alias("mass"),
+    state = setup_cut
+    init_sink_sum = float(srow["sink_mass"] or 0.0)
+    if init_ranks is not None:
+        # this formulation CONSERVES the initial mass (new = d·(msgs +
+        # sink/N) + (1-d)·allSum/N), so an arbitrary warm vector must be
+        # rescaled to the reference's mass-N convention or the fixpoint
+        # itself would be scaled by the mass ratio. The rescale is an
+        # un-cut input the loop persists; superstep 0's cut stops
+        # reading the set-up cut, which is freed after the loop
+        total = float(srow["mass"] or 0.0)
+        if total > 0:
+            state = state.withColumn(
+                "rank", F.col("rank") * F.lit(n_vertices / total)
+            )
+            init_sink_sum = init_sink_sum * (n_vertices / total)
+
+    d = float(damping)
+    # aggregator state visible to the *next* superstep (one-superstep lag,
+    # master/MasterCompute.java:41-47). On resume the loop starts from a
+    # snapshot this setup never saw, so the box must fall back to the
+    # lazy in-loop _sums; otherwise it is fully initialized here.
+    box: dict[str, float] = {
+        "all_sum": float(n_vertices),
+        "sink_sum": None if resume else init_sink_sum,
+    }  # type: ignore[assignment]
+
+    def _sums(df: DataFrame) -> tuple[float, float]:
+        r = df.agg(
+            F.sum("rank").alias("all_sum"),
             F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
-                "sink_mass"
+                "sink_sum"
             ),
         ).collect()[0]
-        n_vertices = int(srow["n"])
-        if n_vertices == 0:
-            e.unpersist()
-            return PregelRun(vertices=setup_cut.select("id", "rank"), supersteps=0, converged=True)
-        state = setup_cut
-        init_sink_sum = float(srow["sink_mass"] or 0.0)
-        if init_ranks is not None:
-            # this formulation CONSERVES the initial mass (new = d·(msgs +
-            # sink/N) + (1-d)·allSum/N), so an arbitrary warm vector must be
-            # rescaled to the reference's mass-N convention or the fixpoint
-            # itself would be scaled by the mass ratio. The rescale is an
-            # un-cut input the loop persists; superstep 0's cut stops
-            # reading the set-up cut, which is freed after the loop
-            total = float(srow["mass"] or 0.0)
-            if total > 0:
-                state = state.withColumn(
-                    "rank", F.col("rank") * F.lit(n_vertices / total)
-                )
-                init_sink_sum = init_sink_sum * (n_vertices / total)
+        return float(r["all_sum"]), float(r["sink_sum"] or 0.0)
 
-        d = float(damping)
-        # aggregator state visible to the *next* superstep (one-superstep lag,
-        # master/MasterCompute.java:41-47). On resume the loop starts from a
-        # snapshot this setup never saw, so the box must fall back to the
-        # lazy in-loop _sums; otherwise it is fully initialized here.
-        box: dict[str, float] = {
-            "all_sum": float(n_vertices),
-            "sink_sum": None if resume else init_sink_sum,
-        }  # type: ignore[assignment]
+    # The step is issued as ONE spark.sql() text per superstep instead of
+    # ~a dozen DataFrame-API calls: each Column/DataFrame builder is its
+    # own py4j round trip, measured ~117 ms of the ~430 ms sf0.1
+    # superstep floor; a SQL string ships the whole plan in one call and
+    # parses/analyzes JVM-side (measured 442 -> 335 ms/superstep, ranks
+    # identical to 1e-10 — FP reorder noise only). Join strategy hints
+    # match the DataFrame formulation exactly:
+    # - SHUFFLE_HASH(v) on the scatter join: sort-merge would re-sort the
+    #   (static, cached, already src-partitioned) edge table every
+    #   superstep; hash-building the much smaller per-superstep rank
+    #   state streams the edges untouched.
+    # - SHUFFLE_HASH(g) on the update join: build the gathered messages,
+    #   probe the co-partitioned state.
+    # The salted variant reproduces gather_messages' retry-safe two-level
+    # reduction (content-hashed salt, pregel.py:104-114) in SQL.
+    e.createOrReplaceTempView(ev)
+    if salt and salt > 1:
+        gather_cte = f"""m AS (
+        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.rank * e.weight AS msg
+        FROM {ev} e JOIN {sv} v ON e.src = v.id
+      ),
+      s1 AS (
+        SELECT dst, sum(msg) AS msg
+        FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
+      ),
+      g AS (SELECT dst, sum(msg) AS msg FROM s1 GROUP BY dst)"""
+    else:
+        gather_cte = f"""g AS (
+        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, sum(v.rank * e.weight) AS msg
+        FROM {ev} e JOIN {sv} v ON e.src = v.id
+        GROUP BY e.dst
+      )"""
+    step_sql = (
+        "WITH " + gather_cte + f"""
+      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
+             {{d}} * coalesce(g.msg, 0.0) + {{base}} AS rank,
+             v.is_sink,
+             {{d}} * coalesce(g.msg, 0.0) + {{base}} - v.rank AS _delta
+      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
+    )
+    agg_sql = f"""
+      SELECT sum(rank) AS all_sum,
+             sum(CASE WHEN is_sink THEN rank ELSE 0.0 END) AS sink_sum,
+             sum(abs(_delta)) AS l1,
+             max(abs(_delta)) AS linf,
+             sqrt(avg(_delta * _delta)) AS rmse
+      FROM {nv}"""
 
-        def _sums(df: DataFrame) -> tuple[float, float]:
-            r = df.agg(
-                F.sum("rank").alias("all_sum"),
-                F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
-                    "sink_sum"
-                ),
-            ).collect()[0]
-            return float(r["all_sum"]), float(r["sink_sum"] or 0.0)
+    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
+        if box["sink_sum"] is None:  # resume from a snapshot this setup never saw
+            box["all_sum"], box["sink_sum"] = _sums(vertices)
+        all_sum, sink_sum = box["all_sum"], box["sink_sum"]
+        base = d * sink_sum / n_vertices + (1.0 - d) * all_sum / n_vertices
 
-        # The step is issued as ONE spark.sql() text per superstep instead of
-        # ~a dozen DataFrame-API calls: each Column/DataFrame builder is its
-        # own py4j round trip, measured ~117 ms of the ~430 ms sf0.1
-        # superstep floor; a SQL string ships the whole plan in one call and
-        # parses/analyzes JVM-side (measured 442 -> 335 ms/superstep, ranks
-        # identical to 1e-10 — FP reorder noise only). Join strategy hints
-        # match the DataFrame formulation exactly:
-        # - SHUFFLE_HASH(v) on the scatter join: sort-merge would re-sort the
-        #   (static, cached, already src-partitioned) edge table every
-        #   superstep; hash-building the much smaller per-superstep rank
-        #   state streams the edges untouched.
-        # - SHUFFLE_HASH(g) on the update join: build the gathered messages,
-        #   probe the co-partitioned state.
-        # The salted variant reproduces gather_messages' retry-safe two-level
-        # reduction (content-hashed salt, pregel.py:104-114) in SQL.
-        e.createOrReplaceTempView(ev)
-        if salt and salt > 1:
-            gather_cte = f"""m AS (
-            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.rank * e.weight AS msg
-            FROM {ev} e JOIN {sv} v ON e.src = v.id
-          ),
-          s1 AS (
-            SELECT dst, sum(msg) AS msg
-            FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
-          ),
-          g AS (SELECT dst, sum(msg) AS msg FROM s1 GROUP BY dst)"""
-        else:
-            gather_cte = f"""g AS (
-            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, sum(v.rank * e.weight) AS msg
-            FROM {ev} e JOIN {sv} v ON e.src = v.id
-            GROUP BY e.dst
-          )"""
-        step_sql = (
-            "WITH " + gather_cte + f"""
-          SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-                 {{d}} * coalesce(g.msg, 0.0) + {{base}} AS rank,
-                 v.is_sink,
-                 {{d}} * coalesce(g.msg, 0.0) + {{base}} - v.rank AS _delta
-          FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
-        )
-        agg_sql = f"""
-          SELECT sum(rank) AS all_sum,
-                 sum(CASE WHEN is_sink THEN rank ELSE 0.0 END) AS sink_sum,
-                 sum(abs(_delta)) AS l1,
-                 max(abs(_delta)) AS linf,
-                 sqrt(avg(_delta * _delta)) AS rmse
-          FROM {nv}"""
+        vertices.createOrReplaceTempView(sv)
+        new_state = spark.sql(step_sql.format(d=repr(d), base=repr(base)))
+        # LAZY lineage cut BEFORE the action: the convergence aggregate
+        # below materializes the checkpoint blocks in ITS job, so the
+        # loop adopts the cut and the superstep costs exactly one Spark
+        # job (a separate eager-cut job measured ~120 ms of the sf0.1
+        # superstep floor)
+        new_state = new_state.localCheckpoint(eager=False)
+        new_state.createOrReplaceTempView(nv)
+        # ONE action: next-iteration sums + all convergence reducers
+        row = spark.sql(agg_sql).collect()[0]
+        box["all_sum"], box["sink_sum"] = float(row["all_sum"]), float(row["sink_sum"] or 0.0)
+        stats = {
+            "all_sum": box["all_sum"],
+            "sink_sum": box["sink_sum"],
+            "l1": float(row["l1"]),
+            "l1_mean": float(row["l1"]) / n_vertices,
+            "linf": float(row["linf"]),
+            "rmse": float(row["rmse"]),
+        }
+        return new_state, stats
 
-        def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-            if box["sink_sum"] is None:  # resume from a snapshot this setup never saw
-                box["all_sum"], box["sink_sum"] = _sums(vertices)
-            all_sum, sink_sum = box["all_sum"], box["sink_sum"]
-            base = d * sink_sum / n_vertices + (1.0 - d) * all_sum / n_vertices
+    halt = None
+    if tolerance is not None:
+        halt = lambda stats, i: stats[convergence] < tolerance  # noqa: E731
 
-            vertices.createOrReplaceTempView(sv)
-            new_state = spark.sql(step_sql.format(d=repr(d), base=repr(base)))
-            # LAZY lineage cut BEFORE the action: the convergence aggregate
-            # below materializes the checkpoint blocks in ITS job, so the
-            # loop adopts the cut and the superstep costs exactly one Spark
-            # job (a separate eager-cut job measured ~120 ms of the sf0.1
-            # superstep floor)
-            new_state = new_state.localCheckpoint(eager=False)
-            new_state.createOrReplaceTempView(nv)
-            # ONE action: next-iteration sums + all convergence reducers
-            row = spark.sql(agg_sql).collect()[0]
-            box["all_sum"], box["sink_sum"] = float(row["all_sum"]), float(row["sink_sum"] or 0.0)
-            stats = {
-                "all_sum": box["all_sum"],
-                "sink_sum": box["sink_sum"],
-                "l1": float(row["l1"]),
-                "l1_mean": float(row["l1"]) / n_vertices,
-                "linf": float(row["linf"]),
-                "rmse": float(row["rmse"]),
-            }
-            return new_state, stats
-
-        halt = None
-        if tolerance is not None:
-            halt = lambda stats, i: stats[convergence] < tolerance  # noqa: E731
-
-        run = run_supersteps(
-            spark,
-            state,
-            step,
-            max_supersteps=max_supersteps,
-            halt=halt,
-            checkpoint_dir=checkpoint_dir,
-            checkpoint_interval=checkpoint_interval,
-            resume=resume,
-            verbose=verbose,
-        )
-        if state is not setup_cut:  # the loop did not adopt the set-up cut
-            _gated_release(spark.sparkContext, _checkpointed_jrdd(setup_cut))
+    run = run_supersteps(
+        spark,
+        state,
+        step,
+        max_supersteps=max_supersteps,
+        halt=halt,
+        checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval,
+        resume=resume,
+        verbose=verbose,
+    )
+    if state is not setup_cut:  # the loop did not adopt the set-up cut
+        _gated_release(spark.sparkContext, _checkpointed_jrdd(setup_cut))
     e.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("id", "rank"),
+        vertices=rebind(run.vertices.select("id", "rank"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,

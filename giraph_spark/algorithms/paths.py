@@ -22,8 +22,10 @@ from pyspark.sql import functions as F
 from giraph_spark.graph import vertices_from_edges
 from giraph_spark.pregel import (
     PregelRun,
+    engine_session,
     gather_messages,
     materialize_count,
+    rebind,
     run_supersteps,
 )
 
@@ -53,6 +55,8 @@ def sssp(
     for an edge delta, pass ``delta.select("src")``: a decrease can only
     originate at a new edge's source, then cascades normally.
     """
+    home = edges.sparkSession
+    spark, edges, init_dists, init_frontier = engine_session(edges, init_dists, init_frontier)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sources = [source] if isinstance(source, int) else list(source)
@@ -124,7 +128,7 @@ def sssp(
     )
     e.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("id", "distance"),
+        vertices=rebind(run.vertices.select("id", "distance"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,
@@ -182,6 +186,8 @@ def multi_seed_distances(
     would pay in time instead of space. Shared core of
     ``harmonic_centrality`` and ``eccentricity``.
     """
+    home = edges.sparkSession
+    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select("src", "dst").repartition(num_partitions, "src").persist()
@@ -234,7 +240,7 @@ def multi_seed_distances(
     )
     e.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("seed", "id", "dist"),
+        vertices=rebind(run.vertices.select("seed", "id", "dist"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import out_degrees, vertices_from_edges
-from giraph_spark.pregel import PregelRun, gather_messages, run_supersteps
+from giraph_spark.pregel import PregelRun, engine_session, gather_messages, rebind, run_supersteps
 
 
 def personalized_pagerank(
@@ -41,6 +41,8 @@ def personalized_pagerank(
     transition probabilities are the per-``src`` normalized weights
     (``w / sum(w) over src``) instead of the uniform ``1/out_degree``.
     """
+    home = edges.sparkSession
+    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     srcs = [sources] if isinstance(sources, int) else list(sources)
@@ -139,7 +141,7 @@ def personalized_pagerank(
     )
     e.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("id", "rank"),
+        vertices=rebind(run.vertices.select("id", "rank"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,
@@ -208,6 +210,8 @@ def ppr_batch(
     analog: per-source RandomWalkWithRestartComputation re-run per
     seed; the batching is the Spark-side win.
     """
+    home = edges.sparkSession
+    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if not seeds:
@@ -303,7 +307,7 @@ def ppr_batch(
     )
     e.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("seed", "id", "rank"),
+        vertices=rebind(run.vertices.select("seed", "id", "rank"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,

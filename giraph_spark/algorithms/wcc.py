@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, aqe_off, run_supersteps, temp_views
+from giraph_spark.pregel import PregelRun, engine_session, rebind, run_supersteps
 
 
 def connected_components(
@@ -61,103 +61,97 @@ def connected_components(
     supersteps instead of O(diameter of the graph). Edge REMOVALS can
     split components and make old labels stale ids: recompute cold.
     """
-    # the superstep runs as spark.sql over temp views, so the views and
-    # the SQL must resolve in the SAME session: inside foreachBatch the
-    # frames belong to a CLONED session whose temp-view catalog is
-    # isolated from the outer session's — always work in the session
-    # that owns the edge frame (identical to `spark` everywhere else)
-    spark = edges.sparkSession
+    home = edges.sparkSession
+    spark, edges, init_components = engine_session(edges, init_components)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # AQE off from the edge persist() on: a cache planned adaptively
-    # re-runs its query stages as jobs of their own when first read
-    with aqe_off(spark), temp_views(spark, "wcc", "edges", "state", "new") as (ev, sv, nv):
-        if pre_partitioned:
-            e = edges.select("src", "dst")
-        else:
-            e = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
-            e = e.repartition(num_partitions, "src")
-        e = e.persist()
+    ev, sv, nv = "wcc_edges", "wcc_state", "wcc_new"
+    if pre_partitioned:
+        e = edges.select("src", "dst")
+    else:
+        e = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
+        e = e.repartition(num_partitions, "src")
+    e = e.persist()
 
-        # superstep 0 of the init piece: min(own id, neighbor ids); vertices are
-        # marked changed so everyone scatters once
-        verts = vertices_from_edges(e)
-        if init_components is None:
-            state = verts.select(
-                "id", F.col("id").alias("component"), F.lit(True).alias("changed")
-            )
-        else:
-            state = (
-                verts.join(
-                    init_components.select("id", F.col("component").alias("_c0")),
-                    "id",
-                    "left",
-                )
-                .select(
-                    "id",
-                    F.least("id", F.coalesce("_c0", F.col("id"))).alias("component"),
-                    F.lit(True).alias("changed"),
-                )
-            )
-
-        # ONE spark.sql() text per superstep instead of ~ten DataFrame-API
-        # py4j round trips — same rationale and measurement as the PageRank
-        # step (pagerank.py: ~117 ms/superstep of pure plan-building py4j).
-        # SHUFFLE_HASH(v): stream the static cached edge table, hash-build
-        # the shrinking changed-frontier — sort-merge would re-sort the
-        # edges each round. The salted variant is gather_messages' retry-
-        # safe content-hashed two-level min (pregel.py:104-114) in SQL.
-        e.createOrReplaceTempView(ev)
-        if salt and salt > 1:
-            gather_cte = f"""m AS (
-            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.component AS msg
-            FROM {ev} e JOIN {sv} v ON e.src = v.id
-            WHERE v.changed
-          ),
-          s1 AS (
-            SELECT dst, min(msg) AS msg
-            FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
-          ),
-          g AS (SELECT dst, min(msg) AS msg FROM s1 GROUP BY dst)"""
-        else:
-            gather_cte = f"""g AS (
-            SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, min(v.component) AS msg
-            FROM {ev} e JOIN {sv} v ON e.src = v.id
-            WHERE v.changed
-            GROUP BY e.dst
-          )"""
-        step_sql = (
-            "WITH " + gather_cte + f"""
-          SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-                 least(v.component, coalesce(g.msg, v.component)) AS component,
-                 (coalesce(g.msg, v.component) < v.component) AS changed
-          FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
+    # superstep 0 of the init piece: min(own id, neighbor ids); vertices are
+    # marked changed so everyone scatters once
+    verts = vertices_from_edges(e)
+    if init_components is None:
+        state = verts.select(
+            "id", F.col("id").alias("component"), F.lit(True).alias("changed")
         )
-        count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
-
-        def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-            vertices.createOrReplaceTempView(sv)
-            # lazy cut: the frontier-count action below writes the checkpoint
-            # blocks in the same job, and the loop adopts it
-            new_state = spark.sql(step_sql).localCheckpoint(eager=False)
-            new_state.createOrReplaceTempView(nv)
-            row = spark.sql(count_sql).collect()[0]
-            return new_state, {"changed": int(row["c"] or 0)}
-
-        run = run_supersteps(
-            spark,
-            state,
-            step,
-            max_supersteps=max_supersteps,
-            halt=lambda stats, i: stats["changed"] == 0,
-            checkpoint_dir=checkpoint_dir,
-            checkpoint_interval=checkpoint_interval,
-            resume=resume,
-            verbose=verbose,
+    else:
+        state = (
+            verts.join(
+                init_components.select("id", F.col("component").alias("_c0")),
+                "id",
+                "left",
+            )
+            .select(
+                "id",
+                F.least("id", F.coalesce("_c0", F.col("id"))).alias("component"),
+                F.lit(True).alias("changed"),
+            )
         )
+
+    # ONE spark.sql() text per superstep instead of ~ten DataFrame-API
+    # py4j round trips — same rationale and measurement as the PageRank
+    # step (pagerank.py: ~117 ms/superstep of pure plan-building py4j).
+    # SHUFFLE_HASH(v): stream the static cached edge table, hash-build
+    # the shrinking changed-frontier — sort-merge would re-sort the
+    # edges each round. The salted variant is gather_messages' retry-
+    # safe content-hashed two-level min (pregel.py:104-114) in SQL.
+    e.createOrReplaceTempView(ev)
+    if salt and salt > 1:
+        gather_cte = f"""m AS (
+        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.component AS msg
+        FROM {ev} e JOIN {sv} v ON e.src = v.id
+        WHERE v.changed
+      ),
+      s1 AS (
+        SELECT dst, min(msg) AS msg
+        FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
+      ),
+      g AS (SELECT dst, min(msg) AS msg FROM s1 GROUP BY dst)"""
+    else:
+        gather_cte = f"""g AS (
+        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, min(v.component) AS msg
+        FROM {ev} e JOIN {sv} v ON e.src = v.id
+        WHERE v.changed
+        GROUP BY e.dst
+      )"""
+    step_sql = (
+        "WITH " + gather_cte + f"""
+      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
+             least(v.component, coalesce(g.msg, v.component)) AS component,
+             (coalesce(g.msg, v.component) < v.component) AS changed
+      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
+    )
+    count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
+
+    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
+        vertices.createOrReplaceTempView(sv)
+        # lazy cut: the frontier-count action below writes the checkpoint
+        # blocks in the same job, and the loop adopts it
+        new_state = spark.sql(step_sql).localCheckpoint(eager=False)
+        new_state.createOrReplaceTempView(nv)
+        row = spark.sql(count_sql).collect()[0]
+        return new_state, {"changed": int(row["c"] or 0)}
+
+    run = run_supersteps(
+        spark,
+        state,
+        step,
+        max_supersteps=max_supersteps,
+        halt=lambda stats, i: stats["changed"] == 0,
+        checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval,
+        resume=resume,
+        verbose=verbose,
+    )
     e.unpersist()
     return PregelRun(
-        vertices=run.vertices.select("id", "component"),
+        vertices=rebind(run.vertices.select("id", "component"), home),
         supersteps=run.supersteps,
         converged=run.converged,
         history=run.history,

@@ -41,6 +41,8 @@ from giraph_spark.pregel import (
     PregelRun,
     _checkpointed_jrdd,
     _gated_release,
+    engine_session,
+    rebind,
     run_supersteps,
 )
 
@@ -191,6 +193,8 @@ def run_mutable_supersteps(
     :func:`run_supersteps` (which cuts the vertex state); the result's
     ``edges`` attribute is the final edge table.
     """
+    home = vertices.sparkSession
+    spark, vertices, edges = engine_session(vertices, edges)
     sc = spark.sparkContext
     box: dict[str, Any] = {"edges": edges.persist(), "cut": None, "stale": None}
 
@@ -233,5 +237,6 @@ def run_mutable_supersteps(
         verbose=verbose,
     )
     _gated_release(sc, box["stale"])
-    run.edges = box["edges"]  # type: ignore[attr-defined]
+    run.vertices = rebind(run.vertices, home)
+    run.edges = rebind(box["edges"], home)  # type: ignore[attr-defined]
     return run

@@ -35,12 +35,11 @@ from __future__ import annotations
 
 import logging
 import time
-import uuid
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import RDD
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -207,75 +206,55 @@ def materialize_count(df: DataFrame, pred_col: str) -> int:
     return int(row["c"] or 0)
 
 
-@contextmanager
-def temp_views(spark: SparkSession, prefix: str, *roles: str) -> Iterator[list[str]]:
-    """Unique temp-view names for one SQL-text superstep loop, one per
-    role (``{prefix}_{role}_{uid}``), dropped on exit. The uid keeps two
-    concurrent runs on one session from overwriting each other's views."""
-    uid = uuid.uuid4().hex[:8]
-    names = [f"{prefix}_{role}_{uid}" for role in roles]
-    try:
-        yield names
-    finally:
-        for name in names:
-            try:
-                spark.catalog.dropTempView(name)
-            except Exception:  # noqa: BLE001 — view may never have been created
-                pass
+# --- a private session per engine call -----------------------------------
 
 
-# --- refcounted AQE suppression ------------------------------------------
-#
-# The iterative loops disable AQE for their duration (fixed-shape plans;
-# rationale at run_supersteps). A bare save/set/restore races when two
-# loops overlap on the SAME session from different threads (e.g. the
-# parallel oracle sweep, or a streaming foreachBatch): loop A's restore
-# can re-enable AQE in the middle of loop B's run — re-creating the
-# orphaned-stage condition the release gating guards against — and B's
-# restore then pins A's suppressed value forever. Suppression is
-# therefore REFCOUNTED per session-conf: the first suppressor saves the
-# user's value and turns AQE off; only the last one out restores it.
-# Keyed by the session object (cloned foreachBatch sessions have their
-# own SQLConf and suppress independently).
-
-_AQE_LOCK = __import__("threading").Lock()
-_AQE_STATE: dict[int, tuple[int, str]] = {}  # id(session) -> (depth, saved)
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df`` as a frame of ``session``, with no job: its queries are then
+    planned under ``session``'s conf. The ANALYZED plan crosses over, so
+    views it read in the other session's catalog stay resolved."""
+    if df.sparkSession is session:
+        return df
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(  # noqa: SLF001
+        session._jsparkSession, df._jdf.queryExecution().analyzed()  # noqa: SLF001
+    )
+    return DataFrame(jdf, session)
 
 
-def suppress_aqe(spark) -> None:
-    """Turn AQE off for this session, refcounted (pair with restore_aqe)."""
-    with _AQE_LOCK:
-        depth, saved = _AQE_STATE.get(id(spark), (0, "true"))
-        if depth == 0:
-            saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        _AQE_STATE[id(spark)] = (depth + 1, saved)
+def engine_session(*frames: DataFrame | None) -> tuple[Any, ...]:
+    """``(session, *frames)``: a private session for one engine call, and
+    ``frames`` (None passes through) rebound into it.
 
+    The session is a clone of the first frame's session with AQE off in
+    the clone only. ``cloneSession`` keeps the caller's runtime confs
+    (``newSession`` would drop them) and shares the SparkContext, the
+    cache manager and the codegen cache, so a cached input is still hit
+    and the caller's job groups tag the call's jobs. The caller's conf is
+    never written, and the call's temp views live in the clone's catalog,
+    so concurrent calls on one session cannot see each other's. A frame
+    already in an engine session (a nested call: pagerank ->
+    run_supersteps) keeps that session. Results go back to the caller
+    with ``rebind(df, home)``.
 
-def restore_aqe(spark) -> None:
-    """Undo one suppress_aqe; restores the saved value at depth zero."""
-    with _AQE_LOCK:
-        depth, saved = _AQE_STATE.get(id(spark), (0, "true"))
-        if depth <= 1:
-            _AQE_STATE.pop(id(spark), None)
-            spark.conf.set("spark.sql.adaptive.enabled", saved)
-        else:
-            _AQE_STATE[id(spark)] = (depth - 1, saved)
-
-
-@contextmanager
-def aqe_off(spark: SparkSession) -> Iterator[None]:
-    """AQE off for the ``with`` body (refcounted ``suppress_aqe`` /
-    ``restore_aqe``); the caller's value is back even if the body raises.
-    An engine call enters it at its top, so its set-up — the edge
-    ``persist()``, the initial state and any lazy cut over them — is
-    planned without adaptive query stages, each of which would be a job
-    of its own."""
-    suppress_aqe(spark)
-    try:
-        yield
-    finally:
-        restore_aqe(spark)
+    Why AQE is off: superstep plans are fixed-shape (explicit
+    shuffle_hash hints, explicit partition counts, salting for skew), so
+    adaptive re-planning adds only its latency — AQE materializes query
+    stages one at a time with a driver re-plan between them, measured
+    ~60ms/superstep at sf0.1 (interleaved 5-rep A/B medians: 490 -> 433
+    ms/superstep) — and in set-up an adaptive plan runs the aggregate
+    that fills a lazy cut, or a cache first read, as query-stage jobs of
+    their own."""
+    home = frames[0].sparkSession
+    if getattr(home, "_engine_private", False):
+        spark = home
+    else:
+        # the SparkSession constructor rebinds RDD.toDF to the new session
+        to_df = RDD.toDF
+        spark = SparkSession(home.sparkContext, home._jsparkSession.cloneSession())  # noqa: SLF001
+        RDD.toDF = to_df
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark._engine_private = True  # type: ignore[attr-defined]
+    return (spark, *(None if f is None else rebind(f, spark) for f in frames))
 
 
 def partition_width(df: DataFrame) -> int:
@@ -332,31 +311,25 @@ def _live_work_ids(sc) -> frozenset:
 
 def drain_releases() -> int:
     """Free every pending handle whose watched jobs/stages have all
-    finished; return how many remain pending. Thread-safe: a release can
-    be requested from a streaming foreachBatch thread while the main
-    loop drains (the lock stops a concurrent append from being lost
-    when the pending list is swapped)."""
-    global _PENDING_RELEASES
+    finished; return how many remain pending. Runs under the pool lock
+    from start to finish, so a release requested from another thread
+    (a streaming foreachBatch, a second engine call) waits for the drain
+    and the returned count is exact."""
     with _RELEASES_LOCK:
-        pending, _PENDING_RELEASES = _PENDING_RELEASES, []
-    if not pending:
-        return 0
-    still: list[tuple[Any, frozenset, object]] = []
-    live_cache: dict[int, frozenset] = {}
-    for sc, watched, handle in pending:
-        key = id(sc)
-        if key not in live_cache:
-            live_cache[key] = _live_work_ids(sc)
-        if watched & live_cache[key]:
-            still.append((sc, watched, handle))
-        else:
-            try:
-                handle.unpersist(False)  # type: ignore[attr-defined]
-            except Exception:  # noqa: BLE001
-                pass
-    with _RELEASES_LOCK:
-        _PENDING_RELEASES.extend(still)
-        return len(_PENDING_RELEASES)
+        live: dict[int, frozenset] = {}
+        still = []
+        for sc, watched, handle in _PENDING_RELEASES:
+            if id(sc) not in live:
+                live[id(sc)] = _live_work_ids(sc)
+            if watched & live[id(sc)]:
+                still.append((sc, watched, handle))
+            else:
+                try:
+                    handle.unpersist(False)  # type: ignore[attr-defined]
+                except Exception:  # noqa: BLE001
+                    pass
+        _PENDING_RELEASES[:] = still
+        return len(still)
 
 
 def _gated_release(sc, handle) -> None:
@@ -587,18 +560,21 @@ def run_supersteps(
     the per-superstep local cut only bounds plan growth. local[*] runs
     can ignore this (one JVM = no partial loss).
 
-    Concurrency: the session-wide ``spark.sql.adaptive.enabled`` conf is
-    off for the whole engine call (``aqe_off``, refcounted, so
-    overlapping calls on one session restore the user's value only when
-    the last one ends, also when a call raises). The SQL-text algorithms
-    enter the scope at their top, so their set-up is planned without AQE
-    too; the loop's own scope nests inside it. Queries run concurrently
-    on the same session from other threads lose AQE's skew handling
-    while a call is active.
+    Concurrency: the call runs in its own session (``engine_session``):
+    a clone of ``vertices``' session with AQE off in the clone only, or
+    the engine session ``vertices`` already belongs to. The caller's conf
+    is never written, so queries run concurrently on the same session
+    from other threads keep AQE; the result's ``vertices`` is rebound
+    into the session the input came from. ``step`` and the hooks receive
+    frames of the private session: a frame derived from one keeps it, and
+    a temp view made from one resolves through ``df.sparkSession.sql``,
+    not through the caller's session.
 
     ``verbose=True`` logs each superstep's stats at INFO on the
     ``giraph_spark`` logger (DEBUG otherwise).
     """
+    home = vertices.sparkSession
+    spark, vertices = engine_session(vertices)
     ckpt = (
         CheckpointManager(spark, checkpoint_dir, checkpoint_interval)
         if checkpoint_dir
@@ -609,94 +585,88 @@ def run_supersteps(
     superstep = 0
     history: list[dict[str, Any]] = []
     converged = False
-    # AQE off for the whole call (see Concurrency above): superstep plans
-    # are fixed-shape (explicit shuffle_hash hints, explicit partition
-    # counts, salting for skew), so adaptive re-planning adds only its
-    # latency — AQE materializes query stages one at a time with a driver
-    # re-plan between them, measured ~60ms/superstep at sf0.1
-    # (interleaved 5-rep A/B medians: 490 -> 433 ms/superstep)
-    with aqe_off(spark):
-        # a materialized input cut is adopted: the loop owns its blocks
-        jrdd = _checkpointed_jrdd(vertices)
-        cut_jrdd = jrdd if jrdd is not None and jrdd.isCheckpointed() else None
-        if resume and ckpt is not None:
-            found = ckpt.latest()
-            if found is not None:
-                superstep, vertices, _m = found
-                # the snapshot replaces the input: nothing reads its cut
-                _gated_release(sc, cut_jrdd)
-                cut_jrdd = None
-                _log.log(level, "resuming from checkpoint superstep=%d", superstep)
-        last_saved = superstep if (resume and ckpt is not None) else None
-        current = vertices if cut_jrdd is not None else vertices.persist()
-        # 0 (a file scan's plan) falls back to the first cut's width
-        start_partitions = partition_width(current)
-        try:
-            if hooks is not None and hooks.pre_application is not None:
-                hooks.pre_application(current)
-            while superstep < max_supersteps:
-                t0 = time.time()
-                if hooks is not None and hooks.pre_superstep is not None:
-                    hooks.pre_superstep(current, superstep)
-                new_vertices, stats = step(current, superstep)
-                # adopt or cut: a returned input is never adopted (its
-                # handle is the live cut, freed below)
-                jrdd = None if new_vertices is current else _checkpointed_jrdd(new_vertices)
-                if jrdd is None or not jrdd.isCheckpointed():
-                    cut = new_vertices.localCheckpoint(eager=True)
-                    new_vertices.unpersist()
-                    # a lazy cut the step never scanned was filled by this
-                    # job; the new cut no longer reads it
-                    _gated_release(sc, jrdd)
-                    new_vertices, jrdd = cut, _checkpointed_jrdd(cut)
-                if not stats:
-                    stats = {"rows": new_vertices.count()}
-                stats = dict(stats)
-                stats["superstep"] = superstep
-                stats["seconds"] = time.time() - t0
-                if hooks is not None and hooks.post_superstep is not None:
-                    hooks.post_superstep(new_vertices, superstep, stats)
-                history.append(stats)
-                _log.log(level, "superstep=%d %s", superstep, stats)
+    # a materialized input cut is adopted: the loop owns its blocks
+    jrdd = _checkpointed_jrdd(vertices)
+    cut_jrdd = jrdd if jrdd is not None and jrdd.isCheckpointed() else None
+    if resume and ckpt is not None:
+        found = ckpt.latest()
+        if found is not None:
+            superstep, vertices, _m = found
+            # the snapshot replaces the input: nothing reads its cut
+            _gated_release(sc, cut_jrdd)
+            cut_jrdd = None
+            _log.log(level, "resuming from checkpoint superstep=%d", superstep)
+    last_saved = superstep if (resume and ckpt is not None) else None
+    current = vertices if cut_jrdd is not None else vertices.persist()
+    # 0 (a file scan's plan) falls back to the first cut's width
+    start_partitions = partition_width(current)
+    try:
+        if hooks is not None and hooks.pre_application is not None:
+            hooks.pre_application(current)
+        while superstep < max_supersteps:
+            t0 = time.time()
+            if hooks is not None and hooks.pre_superstep is not None:
+                hooks.pre_superstep(current, superstep)
+            new_vertices, stats = step(current, superstep)
+            # adopt or cut: a returned input is never adopted (its
+            # handle is the live cut, freed below)
+            jrdd = None if new_vertices is current else _checkpointed_jrdd(new_vertices)
+            if jrdd is None or not jrdd.isCheckpointed():
+                cut = new_vertices.localCheckpoint(eager=True)
+                new_vertices.unpersist()
+                # a lazy cut the step never scanned was filled by this
+                # job; the new cut no longer reads it
+                _gated_release(sc, jrdd)
+                new_vertices, jrdd = cut, _checkpointed_jrdd(cut)
+            if not stats:
+                stats = {"rows": new_vertices.count()}
+            stats = dict(stats)
+            stats["superstep"] = superstep
+            stats["seconds"] = time.time() - t0
+            if hooks is not None and hooks.post_superstep is not None:
+                hooks.post_superstep(new_vertices, superstep, stats)
+            history.append(stats)
+            _log.log(level, "superstep=%d %s", superstep, stats)
 
-                superstep += 1
-                current.unpersist()
-                current = new_vertices
-                # the previous cut's blocks: localCheckpoint blocks are not
-                # freed by DataFrame.unpersist, so a long run would
-                # otherwise hold every superstep's state
-                _gated_release(sc, cut_jrdd)
-                cut_jrdd = jrdd
-                # defensive width bound: a step that unions frames (narrow
-                # union sums partition counts) would otherwise compound the
-                # width superstep over superstep until the cut materializes
-                # tens of thousands of tiny blocks. The coalesce is narrow
-                # and lands on the INPUT of the next step, so its cut
-                # materializes at the bounded width (8x headroom)
-                width = partition_width(current)
-                start_partitions = start_partitions or width
-                if width > 8 * start_partitions:
-                    current = current.coalesce(start_partitions)
+            superstep += 1
+            current.unpersist()
+            current = new_vertices
+            # the previous cut's blocks: localCheckpoint blocks are not
+            # freed by DataFrame.unpersist, so a long run would
+            # otherwise hold every superstep's state
+            _gated_release(sc, cut_jrdd)
+            cut_jrdd = jrdd
+            # defensive width bound: a step that unions frames (narrow
+            # union sums partition counts) would otherwise compound the
+            # width superstep over superstep until the cut materializes
+            # tens of thousands of tiny blocks. The coalesce is narrow
+            # and lands on the INPUT of the next step, so its cut
+            # materializes at the bounded width (8x headroom)
+            width = partition_width(current)
+            start_partitions = start_partitions or width
+            if width > 8 * start_partitions:
+                current = current.coalesce(start_partitions)
 
-                if ckpt is not None and ckpt.should_save(superstep):
-                    ckpt.save(current, superstep, stats)
-                    last_saved = superstep
+            if ckpt is not None and ckpt.should_save(superstep):
+                ckpt.save(current, superstep, stats)
+                last_saved = superstep
 
-                if halt is not None and halt(stats, superstep):
-                    converged = True
-                    break
+            if halt is not None and halt(stats, superstep):
+                converged = True
+                break
 
-            # final snapshot, unless this superstep is saved already (by
-            # the loop, or on resume the directory the state is read from)
-            if ckpt is not None and history and last_saved != superstep:
-                ckpt.save(current, superstep, history[-1])
-            if hooks is not None and hooks.post_application is not None:
-                hooks.post_application(current)
-        finally:
-            # opportunistic, non-forcing: free any release whose watched
-            # work has finished (the loop's own releases are usually
-            # freed inline; this catches ones deferred past a straggler)
-            drain_releases()
+        # final snapshot, unless this superstep is saved already (by
+        # the loop, or on resume the directory the state is read from)
+        if ckpt is not None and history and last_saved != superstep:
+            ckpt.save(current, superstep, history[-1])
+        if hooks is not None and hooks.post_application is not None:
+            hooks.post_application(current)
+    finally:
+        # opportunistic, non-forcing: free any release whose watched
+        # work has finished (the loop's own releases are usually
+        # freed inline; this catches ones deferred past a straggler)
+        drain_releases()
     return PregelRun(
-        vertices=current, supersteps=superstep, converged=converged, history=history
+        vertices=rebind(current, home), supersteps=superstep, converged=converged,
+        history=history,
     )

@@ -349,7 +349,7 @@ def test_engine_calls_setup_is_one_job(spark, tmp_path):
     WCC and LPA at most one per superstep plus one. A snapshot is one
     write job: snapshotting every 3 supersteps adds 2 (at 3 and the final
     5), and the resume to superstep 7 is at most 7 jobs."""
-    from giraph_spark.algorithms import label_propagation
+    from giraph_spark.algorithms import label_propagation, max_label_propagation
 
     sc = spark.sparkContext
     edges = _edges_df(spark, _random_digraph(11, 60, 240))
@@ -375,6 +375,8 @@ def test_engine_calls_setup_is_one_job(spark, tmp_path):
     run, n = jobs("jobs-wcc", lambda: connected_components(spark, edges, max_supersteps=5))
     assert n <= run.supersteps + 1, (n, run.supersteps)
     run, n = jobs("jobs-lpa", lambda: label_propagation(spark, edges, max_supersteps=5))
+    assert n <= run.supersteps + 1, (n, run.supersteps)
+    run, n = jobs("jobs-maxlp", lambda: max_label_propagation(spark, edges, max_supersteps=5))
     assert n <= run.supersteps + 1, (n, run.supersteps)
 
 
@@ -405,6 +407,96 @@ def test_engine_calls_restore_callers_aqe(spark):
                 assert spark.conf.get(key) == caller_val
     finally:
         spark.conf.set(key, user_val)
+
+
+def test_concurrent_engine_calls_leave_callers_conf(spark, tmp_path):
+    """Two engine calls at once on one session: thread A runs a
+    snapshotting PageRank, thread B WCC then LPA, while the main thread
+    polls spark.sql.adaptive.enabled. Every read is the caller's value
+    (each call turns AQE off in its own cloned session only), the results
+    equal serial runs, and no checkpoint block goes missing."""
+    import threading
+    import time
+
+    from giraph_spark.algorithms import label_propagation
+
+    key = "spark.sql.adaptive.enabled"
+    caller_val = spark.conf.get(key)
+    edges = _edges_df(spark, _random_digraph(14, 80, 320))
+    calls = {
+        "pr": lambda ck: pagerank(
+            spark, edges, max_supersteps=6, checkpoint_dir=ck, checkpoint_interval=2
+        ),
+        "wcc": lambda ck: connected_components(spark, edges),
+        "lpa": lambda ck: label_propagation(spark, edges, max_supersteps=5),
+    }
+
+    def values(name, ck):
+        run = calls[name](ck)
+        col = [c for c in run.vertices.columns if c != "id"][0]
+        return {r["id"]: r[col] for r in run.vertices.collect()}
+
+    serial = {name: values(name, str(tmp_path / f"serial-{name}")) for name in calls}
+    got: dict[str, dict] = {}
+    errors: list[str] = []
+
+    def run_all(names):
+        try:
+            for name in names:
+                got[name] = values(name, str(tmp_path / f"conc-{name}"))
+        except Exception as exc:  # noqa: BLE001
+            errors.append(repr(exc))
+
+    threads = [
+        threading.Thread(target=run_all, args=(["pr"],)),
+        threading.Thread(target=run_all, args=(["wcc", "lpa"],)),
+    ]
+    for t in threads:
+        t.start()
+    reads = []
+    deadline = time.time() + 600
+    while any(t.is_alive() for t in threads) and time.time() < deadline:
+        reads.append(spark.conf.get(key))
+        time.sleep(0.001)
+    assert not any(t.is_alive() for t in threads)
+    assert not any("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in e for e in errors), errors
+    assert errors == []
+    assert len(reads) > 10 and set(reads) == {caller_val}
+    assert got["pr"].keys() == serial["pr"].keys()
+    assert all(abs(got["pr"][k] - serial["pr"][k]) <= 1e-12 for k in serial["pr"])
+    assert got["wcc"] == serial["wcc"] and got["lpa"] == serial["lpa"]
+
+
+def test_engine_call_session_boundary(spark):
+    """What crosses between the caller's session and a call's cloned one:
+    a runtime conf goes in (the caller's shuffle-partition count sizes a
+    num_partitions=None call), and the result comes back as a frame of
+    the caller's session — planned with the caller's AQE, and a temp view
+    made from it resolves through the caller's catalog. ``RDD.toDF`` is
+    left bound to the session it was bound to."""
+    from pyspark import RDD
+
+    to_df = RDD.toDF
+    key = "spark.sql.shuffle.partitions"
+    user_val = spark.conf.get(key)
+    edges = _edges_df(spark, _random_digraph(15, 40, 120))
+    try:
+        spark.conf.set(key, "3")
+        run = pagerank(spark, edges, max_supersteps=2, num_partitions=None)
+    finally:
+        spark.conf.set(key, user_val)
+    assert run.vertices.rdd.getNumPartitions() == 3
+    assert run.vertices.sparkSession is spark
+    assert RDD.toDF is to_df
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    plan = run.vertices.groupBy("rank").count()._jdf.queryExecution().executedPlan()
+    assert plan.nodeName() == "AdaptiveSparkPlan"
+    run.vertices.createOrReplaceTempView("boundary_ranks")
+    try:
+        n = spark.sql("SELECT count(*) FROM boundary_ranks").collect()[0][0]
+    finally:
+        spark.catalog.dropTempView("boundary_ranks")
+    assert n == run.vertices.count()
 
 
 def test_pagerank_resume_frees_setup_cut(spark, tmp_path):
@@ -716,21 +808,3 @@ def test_daemon_warm_blas_single_threaded(monkeypatch):
     monkeypatch.delenv("OPENBLAS_NUM_THREADS")
     daemon_warm._prewarm()
     assert os.environ["OPENBLAS_NUM_THREADS"] == "1"
-
-
-def test_aqe_suppression_refcounted(spark):
-    """Overlapping iterative loops on one session must not race the AQE
-    conf: the first suppressor saves the user's value, nesting keeps it
-    off, and only the last restore puts the saved value back."""
-    from giraph_spark.pregel import restore_aqe, suppress_aqe
-
-    key = "spark.sql.adaptive.enabled"
-    user_val = spark.conf.get(key)
-    suppress_aqe(spark)
-    assert spark.conf.get(key) == "false"
-    suppress_aqe(spark)  # a second loop overlaps
-    assert spark.conf.get(key) == "false"
-    restore_aqe(spark)  # first loop exits: must STAY suppressed
-    assert spark.conf.get(key) == "false"
-    restore_aqe(spark)  # last loop exits: user value restored
-    assert spark.conf.get(key) == user_val

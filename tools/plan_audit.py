@@ -113,16 +113,18 @@ def main() -> None:
 
     from giraph_spark import storage
     from giraph_spark.algorithms.pagerank import _init_piece
-    from giraph_spark.pregel import aqe_off
+    from giraph_spark.pregel import engine_session
 
-    with tempfile.TemporaryDirectory(prefix="plan_audit_") as loc, aqe_off(spark):
+    # planned as pagerank plans it: in an engine session, AQE off
+    priv, priv_edges = engine_session(edges)
+    with tempfile.TemporaryDirectory(prefix="plan_audit_") as loc:
         storage.write_bucketed_edges(edges, "audit_bucketed", buckets=8, location=loc)
-        e_setup, state = _init_piece(edges, 8)
+        e_setup, state = _init_piece(priv_edges, 8)
         p = explain_str(state)
         e_setup.unpersist()
         checks.append(("pagerank setup: no BroadcastExchange (no degree/sink joins)",
                        "BroadcastExchange" not in p, p))
-        e_setup, state = _init_piece(storage.read_bucketed_edges(spark, "audit_bucketed"), 8,
+        e_setup, state = _init_piece(storage.read_bucketed_edges(priv, "audit_bucketed"), 8,
                                      pre_partitioned=True)
         p = explain_str(state)
         e_setup.unpersist()
