@@ -49,34 +49,32 @@ def anf_exact(spark: SparkSession, edges: DataFrame, max_t: int = 8) -> DataFram
     re-analysis of the exponentially growing tree dominates wall time
     by round ~5 even with every intermediate cached.
     """
-    cuts = LineageCuts()
-    sym = clean_symmetric(edges).persist()
-    verts = sym.select(F.col("src").alias("v")).distinct()
-    state = cuts.cut(verts.select("v", F.col("v").alias("u")), "state")
-    frontier = state
-    counts = [(0, state.count())]
-    total = counts[0][1]
-    for t in range(1, max_t + 1):
-        if frontier is not None:
-            hops = (
-                frontier.join(sym, frontier["u"] == sym["src"])
-                .select("v", F.col("dst").alias("u"))
-                .distinct()
-            )
-            new = cuts.cut(hops.join(state, ["v", "u"], "left_anti"), "frontier")
-            n_new = new.count()
-            if n_new == 0:
-                cuts.release("frontier")
-                frontier = None
-            else:
-                state = cuts.cut(state.union(new), "state")
-                frontier = new
-                total += n_new
-        counts.append((t, total))
-    cuts.release("state")
-    cuts.release("frontier")
-    sym.unpersist()
-    return spark.createDataFrame(counts, "t BIGINT, n_pairs BIGINT")
+    with LineageCuts(spark.sparkContext) as cuts:
+        sym = clean_symmetric(edges).persist()
+        verts = sym.select(F.col("src").alias("v")).distinct()
+        state = cuts.cut(verts.select("v", F.col("v").alias("u")), "state")
+        frontier = state
+        counts = [(0, state.count())]
+        total = counts[0][1]
+        for t in range(1, max_t + 1):
+            if frontier is not None:
+                hops = (
+                    frontier.join(sym, frontier["u"] == sym["src"])
+                    .select("v", F.col("dst").alias("u"))
+                    .distinct()
+                )
+                new = cuts.cut(hops.join(state, ["v", "u"], "left_anti"), "frontier")
+                n_new = new.count()
+                if n_new == 0:
+                    cuts.release("frontier")
+                    frontier = None
+                else:
+                    state = cuts.cut(state.union(new), "state")
+                    frontier = new
+                    total += n_new
+            counts.append((t, total))
+        sym.unpersist()
+        return spark.createDataFrame(counts, "t BIGINT, n_pairs BIGINT")
 
 
 def anf_hll(
@@ -97,44 +95,43 @@ def anf_hll(
     gather `groupBy(dst).agg(hll_union_agg)` is map-side combined, so
     hub fan-in unions collapse per input partition before the shuffle.
     """
-    cuts = LineageCuts()
-    sym = clean_symmetric(edges)
-    if num_partitions:
-        sym = sym.repartition(num_partitions, "src")
-    sym = sym.persist()
-    state = cuts.cut(
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .groupBy("id")
-        .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk")),
-        "state",
-    )
-    est = state.agg(
-        F.sum(F.hll_sketch_estimate("sk")).alias("s")
-    ).collect()[0]["s"]
-    curve = [(0, float(est))]
-    for t in range(1, max_t + 1):
-        msgs = sym.join(state.withColumnRenamed("id", "src"), "src").select(
-            F.col("dst").alias("id"), "sk"
-        )
-        gathered = msgs.groupBy("id").agg(F.hll_union_agg("sk").alias("msk"))
+    with LineageCuts(spark.sparkContext) as cuts:
+        sym = clean_symmetric(edges)
+        if num_partitions:
+            sym = sym.repartition(num_partitions, "src")
+        sym = sym.persist()
         state = cuts.cut(
-            state.join(gathered, "id", "left").select(
-                "id",
-                F.when(F.col("msk").isNull(), F.col("sk"))
-                .otherwise(F.hll_union("sk", "msk"))
-                .alias("sk"),
-            ),
+            sym.select(F.col("src").alias("id"))
+            .distinct()
+            .groupBy("id")
+            .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk")),
             "state",
         )
-        est = state.agg(F.sum(F.hll_sketch_estimate("sk")).alias("s")).collect()[0]["s"]
-        prev = curve[-1][1]
-        curve.append((t, float(est)))
-        if prev > 0 and (est - prev) / prev < rel_eps:
-            break
-    cuts.release("state")
-    sym.unpersist()
-    return spark.createDataFrame(curve, "t INT, n_pairs_est DOUBLE")
+        est = state.agg(
+            F.sum(F.hll_sketch_estimate("sk")).alias("s")
+        ).collect()[0]["s"]
+        curve = [(0, float(est))]
+        for t in range(1, max_t + 1):
+            msgs = sym.join(state.withColumnRenamed("id", "src"), "src").select(
+                F.col("dst").alias("id"), "sk"
+            )
+            gathered = msgs.groupBy("id").agg(F.hll_union_agg("sk").alias("msk"))
+            state = cuts.cut(
+                state.join(gathered, "id", "left").select(
+                    "id",
+                    F.when(F.col("msk").isNull(), F.col("sk"))
+                    .otherwise(F.hll_union("sk", "msk"))
+                    .alias("sk"),
+                ),
+                "state",
+            )
+            est = state.agg(F.sum(F.hll_sketch_estimate("sk")).alias("s")).collect()[0]["s"]
+            prev = curve[-1][1]
+            curve.append((t, float(est)))
+            if prev > 0 and (est - prev) / prev < rel_eps:
+                break
+        sym.unpersist()
+        return spark.createDataFrame(curve, "t INT, n_pairs_est DOUBLE")
 
 
 def effective_diameter(curve: DataFrame, q: float = 0.9) -> float:

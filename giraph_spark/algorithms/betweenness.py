@@ -46,104 +46,97 @@ def betweenness_centrality(
     source dependency is excluded, per the definition."""
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cuts = LineageCuts()
-    e = edges.select("src", "dst").repartition(num_partitions, "src")
-    e = e.localCheckpoint(eager=True)
-    verts = vertices_from_edges(e)
+    with LineageCuts(spark.sparkContext) as cuts:
+        e = cuts.cut(edges.select("src", "dst").repartition(num_partitions, "src"), "e")
+        verts = vertices_from_edges(e)
 
-    seed_lit = [int(s) for s in seeds]
-    frontier = cuts.cut(
-        verts.where(F.col("id").isin(seed_lit)).select(
-            F.col("id").alias("seed"),
-            "id",
-            F.lit(0).alias("dist"),
-            F.lit(1.0).alias("sigma"),
-        ),
-        "frontier_0",
-    )
-    settled = cuts.cut(frontier, "settled")
-    levels: list[DataFrame] = [frontier]
-    n_new = frontier.count()
-
-    # ---- forward: BFS levels with sigma accumulation ----
-    while n_new > 0 and len(levels) <= max_depth:
-        lvl = len(levels)
-        msgs = e.join(
-            frontier.select(F.col("id").alias("src"), "seed", "sigma").hint(
-                "shuffle_hash"
+        seed_lit = [int(s) for s in seeds]
+        frontier = cuts.cut(
+            verts.where(F.col("id").isin(seed_lit)).select(
+                F.col("id").alias("seed"),
+                "id",
+                F.lit(0).alias("dist"),
+                F.lit(1.0).alias("sigma"),
             ),
-            "src",
-        ).select("seed", F.col("dst").alias("id"), "sigma")
-        agg = msgs.groupBy("seed", "id").agg(F.sum("sigma").alias("sigma"))
-        new = cuts.cut(
-            agg.join(settled.select("seed", "id"), ["seed", "id"], "left_anti")
-            .select("seed", "id", F.lit(lvl).alias("dist"), "sigma"),
-            f"frontier_{lvl}",
+            "frontier_0",
         )
-        n_new = new.count()
-        if n_new == 0:
-            cuts.release(f"frontier_{lvl}")
-            break
-        settled = cuts.cut(
-            settled.union(new).coalesce(num_partitions), "settled"
-        )
-        frontier = new
-        levels.append(new)
+        settled = cuts.cut(frontier, "settled")
+        levels: list[DataFrame] = [frontier]
+        n_new = frontier.count()
 
-    if len(levels) > max_depth and n_new > 0:
-        raise RuntimeError(
-            "betweenness_centrality: max_depth exceeded before the BFS "
-            "frontier emptied; raise max_depth"
-        )
+        # ---- forward: BFS levels with sigma accumulation ----
+        while n_new > 0 and len(levels) <= max_depth:
+            lvl = len(levels)
+            msgs = e.join(
+                frontier.select(F.col("id").alias("src"), "seed", "sigma").hint(
+                    "shuffle_hash"
+                ),
+                "src",
+            ).select("seed", F.col("dst").alias("id"), "sigma")
+            agg = msgs.groupBy("seed", "id").agg(F.sum("sigma").alias("sigma"))
+            new = cuts.cut(
+                agg.join(settled.select("seed", "id"), ["seed", "id"], "left_anti")
+                .select("seed", "id", F.lit(lvl).alias("dist"), "sigma"),
+                f"frontier_{lvl}",
+            )
+            n_new = new.count()
+            if n_new == 0:
+                cuts.release(f"frontier_{lvl}")
+                break
+            settled = cuts.cut(
+                settled.union(new).coalesce(num_partitions), "settled"
+            )
+            frontier = new
+            levels.append(new)
 
-    # ---- backward: dependency accumulation, deepest level first ----
-    # delta rows carry (seed, id, sigma, delta) for ONE level at a time
-    deeper = cuts.cut(
-        levels[-1].select("seed", "id", "sigma", F.lit(0.0).alias("delta")),
-        "deeper",
-    )
-    acc: DataFrame | None = None  # finished (seed, id, delta) rows
-    for lvl in range(len(levels) - 2, -1, -1):
-        msgs = e.join(
-            deeper.select(
-                F.col("id").alias("dst"),
+        if len(levels) > max_depth and n_new > 0:
+            raise RuntimeError(
+                "betweenness_centrality: max_depth exceeded before the BFS "
+                "frontier emptied; raise max_depth"
+            )
+
+        # ---- backward: dependency accumulation, deepest level first ----
+        # delta rows carry (seed, id, sigma, delta) for ONE level at a time
+        deeper = cuts.cut(
+            levels[-1].select("seed", "id", "sigma", F.lit(0.0).alias("delta")),
+            "deeper",
+        )
+        acc: DataFrame | None = None  # finished (seed, id, delta) rows
+        for lvl in range(len(levels) - 2, -1, -1):
+            msgs = e.join(
+                deeper.select(
+                    F.col("id").alias("dst"),
+                    "seed",
+                    ((F.lit(1.0) + F.col("delta")) / F.col("sigma")).alias("m"),
+                ).hint("shuffle_hash"),
+                "dst",
+            ).select("seed", F.col("src").alias("id"), "m")
+            gathered = msgs.groupBy("seed", "id").agg(F.sum("m").alias("s"))
+            cur = levels[lvl].join(gathered.hint("shuffle_hash"), ["seed", "id"], "left").select(
                 "seed",
-                ((F.lit(1.0) + F.col("delta")) / F.col("sigma")).alias("m"),
-            ).hint("shuffle_hash"),
-            "dst",
-        ).select("seed", F.col("src").alias("id"), "m")
-        gathered = msgs.groupBy("seed", "id").agg(F.sum("m").alias("s"))
-        cur = levels[lvl].join(gathered.hint("shuffle_hash"), ["seed", "id"], "left").select(
-            "seed",
-            "id",
-            "sigma",
-            (F.col("sigma") * F.coalesce("s", F.lit(0.0))).alias("delta"),
-        )
-        part = deeper.select("seed", "id", "delta")
-        acc = cuts.cut(
-            part if acc is None else acc.union(part).coalesce(num_partitions),
-            "acc",
-        )
-        deeper = cuts.cut(cur, "deeper")
-    # the level-0 rows are the seeds themselves: their delta is the
-    # dependency of the seed on itself as an interior vertex of OTHER
-    # seeds' paths only, which this per-seed table excludes by definition
-    # — Brandes drops delta(s, s), so level-0 rows are not accumulated.
+                "id",
+                "sigma",
+                (F.col("sigma") * F.coalesce("s", F.lit(0.0))).alias("delta"),
+            )
+            part = deeper.select("seed", "id", "delta")
+            acc = cuts.cut(
+                part if acc is None else acc.union(part).coalesce(num_partitions),
+                "acc",
+            )
+            deeper = cuts.cut(cur, "deeper")
+        # the level-0 rows are the seeds themselves: their delta is the
+        # dependency of the seed on itself as an interior vertex of OTHER
+        # seeds' paths only, which this per-seed table excludes by definition
+        # — Brandes drops delta(s, s), so level-0 rows are not accumulated.
 
-    out = (
-        verts.join(
-            (acc if acc is not None else deeper.limit(0))
-            .groupBy("id")
-            .agg(F.sum("delta").alias("betweenness")),
-            "id",
-            "left",
+        out = (
+            verts.join(
+                (acc if acc is not None else deeper.limit(0))
+                .groupBy("id")
+                .agg(F.sum("delta").alias("betweenness")),
+                "id",
+                "left",
+            )
+            .select("id", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness"))
         )
-        .select("id", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness"))
-    )
-    out = out.localCheckpoint(eager=True)
-    for lvl in range(len(levels)):
-        cuts.release(f"frontier_{lvl}")
-    cuts.release("settled")
-    cuts.release("deeper")
-    cuts.release("acc")
-    return out
+        return out.localCheckpoint(eager=True)

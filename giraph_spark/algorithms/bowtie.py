@@ -100,30 +100,27 @@ def bowtie_decomposition(
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if seed is None:
         seed = canonical_seed(edges)
-    cuts = LineageCuts()
-    e = edges.select("src", "dst").repartition(num_partitions, "src")
-    e = e.localCheckpoint(eager=True)
-    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    rev = rev.repartition(num_partitions, "src").localCheckpoint(eager=True)
-    seed_df = spark.createDataFrame([(int(seed),)], "id long")
+    with LineageCuts(spark.sparkContext) as cuts:
+        e = cuts.cut(edges.select("src", "dst").repartition(num_partitions, "src"), "e")
+        rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        rev = cuts.cut(rev.repartition(num_partitions, "src"), "rev")
+        seed_df = spark.createDataFrame([(int(seed),)], "id long")
 
-    fwd = _closure(e, seed_df, cuts, "fwd", num_partitions, max_supersteps)
-    bwd = _closure(rev, seed_df, cuts, "bwd", num_partitions, max_supersteps)
+        fwd = _closure(e, seed_df, cuts, "fwd", num_partitions, max_supersteps)
+        bwd = _closure(rev, seed_df, cuts, "bwd", num_partitions, max_supersteps)
 
-    out = (
-        vertices_from_edges(e)
-        .join(fwd.withColumn("_f", F.lit(1)), "id", "left")
-        .join(bwd.withColumn("_b", F.lit(1)), "id", "left")
-        .select(
-            "id",
-            F.when(F.col("_f").isNotNull() & F.col("_b").isNotNull(), "CORE")
-            .when(F.col("_b").isNotNull(), "IN")
-            .when(F.col("_f").isNotNull(), "OUT")
-            .otherwise("OTHER")
-            .alias("region"),
+        out = (
+            vertices_from_edges(e)
+            .join(fwd.withColumn("_f", F.lit(1)), "id", "left")
+            .join(bwd.withColumn("_b", F.lit(1)), "id", "left")
+            .select(
+                "id",
+                F.when(F.col("_f").isNotNull() & F.col("_b").isNotNull(), "CORE")
+                .when(F.col("_b").isNotNull(), "IN")
+                .when(F.col("_f").isNotNull(), "OUT")
+                .otherwise("OTHER")
+                .alias("region"),
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    cuts.release("fwd")
-    cuts.release("bwd")
-    return out
+        return out

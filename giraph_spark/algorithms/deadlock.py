@@ -72,101 +72,102 @@ def bracha_toueg_free(
         verts = verts.union(vertices.select(F.col("id").cast("long"))).distinct()
     verts = verts.repartition(num_partitions, "id").persist()
 
-    # ---- phase 1: the NOTIFY wave = BFS reachability from the initiator
-    reach_run = bfs(
-        spark,
-        e.select("src", "dst"),
-        seeds=initiator,
-        max_supersteps=max_supersteps,
-        num_partitions=num_partitions,
-    )
-    # the initiator is always notified (it starts the wave), even with no
-    # out-edges (fixture testOneInitNodeGraph: isolated initiator is free);
-    # an initiator absent from the graph notifies nothing at all
-    notified = (
-        reach_run.vertices.where(F.col("hops") >= 0)
-        .select("id")
-        .union(verts.where(F.col("id") == initiator))
-        .distinct()
-        .persist()
-    )
-    notified.count()
-
-    # ---- phase 2: grant fixpoint over the notified subgraph
-    # requests FROM notified vertices (only their groups matter; grants can
-    # only come from notified targets, because freeness is confined to the
-    # notified set)
-    en = e.join(notified.withColumnRenamed("id", "src"), "src", "left_semi").persist()
-    group_sizes = en.groupBy("src", "tag").agg(F.count(F.lit(1)).alias("remaining"))
-
-    # free round 0: notified vertices with no outgoing requests at all
-    free = (
-        notified.join(en.select("src").distinct().withColumnRenamed("src", "id"),
-                      "id", "left_anti")
-        .persist()
-    )
-    frontier = free
-    remaining = group_sizes.repartition(num_partitions, "src").persist()
-    free0, remaining0 = free, remaining  # round-0 caches, dropped at the end
-    supersteps = 0
-    converged = False
-    cuts = LineageCuts()
-    # ONE action per round: |free| is materialized anyway, and the frontier
-    # size is its delta from the previous round — no separate count job
-    free_count = free.count()
-    frontier_count = free_count
-    while supersteps < max_supersteps:
-        if frontier_count == 0:
-            converged = True
-            break
-        supersteps += 1
-        # grants: every newly-free vertex grants ALL its waiting parents
-        grants = (
-            en.join(frontier.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .groupBy("src", "tag")
-            .agg(F.count(F.lit(1)).alias("granted"))
+    with LineageCuts(spark.sparkContext) as cuts:
+        # ---- phase 1: the NOTIFY wave = BFS reachability from the initiator
+        reach = cuts.adopt(
+            bfs(
+                spark,
+                e.select("src", "dst"),
+                seeds=initiator,
+                max_supersteps=max_supersteps,
+                num_partitions=num_partitions,
+            ).vertices,
+            "reach",
         )
-        # every round: cut lineage on all three carried DataFrames — the
-        # free/frontier/remaining plans reference EACH OTHER across rounds
-        # (branching factor 2), so un-cut growth is exponential in the
-        # round count; the cut tables are tiny (<=|V| + |groups| rows).
-        # Each cut frees its slot's previous round, so the order matters:
-        # remaining reads the old frontier, the frontier reads the old free
-        remaining = cuts.cut(
-            remaining.join(grants, ["src", "tag"], "left").select(
-                "src",
-                "tag",
-                (F.col("remaining") - F.coalesce("granted", F.lit(0))).alias("remaining"),
-            ),
-            "remaining",
-        )
-        # a vertex unblocks when ANY of its groups is fully granted
-        unblocked = (
-            remaining.where(F.col("remaining") <= 0)
-            .select(F.col("src").alias("id"))
+        # the initiator is always notified (it starts the wave), even with no
+        # out-edges (fixture testOneInitNodeGraph: isolated initiator is free);
+        # an initiator absent from the graph notifies nothing at all
+        notified = (
+            reach.where(F.col("hops") >= 0)
+            .select("id")
+            .union(verts.where(F.col("id") == initiator))
             .distinct()
+            .persist()
         )
-        frontier = cuts.cut(unblocked.join(free, "id", "left_anti"), "frontier")
-        # coalesce: the narrow union SUMS partition counts, so the free
-        # accumulator would otherwise widen every round (no-op while
-        # within num_partitions)
-        free = cuts.cut(free.union(frontier).coalesce(num_partitions), "free")
-        new_count = free.count()
-        frontier_count = new_count - free_count
-        free_count = new_count
+        notified.count()
 
-    result = verts.join(
-        free.withColumn("is_free", F.lit(True)), "id", "left"
-    ).select("id", F.coalesce("is_free", F.lit(False)).alias("is_free"))
-    # lineage cut (not just persist): the final round's checkpoint blocks
-    # and the round-0 persisted frames are released below, so the result
-    # must not depend on them for recompute
-    result = result.localCheckpoint(eager=True)
-    for slot in ("remaining", "frontier", "free"):
-        cuts.release(slot)
-    for df in (verts, notified, en, free0, remaining0):
-        df.unpersist()
-    return PregelRun(vertices=result, supersteps=supersteps, converged=converged)
+        # ---- phase 2: grant fixpoint over the notified subgraph
+        # requests FROM notified vertices (only their groups matter; grants can
+        # only come from notified targets, because freeness is confined to the
+        # notified set)
+        en = e.join(notified.withColumnRenamed("id", "src"), "src", "left_semi").persist()
+        group_sizes = en.groupBy("src", "tag").agg(F.count(F.lit(1)).alias("remaining"))
+
+        # free round 0: notified vertices with no outgoing requests at all
+        free = (
+            notified.join(en.select("src").distinct().withColumnRenamed("src", "id"),
+                          "id", "left_anti")
+            .persist()
+        )
+        frontier = free
+        remaining = group_sizes.repartition(num_partitions, "src").persist()
+        free0, remaining0 = free, remaining  # round-0 caches, dropped at the end
+        supersteps = 0
+        converged = False
+        # ONE action per round: |free| is materialized anyway, and the frontier
+        # size is its delta from the previous round — no separate count job
+        free_count = free.count()
+        frontier_count = free_count
+        while supersteps < max_supersteps:
+            if frontier_count == 0:
+                converged = True
+                break
+            supersteps += 1
+            # grants: every newly-free vertex grants ALL its waiting parents
+            grants = (
+                en.join(frontier.withColumnRenamed("id", "dst"), "dst", "left_semi")
+                .groupBy("src", "tag")
+                .agg(F.count(F.lit(1)).alias("granted"))
+            )
+            # every round: cut lineage on all three carried DataFrames — the
+            # free/frontier/remaining plans reference EACH OTHER across rounds
+            # (branching factor 2), so un-cut growth is exponential in the
+            # round count; the cut tables are tiny (<=|V| + |groups| rows).
+            # Each cut frees its slot's previous round, so the order matters:
+            # remaining reads the old frontier, the frontier reads the old free
+            remaining = cuts.cut(
+                remaining.join(grants, ["src", "tag"], "left").select(
+                    "src",
+                    "tag",
+                    (F.col("remaining") - F.coalesce("granted", F.lit(0))).alias("remaining"),
+                ),
+                "remaining",
+            )
+            # a vertex unblocks when ANY of its groups is fully granted
+            unblocked = (
+                remaining.where(F.col("remaining") <= 0)
+                .select(F.col("src").alias("id"))
+                .distinct()
+            )
+            frontier = cuts.cut(unblocked.join(free, "id", "left_anti"), "frontier")
+            # coalesce: the narrow union SUMS partition counts, so the free
+            # accumulator would otherwise widen every round (no-op while
+            # within num_partitions)
+            free = cuts.cut(free.union(frontier).coalesce(num_partitions), "free")
+            new_count = free.count()
+            frontier_count = new_count - free_count
+            free_count = new_count
+
+        result = verts.join(
+            free.withColumn("is_free", F.lit(True)), "id", "left"
+        ).select("id", F.coalesce("is_free", F.lit(False)).alias("is_free"))
+        # lineage cut (not just persist): the cuts are freed on exit and the
+        # round-0 persisted frames below, so the result must not depend on
+        # them for recompute
+        result = result.localCheckpoint(eager=True)
+        for df in (verts, notified, en, free0, remaining0):
+            df.unpersist()
+        return PregelRun(vertices=result, supersteps=supersteps, converged=converged)
 
 
 def is_deadlocked(

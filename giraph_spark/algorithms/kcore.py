@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import LineageCuts, engine_session, rebind
+from giraph_spark.pregel import LineageCuts, bare_checkpoint, engine_session, rebind
 
 _log = logging.getLogger("giraph_spark")
 
@@ -41,47 +41,44 @@ def k_core(
     """
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cuts = LineageCuts()
-    e0 = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
-    e = cuts.cut(e0.repartition(num_partitions, "src"), "edges")
-    verts = cuts.cut(vertices_from_edges(e), "verts")
-    n_edges = e.count()
+    with LineageCuts(spark.sparkContext) as cuts:
+        e0 = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
+        e = cuts.cut(e0.repartition(num_partitions, "src"), "edges")
+        verts = cuts.cut(vertices_from_edges(e), "verts")
+        n_edges = e.count()
 
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            break
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .where(F.col("d") >= k)
-            .select("src")
-        )
-        new_e = (
-            e.join(keep.hint("shuffle_hash"), "src", "left_semi")
-            .join(
-                keep.withColumnRenamed("src", "dst").hint("shuffle_hash"),
-                "dst",
-                "left_semi",
+        for _ in range(max_rounds):
+            if n_edges == 0:
+                break
+            keep = (
+                e.groupBy("src")
+                .agg(F.count(F.lit(1)).alias("d"))
+                .where(F.col("d") >= k)
+                .select("src")
             )
-            .select("src", "dst")
-        )
-        new_e = cuts.cut(new_e, "edges")  # materializes BEFORE releasing prev
-        n_new = new_e.count()
-        e = new_e
-        if n_new == n_edges:
-            break
-        n_edges = n_new
-    else:
-        raise RuntimeError(f"k_core: no fixpoint within {max_rounds} rounds")
+            new_e = (
+                e.join(keep.hint("shuffle_hash"), "src", "left_semi")
+                .join(
+                    keep.withColumnRenamed("src", "dst").hint("shuffle_hash"),
+                    "dst",
+                    "left_semi",
+                )
+                .select("src", "dst")
+            )
+            new_e = cuts.cut(new_e, "edges")  # materializes BEFORE releasing prev
+            n_new = new_e.count()
+            e = new_e
+            if n_new == n_edges:
+                break
+            n_edges = n_new
+        else:
+            raise RuntimeError(f"k_core: no fixpoint within {max_rounds} rounds")
 
-    core = e.select(F.col("src").alias("id")).distinct()
-    out = verts.join(
-        core.withColumn("in_core", F.lit(1)), "id", "left"
-    ).select("id", F.coalesce("in_core", F.lit(0)).cast("long").alias("in_core"))
-    out = out.localCheckpoint(eager=True)  # outlives the cuts released below
-    for slot in ("edges", "verts"):
-        cuts.release(slot)
-    return out
+        core = e.select(F.col("src").alias("id")).distinct()
+        out = verts.join(
+            core.withColumn("in_core", F.lit(1)), "id", "left"
+        ).select("id", F.coalesce("in_core", F.lit(0)).cast("long").alias("in_core"))
+        return out.localCheckpoint(eager=True)  # outlives the cuts freed on exit
 
 
 def k_truss(
@@ -114,85 +111,81 @@ def k_truss(
 
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cuts = LineageCuts()
-    if symmetrize_input:
-        from giraph_spark.graph import clean_symmetric
+    with LineageCuts(spark.sparkContext) as cuts:
+        if symmetrize_input:
+            from giraph_spark.graph import clean_symmetric
 
-        sym0 = clean_symmetric(edges)
-    else:
-        sym0 = edges.select("src", "dst")
-    sym = cuts.cut(sym0.repartition(num_partitions, "src"), "sym")
-    n_edges = sym.count()  # symmetric rows = 2x undirected edges
-    min_support = k - 2
+            sym0 = clean_symmetric(edges)
+        else:
+            sym0 = edges.select("src", "dst")
+        sym = cuts.cut(sym0.repartition(num_partitions, "src"), "sym")
+        n_edges = sym.count()  # symmetric rows = 2x undirected edges
+        min_support = k - 2
 
-    sup = None
-    converged = n_edges == 0
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            converged = True
-            break
-        o = _oriented(sym, symmetrize_input=False)
-        tris = _triangle_list_from(o)
-        tri_edges = (
-            tris.select(
-                F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-            )
-            .union(
+        sup = None
+        converged = n_edges == 0
+        for _ in range(max_rounds):
+            if n_edges == 0:
+                converged = True
+                break
+            o = _oriented(sym, symmetrize_input=False)
+            tris = _triangle_list_from(o)
+            tri_edges = (
                 tris.select(
-                    F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")
+                    F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
+                )
+                .union(
+                    tris.select(
+                        F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")
+                    )
+                )
+                .union(
+                    tris.select(
+                        F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v")
+                    )
                 )
             )
-            .union(
-                tris.select(
-                    F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v")
+            sup = cuts.cut(
+                sym.where(F.col("src") < F.col("dst"))
+                .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+                .join(
+                    tri_edges.groupBy("u", "v").agg(
+                        F.count(F.lit(1)).alias("support")
+                    ),
+                    ["u", "v"],
+                    "left",
                 )
-            )
-        )
-        sup = cuts.cut(
-            sym.where(F.col("src") < F.col("dst"))
-            .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-            .join(
-                tri_edges.groupBy("u", "v").agg(
-                    F.count(F.lit(1)).alias("support")
+                .select(
+                    "u", "v", F.coalesce("support", F.lit(0)).alias("support")
                 ),
-                ["u", "v"],
-                "left",
+                "support",
             )
-            .select(
-                "u", "v", F.coalesce("support", F.lit(0)).alias("support")
-            ),
-            "support",
-        )
-        kept = sup.where(F.col("support") >= min_support)
-        sym = cuts.cut(
-            kept.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-            .union(kept.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-            .repartition(num_partitions, "src"),
-            "sym",
-        )
-        n_kept = sym.count()
-        if n_kept == n_edges:
-            converged = True
-            break
-        n_edges = n_kept
+            kept = sup.where(F.col("support") >= min_support)
+            sym = cuts.cut(
+                kept.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+                .union(kept.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+                .repartition(num_partitions, "src"),
+                "sym",
+            )
+            n_kept = sym.count()
+            if n_kept == n_edges:
+                converged = True
+                break
+            n_edges = n_kept
 
-    if not converged:
-        raise RuntimeError(
-            "k_truss: round budget exhausted before the edge set reached "
-            "a fixpoint; raise max_rounds"
+        if not converged:
+            raise RuntimeError(
+                "k_truss: round budget exhausted before the edge set reached "
+                "a fixpoint; raise max_rounds"
+            )
+        if sup is None or n_edges == 0:
+            schema = "u long, v long, support long"
+            return spark.createDataFrame([], schema)
+        out = cuts.cut(
+            sup.where(F.col("support") >= min_support), "result"
         )
-    if sup is None or n_edges == 0:
-        cuts.release("sym")
-        cuts.release("support")
-        schema = "u long, v long, support long"
-        return spark.createDataFrame([], schema)
-    out = cuts.cut(
-        sup.where(F.col("support") >= min_support), "result"
-    )
-    cuts.release("sym")
-    cuts.release("support")
-    cuts.forget("result")  # backs the returned DataFrame
-    return out
+        cuts.forget("result")  # backs the returned DataFrame
+        return out
 
 
 def coreness(
@@ -216,76 +209,72 @@ def coreness(
     """
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cuts = LineageCuts()
-    e0 = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
-    e = cuts.cut(e0.repartition(num_partitions, "src"), "edges")
-    prev_verts = cuts.cut(vertices_from_edges(e), "prev_verts")
-    n_edges = e.count()
-    result: DataFrame | None = None
-    k = 0
-    rounds_left = max_rounds
+    with LineageCuts(spark.sparkContext) as cuts:
+        e0 = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
+        e = cuts.cut(e0.repartition(num_partitions, "src"), "edges")
+        prev_verts = cuts.cut(vertices_from_edges(e), "prev_verts")
+        n_edges = e.count()
+        result: DataFrame | None = None
+        k = 0
+        rounds_left = max_rounds
 
-    while n_edges > 0:
-        # after a completed fixpoint every surviving vertex has degree
-        # >= the current core's minimum degree, so all levels up to that
-        # minimum are verified no-ops — jump straight past them (also
-        # subsumes the old d_min fast-start on the first iteration); one
-        # tiny min-degree aggregate replaces one no-op cascade per
-        # skipped level
-        d_cur = int(
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .agg(F.min("d"))
-            .collect()[0][0]
-        )
-        k = max(k + 1, d_cur + 1)
-        # peel e down to its k-core fixpoint
-        while True:
-            rounds_left -= 1
-            if rounds_left < 0:
-                raise RuntimeError(
-                    "coreness: round budget exhausted; raise max_rounds"
-                )
-            keep = (
+        while n_edges > 0:
+            # after a completed fixpoint every surviving vertex has degree
+            # >= the current core's minimum degree, so all levels up to that
+            # minimum are verified no-ops — jump straight past them (also
+            # subsumes the old d_min fast-start on the first iteration); one
+            # tiny min-degree aggregate replaces one no-op cascade per
+            # skipped level
+            d_cur = int(
                 e.groupBy("src")
                 .agg(F.count(F.lit(1)).alias("d"))
-                .where(F.col("d") >= k)
-                .select("src")
+                .agg(F.min("d"))
+                .collect()[0][0]
             )
-            e2 = cuts.cut(
-                e.join(keep, "src", "left_semi").join(
-                    keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
-                ).select("src", "dst"),
-                "edges",
+            k = max(k + 1, d_cur + 1)
+            # peel e down to its k-core fixpoint
+            while True:
+                rounds_left -= 1
+                if rounds_left < 0:
+                    raise RuntimeError(
+                        "coreness: round budget exhausted; raise max_rounds"
+                    )
+                keep = (
+                    e.groupBy("src")
+                    .agg(F.count(F.lit(1)).alias("d"))
+                    .where(F.col("d") >= k)
+                    .select("src")
+                )
+                e2 = cuts.cut(
+                    e.join(keep, "src", "left_semi").join(
+                        keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
+                    ).select("src", "dst"),
+                    "edges",
+                )
+                n2 = e2.count()
+                e = e2
+                if n2 == n_edges:
+                    break
+                n_edges = n2
+            # survivors of the k-core; the symmetric edge set guarantees
+            # every member appears as a src
+            cur_verts = cuts.cut(e.select(F.col("src").alias("id")).distinct(), "cur_verts")
+            dropped = prev_verts.join(cur_verts, "id", "left_anti").select(
+                "id", F.lit(k - 1).cast("long").alias("coreness")
             )
-            n2 = e2.count()
-            e = e2
-            if n2 == n_edges:
-                break
-            n_edges = n2
-        # survivors of the k-core; the symmetric edge set guarantees
-        # every member appears as a src
-        cur_verts = cuts.cut(e.select(F.col("src").alias("id")).distinct(), "cur_verts")
-        dropped = prev_verts.join(cur_verts, "id", "left_anti").select(
-            "id", F.lit(k - 1).cast("long").alias("coreness")
-        )
-        result = cuts.cut(
-            dropped
-            if result is None
-            else result.union(dropped).coalesce(num_partitions),
-            "result",
-        )
-        prev_verts = cuts.cut(cur_verts, "prev_verts")
-        cuts.release("cur_verts")
+            result = cuts.cut(
+                dropped
+                if result is None
+                else result.union(dropped).coalesce(num_partitions),
+                "result",
+            )
+            prev_verts = cuts.cut(cur_verts, "prev_verts")
+            cuts.release("cur_verts")
 
-    # the loop ends when the k-core is empty: remaining prev_verts peaked
-    # at k-1 (they survived the (k-1)-core but not the k-core)
-    tail = prev_verts.select("id", F.lit(max(k - 1, 0)).cast("long").alias("coreness"))
-    out = (tail if result is None else result.union(tail)).localCheckpoint(eager=True)
-    cuts.release("edges")
-    cuts.release("prev_verts")
-    cuts.release("result")
-    return out
+        # the loop ends when the k-core is empty: remaining prev_verts peaked
+        # at k-1 (they survived the (k-1)-core but not the k-core)
+        tail = prev_verts.select("id", F.lit(max(k - 1, 0)).cast("long").alias("coreness"))
+        return (tail if result is None else result.union(tail)).localCheckpoint(eager=True)
 
 
 def _hadoop_rm(spark: SparkSession, path: str) -> None:
@@ -396,9 +385,11 @@ def trussness(
     # ever needing the already-submitted support-scan shuffle stage, and
     # that orphaned stage — whose tasks are not interrupted by default —
     # then reads the support blocks the loop has already released. With
-    # AQE off every submitted stage belongs to the awaited job, so
-    # program-order release is sound; the empty-frontier probe skip and
-    # the one-round release deferral below are additional layers.
+    # AQE off every submitted stage belongs to the awaited job. The peel's
+    # ``LineageCuts`` also waits, before each free, until no job carrying
+    # its tag is active — an orphaned query-stage job carries it too — and
+    # the empty-frontier probe skip and the one-round deferral of each
+    # support cut's free below are further layers.
     home = edges.sparkSession
     spark, edges = engine_session(edges)
     if num_partitions is None:
@@ -449,257 +440,232 @@ def _trussness_peel(
     from giraph_spark.algorithms.triangles import _oriented, _triangle_list_from
 
     level = logging.INFO if verbose else logging.DEBUG
-    cuts = LineageCuts()
-    if symmetrize_input:
-        from giraph_spark.graph import clean_symmetric
+    with LineageCuts(spark.sparkContext) as cuts:
+        if symmetrize_input:
+            from giraph_spark.graph import clean_symmetric
 
-        sym0 = clean_symmetric(edges)
-    else:
-        sym0 = edges.select("src", "dst")
-    sym = cuts.cut(sym0.repartition(num_partitions, "src"), "sym")
+            sym0 = clean_symmetric(edges)
+        else:
+            sym0 = edges.select("src", "dst")
+        sym = cuts.cut(sym0.repartition(num_partitions, "src"), "sym")
 
-    # initial per-edge support: ONE degeneracy-oriented triangle pass
-    o = _oriented(sym, symmetrize_input=False)
-    tris = _triangle_list_from(o)
-    tri_edges = (
-        tris.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .union(
-            tris.select(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v"))
-        )
-        .union(
-            tris.select(F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v"))
-        )
-    )
-    from giraph_spark.pregel import (
-        _checkpointed_jrdd,
-        _gated_release,
-        bare_checkpoint,
-        flush_releases,
-    )
-
-    sup, sup_release = bare_checkpoint(
-        sym.where(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .join(tri_edges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support")),
-              ["u", "v"], "left")
-        .select("u", "v", F.coalesce("support", F.lit(0)).alias("support"))
-        .repartition(num_partitions, "u", "v")
-    )
-    n = sup.count()
-    orient = None
-    orient_release = None
-    if orient_frontier is None and n > 0:
-        # adaptive default: one degree aggregate decides whether the
-        # graph is hub-skewed enough for the oriented probe to pay for
-        # its static side table (see the trussness docstring for the two
-        # measured anchor points: ratio ~1100 -> 5.9x win, ratio ~2 ->
-        # 4% loss; threshold 20x sits well between them)
-        drow = (
-            sym.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .agg(F.max("_d").alias("mx"), F.avg("_d").alias("av"))
-            .collect()[0]
-        )
-        orient_frontier = float(drow["mx"]) > 20.0 * float(drow["av"] or 1.0)
-        _log.log(
-            level,
-            "trussness degree skew max=%s avg=%.1f -> orient_frontier=%s",
-            drow["mx"], float(drow["av"] or 0.0), orient_frontier,
-        )
-    if orient_frontier:
-        # STATIC per-edge pivot by initial symmetric degree, computed ONCE
-        # (u, v, pu, pv) with pu = the lower-degree endpoint: probing the
-        # pivot's adjacency bounds each removed edge's wedge candidates by
-        # min(deg_u, deg_v) instead of deg_u — the win on hub-skewed
-        # graphs where the id-ordered u is a hub half the time. Kept OUT
-        # of the per-round support state on purpose: the r4 attempt that
-        # threaded degree columns through every lineage cut paid for them
-        # in cut IO every round (SURVEY §7.3 rejection); a static side
-        # table costs one extra scan per round instead.
-        deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
-        orient, orient_release = bare_checkpoint(
-            sup.select("u", "v")
-            .join(deg.select(F.col("src").alias("u"), F.col("_d").alias("_du")), "u")
-            .join(deg.select(F.col("src").alias("v"), F.col("_d").alias("_dv")), "v")
-            .select(
-                "u",
-                "v",
-                F.when(F.col("_dv") < F.col("_du"), F.col("v"))
-                .otherwise(F.col("u"))
-                .alias("pu"),
-                F.when(F.col("_dv") < F.col("_du"), F.col("u"))
-                .otherwise(F.col("v"))
-                .alias("pv"),
+        # initial per-edge support: ONE degeneracy-oriented triangle pass
+        o = _oriented(sym, symmetrize_input=False)
+        tris = _triangle_list_from(o)
+        tri_edges = (
+            tris.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
+            .union(
+                tris.select(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v"))
             )
-            .repartition(num_partitions, "u", "v")
-        )
-        orient.count()
-    cuts.release("sym")  # only the initial orientation needed it
-    parts: list[DataFrame] = []  # per-round removed frontiers, already cut
-    part_handles: list[object] = []
-    # one-round release deferral: sup_{r-1}'s blocks are freed only after
-    # round r's state is materialized, so even a straggling task attempt
-    # from round r-1 (task kill is cooperative — a cancelled attempt can
-    # outlive its job) finds its input intact for a full round
-    deferred_release = None
-    k = 2
-    rounds = 0
-    next_deep_cut = deep_cut_interval if deep_cut_interval else None
-
-    while n > 0:
-        # every edge now has support >= the completed cascade's bound, so
-        # levels below min(support) + 3 remove nothing — jump over them
-        min_sup = int(sup.agg(F.min("support")).collect()[0][0])
-        k = max(k + 1, min_sup + 3)
-        while True:  # cascade at this k
-            rounds += 1
-            if rounds > max_rounds:
-                raise RuntimeError(
-                    "trussness: round budget exhausted; raise max_rounds"
-                )
-            if next_deep_cut is not None and rounds >= next_deep_cut:
-                next_deep_cut += deep_cut_interval
-                p_sup = os.path.join(deep_dir, f"sup_{rounds}")
-                sup.write.mode("overwrite").parquet(p_sup)
-                if deferred_release is not None:
-                    deferred_release()
-                deferred_release = sup_release
-                sup = spark.read.parquet(p_sup)
-                sup_release = None  # file-backed; nothing to release
-                # earlier intervals' dirs are NOT deleted mid-run: frames
-                # from a parquet-backed round may still lazily reference
-                # them (observed FAILED_READ_FILE under interval=1); the
-                # whole scratch dir is removed once the result is
-                # materialized below
-            _t0 = time.time()
-            # lazy cut + ONE agg that both materializes the frontier's
-            # checkpoint blocks and counts total + support>0 rows (the
-            # superstep loop's lazy-cut idiom — saves an eager-cut job)
-            removed = sup.where(F.col("support") < k - 2).select(
-                "u", "v", "support"
-            ).localCheckpoint(eager=False)
-            row = removed.agg(
-                F.count(F.lit(1)).alias("n_rm"),
-                F.sum(
-                    F.when(F.col("support") > 0, 1).otherwise(0)
-                ).alias("n_fr"),
-            ).collect()[0]
-            n_rm = int(row["n_rm"])
-            n_fr = int(row["n_fr"] or 0)
-            rm_handle = _checkpointed_jrdd(removed)
-            _t1 = time.time()
-            if n_rm == 0:
-                _gated_release(spark.sparkContext, rm_handle)
-                break
-            parts.append(
-                removed.select(
-                    "u", "v", F.lit(k - 1).cast("long").alias("trussness")
-                )
+            .union(
+                tris.select(F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v"))
             )
-            part_handles.append(rm_handle)
-            rm_pairs = removed.select("u", "v")
-            rm_anti = F.broadcast(rm_pairs) if n_rm <= broadcast_frontier_max else rm_pairs
-            if n_fr == 0:
-                # every removed edge has support 0 — no triangle passes
-                # through the frontier, so no decrements: the update is a
-                # bare anti-join. Skipping the probe here (rather than
-                # letting the optimizer discover the emptiness at runtime)
-                # is also what removes the trigger for the r4 release race
-                # (see the AQE rationale in trussness): no probe stages
-                # are ever submitted, so none can be orphaned.
-                update = sup.join(rm_anti, ["u", "v"], "left_anti").select(
-                    "u", "v", "support"
-                )
-            else:
-                # triangles through removed edges in the CURRENT graph:
-                # support-0 edges close nothing — skip them in the probe;
-                # adjacency is the live support table scanned both ways
-                frontier = removed.where(F.col("support") > 0).select("u", "v")
-                if orient is not None:
-                    # swap each frontier edge to (pivot, other) so the
-                    # wedge join below fans out from the lower-degree
-                    # endpoint; the closing-edge check is symmetric
-                    # (least/greatest), so correctness is unchanged
-                    fk = (
-                        F.broadcast(frontier)
-                        if n_fr <= broadcast_frontier_max
-                        else frontier
-                    )
-                    frontier = orient.join(fk, ["u", "v"]).select(
-                        F.col("pu").alias("u"), F.col("pv").alias("v")
-                    )
-                fr = F.broadcast(frontier) if n_fr <= broadcast_frontier_max else frontier
-                adj = sup.select(F.col("u"), F.col("v").alias("w")).union(
-                    sup.select(F.col("v").alias("u"), F.col("u").alias("w"))
-                )
-                cand = (
-                    fr.join(adj, "u")
-                    .where(F.col("w") != F.col("v"))
-                    .join(
-                        sup.select(F.col("u").alias("_cu"), F.col("v").alias("_cv")),
-                        (F.least("v", "w") == F.col("_cu"))
-                        & (F.greatest("v", "w") == F.col("_cv")),
-                        "left_semi",
-                    )
-                )
-                arr = F.array_sort(F.array("u", "v", "w"))
-                tri = cand.select(
-                    arr[0].alias("x"), arr[1].alias("y"), arr[2].alias("z")
-                ).distinct()
-                dec = (
-                    tri.select(F.col("x").alias("u"), F.col("y").alias("v"))
-                    .union(tri.select(F.col("x").alias("u"), F.col("z").alias("v")))
-                    .union(tri.select(F.col("y").alias("u"), F.col("z").alias("v")))
-                    .groupBy("u", "v")
-                    .agg(F.count(F.lit(1)).alias("dcnt"))
-                )
-                update = (
-                    sup.join(rm_anti, ["u", "v"], "left_anti")
-                    .join(dec, ["u", "v"], "left")
+        )
+        # round r's support cut lives in slot sup{r % 2}: adopting it frees
+        # the cut of round r - 2, so the cut a round reads is freed only
+        # once the NEXT round's state is materialized — even a straggling
+        # task attempt (task kill is cooperative — a cancelled attempt can
+        # outlive its job) finds its input intact for a full round
+        sup = cuts.adopt(
+            bare_checkpoint(
+                sym.where(F.col("src") < F.col("dst"))
+                .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+                .join(tri_edges.groupBy("u", "v").agg(F.count(F.lit(1)).alias("support")),
+                      ["u", "v"], "left")
+                .select("u", "v", F.coalesce("support", F.lit(0)).alias("support"))
+                .repartition(num_partitions, "u", "v")
+            ),
+            "sup0",
+        )
+        n = sup.count()
+        orient = None
+        if orient_frontier is None and n > 0:
+            # adaptive default: one degree aggregate decides whether the
+            # graph is hub-skewed enough for the oriented probe to pay for
+            # its static side table (see the trussness docstring for the two
+            # measured anchor points: ratio ~1100 -> 5.9x win, ratio ~2 ->
+            # 4% loss; threshold 20x sits well between them)
+            drow = (
+                sym.groupBy("src")
+                .agg(F.count(F.lit(1)).alias("_d"))
+                .agg(F.max("_d").alias("mx"), F.avg("_d").alias("av"))
+                .collect()[0]
+            )
+            orient_frontier = float(drow["mx"]) > 20.0 * float(drow["av"] or 1.0)
+            _log.log(
+                level,
+                "trussness degree skew max=%s avg=%.1f -> orient_frontier=%s",
+                drow["mx"], float(drow["av"] or 0.0), orient_frontier,
+            )
+        if orient_frontier:
+            # STATIC per-edge pivot by initial symmetric degree, computed ONCE
+            # (u, v, pu, pv) with pu = the lower-degree endpoint: probing the
+            # pivot's adjacency bounds each removed edge's wedge candidates by
+            # min(deg_u, deg_v) instead of deg_u — the win on hub-skewed
+            # graphs where the id-ordered u is a hub half the time. Kept OUT
+            # of the per-round support state on purpose: the r4 attempt that
+            # threaded degree columns through every lineage cut paid for them
+            # in cut IO every round (SURVEY §7.3 rejection); a static side
+            # table costs one extra scan per round instead.
+            deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
+            orient = cuts.adopt(
+                bare_checkpoint(
+                    sup.select("u", "v")
+                    .join(deg.select(F.col("src").alias("u"), F.col("_d").alias("_du")), "u")
+                    .join(deg.select(F.col("src").alias("v"), F.col("_d").alias("_dv")), "v")
                     .select(
                         "u",
                         "v",
-                        (F.col("support") - F.coalesce("dcnt", F.lit(0))).alias(
-                            "support"
-                        ),
+                        F.when(F.col("_dv") < F.col("_du"), F.col("v"))
+                        .otherwise(F.col("u"))
+                        .alias("pu"),
+                        F.when(F.col("_dv") < F.col("_du"), F.col("u"))
+                        .otherwise(F.col("v"))
+                        .alias("pv"),
+                    )
+                    .repartition(num_partitions, "u", "v")
+                ),
+                "orient",
+            )
+            orient.count()
+        cuts.release("sym")  # only the initial orientation needed it
+        # per-round removed frontiers, already cut (slot removed{round})
+        parts: list[DataFrame] = []
+        k = 2
+        rounds = 0
+        next_deep_cut = deep_cut_interval if deep_cut_interval else None
+
+        while n > 0:
+            # every edge now has support >= the completed cascade's bound, so
+            # levels below min(support) + 3 remove nothing — jump over them
+            min_sup = int(sup.agg(F.min("support")).collect()[0][0])
+            k = max(k + 1, min_sup + 3)
+            while True:  # cascade at this k
+                rounds += 1
+                if rounds > max_rounds:
+                    raise RuntimeError(
+                        "trussness: round budget exhausted; raise max_rounds"
+                    )
+                if next_deep_cut is not None and rounds >= next_deep_cut:
+                    next_deep_cut += deep_cut_interval
+                    p_sup = os.path.join(deep_dir, f"sup_{rounds}")
+                    sup.write.mode("overwrite").parquet(p_sup)
+                    # file-backed; the slot rotation frees the cut it copies
+                    sup = spark.read.parquet(p_sup)
+                    # earlier intervals' dirs are NOT deleted mid-run: frames
+                    # from a parquet-backed round may still lazily reference
+                    # them (observed FAILED_READ_FILE under interval=1); the
+                    # whole scratch dir is removed once the result is
+                    # materialized below
+                _t0 = time.time()
+                # lazy cut + ONE agg that both materializes the frontier's
+                # checkpoint blocks and counts total + support>0 rows (the
+                # superstep loop's lazy-cut idiom — saves an eager-cut job)
+                removed = sup.where(F.col("support") < k - 2).select(
+                    "u", "v", "support"
+                ).localCheckpoint(eager=False)
+                row = removed.agg(
+                    F.count(F.lit(1)).alias("n_rm"),
+                    F.sum(
+                        F.when(F.col("support") > 0, 1).otherwise(0)
+                    ).alias("n_fr"),
+                ).collect()[0]
+                n_rm = int(row["n_rm"])
+                n_fr = int(row["n_fr"] or 0)
+                cuts.adopt(removed, f"removed{rounds}")
+                _t1 = time.time()
+                if n_rm == 0:
+                    cuts.release(f"removed{rounds}")
+                    break
+                parts.append(
+                    removed.select(
+                        "u", "v", F.lit(k - 1).cast("long").alias("trussness")
                     )
                 )
-            new_sup, new_release = bare_checkpoint(
-                update.repartition(num_partitions, "u", "v")
-            )
-            _t2 = time.time()
-            if deferred_release is not None:
-                deferred_release()
-            deferred_release = sup_release
-            sup, sup_release = new_sup, new_release
-            n -= n_rm
-            _log.log(
-                level,
-                "trussness round=%s k=%s removed=%s left=%s t_frontier=%.2f t_update=%.2f",
-                rounds, k, n_rm, n, _t1 - _t0, _t2 - _t1,
-            )
-            if n == 0:
-                break
+                rm_pairs = removed.select("u", "v")
+                rm_anti = F.broadcast(rm_pairs) if n_rm <= broadcast_frontier_max else rm_pairs
+                if n_fr == 0:
+                    # every removed edge has support 0 — no triangle passes
+                    # through the frontier, so no decrements: the update is a
+                    # bare anti-join. Skipping the probe here (rather than
+                    # letting the optimizer discover the emptiness at runtime)
+                    # is also what removes the trigger for the r4 release race
+                    # (see the AQE rationale in trussness): no probe stages
+                    # are ever submitted, so none can be orphaned.
+                    update = sup.join(rm_anti, ["u", "v"], "left_anti").select(
+                        "u", "v", "support"
+                    )
+                else:
+                    # triangles through removed edges in the CURRENT graph:
+                    # support-0 edges close nothing — skip them in the probe;
+                    # adjacency is the live support table scanned both ways
+                    frontier = removed.where(F.col("support") > 0).select("u", "v")
+                    if orient is not None:
+                        # swap each frontier edge to (pivot, other) so the
+                        # wedge join below fans out from the lower-degree
+                        # endpoint; the closing-edge check is symmetric
+                        # (least/greatest), so correctness is unchanged
+                        fk = (
+                            F.broadcast(frontier)
+                            if n_fr <= broadcast_frontier_max
+                            else frontier
+                        )
+                        frontier = orient.join(fk, ["u", "v"]).select(
+                            F.col("pu").alias("u"), F.col("pv").alias("v")
+                        )
+                    fr = F.broadcast(frontier) if n_fr <= broadcast_frontier_max else frontier
+                    adj = sup.select(F.col("u"), F.col("v").alias("w")).union(
+                        sup.select(F.col("v").alias("u"), F.col("u").alias("w"))
+                    )
+                    cand = (
+                        fr.join(adj, "u")
+                        .where(F.col("w") != F.col("v"))
+                        .join(
+                            sup.select(F.col("u").alias("_cu"), F.col("v").alias("_cv")),
+                            (F.least("v", "w") == F.col("_cu"))
+                            & (F.greatest("v", "w") == F.col("_cv")),
+                            "left_semi",
+                        )
+                    )
+                    arr = F.array_sort(F.array("u", "v", "w"))
+                    tri = cand.select(
+                        arr[0].alias("x"), arr[1].alias("y"), arr[2].alias("z")
+                    ).distinct()
+                    dec = (
+                        tri.select(F.col("x").alias("u"), F.col("y").alias("v"))
+                        .union(tri.select(F.col("x").alias("u"), F.col("z").alias("v")))
+                        .union(tri.select(F.col("y").alias("u"), F.col("z").alias("v")))
+                        .groupBy("u", "v")
+                        .agg(F.count(F.lit(1)).alias("dcnt"))
+                    )
+                    update = (
+                        sup.join(rm_anti, ["u", "v"], "left_anti")
+                        .join(dec, ["u", "v"], "left")
+                        .select(
+                            "u",
+                            "v",
+                            (F.col("support") - F.coalesce("dcnt", F.lit(0))).alias(
+                                "support"
+                            ),
+                        )
+                    )
+                sup = cuts.adopt(
+                    bare_checkpoint(update.repartition(num_partitions, "u", "v")),
+                    f"sup{rounds % 2}",
+                )
+                _t2 = time.time()
+                n -= n_rm
+                _log.log(
+                    level,
+                    "trussness round=%s k=%s removed=%s left=%s t_frontier=%.2f t_update=%.2f",
+                    rounds, k, n_rm, n, _t1 - _t0, _t2 - _t1,
+                )
+                if n == 0:
+                    break
 
-    if not parts:
-        out = spark.createDataFrame([], "u long, v long, trussness long")
-    else:
+        if not parts:
+            return spark.createDataFrame([], "u long, v long, trussness long")
         acc = parts[0]
         for p in parts[1:]:
             acc = acc.union(p)
-        out = acc.coalesce(num_partitions).localCheckpoint(eager=True)
-    for h in part_handles:
-        _gated_release(spark.sparkContext, h)
-    if deferred_release is not None:
-        deferred_release()
-    if sup_release is not None:
-        sup_release()
-    if orient_release is not None:
-        orient_release()
-    # the decomposition is done: give stragglers a short bounded window
-    # to finish so their blocks free now; anything still watched stays
-    # pending and drains on a later gated call (never freed under a
-    # live reader) — a long wait here would only stall concurrent-query
-    # harnesses whose unrelated jobs keep the watch sets live
-    flush_releases(timeout=5.0)
-    return out
+        return acc.coalesce(num_partitions).localCheckpoint(eager=True)

@@ -73,105 +73,105 @@ def louvain_move_phase(
     """
     from giraph_spark.graph import drop_self_loops, symmetrize_weighted
 
-    cuts = LineageCuts()
-    if weight_col is None:
-        sym = clean_symmetric(edges).withColumn("w", F.lit(1).cast("long"))
-    else:
-        sym = symmetrize_weighted(drop_self_loops(edges), weight_col).select(
-            "src", "dst", F.col(weight_col).cast("long").alias("w")
+    with LineageCuts(spark.sparkContext) as cuts:
+        if weight_col is None:
+            sym = clean_symmetric(edges).withColumn("w", F.lit(1).cast("long"))
+        else:
+            sym = symmetrize_weighted(drop_self_loops(edges), weight_col).select(
+                "src", "dst", F.col(weight_col).cast("long").alias("w")
+            )
+        if num_partitions:
+            sym = sym.repartition(num_partitions, "src")
+        sym = sym.persist()
+        deg = sym.groupBy(F.col("src").alias("id")).agg(
+            F.sum("w").alias("k")
         )
-    if num_partitions:
-        sym = sym.repartition(num_partitions, "src")
-    sym = sym.persist()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.sum("w").alias("k")
-    )
-    m2 = deg.agg(F.sum("k")).collect()[0][0]  # 2m (total edge weight x2)
-    if not m2:
-        sym.unpersist()
-        return spark.createDataFrame([], "id BIGINT, community BIGINT")
-    state = cuts.cut(
-        deg.select("id", F.col("id").alias("community"), "k"), "state"
-    )
+        m2 = deg.agg(F.sum("k")).collect()[0][0]  # 2m (total edge weight x2)
+        if not m2:
+            sym.unpersist()
+            return spark.createDataFrame([], "id BIGINT, community BIGINT")
+        state = cuts.cut(
+            deg.select("id", F.col("id").alias("community"), "k"), "state"
+        )
 
-    zero_streak = 0
-    for r in range(rounds):
-        # σ(c): total degree per community
-        sigma = state.groupBy(F.col("community").alias("c")).agg(
-            F.sum("k").alias("sigma")
-        )
-        # k_in(v, c): edges from v into each neighboring community
-        nbr_comm = sym.join(
-            state.select(F.col("id").alias("dst"), F.col("community").alias("c")),
-            "dst",
-        ).select(F.col("src").alias("id"), "c", "w")
-        k_in = nbr_comm.groupBy("id", "c").agg(F.sum("w").alias("k_in"))
-        # ensure the STAY option exists even with no intra-community edge
-        stay = state.select(
-            "id", F.col("community").alias("c"), F.lit(0).cast("long").alias("k_in")
-        )
-        cand = (
-            k_in.unionByName(stay)
-            .groupBy("id", "c")
-            .agg(F.max("k_in").alias("k_in"))
-        )
-        scored = (
-            cand.join(state.select("id", "community", "k"), "id")
-            .join(sigma, "c")
-            .select(
-                "id",
-                "c",
-                "community",
-                "k",
-                (
-                    F.lit(int(m2)) * F.col("k_in")
-                    - F.col("k")
-                    * (
-                        F.col("sigma")
-                        - F.when(F.col("c") == F.col("community"), F.col("k")).otherwise(
-                            F.lit(0)
+        zero_streak = 0
+        for r in range(rounds):
+            # σ(c): total degree per community
+            sigma = state.groupBy(F.col("community").alias("c")).agg(
+                F.sum("k").alias("sigma")
+            )
+            # k_in(v, c): edges from v into each neighboring community
+            nbr_comm = sym.join(
+                state.select(F.col("id").alias("dst"), F.col("community").alias("c")),
+                "dst",
+            ).select(F.col("src").alias("id"), "c", "w")
+            k_in = nbr_comm.groupBy("id", "c").agg(F.sum("w").alias("k_in"))
+            # ensure the STAY option exists even with no intra-community edge
+            stay = state.select(
+                "id", F.col("community").alias("c"), F.lit(0).cast("long").alias("k_in")
+            )
+            cand = (
+                k_in.unionByName(stay)
+                .groupBy("id", "c")
+                .agg(F.max("k_in").alias("k_in"))
+            )
+            scored = (
+                cand.join(state.select("id", "community", "k"), "id")
+                .join(sigma, "c")
+                .select(
+                    "id",
+                    "c",
+                    "community",
+                    "k",
+                    (
+                        F.lit(int(m2)) * F.col("k_in")
+                        - F.col("k")
+                        * (
+                            F.col("sigma")
+                            - F.when(F.col("c") == F.col("community"), F.col("k")).otherwise(
+                                F.lit(0)
+                            )
                         )
-                    )
-                ).alias("score"),
+                    ).alias("score"),
+                )
             )
-        )
-        # argmax in exact integer arithmetic; tie-break: current community
-        # first, then smallest community id — encoded in one max_by key
-        # (score, is_current, -c) compared lexicographically
-        best = scored.groupBy("id").agg(
-            F.max_by(
-                "c",
-                F.struct(
-                    F.col("score").alias("s"),
-                    (F.col("c") == F.col("community")).cast("int").alias("cur"),
-                    (-F.col("c")).alias("negc"),
-                ),
-            ).alias("best_c")
-        )
-        gate = (F.col("id") + F.lit(r)) % 2 == 0
-        nxt = (
-            state.join(best, "id")
-            .select(
-                "id",
-                F.when(gate, F.col("best_c")).otherwise(F.col("community")).alias(
-                    "community"
-                ),
-                "k",
-                (F.when(gate, F.col("best_c")).otherwise(F.col("community"))
-                 != F.col("community")).cast("long").alias("_moved"),
+            # argmax in exact integer arithmetic; tie-break: current community
+            # first, then smallest community id — encoded in one max_by key
+            # (score, is_current, -c) compared lexicographically
+            best = scored.groupBy("id").agg(
+                F.max_by(
+                    "c",
+                    F.struct(
+                        F.col("score").alias("s"),
+                        (F.col("c") == F.col("community")).cast("int").alias("cur"),
+                        (-F.col("c")).alias("negc"),
+                    ),
+                ).alias("best_c")
             )
-        )
-        nxt = cuts.cut(nxt, "next")
-        moved = nxt.agg(F.sum("_moved")).collect()[0][0] or 0
-        state = cuts.cut(nxt.drop("_moved"), "state")
-        cuts.release("next")
-        zero_streak = zero_streak + 1 if moved == 0 else 0
-        if stop_when_stable and zero_streak >= 2:
-            break
-    out = state.select("id", "community")
-    cuts.forget("state")
-    sym.unpersist()
-    return out
+            gate = (F.col("id") + F.lit(r)) % 2 == 0
+            nxt = (
+                state.join(best, "id")
+                .select(
+                    "id",
+                    F.when(gate, F.col("best_c")).otherwise(F.col("community")).alias(
+                        "community"
+                    ),
+                    "k",
+                    (F.when(gate, F.col("best_c")).otherwise(F.col("community"))
+                     != F.col("community")).cast("long").alias("_moved"),
+                )
+            )
+            nxt = cuts.cut(nxt, "next")
+            moved = nxt.agg(F.sum("_moved")).collect()[0][0] or 0
+            state = cuts.cut(nxt.drop("_moved"), "state")
+            cuts.release("next")
+            zero_streak = zero_streak + 1 if moved == 0 else 0
+            if stop_when_stable and zero_streak >= 2:
+                break
+        out = state.select("id", "community")
+        cuts.forget("state")
+        sym.unpersist()
+        return out
 
 
 def louvain_levels(

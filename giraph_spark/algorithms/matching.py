@@ -58,63 +58,61 @@ def maximal_matching(
     """
     from giraph_spark.pregel import LineageCuts as _Cuts
 
-    cuts = _Cuts()
-    active = cuts.cut(_canonical(edges), "active")
-    n_active = active.count()
-    matched: DataFrame | None = None
-
-    exhausted = True
-    for rnd in range(max_rounds):
-        if n_active == 0:
-            exhausted = False
-            break
-        ek = F.pmod(F.col("a") * F.lit(_EDGE_MIX) + F.col("b"), F.lit(1 << 31))
-        pr = active.select(
-            "a", "b", F.struct(luby_priority(ek, rnd).alias("p"), "a", "b").alias("s")
-        )
-        inc = pr.select(F.col("a").alias("v"), "s").unionByName(
-            pr.select(F.col("b").alias("v"), "s")
-        )
-        best = inc.groupBy("v").agg(F.min("s").alias("best"))
-        winners = (
-            pr.join(
-                best.select(F.col("v").alias("a"), F.col("best").alias("ba")), "a"
-            )
-            .join(best.select(F.col("v").alias("b"), F.col("best").alias("bb")), "b")
-            .where((F.col("s") == F.col("ba")) & (F.col("s") == F.col("bb")))
-            .select("a", "b")
-        )
-        winners = cuts.cut(winners, "winners")
-        p_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        matched = cuts.cut(
-            winners
-            if matched is None
-            else matched.unionByName(winners).coalesce(p_max),
-            "matched",
-        )
-        mv = winners.select(F.col("a").alias("id")).unionByName(
-            winners.select(F.col("b").alias("id"))
-        )
-        active = cuts.cut(
-            active.join(mv.withColumnRenamed("id", "a"), "a", "left_anti").join(
-                mv.withColumnRenamed("id", "b"), "b", "left_anti"
-            ),
-            "active",
-        )
+    with _Cuts(spark.sparkContext) as cuts:
+        active = cuts.cut(_canonical(edges), "active")
         n_active = active.count()
+        matched: DataFrame | None = None
 
-    if exhausted and n_active > 0:
-        raise RuntimeError(
-            "maximal_matching: round budget exhausted with "
-            f"{n_active} edges still active — result would violate "
-            "maximality; raise max_rounds"
-        )
-    cuts.release("winners")
-    cuts.release("active")
-    cuts.forget("matched")  # backs the returned DataFrame
-    if matched is None:
-        return spark.createDataFrame([], "a long, b long")
-    return matched.select("a", "b")
+        exhausted = True
+        for rnd in range(max_rounds):
+            if n_active == 0:
+                exhausted = False
+                break
+            ek = F.pmod(F.col("a") * F.lit(_EDGE_MIX) + F.col("b"), F.lit(1 << 31))
+            pr = active.select(
+                "a", "b", F.struct(luby_priority(ek, rnd).alias("p"), "a", "b").alias("s")
+            )
+            inc = pr.select(F.col("a").alias("v"), "s").unionByName(
+                pr.select(F.col("b").alias("v"), "s")
+            )
+            best = inc.groupBy("v").agg(F.min("s").alias("best"))
+            winners = (
+                pr.join(
+                    best.select(F.col("v").alias("a"), F.col("best").alias("ba")), "a"
+                )
+                .join(best.select(F.col("v").alias("b"), F.col("best").alias("bb")), "b")
+                .where((F.col("s") == F.col("ba")) & (F.col("s") == F.col("bb")))
+                .select("a", "b")
+            )
+            winners = cuts.cut(winners, "winners")
+            p_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            matched = cuts.cut(
+                winners
+                if matched is None
+                else matched.unionByName(winners).coalesce(p_max),
+                "matched",
+            )
+            mv = winners.select(F.col("a").alias("id")).unionByName(
+                winners.select(F.col("b").alias("id"))
+            )
+            active = cuts.cut(
+                active.join(mv.withColumnRenamed("id", "a"), "a", "left_anti").join(
+                    mv.withColumnRenamed("id", "b"), "b", "left_anti"
+                ),
+                "active",
+            )
+            n_active = active.count()
+
+        if exhausted and n_active > 0:
+            raise RuntimeError(
+                "maximal_matching: round budget exhausted with "
+                f"{n_active} edges still active — result would violate "
+                "maximality; raise max_rounds"
+            )
+        cuts.forget("matched")  # backs the returned DataFrame
+        if matched is None:
+            return spark.createDataFrame([], "a long, b long")
+        return matched.select("a", "b")
 
 
 def matching_sql(edges_cte: str, rounds: int) -> str:

@@ -66,66 +66,64 @@ def maximal_independent_set(
     has a set neighbor."""
     from giraph_spark.pregel import LineageCuts as _Cuts
 
-    cuts = _Cuts()
-    e = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
-    e = e.localCheckpoint(eager=True)
-    undecided = cuts.cut(vertices_from_edges(e), "undecided")
-    n_undecided = undecided.count()
-    in_set: DataFrame | None = None
-
-    exhausted = True
-    for rnd in range(max_rounds):
-        if n_undecided == 0:
-            exhausted = False
-            break
-        prio = undecided.select("id", luby_priority(F.col("id"), rnd).alias("p"))
-        # active edges among undecided vertices, with both priorities
-        ea = (
-            e.join(prio.select(F.col("id").alias("src"), F.col("p").alias("psrc")), "src")
-            .join(prio.select(F.col("id").alias("dst"), F.col("p").alias("pdst")), "dst")
-        )
-        # a vertex loses if some neighbor beats it (smaller priority, id tiebreak)
-        beaten = (
-            ea.where(
-                (F.col("pdst") < F.col("psrc"))
-                | ((F.col("pdst") == F.col("psrc")) & (F.col("dst") < F.col("src")))
-            )
-            .select(F.col("src").alias("id"))
-            .distinct()
-        )
-        # prior winners are already folded into the in_set cut, so the
-        # winners slot is safe to recycle first
-        winners = cuts.cut(undecided.join(beaten, "id", "left_anti"), "winners")
-        part = winners.select("id")
-        # coalesce: narrow union sums partition counts, so the in_set
-        # accumulator would otherwise widen every round
-        p_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        in_set = cuts.cut(
-            part if in_set is None else in_set.union(part).coalesce(p_max), "in_set"
-        )
-        # winners and their neighbors become decided
-        nbrs = (
-            e.join(winners.withColumnRenamed("id", "src"), "src", "left_semi")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        undecided = cuts.cut(
-            undecided.join(winners, "id", "left_anti").join(nbrs, "id", "left_anti"),
-            "undecided",
-        )
+    with _Cuts(spark.sparkContext) as cuts:
+        e = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
+        e = cuts.cut(e, "e")
+        undecided = cuts.cut(vertices_from_edges(e), "undecided")
         n_undecided = undecided.count()
+        # (id, in_set) rows: every vertex once as False, each winner once
+        # more as True — the result reads this cut only
+        in_set: DataFrame | None = None
 
-    if exhausted and n_undecided > 0:
-        raise RuntimeError(
-            "maximal_independent_set: round budget exhausted with "
-            f"{n_undecided} vertices still undecided — result would "
-            "violate maximality; raise max_rounds"
-        )
-    verts = vertices_from_edges(e)
-    assert in_set is not None
-    cuts.release("winners")
-    cuts.release("undecided")
-    cuts.forget("in_set")  # backs the returned DataFrame
-    return verts.join(
-        in_set.withColumn("in_set", F.lit(True)), "id", "left"
-    ).select("id", F.coalesce("in_set", F.lit(False)).alias("in_set"))
+        exhausted = True
+        for rnd in range(max_rounds):
+            if n_undecided == 0:
+                exhausted = False
+                break
+            prio = undecided.select("id", luby_priority(F.col("id"), rnd).alias("p"))
+            # active edges among undecided vertices, with both priorities
+            ea = (
+                e.join(prio.select(F.col("id").alias("src"), F.col("p").alias("psrc")), "src")
+                .join(prio.select(F.col("id").alias("dst"), F.col("p").alias("pdst")), "dst")
+            )
+            # a vertex loses if some neighbor beats it (smaller priority, id tiebreak)
+            beaten = (
+                ea.where(
+                    (F.col("pdst") < F.col("psrc"))
+                    | ((F.col("pdst") == F.col("psrc")) & (F.col("dst") < F.col("src")))
+                )
+                .select(F.col("src").alias("id"))
+                .distinct()
+            )
+            # prior winners are already folded into the in_set cut, so the
+            # winners slot is safe to recycle first
+            winners = cuts.cut(undecided.join(beaten, "id", "left_anti"), "winners")
+            if in_set is None:  # the first round's undecided: every vertex
+                in_set = undecided.select("id", F.lit(False).alias("in_set"))
+            # coalesce: narrow union sums partition counts, so the in_set
+            # accumulator would otherwise widen every round
+            p_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            in_set = cuts.cut(
+                in_set.union(winners.select("id", F.lit(True))).coalesce(p_max), "in_set"
+            )
+            # winners and their neighbors become decided
+            nbrs = (
+                e.join(winners.withColumnRenamed("id", "src"), "src", "left_semi")
+                .select(F.col("dst").alias("id"))
+                .distinct()
+            )
+            undecided = cuts.cut(
+                undecided.join(winners, "id", "left_anti").join(nbrs, "id", "left_anti"),
+                "undecided",
+            )
+            n_undecided = undecided.count()
+
+        if exhausted and n_undecided > 0:
+            raise RuntimeError(
+                "maximal_independent_set: round budget exhausted with "
+                f"{n_undecided} vertices still undecided — result would "
+                "violate maximality; raise max_rounds"
+            )
+        assert in_set is not None
+        cuts.forget("in_set")  # backs the returned DataFrame
+        return in_set.groupBy("id").agg(F.max("in_set").alias("in_set"))

@@ -46,9 +46,8 @@ from pyspark.sql import functions as F
 
 from giraph_spark.graph import normalize_edge_weights
 from giraph_spark.pregel import (
+    LineageCuts,
     PregelRun,
-    _checkpointed_jrdd,
-    _gated_release,
     engine_session,
     rebind,
     run_supersteps,
@@ -284,19 +283,20 @@ def pagerank(
     if tolerance is not None:
         halt = lambda stats, i: stats[convergence] < tolerance  # noqa: E731
 
-    run = run_supersteps(
-        spark,
-        state,
-        step,
-        max_supersteps=max_supersteps,
-        halt=halt,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_interval=checkpoint_interval,
-        resume=resume,
-        verbose=verbose,
-    )
-    if state is not setup_cut:  # the loop did not adopt the set-up cut
-        _gated_release(spark.sparkContext, _checkpointed_jrdd(setup_cut))
+    with LineageCuts(spark.sparkContext) as cuts:
+        if state is not setup_cut:  # the loop will not adopt the set-up cut
+            cuts.adopt(setup_cut, "setup")
+        run = run_supersteps(
+            spark,
+            state,
+            step,
+            max_supersteps=max_supersteps,
+            halt=halt,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_interval=checkpoint_interval,
+            resume=resume,
+            verbose=verbose,
+        )
     e.unpersist()
     return PregelRun(
         vertices=rebind(run.vertices.select("id", "rank"), home),

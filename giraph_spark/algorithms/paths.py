@@ -388,42 +388,41 @@ def pointer_jump(
     """
     from giraph_spark.pregel import LineageCuts as _Cuts
 
-    cuts = _Cuts()
-    state = cuts.cut(
-        links.select("src", "dst").dropDuplicates(["src"]).select(
-            F.col("src").alias("id"),
-            F.col("dst").alias("ptr"),
-            F.lit(1).cast("long").alias("hops"),
-        ),
-        "state",
-    )
-    for _ in range(max_rounds):
-        m = state.select(
-            F.col("id").alias("ptr"),
-            F.col("ptr").alias("m_ptr"),
-            F.col("hops").alias("m_hops"),
-        )
-        nxt = state.join(m, "ptr", "left")
-        changed = nxt.where(F.col("m_ptr").isNotNull())
-        n_changed = changed.count()
-        if n_changed == 0:
-            break
+    with _Cuts(spark.sparkContext) as cuts:
         state = cuts.cut(
-            nxt.select(
-                "id",
-                F.coalesce("m_ptr", "ptr").alias("ptr"),
-                (F.col("hops") + F.coalesce("m_hops", F.lit(0))).alias("hops"),
+            links.select("src", "dst").dropDuplicates(["src"]).select(
+                F.col("src").alias("id"),
+                F.col("dst").alias("ptr"),
+                F.lit(1).cast("long").alias("hops"),
             ),
             "state",
         )
-    else:
-        cuts.release("state")
-        raise RuntimeError(
-            "pointer_jump: round budget exhausted — the input is not an "
-            "acyclic functional graph (redirect cycle?)"
-        )
-    cuts.forget("state")
-    return state.select("id", F.col("ptr").alias("final"), "hops")
+        for _ in range(max_rounds):
+            m = state.select(
+                F.col("id").alias("ptr"),
+                F.col("ptr").alias("m_ptr"),
+                F.col("hops").alias("m_hops"),
+            )
+            nxt = state.join(m, "ptr", "left")
+            changed = nxt.where(F.col("m_ptr").isNotNull())
+            n_changed = changed.count()
+            if n_changed == 0:
+                break
+            state = cuts.cut(
+                nxt.select(
+                    "id",
+                    F.coalesce("m_ptr", "ptr").alias("ptr"),
+                    (F.col("hops") + F.coalesce("m_hops", F.lit(0))).alias("hops"),
+                ),
+                "state",
+            )
+        else:
+            raise RuntimeError(
+                "pointer_jump: round budget exhausted — the input is not an "
+                "acyclic functional graph (redirect cycle?)"
+            )
+        cuts.forget("state")
+        return state.select("id", F.col("ptr").alias("final"), "hops")
 
 
 def pseudo_diameter(

@@ -25,7 +25,8 @@ Result: (id, scc) with scc = the max vertex id inside the component
 Driver-action budget: ONE count per trim iteration / propagation step /
 peel (the count doubles as the halt check and reads the just-cut cache);
 no ``isEmpty`` probes. Superseded localCheckpoint blocks are released
-explicitly (``DataFrame.unpersist`` cannot free them); the settled set
+by the call's ``LineageCuts`` (``DataFrame.unpersist`` cannot free
+them), which frees every cut but the result's on exit; the settled set
 is itself checkpointed per round so earlier cuts never leak into the
 final result's lineage.
 """
@@ -41,15 +42,17 @@ from giraph_spark.pregel import LineageCuts as _Cuts
 
 def _propagate(
     edges: DataFrame, seeds: DataFrame, cuts: _Cuts, slot: str, max_iters: int = 50
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Max-label frontier propagation along ``edges`` from ``seeds``
-    (id, lab); returns the fixpoint (id, lab) over reached vertices.
-    One action per iteration (the frontier count doubles as the halt
-    check); lineage cut every few iterations."""
+    (id, lab); returns the fixpoint (id, lab) over reached vertices and
+    the persisted frame it reads, which the caller unpersists once a cut
+    has consumed the fixpoint. One action per iteration (the frontier
+    count doubles as the halt check); lineage cut every few
+    iterations."""
     neg_inf = -(1 << 62)
     state = seeds
     frontier = seeds
-    prev = None
+    prev = seeds
     for it in range(max_iters):
         msgs = (
             edges.join(frontier.withColumnRenamed("id", "src"), "src")
@@ -72,14 +75,13 @@ def _propagate(
             combined.unpersist()
             combined = cut
         grew = combined.where("_grew").count()
-        if prev is not None:  # the count above consumed prev's cache
-            prev.unpersist()
+        prev.unpersist()  # the count above consumed prev's cache
         prev = combined
         state = combined.select("id", "lab")
         frontier = combined.where("_grew").select("id", "lab")
         if grew == 0:
             break
-    return state
+    return state, prev
 
 
 def strongly_connected_components(
@@ -90,41 +92,84 @@ def strongly_connected_components(
 ) -> DataFrame:
     """(id, scc) over the directed edge table; exact for any digraph
     reachable within ``max_iters`` propagation steps per round."""
-    cuts = _Cuts()
-    p_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    active_edges = cuts.cut(edges.select("src", "dst"), "edges")
-    active = cuts.cut(vertices_from_edges(active_edges), "active")
-    n_active = active.count()
-    settled: DataFrame | None = None
+    with _Cuts(spark.sparkContext) as cuts:
+        p_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        active_edges = cuts.cut(edges.select("src", "dst"), "edges")
+        active = cuts.cut(vertices_from_edges(active_edges), "active")
+        n_active = active.count()
+        settled: DataFrame | None = None
 
-    for _ in range(max_rounds):
-        if n_active == 0:
-            break
+        for _ in range(max_rounds):
+            if n_active == 0:
+                break
 
-        # 1. trim to fixpoint: peel vertices with no in- or out-edges in
-        # the active subgraph (each becomes its own singleton SCC)
-        while n_active > 0:
-            has_out = active_edges.select(F.col("src").alias("id")).distinct()
-            has_in = active_edges.select(F.col("dst").alias("id")).distinct()
-            trivial = active.join(has_out, "id", "left_anti").union(
-                active.join(has_in, "id", "left_anti")
-            ).distinct()
-            part = trivial.select("id", F.col("id").alias("scc"))
-            # cut settled FIRST: it must be materialized while the active
-            # cut that `part` reads is still alive (re-cutting the
-            # "active" slot below releases those blocks)
-            settled = cuts.cut(
-                # coalesce: narrow union sums partition counts; bound the
-                # accumulator's width across trim iterations
-                part if settled is None else settled.union(part).coalesce(p_max),
-                "settled",
+            # 1. trim to fixpoint: peel vertices with no in- or out-edges in
+            # the active subgraph (each becomes its own singleton SCC)
+            while n_active > 0:
+                has_out = active_edges.select(F.col("src").alias("id")).distinct()
+                has_in = active_edges.select(F.col("dst").alias("id")).distinct()
+                trivial = active.join(has_out, "id", "left_anti").union(
+                    active.join(has_in, "id", "left_anti")
+                ).distinct()
+                part = trivial.select("id", F.col("id").alias("scc"))
+                # cut settled FIRST: it must be materialized while the active
+                # cut that `part` reads is still alive (re-cutting the
+                # "active" slot below releases those blocks)
+                settled = cuts.cut(
+                    # coalesce: narrow union sums partition counts; bound the
+                    # accumulator's width across trim iterations
+                    part if settled is None else settled.union(part).coalesce(p_max),
+                    "settled",
+                )
+                new_active = cuts.cut(active.join(trivial, "id", "left_anti"), "active")
+                n_new = new_active.count()
+                n_trimmed = n_active - n_new
+                active = new_active
+                n_active = n_new
+                if n_trimmed == 0 or n_active == 0:
+                    break
+                active_edges = cuts.cut(
+                    active_edges.join(
+                        active.withColumnRenamed("id", "src"), "src", "left_semi"
+                    ).join(active.withColumnRenamed("id", "dst"), "dst", "left_semi"),
+                    "edges",
+                )
+            if n_active == 0:
+                break
+
+            # 2. forward coloring: max id reaching each vertex
+            seeds = active.select("id", F.col("id").alias("lab"))
+            colors, colors_cache = _propagate(
+                active_edges, seeds, cuts, "fwd", max_iters=max_iters
             )
-            new_active = cuts.cut(active.join(trivial, "id", "left_anti"), "active")
-            n_new = new_active.count()
-            n_trimmed = n_active - n_new
-            active = new_active
-            n_active = n_new
-            if n_trimmed == 0 or n_active == 0:
+
+            # 3. backward membership within equal color: reverse edges whose two
+            # endpoints share a color; propagate from roots (id == color)
+            ec = (
+                active_edges.join(colors.select(F.col("id").alias("src"), F.col("lab").alias("csrc")), "src")
+                .join(colors.select(F.col("id").alias("dst"), F.col("lab").alias("cdst")), "dst")
+                .where(F.col("csrc") == F.col("cdst"))
+                .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            )
+            roots = colors.where(F.col("id") == F.col("lab")).select("id", "lab")
+            members, members_cache = _propagate(ec, roots, cuts, "bwd", max_iters=max_iters)
+            scc = (
+                members.join(colors.withColumnRenamed("lab", "color"), "id")
+                .where(F.col("lab") == F.col("color"))
+                .select("id", F.col("color").alias("scc"))
+            )
+            settled = scc if settled is None else settled.union(scc).coalesce(p_max)
+            settled = cuts.cut(settled, "settled")
+            colors_cache.unpersist()
+            members_cache.unpersist()
+
+            # 4. peel — ONE count on the fresh cut is both the round's halt
+            # check and next round's emptiness test
+            active = cuts.cut(
+                active.join(settled.select("id"), "id", "left_anti"), "active"
+            )
+            n_active = active.count()
+            if n_active == 0:
                 break
             active_edges = cuts.cut(
                 active_edges.join(
@@ -132,51 +177,12 @@ def strongly_connected_components(
                 ).join(active.withColumnRenamed("id", "dst"), "dst", "left_semi"),
                 "edges",
             )
-        if n_active == 0:
-            break
 
-        # 2. forward coloring: max id reaching each vertex
-        seeds = active.select("id", F.col("id").alias("lab"))
-        colors = _propagate(active_edges, seeds, cuts, "fwd", max_iters=max_iters)
-
-        # 3. backward membership within equal color: reverse edges whose two
-        # endpoints share a color; propagate from roots (id == color)
-        ec = (
-            active_edges.join(colors.select(F.col("id").alias("src"), F.col("lab").alias("csrc")), "src")
-            .join(colors.select(F.col("id").alias("dst"), F.col("lab").alias("cdst")), "dst")
-            .where(F.col("csrc") == F.col("cdst"))
-            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        roots = colors.where(F.col("id") == F.col("lab")).select("id", "lab")
-        members = _propagate(ec, roots, cuts, "bwd", max_iters=max_iters)
-        scc = (
-            members.join(colors.withColumnRenamed("lab", "color"), "id")
-            .where(F.col("lab") == F.col("color"))
-            .select("id", F.col("color").alias("scc"))
-        )
-        settled = scc if settled is None else settled.union(scc).coalesce(p_max)
-        settled = cuts.cut(settled, "settled")
-
-        # 4. peel — ONE count on the fresh cut is both the round's halt
-        # check and next round's emptiness test
-        active = cuts.cut(
-            active.join(settled.select("id"), "id", "left_anti"), "active"
-        )
-        n_active = active.count()
-        if n_active == 0:
-            break
-        active_edges = cuts.cut(
-            active_edges.join(
-                active.withColumnRenamed("id", "src"), "src", "left_semi"
-            ).join(active.withColumnRenamed("id", "dst"), "dst", "left_semi"),
-            "edges",
-        )
-
-    if n_active > 0:
-        raise RuntimeError(
-            f"strongly_connected_components: round budget exhausted with "
-            f"{n_active} vertices unsettled — raise max_rounds/max_iters"
-        )
-    assert settled is not None
-    cuts.forget("settled")  # the result — its blocks must outlive this call
-    return settled
+        if n_active > 0:
+            raise RuntimeError(
+                f"strongly_connected_components: round budget exhausted with "
+                f"{n_active} vertices unsettled — raise max_rounds/max_iters"
+            )
+        assert settled is not None
+        cuts.forget("settled")  # the result — its blocks must outlive this call
+        return settled

@@ -203,80 +203,79 @@ def connected_components_star(
 
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cuts = _Cuts()
+    with _Cuts(spark.sparkContext) as cuts:
 
-    verts = vertices_from_edges(edges).persist()
+        verts = vertices_from_edges(edges).persist()
 
-    # undirected pair set, self-loops dropped
-    pairs = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(num_partitions, "src")
-    )
-    pairs = cuts.cut(pairs.select(F.col("src").alias("u"), F.col("dst").alias("v")), "pairs")
-
-    def large_star(e: DataFrame) -> DataFrame:
-        nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # m(u) = min(neighborhood ∪ {u}) as ONE map-side-combinable agg
-        m = nbrs.groupBy("u").agg(F.min(F.least("v", "u")).alias("m"))
-        return (
-            nbrs.where(F.col("v") > F.col("u"))
-            .join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
+        # undirected pair set, self-loops dropped
+        pairs = (
+            edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
             .distinct()
+            .repartition(num_partitions, "src")
         )
+        pairs = cuts.cut(pairs.select(F.col("src").alias("u"), F.col("dst").alias("v")), "pairs")
 
-    def small_star(e: DataFrame) -> DataFrame:
-        o = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = o.groupBy("u").agg(F.min("v").alias("m"))
-        out = o.join(m, "u").select(F.col("v").alias("u"), "m").union(
-            m.select("u", "m")
-        )
-        return (
-            out.select("u", F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
+        def large_star(e: DataFrame) -> DataFrame:
+            nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            # m(u) = min(neighborhood ∪ {u}) as ONE map-side-combinable agg
+            m = nbrs.groupBy("u").agg(F.min(F.least("v", "u")).alias("m"))
+            return (
+                nbrs.where(F.col("v") > F.col("u"))
+                .join(m, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .where(F.col("u") != F.col("v"))
+                .distinct()
+            )
 
-    history: list[dict[str, Any]] = []
-    prev_sig: tuple[int, int] | None = None
-    converged = False
-    rounds = 0
-    for rounds in range(1, max_rounds + 1):
-        pairs = cuts.cut(small_star(large_star(pairs)), "pairs")
-        # set signature: count + xor of row hashes (xor: order-independent
-        # and cannot overflow under ANSI mode, unlike a long sum)
-        row = pairs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        sig = (int(row["n"]), int(row["h"]))
-        history.append({"round": rounds, "pairs": sig[0]})
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint in {max_rounds} rounds"
-        )
+        def small_star(e: DataFrame) -> DataFrame:
+            o = e.select(
+                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            )
+            m = o.groupBy("u").agg(F.min("v").alias("m"))
+            out = o.join(m, "u").select(F.col("v").alias("u"), "m").union(
+                m.select("u", "m")
+            )
+            return (
+                out.select("u", F.col("m").alias("v"))
+                .where(F.col("u") != F.col("v"))
+                .distinct()
+            )
 
-    # fixpoint edge set is a star forest (child -> component min)
-    labels = (
-        verts.join(
-            pairs.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("_root")),
-            "id",
-            "left",
+        history: list[dict[str, Any]] = []
+        prev_sig: tuple[int, int] | None = None
+        converged = False
+        rounds = 0
+        for rounds in range(1, max_rounds + 1):
+            pairs = cuts.cut(small_star(large_star(pairs)), "pairs")
+            # set signature: count + xor of row hashes (xor: order-independent
+            # and cannot overflow under ANSI mode, unlike a long sum)
+            row = pairs.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+            ).collect()[0]
+            sig = (int(row["n"]), int(row["h"]))
+            history.append({"round": rounds, "pairs": sig[0]})
+            if sig == prev_sig:
+                converged = True
+                break
+            prev_sig = sig
+        if not converged:
+            raise RuntimeError(
+                f"connected_components_star: no fixpoint in {max_rounds} rounds"
+            )
+
+        # fixpoint edge set is a star forest (child -> component min)
+        labels = (
+            verts.join(
+                pairs.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("_root")),
+                "id",
+                "left",
+            )
+            .select("id", F.coalesce("_root", F.col("id")).alias("component"))
         )
-        .select("id", F.coalesce("_root", F.col("id")).alias("component"))
-    )
-    labels = labels.localCheckpoint(eager=True)  # outlives the cuts below
-    cuts.release("pairs")
-    verts.unpersist()
-    return PregelRun(
-        vertices=labels, supersteps=rounds, converged=True, history=history
-    )
+        labels = labels.localCheckpoint(eager=True)  # outlives the cuts freed on exit
+        verts.unpersist()
+        return PregelRun(
+            vertices=labels, supersteps=rounds, converged=True, history=history
+        )

@@ -38,9 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.pregel import (
+    LineageCuts,
     PregelRun,
-    _checkpointed_jrdd,
-    _gated_release,
     engine_session,
     rebind,
     run_supersteps,
@@ -195,48 +194,53 @@ def run_mutable_supersteps(
     """
     home = vertices.sparkSession
     spark, vertices, edges = engine_session(vertices, edges)
-    sc = spark.sparkContext
-    box: dict[str, Any] = {"edges": edges.persist(), "cut": None, "stale": None}
+    # box["slot"] names the live edge cut (made at that superstep);
+    # box["stale"] the one it superseded
+    box: dict[str, Any] = {"edges": edges.persist(), "slot": None, "stale": None}
+    with LineageCuts(spark.sparkContext) as cuts:
 
-    def vertex_step(v: DataFrame, superstep: int):
-        # the superseded edge cut: the loop has cut the vertex state that
-        # was built on it, so nothing reads it any more
-        _gated_release(sc, box["stale"])
-        box["stale"] = None
-        e = box["edges"]
-        new_v, stats, changes, msg_targets = step(v, e, superstep)
-        if changes is not None and not changes.empty():
-            new_v, new_e = resolve_mutations(
-                new_v,
-                e,
-                changes,
-                message_targets=msg_targets,
-                default_value=default_value,
-                create_on_message=create_on_message,
-                recreate_removed_on_message=recreate_removed_on_message,
-            )
-            new_e = new_e.localCheckpoint(eager=True)
-            e.unpersist()
-            # new_v's lazy plan still reads the old edge cut: free it only
-            # once the loop has cut new_v (next step, or after the loop)
-            box["stale"], box["cut"] = box["cut"], _checkpointed_jrdd(new_e)
-            box["edges"] = new_e
-        elif create_on_message and msg_targets is not None:
-            new_v, _ = resolve_mutations(
-                new_v,
-                e,
-                GraphChanges(),
-                message_targets=msg_targets,
-                default_value=default_value,
-                recreate_removed_on_message=recreate_removed_on_message,
-            )
-        return new_v, stats
+        def vertex_step(v: DataFrame, superstep: int):
+            # the superseded edge cut: the loop has cut the vertex state
+            # that was built on it, so nothing reads it any more
+            if box["stale"] is not None:
+                cuts.release(box["stale"])
+                box["stale"] = None
+            e = box["edges"]
+            new_v, stats, changes, msg_targets = step(v, e, superstep)
+            if changes is not None and not changes.empty():
+                new_v, new_e = resolve_mutations(
+                    new_v,
+                    e,
+                    changes,
+                    message_targets=msg_targets,
+                    default_value=default_value,
+                    create_on_message=create_on_message,
+                    recreate_removed_on_message=recreate_removed_on_message,
+                )
+                slot = f"edges{superstep}"
+                new_e = cuts.cut(new_e, slot)
+                e.unpersist()
+                # new_v's lazy plan still reads the old edge cut: free it
+                # only once the loop has cut new_v (next step, or on exit)
+                box["stale"], box["slot"] = box["slot"], slot
+                box["edges"] = new_e
+            elif create_on_message and msg_targets is not None:
+                new_v, _ = resolve_mutations(
+                    new_v,
+                    e,
+                    GraphChanges(),
+                    message_targets=msg_targets,
+                    default_value=default_value,
+                    recreate_removed_on_message=recreate_removed_on_message,
+                )
+            return new_v, stats
 
-    run = run_supersteps(
-        spark, vertices, vertex_step, max_supersteps=max_supersteps, halt=halt,
-        verbose=verbose,
-    )
-    _gated_release(sc, box["stale"])
+        run = run_supersteps(
+            spark, vertices, vertex_step, max_supersteps=max_supersteps, halt=halt,
+            verbose=verbose,
+        )
+        if box["slot"] is not None:
+            cuts.forget(box["slot"])  # backs run.edges
     run.vertices = rebind(run.vertices, home)
     run.edges = rebind(box["edges"], home)  # type: ignore[attr-defined]
     return run

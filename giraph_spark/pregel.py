@@ -35,11 +35,12 @@ from __future__ import annotations
 
 import logging
 import time
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark import RDD
+from pyspark import RDD, SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -273,111 +274,27 @@ def partition_width(df: DataFrame) -> int:
         return 0
 
 
-# --- job-completion-gated checkpoint-block release -----------------------
-#
-# Releasing a localCheckpoint block that a still-running task reads aborts
-# that task unrecoverably (the lineage is truncated by construction). The
-# engine's driver loops release in program order AFTER awaiting each
-# action, which is safe — except for (a) orphaned stages: an AQE replan
-# can let an action return while an already-submitted stage of a pruned
-# subtree is still running (the r4 trussness race), and (b) any caller
-# that overlaps actions from a second thread. Instead of unpersisting
-# immediately, every release below is GATED: the blocks are freed only
-# once no job/stage that was live at release-request time is still
-# active. In the single-threaded loops the active sets are empty at
-# request time and the free happens inline (no behavior change, ~1 py4j
-# call); under overlap the free is deferred and drained on subsequent
-# release/cut calls. The reference trusts its BSP barrier for the same
-# guarantee (worker/BspServiceWorker.finishSuperstep() waits for all
-# workers before checkpoint cleanup).
-
-_PENDING_RELEASES: list[tuple[Any, frozenset, object]] = []
-_RELEASES_LOCK = __import__("threading").Lock()
-
-
-def _live_work_ids(sc) -> frozenset:
-    """Ids of currently-active jobs AND stages (tagged to keep the two id
-    spaces distinct). Stages matter independently: an orphaned stage can
-    outlive its job's action returning (AQE empty-relation replan)."""
-    try:
-        t = sc.statusTracker()
-        return frozenset(
-            [("j", j) for j in t.getActiveJobsIds()]
-            + [("s", s) for s in t.getActiveStageIds()]
-        )
-    except Exception:  # noqa: BLE001
-        return frozenset()
-
-
-def drain_releases() -> int:
-    """Free every pending handle whose watched jobs/stages have all
-    finished; return how many remain pending. Runs under the pool lock
-    from start to finish, so a release requested from another thread
-    (a streaming foreachBatch, a second engine call) waits for the drain
-    and the returned count is exact."""
-    with _RELEASES_LOCK:
-        live: dict[int, frozenset] = {}
-        still = []
-        for sc, watched, handle in _PENDING_RELEASES:
-            if id(sc) not in live:
-                live[id(sc)] = _live_work_ids(sc)
-            if watched & live[id(sc)]:
-                still.append((sc, watched, handle))
-            else:
-                try:
-                    handle.unpersist(False)  # type: ignore[attr-defined]
-                except Exception:  # noqa: BLE001
-                    pass
-        _PENDING_RELEASES[:] = still
-        return len(still)
-
-
-def _gated_release(sc, handle) -> None:
-    """Release ``handle``'s checkpoint blocks as soon as nothing that was
-    running at request time can still read them."""
-    drain_releases()
-    if handle is None:
-        return
-    watched = _live_work_ids(sc)
-    if not watched:
-        try:
-            handle.unpersist(False)  # type: ignore[attr-defined]
-        except Exception:  # noqa: BLE001
-            pass
-    else:
-        with _RELEASES_LOCK:
-            _PENDING_RELEASES.append((sc, watched, handle))
-
-
-def flush_releases(timeout: float = 30.0) -> int:
-    """Wait (bounded) for every pending release's watched work to finish
-    and free those blocks. Entries whose watched jobs/stages are STILL
-    live after the timeout stay pending — never free under a possible
-    reader (the pool is process-global, so with concurrent queries a
-    force-free here could yank another thread's deferred handle
-    mid-read); they drain on any later gated call or die with the
-    session. Returns how many remain pending."""
-    deadline = time.time() + timeout
-    while True:
-        left = drain_releases()
-        if left == 0 or time.time() >= deadline:
-            return left
-        time.sleep(0.05)
-
-
-def _checkpointed_jrdd(df: DataFrame):
+def _checkpointed_jrdd(df: DataFrame, unary: bool = False):
     """Best-effort handle to the java RDD backing a localCheckpoint'ed
-    DataFrame (LogicalRDD.rdd), for explicit release — there is no public
-    unpersist for checkpoint blocks. Returns None if the internals don't
-    match (then the block lives until session end, the pre-existing
-    behavior)."""
+    DataFrame (LogicalRDD.rdd, or a ``bare_checkpoint`` frame's cut), for
+    explicit release — there is no public unpersist for checkpoint
+    blocks. ``unary=True`` also finds the cut under a chain of one-child
+    nodes (a projection of a loop's result). Returns None if the
+    internals don't match (then the block lives until session end)."""
+    # vars(): a missing DataFrame attribute would be looked up as a column
+    handle = vars(df).get("_bare_checkpoint_handle")
+    if handle is not None:
+        return handle
     try:
-        return df._jdf.queryExecution().analyzed().rdd()  # noqa: SLF001
+        plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+        while unary and plan.children().size() == 1:
+            plan = plan.children().head()
+        return plan.rdd()
     except Exception:  # noqa: BLE001
         return None
 
 
-def bare_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
+def bare_checkpoint(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint returning a BARE ``LogicalRDD`` wrap of the
     checkpointed data — stripped of the origin-stats/constraints
     references ``Dataset.checkpoint`` bakes into its leaf.
@@ -403,64 +320,102 @@ def bare_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
     re-shuffled anyway; keep plain ``LineageCuts`` where cut-to-cut
     co-partitioning matters (the pregel superstep state).
 
-    Returns ``(bare_df, release)``; ``release()`` frees the checkpoint
-    blocks once nothing downstream reads them.
+    The cut's blocks are freed by the ``LineageCuts`` that adopts the
+    returned frame (``cuts.adopt(bare_checkpoint(df), slot)``).
     """
     spark = df.sparkSession
     c = df.localCheckpoint(eager=True)
-    handle = _checkpointed_jrdd(c)
     jdf = spark._jsparkSession.internalCreateDataFrame(  # noqa: SLF001
         c._jdf.queryExecution().toRdd(), c._jdf.schema(), False  # noqa: SLF001
     )
     bare = DataFrame(jdf, spark)
-
-    sc = spark.sparkContext
-
-    def release() -> None:
-        _gated_release(sc, handle)
-
-    # expose the checkpointed java-RDD handle for tests/diagnostics that
-    # need the concrete rdd id (e.g. asserting release() freed exactly
-    # these blocks without assuming the session-wide store is empty)
-    bare._bare_checkpoint_handle = handle  # type: ignore[attr-defined]
-    return bare, release
+    # the bare leaf's RDD is derived from the cut's, which holds the
+    # blocks: keep the cut's handle for the owner that frees it
+    bare._bare_checkpoint_handle = _checkpointed_jrdd(c)  # type: ignore[attr-defined]
+    return bare
 
 
 class LineageCuts:
-    """Per-slot localCheckpoint bookkeeping with explicit block release.
+    """The one owner of a loop's localCheckpoint blocks, and the only code
+    that frees them (``DataFrame.unpersist`` cannot: checkpoint RDD blocks
+    are only reachable through the java handle).
 
-    The engine-level mechanism behind every iterative driver loop
-    (scc/mis/wcc-star): ``cut(df, slot)`` eagerly checkpoints ``df`` and
-    frees the slot's previous blocks (``DataFrame.unpersist`` cannot --
-    checkpoint RDD blocks are only reachable via the java handle).
+    A scope: ``with LineageCuts(sc) as cuts:`` adds one job tag to the
+    calling thread, so every job the loop issues carries it. ``cut(df,
+    slot)`` eagerly checkpoints ``df``; ``adopt(df, slot)`` takes over an
+    already-materialized cut (``df``, or the cut a projection ``df``
+    reads, such as a loop's result). Either frees the slot's previous
+    cut once the new one is materialized. ``release(slot)`` frees a
+    slot, ``forget(slot)`` hands its blocks to the caller (a result). On
+    exit, also when the loop raises, the tag is removed and every slot
+    not forgotten is freed. An owner that is not entered (a stream's
+    cross-batch state) tags no job, so its frees do not wait.
+
+    A free waits until no ACTIVE job carries the owner's tag, then
+    unpersists. The owner has awaited its own actions, so the only
+    tagged job that can still run is an orphaned query-stage job of an
+    AQE re-plan (the r4 trussness race: a stage of a pruned subtree keeps
+    reading the blocks after the action returned). Jobs of other threads
+    never delay a free — the reference gets the same guarantee from its
+    barrier: ``BspServiceWorker.finishSuperstep()`` frees checkpoint state
+    once the workers that read it are done.
+
+    Hand-back contract: a frame derived from a cut is readable until the
+    owner frees that cut. A reader on another thread hands the frame back
+    (says it is done) before the owner frees it; nothing guards a free
+    against a reader the owner was not told about. Engine calls never
+    share a cut: each call's cuts are private to its session.
     """
 
-    def __init__(self) -> None:
-        # slot -> (SparkContext, java-RDD handle): the sc is captured at
-        # cut time so release() can gate on live work even when called
-        # from a thread where SparkSession.getActiveSession() is None
-        # (fresh py4j threads don't inherit the active-session local)
-        self._handles: dict[str, tuple[Any, object]] = {}
+    def __init__(self, sc: SparkContext) -> None:
+        self._sc = sc
+        self.tag = f"giraph-cuts-{uuid.uuid4().hex}"
+        self._tracker = sc._jsc.sc().statusTracker()  # noqa: SLF001
+        self._arrays = sc._jvm.java.util.Arrays  # noqa: SLF001
+        self._handles: dict[str, Any] = {}
+
+    def __enter__(self) -> LineageCuts:
+        self._sc.addJobTag(self.tag)
+        return self
+
+    def __exit__(self, *exc: object) -> None:
+        self._sc.removeJobTag(self.tag)
+        for slot in list(self._handles):
+            self.release(slot)
+
+    def adopt(self, df: DataFrame, slot: str) -> DataFrame:
+        prev = self._handles.get(slot)
+        self._handles[slot] = _checkpointed_jrdd(df, unary=True)
+        self._free(prev)
+        return df
 
     def cut(self, df: DataFrame, slot: str) -> DataFrame:
-        out = df.localCheckpoint(eager=True)
-        sc = df.sparkSession.sparkContext
-        prev = self._handles.get(slot)
-        if prev is not None:
-            _gated_release(*prev)
-        self._handles[slot] = (sc, _checkpointed_jrdd(out))
-        return out
+        return self.adopt(df.localCheckpoint(eager=True), slot)
 
     def forget(self, slot: str) -> None:
-        """Stop tracking (the cut's blocks outlive this run — e.g. the
-        result) without releasing them."""
         self._handles.pop(slot, None)
 
     def release(self, slot: str) -> None:
-        """Free a slot's blocks once no live job/stage can read them."""
-        prev = self._handles.pop(slot, None)
-        if prev is not None:
-            _gated_release(*prev)
+        self._free(self._handles.pop(slot, None))
+
+    def _ids(self, jarr) -> set[int]:
+        # one py4j call for the whole array, not one per element
+        text = self._arrays.toString(jarr)[1:-1]
+        return {int(i) for i in text.split(",") if i.strip()}
+
+    def _tagged_job_active(self) -> bool:
+        active = self._ids(self._tracker.getActiveJobIds())
+        return bool(active) and bool(active & self._ids(self._tracker.getJobIdsForTag(self.tag)))
+
+    def _free(self, handle: Any) -> None:
+        if handle is None:
+            return
+        try:
+            while self._tagged_job_active():
+                time.sleep(0.01)
+            handle.unpersist(False)
+        except Exception:  # noqa: BLE001 — a stopped context dropped the blocks
+            pass
 
 
 @dataclass
@@ -540,12 +495,14 @@ def run_supersteps(
     from its physical plan (no job), or the first cut's when the plan
     does not know it (a file scan).
 
-    Lineage-cut invalidation: each cut explicitly releases the PREVIOUS
-    cut's localCheckpoint blocks, so a ``step``/``halt`` closure must not
-    retain and later re-execute a DataFrame derived from an earlier
-    superstep — it would fail with "checkpoint block not found". Derive
-    everything you need within the superstep (or from ``PregelRun.
-    vertices`` after the loop).
+    Lineage-cut invalidation: the loop's cuts have one owner, a
+    ``LineageCuts`` scope around the loop. Each superstep frees the
+    PREVIOUS cut once the new one is materialized, and the loop's exit
+    (also on an exception) frees every cut but the result's. So a
+    ``step``/``halt`` closure must not retain and later re-execute a
+    DataFrame derived from an earlier superstep — it would fail with
+    "checkpoint block not found". Derive everything you need within the
+    superstep (or from ``PregelRun.vertices`` after the loop).
 
     Fault tolerance at cluster scale: ``localCheckpoint`` blocks are
     executor-local and NOT fault-tolerant — one lost executor aborts the
@@ -568,7 +525,9 @@ def run_supersteps(
     into the session the input came from. ``step`` and the hooks receive
     frames of the private session: a frame derived from one keeps it, and
     a temp view made from one resolves through ``df.sparkSession.sql``,
-    not through the caller's session.
+    not through the caller's session. The loop's jobs carry its owner's
+    job tag, and a free waits only for those: jobs that other threads run
+    at the same time never delay it, and never read this loop's cuts.
 
     ``verbose=True`` logs each superstep's stats at INFO on the
     ``giraph_spark`` logger (DEBUG otherwise).
@@ -580,27 +539,29 @@ def run_supersteps(
         if checkpoint_dir
         else None
     )
-    sc = spark.sparkContext
     level = logging.INFO if verbose else logging.DEBUG
     superstep = 0
     history: list[dict[str, Any]] = []
     converged = False
-    # a materialized input cut is adopted: the loop owns its blocks
-    jrdd = _checkpointed_jrdd(vertices)
-    cut_jrdd = jrdd if jrdd is not None and jrdd.isCheckpointed() else None
-    if resume and ckpt is not None:
-        found = ckpt.latest()
-        if found is not None:
-            superstep, vertices, _m = found
-            # the snapshot replaces the input: nothing reads its cut
-            _gated_release(sc, cut_jrdd)
-            cut_jrdd = None
-            _log.log(level, "resuming from checkpoint superstep=%d", superstep)
-    last_saved = superstep if (resume and ckpt is not None) else None
-    current = vertices if cut_jrdd is not None else vertices.persist()
-    # 0 (a file scan's plan) falls back to the first cut's width
-    start_partitions = partition_width(current)
-    try:
+    # slot str(i) holds the cut superstep i reads
+    with LineageCuts(spark.sparkContext) as cuts:
+        # a materialized input cut is adopted: the loop owns its blocks
+        jrdd = _checkpointed_jrdd(vertices)
+        adopted = jrdd is not None and jrdd.isCheckpointed()
+        if adopted:
+            cuts.adopt(vertices, "0")
+        if resume and ckpt is not None:
+            found = ckpt.latest()
+            if found is not None:
+                superstep, vertices, _m = found
+                # the snapshot replaces the input: nothing reads its cut
+                cuts.release("0")
+                adopted = False
+                _log.log(level, "resuming from checkpoint superstep=%d", superstep)
+        last_saved = superstep if (resume and ckpt is not None) else None
+        current = vertices if adopted else vertices.persist()
+        # 0 (a file scan's plan) falls back to the first cut's width
+        start_partitions = partition_width(current)
         if hooks is not None and hooks.pre_application is not None:
             hooks.pre_application(current)
         while superstep < max_supersteps:
@@ -608,16 +569,21 @@ def run_supersteps(
             if hooks is not None and hooks.pre_superstep is not None:
                 hooks.pre_superstep(current, superstep)
             new_vertices, stats = step(current, superstep)
-            # adopt or cut: a returned input is never adopted (its
-            # handle is the live cut, freed below)
+            # adopt or cut: a returned input is never adopted (it is the
+            # live cut, freed below)
+            slot = str(superstep + 1)
             jrdd = None if new_vertices is current else _checkpointed_jrdd(new_vertices)
-            if jrdd is None or not jrdd.isCheckpointed():
-                cut = new_vertices.localCheckpoint(eager=True)
+            if jrdd is not None and jrdd.isCheckpointed():
+                cuts.adopt(new_vertices, slot)
+            else:
+                if jrdd is not None:
+                    # a lazy cut the step never scanned: the cut below
+                    # fills it, and then nothing reads it
+                    cuts.adopt(new_vertices, "unscanned")
+                cut = cuts.cut(new_vertices, slot)
                 new_vertices.unpersist()
-                # a lazy cut the step never scanned was filled by this
-                # job; the new cut no longer reads it
-                _gated_release(sc, jrdd)
-                new_vertices, jrdd = cut, _checkpointed_jrdd(cut)
+                cuts.release("unscanned")
+                new_vertices = cut
             if not stats:
                 stats = {"rows": new_vertices.count()}
             stats = dict(stats)
@@ -628,14 +594,13 @@ def run_supersteps(
             history.append(stats)
             _log.log(level, "superstep=%d %s", superstep, stats)
 
-            superstep += 1
-            current.unpersist()
-            current = new_vertices
             # the previous cut's blocks: localCheckpoint blocks are not
             # freed by DataFrame.unpersist, so a long run would
             # otherwise hold every superstep's state
-            _gated_release(sc, cut_jrdd)
-            cut_jrdd = jrdd
+            cuts.release(str(superstep))
+            superstep += 1
+            current.unpersist()
+            current = new_vertices
             # defensive width bound: a step that unions frames (narrow
             # union sums partition counts) would otherwise compound the
             # width superstep over superstep until the cut materializes
@@ -661,11 +626,7 @@ def run_supersteps(
             ckpt.save(current, superstep, history[-1])
         if hooks is not None and hooks.post_application is not None:
             hooks.post_application(current)
-    finally:
-        # opportunistic, non-forcing: free any release whose watched
-        # work has finished (the loop's own releases are usually
-        # freed inline; this catches ones deferred past a straggler)
-        drain_releases()
+        cuts.forget(str(superstep))  # the result's cut
     return PregelRun(
         vertices=rebind(current, home), supersteps=superstep, converged=converged,
         history=history,

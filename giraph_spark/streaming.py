@@ -260,7 +260,10 @@ def incremental_pagerank(
     from giraph_spark.pregel import LineageCuts
 
     state: dict[str, object] = {"edges": None, "ranks": None}
-    cuts = LineageCuts()  # releases each batch's superseded snapshot blocks
+    # releases each batch's superseded snapshot blocks. Not entered as a
+    # scope: the snapshots outlive this call, and a batch frees the old
+    # snapshot only after its own actions on the new one have returned
+    cuts = LineageCuts(spark.sparkContext)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         new_e = batch.select("src", "dst")

@@ -322,7 +322,7 @@ def test_loop_adopts_materialized_input_cut(spark):
     """An input that is a materialized cut is adopted as superstep 0's
     cut: superstep 0 costs one job (no persist fill, no re-cut), and the
     loop frees the input's blocks like any other cut."""
-    from giraph_spark.pregel import _checkpointed_jrdd, flush_releases
+    from giraph_spark.pregel import _checkpointed_jrdd
 
     v0 = spark.createDataFrame([(i, float(i)) for i in range(50)], "id long, x double")
     v0 = v0.localCheckpoint(eager=False)
@@ -337,7 +337,6 @@ def test_loop_adopts_materialized_input_cut(spark):
         return nv, {"sum": nv.agg(F.sum("x")).collect()[0][0]}
 
     run, jobs = _jobs_per_superstep(spark, step, 3, "adopt-input", v0=v0)
-    flush_releases()
     assert jobs == [1, 1, 1]
     assert [h["sum"] for h in run.history] == [1275.0, 1325.0, 1375.0]
     assert input_id not in _persistent_rdd_ids(spark.sparkContext)
@@ -502,121 +501,220 @@ def test_engine_call_session_boundary(spark):
 def test_pagerank_resume_frees_setup_cut(spark, tmp_path):
     """A resume=True PageRank replaces its set-up cut with the snapshot and
     frees it: the only checkpoint left registered is the result's."""
-    from giraph_spark.pregel import flush_releases
-
     sc = spark.sparkContext
     edges = _edges_df(spark, _random_digraph(13, 40, 160))
     ckpt = str(tmp_path / "ck")
     pagerank(spark, edges, max_supersteps=3, checkpoint_dir=ckpt, checkpoint_interval=3)
-    flush_releases()
     before = _persistent_rdd_ids(sc)
     run = pagerank(
         spark, edges, max_supersteps=4, checkpoint_dir=ckpt, checkpoint_interval=3,
         resume=True,
     )
-    flush_releases()
     assert run.supersteps == 4 and len(run.history) == 1
     assert len(_persistent_rdd_ids(sc) - before) == 1  # the result's cut
 
 
+def _alg(module: str):
+    import importlib
+
+    return importlib.import_module(f"giraph_spark.algorithms.{module}")
+
+
+# hand-rolled loop -> (call(spark, edges) -> result frame, blocks the result
+# owns: its own cut, or none for a curve built from driver-side rows)
+_HAND_ROLLED_LOOPS = {
+    "scc": (lambda s, e: _alg("scc").strongly_connected_components(s, e), 1),
+    "bowtie": (lambda s, e: _alg("bowtie").bowtie_decomposition(s, e), 1),
+    "mis": (lambda s, e: _alg("mis").maximal_independent_set(s, e), 1),
+    "matching": (lambda s, e: _alg("matching").maximal_matching(s, e), 1),
+    "betweenness": (
+        lambda s, e: _alg("betweenness").betweenness_centrality(s, e, seeds=[0, 1, 2]), 1
+    ),
+    "anf_exact": (lambda s, e: _alg("anf").anf_exact(s, e, max_t=4), 0),
+    "anf_hll": (lambda s, e: _alg("anf").anf_hll(s, e, max_t=4), 0),
+    "k_core": (lambda s, e: _alg("kcore").k_core(s, e, k=3), 1),
+    "k_truss": (lambda s, e: _alg("kcore").k_truss(s, e, k=3), 1),
+    "coreness": (lambda s, e: _alg("kcore").coreness(s, e), 1),
+    "louvain_move_phase": (lambda s, e: _alg("louvain").louvain_move_phase(s, e), 1),
+    "wcc_star": (lambda s, e: _alg("wcc").connected_components_star(s, e).vertices, 1),
+    "pointer_jump": (
+        lambda s, e: _alg("paths").pointer_jump(
+            s, s.createDataFrame([(i, i // 2) for i in range(1, 60)], "src long, dst long")
+        ),
+        1,
+    ),
+    "deadlock": (lambda s, e: _alg("deadlock").bracha_toueg_free(s, e, 0).vertices, 1),
+    "trussness": (lambda s, e: _alg("kcore").trussness(s, e), 1),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_HAND_ROLLED_LOOPS))
+def test_hand_rolled_loop_frees_its_cuts(spark, name):
+    """A hand-rolled loop on the 60-vertex graph leaves registered only the
+    blocks its result reads, with nothing flushed after the call, and the
+    result stays readable."""
+    call, own = _HAND_ROLLED_LOOPS[name]
+    sc = spark.sparkContext
+    edges = _edges_df(spark, _random_digraph(11, 60, 240))
+    before = _persistent_rdd_ids(sc)
+    result = call(spark, edges)
+    grown = _persistent_rdd_ids(sc) - before
+    assert len(grown) <= own, (name, sorted(grown))
+    assert result.count() > 0
+
+
 def test_bare_checkpoint_values_schema_release(spark):
     """bare_checkpoint: same rows/schema as the input, a true leaf plan
-    (no origin references — the iterated-planning fix), and release()
-    frees the checkpoint blocks."""
-    from pyspark.sql import functions as F
+    (no origin references — the iterated-planning fix), and the owner
+    that adopts it frees the checkpoint blocks."""
+    from giraph_spark.pregel import LineageCuts, bare_checkpoint
 
-    from giraph_spark.pregel import bare_checkpoint
-
+    sc = spark.sparkContext
     df = spark.createDataFrame(
         [(i, float(i) / 3, f"s{i}") for i in range(100)],
         "id long, x double, s string",
     )
-    bare, release = bare_checkpoint(df.repartition(4, "id"))
-    assert bare.schema == df.schema
-    assert sorted(map(tuple, bare.collect())) == sorted(map(tuple, df.collect()))
-    # leaf plan: analyzed tree is a single LogicalRDD node
-    analyzed = bare._jdf.queryExecution().analyzed().toString()
-    assert analyzed.strip().startswith("LogicalRDD")
-    assert "\n " not in analyzed.strip()  # no children
-    # chaining through joins keeps the next leaf constant-size too
-    nxt, release2 = bare_checkpoint(
-        bare.join(F.broadcast(bare.limit(3).select("id")), "id", "left_anti")
-    )
-    assert nxt._jdf.queryExecution().analyzed().toString().strip().startswith(
-        "LogicalRDD"
-    )
-    assert nxt.count() == 97
-    sc = spark.sparkContext
+    with LineageCuts(sc) as cuts:
+        bare = cuts.adopt(bare_checkpoint(df.repartition(4, "id")), "a")
+        assert bare.schema == df.schema
+        assert sorted(map(tuple, bare.collect())) == sorted(map(tuple, df.collect()))
+        # leaf plan: analyzed tree is a single LogicalRDD node
+        analyzed = bare._jdf.queryExecution().analyzed().toString()
+        assert analyzed.strip().startswith("LogicalRDD")
+        assert "\n " not in analyzed.strip()  # no children
+        # chaining through joins keeps the next leaf constant-size too
+        nxt = cuts.adopt(
+            bare_checkpoint(
+                bare.join(F.broadcast(bare.limit(3).select("id")), "id", "left_anti")
+            ),
+            "b",
+        )
+        assert nxt._jdf.queryExecution().analyzed().toString().strip().startswith(
+            "LogicalRDD"
+        )
+        assert nxt.count() == 97
 
-    def stored_ids():
-        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+        def stored_ids():
+            return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
 
-    before = stored_ids()
-    # scope the release assertion to the ids THIS test checkpointed —
-    # the suite-shared session may hold other tests' persisted RDDs
-    released_ids = {
-        h.id()
-        for h in (bare._bare_checkpoint_handle, nxt._bare_checkpoint_handle)
-        if h is not None
-    }
-    assert released_ids, "expected at least one tracked checkpoint handle"
-    assert released_ids <= before
-    release()
-    release2()
-    assert stored_ids() & released_ids == set()
+        # scope the release assertion to the ids THIS test checkpointed —
+        # the suite-shared session may hold other tests' persisted RDDs
+        released_ids = {bare._bare_checkpoint_handle.id(), nxt._bare_checkpoint_handle.id()}
+        assert released_ids <= stored_ids()
+        cuts.release("a")
+        cuts.release("b")
+        assert stored_ids() & released_ids == set()
 
 
 def test_bare_checkpoint_release_under_concurrent_actions(spark):
-    """Stress the cut/release discipline the iterative loops rely on
-    (trussness peel, r4 race): a background thread hammers actions on the
-    CURRENT state frame while the main thread keeps cutting new states and
-    releasing old ones with a ONE-STEP deferral — the lag that keeps a
-    straggling reader's input alive for a full round. Must produce no
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (surfaces as a raised SparkException
-    in either thread) and leave no leaked blocks."""
+    """The hand-back contract of a cut's owner: a reader thread runs
+    actions on each state the main thread hands it and says when it is
+    done with it, while the main thread keeps cutting the next state from
+    the last one; the main thread frees a state only after the reader
+    handed it back. Must produce no CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (a
+    raised exception in either thread) and leave no leaked blocks."""
+    import queue
     import threading
 
-    from pyspark.sql import functions as F
-
-    from giraph_spark.pregel import bare_checkpoint
+    from giraph_spark.pregel import LineageCuts, bare_checkpoint
 
     sc = spark.sparkContext
     base_ids = {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
-    state, release = bare_checkpoint(
-        spark.range(0, 2000).select(F.col("id"), F.lit(0).alias("x"))
-    )
-    holder = {"df": state, "stop": False, "errors": []}
+    handed: queue.Queue = queue.Queue()
+    done: queue.Queue = queue.Queue()
+    errors: list[str] = []
 
     def reader():
-        while not holder["stop"]:
+        while (item := handed.get()) is not None:
+            slot, df = item
             try:
-                holder["df"].agg(F.sum("x")).collect()
+                for _ in range(3):
+                    df.agg(F.sum("x")).collect()
             except Exception as exc:  # noqa: BLE001
-                holder["errors"].append(repr(exc))
-                return
+                errors.append(repr(exc))
+            done.put(slot)
 
     t = threading.Thread(target=reader, daemon=True)
     t.start()
-    deferred = None
-    for step in range(12):
-        new_state, new_release = bare_checkpoint(
-            holder["df"].select("id", (F.col("x") + 1).alias("x"))
+    with LineageCuts(sc) as cuts:
+        state = cuts.adopt(
+            bare_checkpoint(spark.range(0, 2000).select(F.col("id"), F.lit(0).alias("x"))),
+            "s0",
         )
-        holder["df"] = state = new_state
-        if deferred is not None:
-            deferred()
-        deferred = release
-        release = new_release
-    holder["stop"] = True
-    t.join(timeout=60)
-    assert not t.is_alive()
-    assert holder["errors"] == [], holder["errors"]
-    assert int(state.agg(F.sum("x")).collect()[0][0]) == 2000 * 12
-    if deferred is not None:
-        deferred()
-    release()
+        handed.put(("s0", state))
+        for step in range(1, 13):
+            state = cuts.adopt(
+                bare_checkpoint(state.select("id", (F.col("x") + 1).alias("x"))), f"s{step}"
+            )
+            handed.put((f"s{step}", state))
+            cuts.release(done.get(timeout=600))  # the state the reader handed back
+        handed.put(None)
+        t.join(timeout=600)
+        assert not t.is_alive()
+        assert errors == [], errors
+        assert int(state.agg(F.sum("x")).collect()[0][0]) == 2000 * 12
     after_ids = {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
     assert after_ids - base_ids == set()
+
+
+def test_release_waits_only_for_owner_tagged_jobs(spark):
+    """A free waits for the owner's own tagged jobs, and only for them: a
+    slow job on a thread that carries the owner's tag reads a cut, and
+    release() returns only once that job has ended, and it succeeded; a
+    slow untagged job on another thread is still running when release()
+    returns."""
+    import threading
+    import time
+
+    from giraph_spark.pregel import LineageCuts
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def sleepy(seconds):
+        def count_after(rows):
+            import time
+
+            time.sleep(seconds)
+            yield sum(1 for _ in rows)
+
+        return count_after
+
+    out: dict[str, object] = {}
+    with LineageCuts(sc) as cuts:
+        cut = cuts.cut(spark.range(0, 400, numPartitions=2), "c")
+
+        def tagged():
+            sc.addJobTag(cuts.tag)
+            try:
+                out["rows"] = sum(cut.rdd.mapPartitions(sleepy(3.0)).collect())
+            finally:
+                sc.removeJobTag(cuts.tag)
+
+        def untagged():
+            out["other"] = sum(
+                spark.range(0, 10, numPartitions=1).rdd.mapPartitions(sleepy(15.0)).collect()
+            )
+
+        threads = [threading.Thread(target=untagged), threading.Thread(target=tagged)]
+        for th in threads:
+            th.start()
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            active = set(tracker.getActiveJobsIds())
+            owned = set(sc._jsc.sc().statusTracker().getJobIdsForTag(cuts.tag))  # noqa: SLF001
+            if active & owned and active - owned:
+                break
+            time.sleep(0.02)
+        assert active & owned and active - owned, "both slow jobs never ran at once"
+        cuts.release("c")
+        after = set(tracker.getActiveJobsIds())
+        assert not after & owned  # the tagged reader had ended ...
+        assert after & (active - owned)  # ... and the untagged job had not
+        assert all(tracker.getJobInfo(j).status == "SUCCEEDED" for j in active & owned)
+    for th in threads:
+        th.join(timeout=120)
+    assert out == {"rows": 400, "other": 10}
 
 
 def test_trussness_empty_frontier_rounds_and_no_leaks(spark):
@@ -675,106 +773,6 @@ def test_trussness_orientation_parity(spark):
     assert a == b
     assert all(a[e] == 5 for e in k5)  # K5 survives the 5-truss
     assert all(a[e] == 2 for e in chain + star)
-
-
-def test_gated_release_pool_bookkeeping():
-    """Deterministic unit test of the job/stage-gated release pool
-    (pregel._gated_release / drain_releases / flush_releases): a handle
-    whose watched job or stage is still live must NOT be freed, a drain
-    after the work finishes must free it, and flush waits bounded but
-    never frees a still-watched handle. Uses fakes so no Spark
-    scheduling races apply; the process-global pool is stashed for the
-    test's duration so deferred stragglers from earlier real-Spark
-    tests can't skew the counts (restored afterwards)."""
-    from giraph_spark import pregel
-
-    class FakeHandle:
-        def __init__(self):
-            self.freed = False
-
-        def unpersist(self, blocking):
-            self.freed = True
-
-    class FakeTracker:
-        def __init__(self, owner):
-            self.owner = owner
-
-        def getActiveJobsIds(self):
-            return list(self.owner.jobs)
-
-        def getActiveStageIds(self):
-            return list(self.owner.stages)
-
-    class FakeSC:
-        def __init__(self, jobs=(), stages=()):
-            self.jobs = set(jobs)
-            self.stages = set(stages)
-
-        def statusTracker(self):
-            return FakeTracker(self)
-
-    # stash any deferred entries earlier suite tests legitimately left
-    # (their watched jobs may still be live on the shared session)
-    with pregel._RELEASES_LOCK:
-        stashed = pregel._PENDING_RELEASES
-        pregel._PENDING_RELEASES = []
-    try:
-        _pool_cases(pregel, FakeSC, FakeHandle)
-    finally:
-        with pregel._RELEASES_LOCK:
-            pregel._PENDING_RELEASES.extend(stashed)
-
-
-def _pool_cases(pregel, FakeSC, FakeHandle):
-    assert pregel.drain_releases() == 0
-
-    # no live work at request time -> freed inline
-    sc = FakeSC()
-    h0 = FakeHandle()
-    pregel._gated_release(sc, h0)
-    assert h0.freed and pregel.drain_releases() == 0
-
-    # a live job at request time -> deferred until that job finishes
-    sc.jobs = {7}
-    h1 = FakeHandle()
-    pregel._gated_release(sc, h1)
-    assert not h1.freed
-    assert pregel.drain_releases() == 1 and not h1.freed
-    sc.jobs = set()
-    assert pregel.drain_releases() == 0 and h1.freed
-
-    # a live STAGE alone (orphaned stage, job already returned) defers too
-    sc.stages = {3}
-    h2 = FakeHandle()
-    pregel._gated_release(sc, h2)
-    assert not h2.freed
-    # a new job appearing later does NOT keep the old handle pinned:
-    # only ids watched at request time gate the free
-    sc.stages = set()
-    sc.jobs = {99}
-    assert pregel.drain_releases() == 0 and h2.freed
-
-    # flush waits bounded but NEVER frees under a still-live watched job
-    # (process-global pool: forcing could yank another thread's handle
-    # mid-read); the entry stays pending and drains once the job ends
-    sc2 = FakeSC(jobs={1})
-    h3 = FakeHandle()
-    pregel._gated_release(sc2, h3)
-    assert not h3.freed
-    assert pregel.flush_releases(timeout=0.2) == 1 and not h3.freed
-    sc2.jobs = set()
-    assert pregel.flush_releases(timeout=0.2) == 0 and h3.freed
-
-    # None handle and a broken tracker degrade gracefully
-    pregel._gated_release(sc2, None)
-
-    class BrokenSC:
-        def statusTracker(self):
-            raise RuntimeError("gone")
-
-    h4 = FakeHandle()
-    pregel._gated_release(BrokenSC(), h4)
-    assert h4.freed  # unknown liveness -> free now (pre-gating behavior)
 
 
 def test_daemon_warm_wiring(spark):
