@@ -1,8 +1,9 @@
-"""HITS (hubs & authorities) — Kleinberg's link-analysis iteration.
+"""HITS (hubs & authorities) and its spectral relatives: eigenvector,
+SALSA and Katz centrality.
 
-Beyond-reference link-graph operator (the reference ships PageRank
+Beyond-reference link-graph operators (the reference ships PageRank
 variants only; HITS is the other classic web-link score and slots into
-the same superstep machinery — SURVEY.md §2.8). Semantics follow the
+the same superstep machinery — SURVEY.md §2.8). HITS follows the
 original formulation (Kleinberg, JACM 1999):
 
     auth'(v) = Σ_{u→v} hub(u)        (gather over in-edges)
@@ -19,21 +20,108 @@ Spark shape per superstep (same scale discipline as pagerank.py):
   (hash-partitioned by ``src`` for the auth gather, by ``dst`` for the
   hub gather) and cached; per superstep only the small vertex state
   reshuffles (SHUFFLE_HASH build side = state);
-- both gathers are algebraic sums → map-side combined, hub fan-in is
-  bounded by the same salting path as every other gather
-  (``gather_messages(salt=...)``);
-- ONE ``collect`` per superstep returns ‖a‖², ‖h‖² and the dot products
-  against the previous (unit) vectors, so the convergence metric
-  ``delta = (1 - cos(a', a)) + (1 - cos(h', h))`` costs no extra job.
+- a superstep is ONE SQL text (``run_sql_supersteps``): both gathers
+  are ``gather_cte`` sums (map-side combined, salted with ``salt``) in
+  CTEs of one statement, and its aggregate fills the lineage cut — one
+  Spark job;
+- normalization is lagged: the state holds the UNNORMALIZED vectors,
+  the norms superstep i's aggregate returns are the literals superstep
+  i+1 divides by, and the result divides by the last norms. The same
+  aggregate returns the dot products (or L1 movement) against the
+  previous unit vectors, so the convergence metric costs no extra job;
+- set-up is ONE job: every raw value starts at 1.0 in a lazy cut whose
+  vertex count aggregate gives the initial norm.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import dedup_edges, vertices_from_edges
-from giraph_spark.pregel import PregelRun, engine_session, gather_messages, rebind, run_supersteps
+from giraph_spark.pregel import (
+    PregelRun,
+    engine_session,
+    gather_cte,
+    rebind,
+    run_sql_supersteps,
+)
+
+
+def _edge_tables(
+    edges: DataFrame, num_partitions: int, reverse: bool, weighted: bool
+) -> tuple[DataFrame, DataFrame | None]:
+    """The run's static edge tables: deduplicated, hash-partitioned by
+    ``src`` (and, with ``reverse``, a copy by ``dst``) and cached, so the
+    superstep's scatter joins reshuffle only the vertex state.
+    ``weighted`` folds SALSA's degree normalization into a ``w`` column,
+    a count window over the partition key: no degree join."""
+    e = dedup_edges(edges.select("src", "dst"))
+
+    def table(key: str) -> DataFrame:
+        t = e.repartition(num_partitions, key)
+        if weighted:
+            t = t.withColumn("w", F.lit(1.0) / F.count(F.lit(1)).over(Window.partitionBy(key)))
+        return t.persist()
+
+    return table("src"), table("dst") if reverse else None
+
+
+def _setup(
+    e_fwd: DataFrame, num_partitions: int, cols: list[str]
+) -> tuple[DataFrame, int]:
+    """(initial state, vertex count): every raw value 1.0 in a lazy cut
+    that ONE aggregate fills, together with the edge cache it reads."""
+    state = (
+        vertices_from_edges(e_fwd)
+        .select("id", *[F.lit(1.0).alias(c) for c in cols])
+        .repartition(num_partitions, "id")
+        .localCheckpoint(eager=False)
+    )
+    return state, int(state.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"])
+
+
+def _hub_auth_sql(name: str, salt: int | None, auth_msg: str, hub_msg: str, extra: str) -> str:
+    """The two-gather HITS/SALSA step: auth' gathers ``auth_msg`` over the
+    forward edges, hub' gathers ``hub_msg`` over the reversed edges from
+    the new auth (CTE ``a``); ``extra`` adds the convergence columns."""
+    sv = f"{name}_state"
+    return "WITH " + gather_cte(f"{name}_edges", sv, auth_msg, salt=salt) + f""",
+      a AS (
+        SELECT /*+ SHUFFLE_HASH(g) */ v.id, v.auth, v.hub, coalesce(g.msg, 0.0) AS a_raw
+        FROM {sv} v LEFT JOIN g ON v.id = g.dst
+      ),
+      """ + gather_cte(
+        f"{name}_edges_rev", "a", hub_msg, salt=salt, reverse=True, suffix="_h"
+    ) + f"""
+      SELECT /*+ SHUFFLE_HASH(g_h) */ a.id, a.a_raw AS auth,
+             coalesce(g_h.msg, 0.0) AS hub, {extra}
+      FROM a LEFT JOIN g_h ON a.id = g_h.dst"""
+
+
+def _normalized(
+    run: PregelRun, home: SparkSession, init: dict[str, float], cols: dict[str, str]
+) -> PregelRun:
+    """The result: each raw column divided by the last superstep's norm
+    (``cols`` maps column -> stats key; ``init`` before any superstep)."""
+    last = run.last_stats or init
+    return PregelRun(
+        vertices=rebind(
+            run.vertices.select(
+                "id", *[(F.col(c) / F.lit(last[k])).alias(c) for c, k in cols.items()]
+            ),
+            home,
+        ),
+        supersteps=run.supersteps,
+        converged=run.converged,
+        history=run.history,
+    )
+
+
+def _delta_halt(tolerance: float | None):
+    if tolerance is None:
+        return None
+    return lambda stats, i: stats["delta"] < tolerance
 
 
 def hits(
@@ -57,116 +145,35 @@ def hits(
     spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    e_fwd, e_rev = _edge_tables(edges, num_partitions, reverse=True, weighted=False)
+    state, n = _setup(e_fwd, num_partitions, ["auth", "hub"])
+    if n == 0:
+        e_fwd.unpersist()
+        e_rev.unpersist()
+        return PregelRun(vertices=rebind(state, home), supersteps=0, converged=True)
+    init = {"na": n ** 0.5, "nh": n ** 0.5}
 
-    e = dedup_edges(edges.select("src", "dst"))
-    # static for the run: one cached copy per join orientation, so each
-    # superstep's two scatter joins reshuffle only the vertex state
-    e_fwd = e.repartition(num_partitions, "src").persist()
-    e_rev = e.repartition(num_partitions, "dst").persist()
-
-    verts = vertices_from_edges(e)
-    n_vertices = verts.count()
-    if n_vertices == 0:
-        empty = verts.select(
-            "id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub")
-        )
-        return PregelRun(vertices=rebind(empty, home), supersteps=0, converged=True)
-
-    init = 1.0 / (n_vertices ** 0.5)  # already L2-normalized
-    state = verts.select(
-        "id", F.lit(init).alias("auth"), F.lit(init).alias("hub")
-    ).repartition(num_partitions, "id")
-
-    # the step's joined intermediate is cached so the norm aggregate and
-    # the state materialization share one execution; released one
-    # superstep later (after the engine's lineage cut detaches the state)
-    box: dict[str, DataFrame | None] = {"prev_raw": None}
-
-    def _release_prev() -> None:
-        prev = box["prev_raw"]
-        if prev is not None:
-            prev.unpersist()
-            box["prev_raw"] = None
-
-    def step(vertices: DataFrame, superstep: int):
-        _release_prev()
-        a_msgs = e_fwd.join(
-            vertices.select(F.col("id").alias("src"), "hub").hint("shuffle_hash"),
-            "src",
-        ).select("dst", F.col("hub").alias("msg"))
-        a_raw = (
-            gather_messages(a_msgs, [("msg", "sum")], key="dst", salt=salt)
-            .withColumnRenamed("dst", "id")
-            .withColumnRenamed("msg", "a_raw")
-        )
-        full = vertices.join(a_raw.hint("shuffle_hash"), "id", "left").select(
-            "id",
-            "auth",
-            "hub",
-            F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"),
-        )
-        h_msgs = e_rev.join(
-            full.select(F.col("id").alias("dst"), "a_raw").hint("shuffle_hash"),
-            "dst",
-        ).select("src", F.col("a_raw").alias("msg"))
-        h_raw = (
-            gather_messages(h_msgs, [("msg", "sum")], key="src", salt=salt)
-            .withColumnRenamed("src", "id")
-            .withColumnRenamed("msg", "h_raw")
-        )
-        raw = (
-            full.join(h_raw.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                "auth",
-                "hub",
-                "a_raw",
-                F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
-            )
-            .persist()
-        )
-        box["prev_raw"] = raw
-        # ONE action: both squared norms + dot products with the previous
-        # unit vectors (cos = dot/norm because ‖old‖ = 1)
-        norms = raw.agg(
-            F.sum(F.col("a_raw") * F.col("a_raw")).alias("na2"),
-            F.sum(F.col("h_raw") * F.col("h_raw")).alias("nh2"),
-            F.sum(F.col("a_raw") * F.col("auth")).alias("dot_a"),
-            F.sum(F.col("h_raw") * F.col("hub")).alias("dot_h"),
-        ).collect()[0]
-        na = float(norms["na2"]) ** 0.5 or 1.0
-        nh = float(norms["nh2"]) ** 0.5 or 1.0
-        delta = (1.0 - float(norms["dot_a"]) / na) + (
-            1.0 - float(norms["dot_h"]) / nh
-        )
-        new_state = raw.select(
-            "id",
-            (F.col("a_raw") / F.lit(na)).alias("auth"),
-            (F.col("h_raw") / F.lit(nh)).alias("hub"),
-        )
-        return new_state, {"na": na, "nh": nh, "delta": delta}
-
-    halt = None
-    if tolerance is not None:
-        halt = lambda stats, i: stats["delta"] < tolerance  # noqa: E731
-
-    run = run_supersteps(
-        spark,
-        state,
-        step,
-        max_supersteps=max_supersteps,
-        halt=halt,
-        verbose=verbose,
+    # both squared norms + dot products with the previous unit vectors
+    # (cos = dot/norm because ‖old‖ = 1)
+    step_sql = _hub_auth_sql(
+        "hits", salt, "v.hub / {nh}", "v.a_raw",
+        "a.a_raw * (a.auth / {na}) AS _dot_a, coalesce(g_h.msg, 0.0) * (a.hub / {nh}) AS _dot_h",
     )
-    _release_prev()
-    e_fwd.unpersist()
-    e_rev.unpersist()
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "auth", "hub"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
+    agg_sql = """SELECT sum(auth * auth) AS na2, sum(hub * hub) AS nh2,
+      sum(_dot_a) AS dot_a, sum(_dot_h) AS dot_h FROM hits_new"""
+
+    def update(row, _scalars):
+        na = float(row["na2"]) ** 0.5 or 1.0
+        nh = float(row["nh2"]) ** 0.5 or 1.0
+        delta = (1.0 - float(row["dot_a"]) / na) + (1.0 - float(row["dot_h"]) / nh)
+        return {"na": na, "nh": nh, "delta": delta}, {"na": na, "nh": nh}
+
+    run = run_sql_supersteps(
+        spark, state, ("hits_state", "hits_new"),
+        {"hits_edges": e_fwd, "hits_edges_rev": e_rev}, step_sql, agg_sql, update, init,
+        max_supersteps=max_supersteps, halt=_delta_halt(tolerance), verbose=verbose,
     )
+    return _normalized(run, home, init, {"auth": "na", "hub": "nh"})
 
 
 def eigenvector_centrality(
@@ -193,80 +200,29 @@ def eigenvector_centrality(
     spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    e_fwd, _ = _edge_tables(edges, num_partitions, reverse=False, weighted=False)
+    state, n = _setup(e_fwd, num_partitions, ["score"])
+    if n == 0:
+        e_fwd.unpersist()
+        return PregelRun(vertices=rebind(state, home), supersteps=0, converged=True)
+    init = {"norm": n ** 0.5}
 
-    e = dedup_edges(edges.select("src", "dst"))
-    e_fwd = e.repartition(num_partitions, "src").persist()
+    step_sql = "WITH " + gather_cte("eig_edges", "eig_state", "v.score / {norm}", salt=salt) + """
+      SELECT /*+ SHUFFLE_HASH(g) */ v.id, coalesce(g.msg, 0.0) AS score,
+             coalesce(g.msg, 0.0) * (v.score / {norm}) AS _dot
+      FROM eig_state v LEFT JOIN g ON v.id = g.dst"""
+    agg_sql = "SELECT sum(score * score) AS n2, sum(_dot) AS dot FROM eig_new"
 
-    verts = vertices_from_edges(e)
-    n_vertices = verts.count()
-    if n_vertices == 0:
-        return PregelRun(
-            vertices=rebind(verts.select("id", F.lit(0.0).alias("score")), home),
-            supersteps=0,
-            converged=True,
-        )
+    def update(row, _scalars):
+        norm = float(row["n2"]) ** 0.5 or 1.0
+        return {"norm": norm, "delta": 1.0 - float(row["dot"]) / norm}, {"norm": norm}
 
-    init = 1.0 / (n_vertices ** 0.5)
-    state = verts.select("id", F.lit(init).alias("score")).repartition(
-        num_partitions, "id"
-    )
-    box: dict[str, DataFrame | None] = {"prev_raw": None}
-
-    def _release_prev() -> None:
-        prev = box["prev_raw"]
-        if prev is not None:
-            prev.unpersist()
-            box["prev_raw"] = None
-
-    def step(vertices: DataFrame, superstep: int):
-        _release_prev()
-        msgs = e_fwd.join(
-            vertices.select(F.col("id").alias("src"), "score").hint("shuffle_hash"),
-            "src",
-        ).select("dst", F.col("score").alias("msg"))
-        raw = (
-            vertices.join(
-                gather_messages(msgs, [("msg", "sum")], key="dst", salt=salt)
-                .withColumnRenamed("dst", "id")
-                .hint("shuffle_hash"),
-                "id",
-                "left",
-            )
-            .select("id", "score", F.coalesce("msg", F.lit(0.0)).alias("raw"))
-            .persist()
-        )
-        box["prev_raw"] = raw
-        norms = raw.agg(
-            F.sum(F.col("raw") * F.col("raw")).alias("n2"),
-            F.sum(F.col("raw") * F.col("score")).alias("dot"),
-        ).collect()[0]
-        n = float(norms["n2"]) ** 0.5 or 1.0
-        delta = 1.0 - float(norms["dot"]) / n
-        return (
-            raw.select("id", (F.col("raw") / F.lit(n)).alias("score")),
-            {"norm": n, "delta": delta},
-        )
-
-    halt = None
-    if tolerance is not None:
-        halt = lambda stats, i: stats["delta"] < tolerance  # noqa: E731
-
-    run = run_supersteps(
-        spark,
-        state,
-        step,
-        max_supersteps=max_supersteps,
-        halt=halt,
+    run = run_sql_supersteps(
+        spark, state, ("eig_state", "eig_new"), {"eig_edges": e_fwd}, step_sql, agg_sql,
+        update, init, max_supersteps=max_supersteps, halt=_delta_halt(tolerance),
         verbose=verbose,
     )
-    _release_prev()
-    e_fwd.unpersist()
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "score"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return _normalized(run, home, init, {"score": "norm"})
 
 
 def salsa(
@@ -298,110 +254,35 @@ def salsa(
     spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # the degree normalizations are folded INTO the cached edge tables:
+    # the per-superstep scatter multiplies by a precomputed weight
+    e_fwd, e_rev = _edge_tables(edges, num_partitions, reverse=True, weighted=True)
+    state, n = _setup(e_fwd, num_partitions, ["auth", "hub"])
+    if n == 0:
+        e_fwd.unpersist()
+        e_rev.unpersist()
+        return PregelRun(vertices=rebind(state, home), supersteps=0, converged=True)
+    init = {"na": float(n), "nh": float(n)}
 
-    e = dedup_edges(edges.select("src", "dst"))
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("idg"))
-    # fold the degree normalizations INTO the cached edge tables: the
-    # per-superstep scatter then multiplies by a precomputed weight
-    e_fwd = (
-        e.join(outdeg, "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("od")).alias("w"))
-        .repartition(num_partitions, "src")
-        .persist()
+    # both L1 masses + L1 movement vs the previous vectors
+    step_sql = _hub_auth_sql(
+        "salsa", salt, "v.hub / {nh} * e.w", "v.a_raw * e.w",
+        "abs(a.a_raw - a.auth / {na}) AS _da, abs(coalesce(g_h.msg, 0.0) - a.hub / {nh}) AS _dh",
     )
-    e_rev = (
-        e.join(indeg, "dst")
-        .select("src", "dst", (F.lit(1.0) / F.col("idg")).alias("w"))
-        .repartition(num_partitions, "dst")
-        .persist()
+    agg_sql = """SELECT sum(auth) AS sa, sum(hub) AS sh, sum(_da) AS da, sum(_dh) AS dh
+      FROM salsa_new"""
+
+    def update(row, _scalars):
+        na, nh = float(row["sa"]) or 1.0, float(row["sh"]) or 1.0
+        delta = float(row["da"]) + float(row["dh"])
+        return {"na": na, "nh": nh, "delta": delta}, {"na": na, "nh": nh}
+
+    run = run_sql_supersteps(
+        spark, state, ("salsa_state", "salsa_new"),
+        {"salsa_edges": e_fwd, "salsa_edges_rev": e_rev}, step_sql, agg_sql, update, init,
+        max_supersteps=max_supersteps, halt=_delta_halt(tolerance), verbose=verbose,
     )
-
-    verts = vertices_from_edges(e)
-    n_vertices = verts.count()
-    if n_vertices == 0:
-        empty = verts.select("id", F.lit(0.0).alias("auth"), F.lit(0.0).alias("hub"))
-        return PregelRun(vertices=rebind(empty, home), supersteps=0, converged=True)
-
-    init = 1.0 / n_vertices  # L1-normalized start
-    state = verts.select(
-        "id", F.lit(init).alias("auth"), F.lit(init).alias("hub")
-    ).repartition(num_partitions, "id")
-
-    box: dict[str, DataFrame | None] = {"prev_raw": None}
-
-    def _release_prev() -> None:
-        prev = box["prev_raw"]
-        if prev is not None:
-            prev.unpersist()
-            box["prev_raw"] = None
-
-    def step(vertices: DataFrame, superstep: int):
-        _release_prev()
-        a_msgs = e_fwd.join(
-            vertices.select(F.col("id").alias("src"), "hub").hint("shuffle_hash"),
-            "src",
-        ).select("dst", (F.col("hub") * F.col("w")).alias("msg"))
-        a_raw = (
-            gather_messages(a_msgs, [("msg", "sum")], key="dst", salt=salt)
-            .withColumnRenamed("dst", "id")
-            .withColumnRenamed("msg", "a_raw")
-        )
-        full = vertices.join(a_raw.hint("shuffle_hash"), "id", "left").select(
-            "id", "auth", "hub", F.coalesce("a_raw", F.lit(0.0)).alias("a_raw")
-        )
-        h_msgs = e_rev.join(
-            full.select(F.col("id").alias("dst"), "a_raw").hint("shuffle_hash"),
-            "dst",
-        ).select("src", (F.col("a_raw") * F.col("w")).alias("msg"))
-        h_raw = (
-            gather_messages(h_msgs, [("msg", "sum")], key="src", salt=salt)
-            .withColumnRenamed("src", "id")
-            .withColumnRenamed("msg", "h_raw")
-        )
-        raw = (
-            full.join(h_raw.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id", "auth", "hub", "a_raw",
-                F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
-            )
-            .persist()
-        )
-        box["prev_raw"] = raw
-        # ONE action: both L1 masses + L1 movement vs the previous vectors
-        sums = raw.agg(
-            F.sum("a_raw").alias("sa"),
-            F.sum("h_raw").alias("sh"),
-            F.sum(F.abs(F.col("a_raw") - F.col("auth"))).alias("da"),
-            F.sum(F.abs(F.col("h_raw") - F.col("hub"))).alias("dh"),
-        ).collect()[0]
-        sa = float(sums["sa"]) or 1.0
-        sh = float(sums["sh"]) or 1.0
-        delta = float(sums["da"]) + float(sums["dh"])
-        new_state = raw.select(
-            "id",
-            (F.col("a_raw") / F.lit(sa)).alias("auth"),
-            (F.col("h_raw") / F.lit(sh)).alias("hub"),
-        )
-        return new_state, {"delta": delta}
-
-    halt = None
-    if tolerance is not None:
-        halt = lambda stats, i: stats["delta"] < tolerance  # noqa: E731
-
-    run = run_supersteps(
-        spark, state, step,
-        max_supersteps=max_supersteps, halt=halt, verbose=verbose,
-    )
-    _release_prev()
-    e_fwd.unpersist()
-    e_rev.unpersist()
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "auth", "hub"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return _normalized(run, home, init, {"auth": "na", "hub": "nh"})
 
 
 def katz_centrality(
@@ -439,68 +320,23 @@ def katz_centrality(
     spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    e_fwd, _ = _edge_tables(edges, num_partitions, reverse=False, weighted=False)
+    # an un-cut input: the loop persists it, superstep 0's job fills it
+    state = vertices_from_edges(e_fwd).select(
+        "id", F.lit(float(beta)).alias("katz")
+    ).repartition(num_partitions, "id")
 
-    e = dedup_edges(edges.select("src", "dst"))
-    e_fwd = e.repartition(num_partitions, "src").persist()
+    katz = f"{float(beta)!r} + {float(alpha)!r} * coalesce(g.msg, 0.0)"
+    step_sql = "WITH " + gather_cte("katz_edges", "katz_state", "v.katz", salt=salt) + f"""
+      SELECT /*+ SHUFFLE_HASH(g) */ v.id, {katz} AS katz, abs({katz} - v.katz) AS _delta
+      FROM katz_state v LEFT JOIN g ON v.id = g.dst"""
 
-    verts = vertices_from_edges(e)
-    state = verts.select("id", F.lit(float(beta)).alias("katz")).repartition(
-        num_partitions, "id"
+    run = run_sql_supersteps(
+        spark, state, ("katz_state", "katz_new"), {"katz_edges": e_fwd}, step_sql,
+        "SELECT sum(_delta) AS d FROM katz_new",
+        lambda row, _: ({"delta": float(row["d"] or 0.0)}, {}),
+        max_supersteps=max_supersteps, halt=_delta_halt(tolerance), verbose=verbose,
     )
-    box: dict[str, DataFrame | None] = {"prev": None}
-
-    def _release_prev() -> None:
-        prev = box["prev"]
-        if prev is not None:
-            prev.unpersist()
-            box["prev"] = None
-
-    def step(vertices: DataFrame, superstep: int):
-        _release_prev()
-        msgs = e_fwd.join(
-            vertices.select(F.col("id").alias("src"), "katz").hint("shuffle_hash"),
-            "src",
-        ).select("dst", F.col("katz").alias("msg"))
-        new = (
-            vertices.join(
-                gather_messages(msgs, [("msg", "sum")], key="dst", salt=salt)
-                .withColumnRenamed("dst", "id")
-                .hint("shuffle_hash"),
-                "id",
-                "left",
-            )
-            .select(
-                "id",
-                "katz",
-                (
-                    F.lit(float(beta))
-                    + F.lit(float(alpha)) * F.coalesce("msg", F.lit(0.0))
-                ).alias("new_katz"),
-            )
-            .persist()
-        )
-        box["prev"] = new
-        delta = float(
-            new.agg(
-                F.sum(F.abs(F.col("new_katz") - F.col("katz"))).alias("d")
-            ).collect()[0]["d"]
-            or 0.0
-        )
-        return (
-            new.select("id", F.col("new_katz").alias("katz")),
-            {"delta": delta},
-        )
-
-    halt = None
-    if tolerance is not None:
-        halt = lambda stats, i: stats["delta"] < tolerance  # noqa: E731
-
-    run = run_supersteps(
-        spark, state, step,
-        max_supersteps=max_supersteps, halt=halt, verbose=verbose,
-    )
-    _release_prev()
-    e_fwd.unpersist()
     return PregelRun(
         vertices=rebind(run.vertices.select("id", "katz"), home),
         supersteps=run.supersteps,

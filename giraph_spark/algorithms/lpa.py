@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, engine_session, rebind, run_supersteps
+from giraph_spark.pregel import PregelRun, engine_session, gather_cte, rebind, run_sql_supersteps
 
 
 def label_propagation(
@@ -90,26 +90,22 @@ def label_propagation(
     e = e.repartition(num_partitions, "src").persist()
 
     state = vertices_from_edges(e).select("id", F.col("id").alias("label"))
+    views = {ev: e}
+    if incremental_threshold is not None:
+        # the dst-partitioned copy: cached lazily, on the first
+        # incremental superstep's scan
+        views[edv] = e.repartition(num_partitions, "dst").persist()
 
-    # one-superstep-lagged aggregator (MasterCompute-style): last round's
-    # changed count decides this round's full-vs-incremental plan
-    box: dict[str, Any] = {"changed": None, "n": None, "e_dst": None}
-
-    # Each superstep is ONE spark.sql() text instead of ~15 DataFrame-API
-    # py4j round trips — same rationale and measurement as the PageRank
-    # step (pagerank.py: ~117 ms/superstep of plan-building py4j). The
-    # two-stage mode (count per (dst, label), map-side combined, then
-    # max_by argmax with the deterministic smaller-label tie-break) and
-    # every join-strategy hint carry over verbatim.
-    e.createOrReplaceTempView(ev)
-    vote_expr = "sum(j._w)" if weight_col is not None else "count(1)"
+    # The two-stage mode (count per (dst, label), map-side combined, then
+    # max_by argmax with the deterministic smaller-label tie-break); the
+    # step's ``{votes}`` slot is the vote-source CTE: the full scatter, or
+    # the incremental recount
+    vote_expr = "sum(_w)" if weight_col is not None else "count(1)"
     wcol = ", ve._w AS _w" if weight_col is not None else ""
     wcol_full = ", e._w AS _w" if weight_col is not None else ""
-
-    def _tail_sql(source_cte: str) -> str:
-        return f"""c AS (
-        SELECT dst, label, {vote_expr.replace('j.', '')} AS cnt
-        FROM {source_cte} GROUP BY dst, label
+    step_sql = "WITH {votes}" + f"""c AS (
+        SELECT dst, label, {vote_expr} AS cnt
+        FROM j GROUP BY dst, label
       ),
       m AS (
         SELECT dst, max_by(label, struct(cnt, -label)) AS new_label
@@ -119,18 +115,17 @@ def label_propagation(
              coalesce(m.new_label, v.label) AS label,
              (coalesce(m.new_label, v.label) != v.label) AS _changed
       FROM {sv} v LEFT JOIN m ON v.id = m.dst"""
-
-    full_sql = f"""WITH j AS (
+    full_votes = f"""j AS (
         SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.label AS label{wcol_full}
         FROM {ev} e JOIN {sv} v ON e.src = v.id
       ),
-      """ + _tail_sql("j")
+      """
     # incremental: frontier = vertices whose label changed last round;
     # affected dsts = their out-neighborhood (frontier shuffled to the
     # cached src-partitioned table — O(frontier)); votes recounted only
     # for edges INTO affected dsts via a semi-join against the
     # dst-partitioned copy (affected shuffled, edges stay put)
-    incr_sql = f"""WITH ch AS (SELECT id AS src FROM {sv} WHERE _changed),
+    incr_votes = f"""ch AS (SELECT id AS src FROM {sv} WHERE _changed),
       aff AS (
         SELECT /*+ SHUFFLE_HASH(ch) */ DISTINCT e.dst AS dst
         FROM {ev} e JOIN ch ON e.src = ch.src
@@ -143,40 +138,25 @@ def label_propagation(
         SELECT /*+ SHUFFLE_HASH(v) */ ve.dst AS dst, v.label AS label{wcol}
         FROM ve JOIN {sv} v ON ve.src = v.id
       ),
-      """ + _tail_sql("j")
+      """
     agg_sql = (
         f"SELECT sum(CASE WHEN _changed THEN 1 ELSE 0 END) AS c, "
         f"count(1) AS n FROM {nv}"
     )
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        prev_changed = box["changed"]
+    def update(row, scalars: dict[str, str]) -> tuple[dict[str, Any], dict[str, str]]:
+        # one-superstep-lagged aggregator (MasterCompute-style): this
+        # round's changed count decides the next round's plan
+        changed = int(row["c"] or 0)
         use_incr = (
             incremental_threshold is not None
-            and prev_changed is not None
-            and box["n"] is not None
-            and 0 < prev_changed <= incremental_threshold * box["n"]
+            and 0 < changed <= incremental_threshold * int(row["n"])
         )
-        if use_incr and box["e_dst"] is None:
-            box["e_dst"] = e.repartition(num_partitions, "dst").persist()
-            box["e_dst"].createOrReplaceTempView(edv)
-        vertices.createOrReplaceTempView(sv)
-        new_state = spark.sql(incr_sql if use_incr else full_sql)
-        # lazy cut materialized by the aggregate below (adopted)
-        new_state = new_state.localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        row = spark.sql(agg_sql).collect()[0]
-        box["changed"] = int(row["c"] or 0)
-        box["n"] = int(row["n"])
-        return new_state, {
-            "changed": box["changed"],
-            "incremental": bool(use_incr),
-        }
+        stats = {"changed": changed, "incremental": scalars["votes"] is incr_votes}
+        return stats, {"votes": incr_votes if use_incr else full_votes}
 
-    run = run_supersteps(
-        spark,
-        state,
-        step,
+    run = run_sql_supersteps(
+        spark, state, (sv, nv), views, step_sql, agg_sql, update, {"votes": full_votes},
         max_supersteps=max_supersteps,
         halt=lambda stats, i: stats["changed"] == 0,
         checkpoint_dir=checkpoint_dir,
@@ -184,9 +164,6 @@ def label_propagation(
         resume=resume,
         verbose=verbose,
     )
-    e.unpersist()
-    if box["e_dst"] is not None:
-        box["e_dst"].unpersist()
     return PregelRun(
         vertices=rebind(run.vertices.select("id", "label"), home),
         supersteps=run.supersteps,
@@ -215,36 +192,21 @@ def max_label_propagation(
         "id", F.col("id").alias("label"), F.lit(True).alias("changed")
     )
 
-    # one spark.sql() text per superstep — the WCC shape with max/greatest
-    e.createOrReplaceTempView(ev)
-    step_sql = f"""WITH g AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, max(v.label) AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-        WHERE v.changed
-        GROUP BY e.dst
-      )
+    # the WCC shape with max/greatest
+    step_sql = "WITH " + gather_cte(ev, sv, "v.label", fn="max", where="v.changed") + f"""
       SELECT /*+ SHUFFLE_HASH(g) */ v.id,
              greatest(v.label, coalesce(g.msg, v.label)) AS label,
              (coalesce(g.msg, v.label) > v.label) AS changed
       FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
     count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        vertices.createOrReplaceTempView(sv)
-        new_state = spark.sql(step_sql).localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        row = spark.sql(count_sql).collect()[0]
-        return new_state, {"changed": int(row["c"] or 0)}
-
-    run = run_supersteps(
-        spark,
-        state,
-        step,
+    run = run_sql_supersteps(
+        spark, state, (sv, nv), {ev: e}, step_sql, count_sql,
+        lambda row, _: ({"changed": int(row["c"] or 0)}, {}),
         max_supersteps=max_supersteps,
         halt=lambda stats, i: stats["changed"] == 0,
         verbose=verbose,
     )
-    e.unpersist()
     return PregelRun(
         vertices=rebind(run.vertices.select("id", "label"), home),
         supersteps=run.supersteps,

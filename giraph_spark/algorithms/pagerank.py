@@ -18,12 +18,14 @@ pagerank/PageRankIteration.java:137-264``):
   threshold default 1e-5, PageRankSettings.java:49-52), loop wrapped in
   RepeatUntilBlock (PageRankBlockUtils.java:53-67)
 
-Spark shape per superstep: one scatter join (edges × ranks, co-partitioned
-on src==id so only the small rank state reshuffles), one gather
-``groupBy(dst).sum`` (map-side combined = the DoubleSumMessageCombiner),
-one update join, and ONE driver action computing next-iteration allSum /
-sinkSum and all three convergence metrics in a single aggregate (the
-per-superstep aggregator gather of master/MasterCompute.java:41-47).
+Spark shape per superstep: ONE SQL text (``run_sql_supersteps``) of one
+scatter join (edges × ranks, co-partitioned on src==id so only the small
+rank state reshuffles), one gather ``sum`` (map-side combined = the
+DoubleSumMessageCombiner) and one update join, and ONE driver action
+computing next-iteration allSum / sinkSum and all three convergence
+metrics in a single aggregate (the per-superstep aggregator gather of
+master/MasterCompute.java:41-47) — one Spark job. ``ppr.py``'s
+personalized variants run the same step (``_rank_loop``).
 
 Set-up is ONE Spark job, planned with AQE off in the call's own session
 (``engine_session``; ``_init_piece``): the edge table is hash-partitioned
@@ -49,8 +51,9 @@ from giraph_spark.pregel import (
     LineageCuts,
     PregelRun,
     engine_session,
+    gather_cte,
     rebind,
-    run_supersteps,
+    run_sql_supersteps,
 )
 
 
@@ -142,32 +145,18 @@ def pagerank(
     spark, edges, init_ranks = engine_session(edges, init_ranks)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ev, sv, nv = "pr_edges", "pr_state", "pr_new"
     e, setup_cut = _init_piece(
         edges, num_partitions, weighted=weighted,
         pre_partitioned=pre_partitioned, init_ranks=init_ranks,
     )
     # the initial state is the first lineage cut: ONE set-up aggregate
     # fills it (and the edge cache under it) and returns the vertex
-    # count and the total / sink mass, so superstep 0 starts with the
-    # aggregator box already initialized (fresh start: every rank is
-    # exactly 1.0); run_supersteps adopts the filled cut as superstep
-    # 0's input
+    # count and the total / sink mass, so superstep 0 starts with its
+    # scalars known (fresh start: every rank is exactly 1.0);
+    # run_supersteps adopts the filled cut as superstep 0's input
     setup_cut = setup_cut.localCheckpoint(eager=False)
-    srow = setup_cut.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("rank").alias("mass"),
-        F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
-            "sink_mass"
-        ),
-    ).collect()[0]
+    srow = _setup_sums(setup_cut)
     n_vertices = int(srow["n"])
-    if n_vertices == 0:
-        e.unpersist()
-        return PregelRun(
-            vertices=rebind(setup_cut.select("id", "rank"), home), supersteps=0,
-            converged=True,
-        )
     state = setup_cut
     init_sink_sum = float(srow["sink_mass"] or 0.0)
     if init_ranks is not None:
@@ -184,100 +173,100 @@ def pagerank(
             )
             init_sink_sum = init_sink_sum * (n_vertices / total)
 
-    d = float(damping)
-    # aggregator state visible to the *next* superstep (one-superstep lag,
-    # master/MasterCompute.java:41-47). On resume the loop starts from a
-    # snapshot this setup never saw, so the box must fall back to the
-    # lazy in-loop _sums; otherwise it is fully initialized here.
-    box: dict[str, float] = {
-        "all_sum": float(n_vertices),
-        "sink_sum": None if resume else init_sink_sum,
-    }  # type: ignore[assignment]
-
-    def _sums(df: DataFrame) -> tuple[float, float]:
-        r = df.agg(
-            F.sum("rank").alias("all_sum"),
-            F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
-                "sink_sum"
-            ),
-        ).collect()[0]
-        return float(r["all_sum"]), float(r["sink_sum"] or 0.0)
-
-    # The step is issued as ONE spark.sql() text per superstep instead of
-    # ~a dozen DataFrame-API calls: each Column/DataFrame builder is its
-    # own py4j round trip, measured ~117 ms of the ~430 ms sf0.1
-    # superstep floor; a SQL string ships the whole plan in one call and
-    # parses/analyzes JVM-side (measured 442 -> 335 ms/superstep, ranks
-    # identical to 1e-10 — FP reorder noise only). Join strategy hints
-    # match the DataFrame formulation exactly:
-    # - SHUFFLE_HASH(v) on the scatter join: sort-merge would re-sort the
-    #   (static, cached, already src-partitioned) edge table every
-    #   superstep; hash-building the much smaller per-superstep rank
-    #   state streams the edges untouched.
-    # - SHUFFLE_HASH(g) on the update join: build the gathered messages,
-    #   probe the co-partitioned state.
-    # The salted variant reproduces gather_messages' retry-safe two-level
-    # reduction (content-hashed salt, pregel.py:104-114) in SQL.
-    e.createOrReplaceTempView(ev)
-    if salt and salt > 1:
-        gather_cte = f"""m AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.rank * e.weight AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-      ),
-      s1 AS (
-        SELECT dst, sum(msg) AS msg
-        FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
-      ),
-      g AS (SELECT dst, sum(msg) AS msg FROM s1 GROUP BY dst)"""
-    else:
-        gather_cte = f"""g AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, sum(v.rank * e.weight) AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-        GROUP BY e.dst
-      )"""
-    step_sql = (
-        "WITH " + gather_cte + f"""
-      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-             {{d}} * coalesce(g.msg, 0.0) + {{base}} AS rank,
-             v.is_sink,
-             {{d}} * coalesce(g.msg, 0.0) + {{base}} - v.rank AS _delta
-      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
+    return _rank_loop(
+        spark, home, e, setup_cut, state, n_vertices,
+        None if resume else (float(n_vertices), init_sink_sum),
+        damping=damping, salt=salt, tele=False, max_supersteps=max_supersteps,
+        tolerance=tolerance, convergence=convergence, checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval, resume=resume, verbose=verbose,
     )
-    agg_sql = f"""
+
+
+def _setup_sums(setup_cut: DataFrame):
+    """Vertex count, mass and sink mass of a rank state: the set-up
+    aggregate, the ONE action that fills the initial lazy cut and the
+    edge cache it reads (and a resumed snapshot's sums)."""
+    return setup_cut.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("rank").alias("mass"),
+        F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
+            "sink_mass"
+        ),
+    ).collect()[0]
+
+
+def _rank_loop(
+    spark: SparkSession,
+    home: SparkSession,
+    e: DataFrame,
+    setup_cut: DataFrame,
+    state: DataFrame,
+    n_vertices: int,
+    sums: tuple[float, float] | None,
+    *,
+    damping: float,
+    salt: int | None,
+    tele: bool,
+    tolerance: float | None,
+    convergence: str,
+    **loop: Any,
+) -> PregelRun:
+    """The rank iteration over the cached edges ``e`` from ``state`` (the
+    set-up cut, or a frame derived from it): per superstep ``rank' =
+    d·msg + tele·(d·sink_sum + (1-d)·all_sum)``, one Spark job. PageRank's
+    ``tele`` is 1/N on every vertex, folded into the ``{base}`` literal;
+    ``tele=True`` reads a per-vertex ``tele`` column instead (personalized
+    PageRank: the source preference), and the teleport mass is the unit
+    probability mass. ``sums`` = (all_sum, sink_sum) of ``state``; None
+    derives them from the first state the loop reads (a resumed
+    snapshot). Result ``vertices``: (id, rank) in ``home``."""
+    if n_vertices == 0:
+        e.unpersist()
+        return PregelRun(
+            vertices=rebind(setup_cut.select("id", "rank"), home), supersteps=0,
+            converged=True,
+        )
+    d = float(damping)
+    # the step's {base} slot is the teleport + sink mass of the previous
+    # superstep. Join strategy hints: SHUFFLE_HASH(v) on the scatter join
+    # (gather_cte), SHUFFLE_HASH(g) on the update join — build the
+    # gathered messages, probe the co-partitioned state
+    term = "v.tele * {base}" if tele else "{base}"
+    gather = gather_cte("pr_edges", "pr_state", "v.rank * e.weight", salt=salt)
+    step_sql = f"""WITH {gather}
+      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
+             {d!r} * coalesce(g.msg, 0.0) + {term} AS rank,
+             v.is_sink,{" v.tele," if tele else ""}
+             {d!r} * coalesce(g.msg, 0.0) + {term} - v.rank AS _delta
+      FROM pr_state v LEFT JOIN g ON v.id = g.dst"""
+    agg_sql = """
       SELECT sum(rank) AS all_sum,
              sum(CASE WHEN is_sink THEN rank ELSE 0.0 END) AS sink_sum,
              sum(abs(_delta)) AS l1,
              max(abs(_delta)) AS linf,
              sqrt(avg(_delta * _delta)) AS rmse
-      FROM {nv}"""
+      FROM pr_new"""
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        if box["sink_sum"] is None:  # resume from a snapshot this setup never saw
-            box["all_sum"], box["sink_sum"] = _sums(vertices)
-        all_sum, sink_sum = box["all_sum"], box["sink_sum"]
-        base = d * sink_sum / n_vertices + (1.0 - d) * all_sum / n_vertices
+    def scalars(all_sum: float, sink_sum: float) -> dict[str, float]:
+        if tele:
+            return {"base": d * sink_sum + (1.0 - d)}
+        return {"base": d * sink_sum / n_vertices + (1.0 - d) * all_sum / n_vertices}
 
-        vertices.createOrReplaceTempView(sv)
-        new_state = spark.sql(step_sql.format(d=repr(d), base=repr(base)))
-        # LAZY lineage cut BEFORE the action: the convergence aggregate
-        # below materializes the checkpoint blocks in ITS job, so the
-        # loop adopts the cut and the superstep costs exactly one Spark
-        # job (a separate eager-cut job measured ~120 ms of the sf0.1
-        # superstep floor)
-        new_state = new_state.localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        # ONE action: next-iteration sums + all convergence reducers
-        row = spark.sql(agg_sql).collect()[0]
-        box["all_sum"], box["sink_sum"] = float(row["all_sum"]), float(row["sink_sum"] or 0.0)
+    def resumed(df: DataFrame) -> dict[str, float]:
+        r = _setup_sums(df)
+        return scalars(float(r["mass"]), float(r["sink_mass"] or 0.0))
+
+    def update(row, _scalars):
+        all_sum, sink_sum = float(row["all_sum"]), float(row["sink_sum"] or 0.0)
         stats = {
-            "all_sum": box["all_sum"],
-            "sink_sum": box["sink_sum"],
+            "all_sum": all_sum,
+            "sink_sum": sink_sum,
             "l1": float(row["l1"]),
             "l1_mean": float(row["l1"]) / n_vertices,
             "linf": float(row["linf"]),
             "rmse": float(row["rmse"]),
         }
-        return new_state, stats
+        return stats, scalars(all_sum, sink_sum)
 
     halt = None
     if tolerance is not None:
@@ -286,18 +275,10 @@ def pagerank(
     with LineageCuts(spark.sparkContext) as cuts:
         if state is not setup_cut:  # the loop will not adopt the set-up cut
             cuts.adopt(setup_cut, "setup")
-        run = run_supersteps(
-            spark,
-            state,
-            step,
-            max_supersteps=max_supersteps,
-            halt=halt,
-            checkpoint_dir=checkpoint_dir,
-            checkpoint_interval=checkpoint_interval,
-            resume=resume,
-            verbose=verbose,
+        run = run_sql_supersteps(
+            spark, state, ("pr_state", "pr_new"), {"pr_edges": e}, step_sql, agg_sql,
+            update, resumed if sums is None else scalars(*sums), halt=halt, **loop,
         )
-    e.unpersist()
     return PregelRun(
         vertices=rebind(run.vertices.select("id", "rank"), home),
         supersteps=run.supersteps,

@@ -7,19 +7,26 @@ where the teleport vector ``pref`` is uniform over the source set instead
 of over all vertices; dangling mass restarts at the sources too. Total
 probability mass is conserved at 1.
 
-Same superstep shape as ``pagerank.py`` (scatter join → sum gather →
-update join + one driver aggregate); only the teleport target differs.
+It IS pagerank's superstep (``pagerank._rank_loop``: one SQL text, one
+Spark job) with a per-vertex teleport weight ``tele`` — ``pref`` on the
+sources, 0 elsewhere — so ``rank' = d·msg + tele·(d·sink_sum + (1-d))``
+with ``d = 1 - t``; and pagerank's one-job set-up (``_init_piece``).
+``ppr_batch`` runs the same step keyed by ``(seed, id)``.
 """
 
 from __future__ import annotations
 
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from giraph_spark.graph import out_degrees, vertices_from_edges
-from giraph_spark.pregel import PregelRun, engine_session, gather_messages, rebind, run_supersteps
+from giraph_spark.algorithms.pagerank import _init_piece, _rank_loop, _setup_sums
+from giraph_spark.pregel import (
+    PregelRun,
+    engine_session,
+    gather_cte,
+    rebind,
+    run_sql_supersteps,
+)
 
 
 def personalized_pagerank(
@@ -41,110 +48,27 @@ def personalized_pagerank(
     transition probabilities are the per-``src`` normalized weights
     (``w / sum(w) over src``) instead of the uniform ``1/out_degree``.
     """
+    srcs = [sources] if isinstance(sources, int) else list(sources)
+    if not srcs:
+        raise ValueError("personalized_pagerank needs at least one source")
     home = edges.sparkSession
     spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    srcs = [sources] if isinstance(sources, int) else list(sources)
-    if not srcs:
-        raise ValueError("personalized_pagerank needs at least one source")
-    t = float(teleport)
-
-    if weighted:
-        wsum = edges.groupBy("src").agg(F.sum("weight").alias("_wsum"))
-        e = (
-            edges.select("src", "dst", "weight")
-            .join(wsum, "src")
-            .withColumn(
-                "weight", F.col("weight").cast("double") / F.col("_wsum")
-            )
-            .drop("_wsum")
-            .repartition(num_partitions, "src")
-            .persist()
-        )
-    else:
-        deg = out_degrees(edges)
-        e = (
-            edges.select("src", "dst")
-            .join(deg, "src")
-            .withColumn("weight", F.lit(1.0) / F.col("out_degree").cast("double"))
-            .drop("out_degree")
-            .repartition(num_partitions, "src")
-            .persist()
-        )
-    verts = vertices_from_edges(edges)
-    sinks = verts.join(
-        edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-    )
-    is_source = F.col("id").isin(srcs)
-    pref = 1.0 / len(srcs)
-    state = (
-        verts.join(sinks.withColumn("is_sink", F.lit(True)), "id", "left")
-        .select(
-            "id",
-            F.when(is_source, F.lit(pref)).otherwise(F.lit(0.0)).alias("rank"),
-            F.coalesce("is_sink", F.lit(False)).alias("is_sink"),
-            is_source.alias("is_source"),
-        )
-        .repartition(num_partitions, "id")
-    )
-
-    box: dict[str, float] = {"sink_sum": None}  # type: ignore[assignment]
-
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        if box["sink_sum"] is None:
-            r = vertices.agg(
-                F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias("s")
-            ).collect()[0]
-            box["sink_sum"] = float(r["s"] or 0.0)
-        sink_sum = box["sink_sum"]
-
-        msgs = e.join(
-            vertices.select(F.col("id").alias("src"), "rank").hint("shuffle_hash"),
-            "src",
-        ).select("dst", (F.col("rank") * F.col("weight")).alias("msg"))
-        gathered = gather_messages(msgs, [("msg", "sum")], key="dst", salt=salt)
-        restart = F.when(
-            F.col("is_source"), F.lit((t + (1.0 - t) * sink_sum) * pref)
-        ).otherwise(F.lit(0.0))
-        new_rank = (
-            F.lit(1.0 - t) * F.coalesce(F.col("msg"), F.lit(0.0)) + restart
-        )
-        new_state = (
-            vertices.join(
-                gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
-                "id",
-                "left",
-            )
-            .select(
-                "id",
-                new_rank.alias("rank"),
-                "is_sink",
-                "is_source",
-                (new_rank - F.col("rank")).alias("_delta"),
-            )
-            .persist()
-        )
-        row = new_state.agg(
-            F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias("s"),
-            F.sum(F.abs(F.col("_delta"))).alias("l1"),
-        ).collect()[0]
-        box["sink_sum"] = float(row["s"] or 0.0)
-        return new_state, {"l1": float(row["l1"]), "sink_sum": box["sink_sum"]}
-
-    halt = None
-    if tolerance is not None:
-        halt = lambda stats, i: stats["l1"] < tolerance  # noqa: E731
-
-    run = run_supersteps(
-        spark, state, step, max_supersteps=max_supersteps, halt=halt, verbose=verbose
-    )
-    e.unpersist()
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "rank"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
+    # pagerank's set-up: window-normalized out-weights, one groupBy for
+    # ids and sinks; the teleport weight ``tele`` is the source preference
+    e, state = _init_piece(edges, num_partitions, weighted=weighted)
+    pref = F.when(F.col("id").isin(srcs), F.lit(1.0 / len(srcs))).otherwise(F.lit(0.0))
+    setup_cut = state.select(
+        "id", pref.alias("rank"), "is_sink", pref.alias("tele")
+    ).localCheckpoint(eager=False)
+    srow = _setup_sums(setup_cut)
+    return _rank_loop(
+        spark, home, e, setup_cut, setup_cut, int(srow["n"]),
+        (float(srow["mass"] or 0.0), float(srow["sink_mass"] or 0.0)),
+        damping=1.0 - float(teleport), salt=salt, tele=True,
+        max_supersteps=max_supersteps, tolerance=tolerance, convergence="l1",
+        verbose=verbose,
     )
 
 
@@ -210,102 +134,63 @@ def ppr_batch(
     analog: per-source RandomWalkWithRestartComputation re-run per
     seed; the batching is the Spark-side win.
     """
+    if not seeds:
+        raise ValueError("ppr_batch needs at least one seed")
     home = edges.sparkSession
     spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if not seeds:
-        raise ValueError("ppr_batch needs at least one seed")
-    t = float(teleport)
-
-    deg = out_degrees(edges)
-    e = (
-        edges.select("src", "dst")
-        .join(deg, "src")
-        .withColumn("weight", F.lit(1.0) / F.col("out_degree").cast("double"))
-        .drop("out_degree")
-        .repartition(num_partitions, "src")
-        .persist()
+    d = 1.0 - float(teleport)
+    e, state = _init_piece(edges, num_partitions)
+    # one row per (seed, vertex): an explode of the seed literals, no
+    # cross join (whose broadcast would be a job of its own)
+    seed_ids = F.array(*[F.lit(int(s)).cast("long") for s in seeds])
+    at_seed = F.when(F.col("id") == F.col("seed"), F.lit(1.0)).otherwise(F.lit(0.0))
+    setup_cut = (
+        state.select(F.explode(seed_ids).alias("seed"), "id", "is_sink")
+        .select("seed", "id", at_seed.alias("rank"), "is_sink", at_seed.alias("tele"))
+        .localCheckpoint(eager=False)
     )
-    verts = vertices_from_edges(edges)
-    sinks = verts.join(
-        edges.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-    )
-    seed_df = spark.createDataFrame([(int(s),) for s in seeds], "seed long")
-    state = (
-        verts.join(sinks.withColumn("is_sink", F.lit(True)), "id", "left")
-        .crossJoin(F.broadcast(seed_df))
-        .select(
-            "seed",
-            "id",
-            F.when(F.col("id") == F.col("seed"), F.lit(1.0))
-            .otherwise(F.lit(0.0))
-            .alias("rank"),
-            F.coalesce("is_sink", F.lit(False)).alias("is_sink"),
-        )
-        .repartition(num_partitions, "id")
-    )
+    # the set-up aggregate fills the cut: each seed's sink mass
+    sink_mass = F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0)))
+    sinks = {
+        int(r["seed"]): float(r["s"] or 0.0)
+        for r in setup_cut.groupBy("seed").agg(sink_mass.alias("s")).collect()
+    }
 
-    box: dict[int, float] = {}
+    def scalars(sinks: dict[int, float]) -> dict[str, str]:
+        # each seed's teleport + sink mass, as a map literal keyed by seed;
+        # D-suffixed doubles: a map's values must share one type
+        pairs = (f"{int(s)}L, {d * sinks.get(int(s), 0.0) + (1.0 - d)!r}D" for s in seeds)
+        return {"base": f"map({', '.join(pairs)})"}
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        if not box:
-            for r in (
-                vertices.where("is_sink").groupBy("seed").agg(
-                    F.sum("rank").alias("s")
-                ).collect()
-            ):
-                box[int(r["seed"])] = float(r["s"] or 0.0)
-        msgs = e.join(
-            vertices.select("seed", F.col("id").alias("src"), "rank").hint(
-                "shuffle_hash"
-            ),
-            "src",
-        ).select("seed", "dst", (F.col("rank") * F.col("weight")).alias("msg"))
-        gathered = gather_messages(
-            msgs, [("msg", "sum")], key=["seed", "dst"], salt=salt
-        )
-        sink_expr = F.create_map(
-            *[x for s in seeds for x in (F.lit(int(s)), F.lit(box.get(int(s), 0.0)))]
-        )
-        restart = F.when(
-            F.col("id") == F.col("seed"),
-            F.lit(t) + F.lit(1.0 - t) * F.element_at(sink_expr, F.col("seed")),
-        ).otherwise(F.lit(0.0))
-        new_rank = F.lit(1.0 - t) * F.coalesce(F.col("msg"), F.lit(0.0)) + restart
-        new_state = (
-            vertices.join(
-                gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
-                ["seed", "id"],
-                "left",
-            )
-            .select(
-                "seed",
-                "id",
-                new_rank.alias("rank"),
-                "is_sink",
-                (new_rank - F.col("rank")).alias("_delta"),
-            )
-            .persist()
-        )
-        rows = new_state.groupBy("seed").agg(
-            F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias("s"),
-            F.sum(F.abs(F.col("_delta"))).alias("l1"),
-        ).collect()
-        l1_max = 0.0
-        for r in rows:
-            box[int(r["seed"])] = float(r["s"] or 0.0)
-            l1_max = max(l1_max, float(r["l1"]))
-        return new_state, {"l1_max": l1_max}
+    def update(row, _scalars):
+        sinks = {int(k): float(v) for k, v in (row["sinks"] or {}).items()}
+        return {"l1_max": float(row["l1_max"] or 0.0)}, scalars(sinks)
+
+    # pagerank's rank step keyed by (seed, id): the gather keeps the seed
+    rank = f"{d!r} * coalesce(g.msg, 0.0) + v.tele * element_at({{base}}, v.seed)"
+    step_sql = "WITH " + gather_cte(
+        "pprb_edges", "pprb_state", "v.rank * e.weight", salt=salt, by=("seed",)
+    ) + f"""
+      SELECT /*+ SHUFFLE_HASH(g) */ v.seed, v.id, {rank} AS rank, v.is_sink, v.tele,
+             {rank} - v.rank AS _delta
+      FROM pprb_state v LEFT JOIN g ON v.seed = g.seed AND v.id = g.dst"""
+    agg_sql = """
+      SELECT max(l1) AS l1_max, map_from_entries(collect_list(struct(seed, s))) AS sinks
+      FROM (SELECT seed, sum(CASE WHEN is_sink THEN rank ELSE 0.0 END) AS s,
+                   sum(abs(_delta)) AS l1
+            FROM pprb_new GROUP BY seed)"""
 
     halt = None
     if tolerance is not None:
         halt = lambda stats, i: stats["l1_max"] < tolerance  # noqa: E731
 
-    run = run_supersteps(
-        spark, state, step, max_supersteps=max_supersteps, halt=halt, verbose=verbose
+    run = run_sql_supersteps(
+        spark, setup_cut, ("pprb_state", "pprb_new"), {"pprb_edges": e}, step_sql,
+        agg_sql, update, scalars(sinks), max_supersteps=max_supersteps, halt=halt,
+        verbose=verbose,
     )
-    e.unpersist()
     return PregelRun(
         vertices=rebind(run.vertices.select("seed", "id", "rank"), home),
         supersteps=run.supersteps,

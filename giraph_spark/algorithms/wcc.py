@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, engine_session, rebind, run_supersteps
+from giraph_spark.pregel import PregelRun, engine_session, gather_cte, rebind, run_sql_supersteps
 
 
 def connected_components(
@@ -94,54 +94,19 @@ def connected_components(
             )
         )
 
-    # ONE spark.sql() text per superstep instead of ~ten DataFrame-API
-    # py4j round trips — same rationale and measurement as the PageRank
-    # step (pagerank.py: ~117 ms/superstep of pure plan-building py4j).
-    # SHUFFLE_HASH(v): stream the static cached edge table, hash-build
-    # the shrinking changed-frontier — sort-merge would re-sort the
-    # edges each round. The salted variant is gather_messages' retry-
-    # safe content-hashed two-level min (pregel.py:104-114) in SQL.
-    e.createOrReplaceTempView(ev)
-    if salt and salt > 1:
-        gather_cte = f"""m AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.component AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-        WHERE v.changed
-      ),
-      s1 AS (
-        SELECT dst, min(msg) AS msg
-        FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
-      ),
-      g AS (SELECT dst, min(msg) AS msg FROM s1 GROUP BY dst)"""
-    else:
-        gather_cte = f"""g AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, min(v.component) AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
-        WHERE v.changed
-        GROUP BY e.dst
-      )"""
-    step_sql = (
-        "WITH " + gather_cte + f"""
+    # the changed-frontier gather (send-on-change) and a min update
+    step_sql = "WITH " + gather_cte(
+        ev, sv, "v.component", fn="min", where="v.changed", salt=salt
+    ) + f"""
       SELECT /*+ SHUFFLE_HASH(g) */ v.id,
              least(v.component, coalesce(g.msg, v.component)) AS component,
              (coalesce(g.msg, v.component) < v.component) AS changed
       FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
-    )
     count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        vertices.createOrReplaceTempView(sv)
-        # lazy cut: the frontier-count action below writes the checkpoint
-        # blocks in the same job, and the loop adopts it
-        new_state = spark.sql(step_sql).localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        row = spark.sql(count_sql).collect()[0]
-        return new_state, {"changed": int(row["c"] or 0)}
-
-    run = run_supersteps(
-        spark,
-        state,
-        step,
+    run = run_sql_supersteps(
+        spark, state, (sv, nv), {ev: e}, step_sql, count_sql,
+        lambda row, _: ({"changed": int(row["c"] or 0)}, {}),
         max_supersteps=max_supersteps,
         halt=lambda stats, i: stats["changed"] == 0,
         checkpoint_dir=checkpoint_dir,
@@ -149,7 +114,6 @@ def connected_components(
         resume=resume,
         verbose=verbose,
     )
-    e.unpersist()
     return PregelRun(
         vertices=rebind(run.vertices.select("id", "component"), home),
         supersteps=run.supersteps,

@@ -654,7 +654,7 @@ def phrase_match(docs: DataFrame, phrases: list[str]) -> DataFrame:
             "doc_id", F.posexplode(toks).alias("pos0", "token"), toks.alias("_t")
         )
         gram = F.concat_ws(
-            " ", *[F.col("_t").getItem(F.col("pos0") + i) for i in range(n)]
+            " ", *[F.get("_t", F.col("pos0") + i) for i in range(n)]
         )
         hits = (
             base.where(F.col("pos0") + n <= F.size("_t"))

@@ -464,16 +464,12 @@ def test_katz_matches_numpy_iteration(spark):
         assert abs(got[v] - x[idx[v]]) < 1e-9, v
     assert run.supersteps == 7
 
-    # tolerance halt + salted run identical
+    # tolerance halt
     t = katz_centrality(spark, e, max_supersteps=60, tolerance=1e-12)
     assert t.converged and t.supersteps < 60
-    s = katz_centrality(spark, e, alpha=0.05, max_supersteps=7, salt=4)
-    sv = {r.id: r.katz for r in s.vertices.collect()}
-    for v in ids:
-        assert abs(sv[v] - got[v]) < 1e-12
 
 
-def test_hits_tolerance_halts_and_salt_identical(spark):
+def test_hits_tolerance_halts(spark):
     from giraph_spark.algorithms.hits import hits
 
     n = 40
@@ -483,14 +479,53 @@ def test_hits_tolerance_halts_and_salt_identical(spark):
     run = hits(spark, e, max_supersteps=50, tolerance=1e-12)
     assert run.converged and run.supersteps < 50
 
-    base = hits(spark, e, max_supersteps=4)
-    salted = hits(spark, e, max_supersteps=4, salt=4)
-    b = {r.id: (r.auth, r.hub) for r in base.vertices.collect()}
-    s = {r.id: (r.auth, r.hub) for r in salted.vertices.collect()}
-    assert b.keys() == s.keys()
-    for k in b:
-        assert abs(b[k][0] - s[k][0]) < 1e-12
-        assert abs(b[k][1] - s[k][1]) < 1e-12
+
+def _alg_fn(module: str, name: str):
+    import importlib
+
+    return getattr(importlib.import_module(f"giraph_spark.algorithms.{module}"), name)
+
+
+def _pairs(n: int, m: int, a: int, b: int, c: int, d: int) -> list[tuple[int, int]]:
+    rows = sorted({((i * a + b) % n, (i * c + d) % n) for i in range(m)})
+    return [(u, v) for u, v in rows if u != v]
+
+
+# caller -> (edge pairs, key columns, call(spark, edges, salt) -> result frame)
+_SALT_PARITY = {
+    "ppr": (_pairs(50, 180, 7, 3, 23, 11), ["id"], lambda s, e, salt: _alg_fn(
+        "ppr", "personalized_pagerank")(s, e, [3, 10], max_supersteps=8, tolerance=None, salt=salt)),
+    "ppr_batch": (_pairs(50, 180, 7, 3, 23, 11), ["seed", "id"], lambda s, e, salt: _alg_fn(
+        "ppr", "ppr_batch")(s, e, [3, 10], max_supersteps=8, tolerance=None, salt=salt)),
+    "eigenvector": (_pairs(50, 180, 7, 3, 23, 11), ["id"], lambda s, e, salt: _alg_fn(
+        "hits", "eigenvector_centrality")(s, e, max_supersteps=6, salt=salt)),
+    "salsa": (_pairs(50, 180, 7, 3, 23, 11), ["id"], lambda s, e, salt: _alg_fn(
+        "hits", "salsa")(s, e, max_supersteps=6, salt=salt)),
+    "hits": (_pairs(40, 150, 3, 2, 17, 5), ["id"], lambda s, e, salt: _alg_fn(
+        "hits", "hits")(s, e, max_supersteps=4, salt=salt)),
+    "katz": (_pairs(50, 180, 7, 3, 23, 11), ["id"], lambda s, e, salt: _alg_fn(
+        "hits", "katz_centrality")(s, e, alpha=0.05, max_supersteps=7, salt=salt)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SALT_PARITY))
+def test_salted_gather_equals_unsalted(spark, name):
+    """salt=4 (the two-level content-salted gather) gives the unsalted
+    result to 1e-12 on every value column."""
+    rows, keys, call = _SALT_PARITY[name]
+    e = spark.createDataFrame(rows, "src long, dst long")
+
+    def values(salt):
+        return {
+            tuple(r[k] for k in keys): [v for c, v in r.asDict().items() if c not in keys]
+            for r in call(spark, e, salt).vertices.collect()
+        }
+
+    plain, salted = values(None), values(4)
+    assert plain and plain.keys() == salted.keys()
+    for k, vals in plain.items():
+        for a, b in zip(vals, salted[k], strict=True):
+            assert abs(a - b) < 1e-12, (name, k, a, b)
 
 
 def test_random_walks_deterministic_and_valid(spark):

@@ -342,12 +342,29 @@ def test_loop_adopts_materialized_input_cut(spark):
     assert input_id not in _persistent_rdd_ids(spark.sparkContext)
 
 
+# the power-iteration callers at 5 supersteps -> PregelRun
+_SQL_STEP_JOB_CALLS = {
+    "ppr": lambda s, e: _alg("ppr").personalized_pagerank(
+        s, e, [0, 3], max_supersteps=5, tolerance=None
+    ),
+    "trustrank": lambda s, e: _alg("ppr").trustrank(s, e, [0, 3], max_supersteps=5),
+    "ppr_batch": lambda s, e: _alg("ppr").ppr_batch(
+        s, e, [0, 3, 7], max_supersteps=5, tolerance=None
+    ),
+    "hits": lambda s, e: _alg("hits").hits(s, e, max_supersteps=5),
+    "eigenvector": lambda s, e: _alg("hits").eigenvector_centrality(s, e, max_supersteps=5),
+    "salsa": lambda s, e: _alg("hits").salsa(s, e, max_supersteps=5),
+    "katz": lambda s, e: _alg("hits").katz_centrality(s, e, max_supersteps=5),
+}
+
+
 def test_engine_calls_setup_is_one_job(spark, tmp_path):
     """Each SQL-text engine call plans its set-up without AQE and folds it
     into one job: a 5-superstep PageRank issues at most 1 + 5 Spark jobs,
-    WCC and LPA at most one per superstep plus one. A snapshot is one
-    write job: snapshotting every 3 supersteps adds 2 (at 3 and the final
-    5), and the resume to superstep 7 is at most 7 jobs."""
+    WCC, LPA and the power-iteration family (PPR, TrustRank, ppr_batch,
+    HITS, eigenvector, SALSA, Katz) at most one per superstep plus one. A
+    snapshot is one write job: snapshotting every 3 supersteps adds 2 (at
+    3 and the final 5), and the resume to superstep 7 is at most 7 jobs."""
     from giraph_spark.algorithms import label_propagation, max_label_propagation
 
     sc = spark.sparkContext
@@ -377,6 +394,10 @@ def test_engine_calls_setup_is_one_job(spark, tmp_path):
     assert n <= run.supersteps + 1, (n, run.supersteps)
     run, n = jobs("jobs-maxlp", lambda: max_label_propagation(spark, edges, max_supersteps=5))
     assert n <= run.supersteps + 1, (n, run.supersteps)
+    # the power-iteration family: one set-up job, one job per superstep
+    for name, call in _SQL_STEP_JOB_CALLS.items():
+        run, n = jobs(f"jobs-{name}", lambda: call(spark, edges))
+        assert run.supersteps == 5 and n <= run.supersteps + 1, (name, n, run.supersteps)
 
 
 def test_engine_calls_restore_callers_aqe(spark):
@@ -546,6 +567,43 @@ _HAND_ROLLED_LOOPS = {
     "deadlock": (lambda s, e: _alg("deadlock").bracha_toueg_free(s, e, 0).vertices, 1),
     "trussness": (lambda s, e: _alg("kcore").trussness(s, e), 1),
 }
+
+
+def _weighted(e):
+    return e.withColumn("weight", (F.col("src") * 7 + F.col("dst")) % 5 + 1.0)
+
+
+# SQL-text superstep caller -> call(spark, edges) -> result frame; the
+# result owns its loop's last cut and nothing else
+_SQL_STEP_CALLERS = {
+    "ppr": lambda s, e: _alg("ppr").personalized_pagerank(s, e, [0, 3], max_supersteps=5),
+    "ppr_weighted": lambda s, e: _alg("ppr").personalized_pagerank(
+        s, _weighted(e), [0, 3], max_supersteps=5, weighted=True
+    ),
+    "trustrank": lambda s, e: _alg("ppr").trustrank(s, e, [0, 3], max_supersteps=5),
+    "ppr_batch": lambda s, e: _alg("ppr").ppr_batch(s, e, [0, 3, 7], max_supersteps=5),
+    "local_community": lambda s, e: _alg("ppr").local_community(s, e, seed=0),
+    "hits": lambda s, e: _alg("hits").hits(s, e, max_supersteps=5),
+    "eigenvector": lambda s, e: _alg("hits").eigenvector_centrality(s, e, max_supersteps=5),
+    "salsa": lambda s, e: _alg("hits").salsa(s, e, max_supersteps=5),
+    "katz": lambda s, e: _alg("hits").katz_centrality(s, e, max_supersteps=5),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SQL_STEP_CALLERS))
+def test_sql_step_caller_frees_its_cuts(spark, name):
+    """A SQL-text superstep caller on the 60-vertex graph leaves at most
+    one more persistent RDD registered (the result's cut): its edge
+    caches, set-up cut and superstep cuts are freed, and the result still
+    reads."""
+    sc = spark.sparkContext
+    edges = _edges_df(spark, _random_digraph(11, 60, 240))
+    before = _persistent_rdd_ids(sc)
+    result = _SQL_STEP_CALLERS[name](spark, edges)
+    result = getattr(result, "vertices", result)
+    grown = _persistent_rdd_ids(sc) - before
+    assert len(grown) <= 1, (name, sorted(grown))
+    assert result.count() > 0
 
 
 @pytest.mark.parametrize("name", sorted(_HAND_ROLLED_LOOPS))

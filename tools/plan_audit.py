@@ -7,7 +7,8 @@ scale-critical properties the docs claim:
 - no CartesianProduct / BroadcastNestedLoopJoin anywhere in the hot set
 - the PageRank superstep joins are ShuffledHashJoin (static edge side
   never re-sorted), and the gather aggregate has a partial_ (map-side
-  combine) phase
+  combine) phase — also in the step texts the engine sends for pagerank
+  and for HITS's two-gather step
 - the triangle wedge join is degeneracy-oriented (no raw sym self-join)
 - the PageRank set-up plan has no BroadcastExchange, and on a bucketed
   input no Exchange on the edge side
@@ -37,6 +38,29 @@ def explain_str(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def engine_step_plan(call) -> str:
+    """explain("formatted") of the first superstep text (a ``WITH``
+    query) that ``call`` sends to ``spark.sql``, planned in its engine
+    session while the step's views are bound."""
+    from pyspark.sql import SparkSession
+
+    plans: list[str] = []
+    sql = SparkSession.sql
+
+    def recording(self, query, *args, **kwargs):
+        df = sql(self, query, *args, **kwargs)
+        if not plans and query.lstrip().startswith("WITH"):
+            plans.append(explain_str(df))
+        return df
+
+    SparkSession.sql = recording
+    try:
+        call()
+    finally:
+        SparkSession.sql = sql
+    return plans[0]
 
 
 def main() -> None:
@@ -80,30 +104,29 @@ def main() -> None:
     checks.append(("pagerank: no nested-loop/cartesian",
                    "NestedLoop" not in p and "Cartesian" not in p, p))
 
-    # 2b. the LIVE SQL-text superstep (round 5: pagerank/wcc/lpa ship
-    # each superstep as one spark.sql string) — same plan properties
-    # must hold: both joins ShuffledHashJoin, map-side partial sum,
-    # no nested-loop/cartesian
-    e.createOrReplaceTempView("audit_edges")
-    state = ranks.withColumn("is_sink", F.lit(False))
-    state.createOrReplaceTempView("audit_state")
-    step = spark.sql("""
-      WITH g AS (
-        SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, sum(v.rank * e.weight) AS msg
-        FROM audit_edges e JOIN audit_state v ON e.src = v.id
-        GROUP BY e.dst
-      )
-      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-             0.85 * coalesce(g.msg, 0.0) + 0.15 AS rank,
-             v.is_sink,
-             0.85 * coalesce(g.msg, 0.0) + 0.15 - v.rank AS _delta
-      FROM audit_state v LEFT JOIN g ON v.id = g.dst""")
-    p = explain_str(step)
+    # 2b. the LIVE SQL-text superstep: the step text run_sql_supersteps
+    # sends for pagerank — both joins ShuffledHashJoin, map-side partial
+    # sum, no nested-loop/cartesian
+    from giraph_spark.algorithms.hits import hits
+    from giraph_spark.algorithms.pagerank import pagerank
+
+    p = engine_step_plan(lambda: pagerank(spark, edges, max_supersteps=1))
     checks.append(("sql-text superstep: BOTH joins ShuffledHashJoin",
                    p.count("ShuffledHashJoin") >= 2, p))
     checks.append(("sql-text superstep: map-side partial aggregate",
                    "partial_sum" in p, p))
     checks.append(("sql-text superstep: no nested-loop/cartesian",
+                   "NestedLoop" not in p and "Cartesian" not in p, p))
+
+    # 2d. HITS's two-gather step (auth over the forward edges, hub over
+    # the reversed edges from the new auth, CTEs of one statement)
+    p = engine_step_plan(lambda: hits(spark, edges, max_supersteps=1))
+    checks.append(("hits two-gather superstep: every join ShuffledHashJoin",
+                   p.count("ShuffledHashJoin") >= 4 and "SortMergeJoin" not in p
+                   and "BroadcastHashJoin" not in p, p))
+    checks.append(("hits two-gather superstep: map-side partial aggregate",
+                   "partial_sum" in p, p))
+    checks.append(("hits two-gather superstep: no nested-loop/cartesian",
                    "NestedLoop" not in p and "Cartesian" not in p, p))
 
     # 2c. PageRank set-up: one job with no broadcast (the out-degree is a
