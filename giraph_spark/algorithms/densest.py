@@ -17,22 +17,24 @@ Reference analog: none (the reference has no densest-subgraph app); the
 peel-by-threshold shape matches its k-core style of iterated filtering.
 
 Scale notes: the symmetric edge table is hash-partitioned on ``src``
-once and cached; every round reuses it with two semi-joins against the
-shrinking alive set (broadcast once the survivor set is small). One agg
-action per round computes (n, m); the state DataFrame carries
-``removal_round`` and is lineage-cut per round via the shared
-superstep loop.
+once and cached. The state (id, removal_round, deg) carries each alive
+vertex's degree inside the alive set. ONE set-up aggregate fills the
+initial lazy cut and gives round 1's (n, m); each round is then one SQL
+text: remove ``deg <= thr``, recount the survivors' degrees (edges
+joined to the alive set on both ends, shuffle-hash joins), and its
+aggregate — one Spark job per round — gives the next round's (n, m).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from giraph_spark.graph import clean_symmetric, vertices_from_edges
-from giraph_spark.pregel import engine_session, rebind, run_supersteps
+from giraph_spark.graph import clean_symmetric
+from giraph_spark.pregel import engine_session, rebind, run_sql_supersteps
 
 
 @dataclass
@@ -71,78 +73,60 @@ def densest_subgraph(
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     factor = 2.0 * (1.0 + float(eps))
 
-    sym = (
-        clean_symmetric(edges)
-        .repartition(num_partitions, "src")
-        .persist()
+    sym = clean_symmetric(edges).repartition(num_partitions, "src").persist()
+    # round 1's state: every vertex (a src of the symmetric table) alive
+    # with its full degree. The set-up aggregate fills this lazy cut and
+    # the edge cache under it, and gives round 1's n and 2m
+    state = (
+        sym.groupBy(F.col("src").alias("id"))
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .select("id", F.lit(None).cast("int").alias("removal_round"), "deg")
+        .localCheckpoint(eager=False)
     )
-    state = vertices_from_edges(sym).select(
-        "id", F.lit(None).cast("int").alias("removal_round")
-    )
+    row = state.agg(F.count(F.lit(1)).alias("n"), F.sum("deg").alias("m2")).collect()[0]
 
-    history: list[dict[str, float]] = []
+    def scalars(n: int, m2: int, rnd: int) -> dict[str, Any]:
+        rho = (m2 / 2) / n if n else 0.0
+        return {"round": rnd, "n": n, "m2": m2, "rho": rho, "thr": factor * rho}
 
-    def step(vertices: DataFrame, superstep: int):
-        alive = vertices.where(F.col("removal_round").isNull()).select("id")
-        deg = (
-            sym.join(alive.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
-            .join(alive.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        scored = vertices.join(deg, "id", "left").select(
-            "id",
-            "removal_round",
-            F.when(F.col("removal_round").isNull(), F.coalesce("deg", F.lit(0)))
-            .alias("deg"),
-        )
-        scored = scored.persist()
-        row = scored.agg(
-            F.count(F.when(F.col("removal_round").isNull(), 1)).alias("n"),
-            F.sum(F.coalesce("deg", F.lit(0))).alias("m2"),
-        ).collect()[0]
-        n, m2 = int(row["n"]), int(row["m2"] or 0)
-        if n == 0:
-            scored.unpersist()
-            return vertices, {"n": 0, "m": 0, "rho": 0.0, "removed": 0}
-        rho = (m2 / 2) / n
-        thr = factor * rho
-        new_state = scored.select(
-            "id",
-            F.when(
-                F.col("removal_round").isNull() & (F.col("deg") <= F.lit(thr)),
-                F.lit(superstep + 1),
-            )
-            .otherwise(F.col("removal_round"))
-            .cast("int")
-            .alias("removal_round"),
-        )
-        # materialize the new state before dropping the scored cache
-        stats_row = new_state.persist().agg(
-            F.count(F.when(F.col("removal_round").isNull(), 1)).alias("alive")
-        ).collect()[0]
-        scored.unpersist()
-        history.append(
-            {"round": superstep + 1, "n": n, "m": m2 // 2, "rho": rho}
-        )
-        return new_state, {
-            "n": n,
-            "m": m2 // 2,
-            "rho": rho,
-            "alive": int(stats_row["alive"]),
+    # a round: remove deg <= thr (a D-suffixed literal compares as a
+    # double, as the Python replay does), then recount the degrees
+    # among the survivors
+    step_sql = """WITH a AS (
+        SELECT id,
+               CASE WHEN removal_round IS NULL AND deg <= {thr!r}D THEN {round}
+                    ELSE removal_round END AS removal_round
+        FROM ds_state
+      ),
+      s AS (SELECT id FROM a WHERE removal_round IS NULL),
+      d AS (
+        SELECT /*+ SHUFFLE_HASH(s), SHUFFLE_HASH(t) */ e.src AS id, count(1) AS deg
+        FROM ds_edges e JOIN s ON e.src = s.id JOIN s t ON e.dst = t.id
+        GROUP BY e.src
+      )
+      SELECT /*+ SHUFFLE_HASH(d) */ a.id, a.removal_round, coalesce(d.deg, 0) AS deg
+      FROM a LEFT JOIN d ON a.id = d.id"""
+    agg_sql = """SELECT count(CASE WHEN removal_round IS NULL THEN 1 END) AS n,
+      sum(deg) AS m2 FROM ds_new"""
+
+    def update(row, sc: dict[str, Any]) -> tuple[dict[str, Any], dict[str, Any]]:
+        alive = int(row["n"])
+        stats = {
+            "round": sc["round"], "n": sc["n"], "m": sc["m2"] // 2, "rho": sc["rho"],
+            "alive": alive,
         }
+        return stats, scalars(alive, int(row["m2"] or 0), sc["round"] + 1)
 
-    run = run_supersteps(
-        spark,
-        state,
-        step,
-        max_supersteps=max_rounds,
-        halt=lambda stats, i: stats.get("alive", stats.get("n", 0)) == 0,
+    first = scalars(int(row["n"]), int(row["m2"] or 0), 1)
+    run = run_sql_supersteps(
+        spark, state, ("ds_state", "ds_new"), {"ds_edges": sym}, step_sql, agg_sql, update,
+        first,
+        max_supersteps=max_rounds if first["n"] else 0,  # an empty graph has no round
+        halt=lambda stats, i: stats["alive"] == 0,
     )
-    sym.unpersist()
 
-    if history:
-        best = max(history, key=lambda h: (h["rho"], -h["round"]))
+    if run.history:
+        best = max(run.history, key=lambda h: (h["rho"], -h["round"]))
         best_round, best_density = int(best["round"]), float(best["rho"])
     else:  # empty graph
         best_round, best_density = 0, 0.0
@@ -161,5 +145,5 @@ def densest_subgraph(
         best_density=best_density,
         best_round=best_round,
         rounds=run.supersteps,
-        history=history,
+        history=run.history,
     )

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, engine_session, gather_cte, rebind, run_sql_supersteps
+from giraph_spark.pregel import PregelRun, _relax, engine_session, gather_cte, rebind, run_sql_supersteps
 
 
 def label_propagation(
@@ -185,27 +185,15 @@ def max_label_propagation(
     spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ev, sv, nv = "maxlp_edges", "maxlp_state", "maxlp_new"
     e = edges.select("src", "dst").repartition(num_partitions, "src").persist()
 
     state = vertices_from_edges(e).select(
         "id", F.col("id").alias("label"), F.lit(True).alias("changed")
     )
 
-    # the WCC shape with max/greatest
-    step_sql = "WITH " + gather_cte(ev, sv, "v.label", fn="max", where="v.changed") + f"""
-      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-             greatest(v.label, coalesce(g.msg, v.label)) AS label,
-             (coalesce(g.msg, v.label) > v.label) AS changed
-      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
-    count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
-
-    run = run_sql_supersteps(
-        spark, state, (sv, nv), {ev: e}, step_sql, count_sql,
-        lambda row, _: ({"changed": int(row["c"] or 0)}, {}),
-        max_supersteps=max_supersteps,
-        halt=lambda stats, i: stats["changed"] == 0,
-        verbose=verbose,
+    run = _relax(
+        spark, state, "maxlp", e, "label", "v.label", "max",
+        max_supersteps=max_supersteps, verbose=verbose,
     )
     return PregelRun(
         vertices=rebind(run.vertices.select("id", "label"), home),

@@ -8,26 +8,20 @@ Reference semantics:
 - BFS ``giraph-block-app-8/.../algo/BreadthFirstSearch.java:58,72,116``:
   hop-distance propagation from one or many seeds.
 
-Spark shape: classic frontier relaxation — only vertices whose distance
-improved scatter next superstep (send-on-change = the active set).
+Spark shape: SSSP/BFS is the send-on-change relaxation WCC and max-label
+share (``pregel._relax``): only vertices whose distance improved scatter
+next superstep (the active set), and each superstep is one SQL text, one
+Spark job. The multi-seed BFS runs one SQL text per superstep too, over
+(seed, id) pairs; a full outer join adds the newly reached pairs.
 """
 
 from __future__ import annotations
-
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import vertices_from_edges
-from giraph_spark.pregel import (
-    PregelRun,
-    engine_session,
-    gather_messages,
-    materialize_count,
-    rebind,
-    run_supersteps,
-)
+from giraph_spark.pregel import PregelRun, _relax, _until_unchanged, engine_session, gather_cte, rebind
 
 _INF = float("inf")
 
@@ -93,40 +87,13 @@ def sssp(
             (F.col("changed") | F.coalesce("_f", F.lit(False))).alias("changed"),
         )
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        # inf-distance frontier vertices (possible under init_frontier)
-        # would only scatter inf messages — skip them
-        frontier = vertices.where(
-            F.col("changed") & (F.col("distance") != _INF)
-        ).select(F.col("id").alias("src"), "distance")
-        msgs = e.join(frontier.hint("shuffle_hash"), "src").select(
-            "dst", (F.col("distance") + F.col("w")).alias("msg")
-        )
-        gathered = gather_messages(msgs, [("msg", "min")], key="dst")
-        new_state = (
-            vertices.join(
-                gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
-                "id",
-                "left",
-            )
-            .select(
-                "id",
-                F.least("distance", F.coalesce("msg", "distance")).alias("distance"),
-                (F.coalesce("msg", "distance") < F.col("distance")).alias("changed"),
-            )
-            .persist()
-        )
-        return new_state, {"changed": materialize_count(new_state, "changed")}
-
-    run = run_supersteps(
-        spark,
-        state,
-        step,
-        max_supersteps=max_supersteps,
-        halt=lambda stats, i: stats["changed"] == 0,
-        verbose=verbose,
+    # inf-distance frontier vertices (possible under init_frontier)
+    # would only send inf messages: they do not scatter
+    run = _relax(
+        spark, state, "sssp", e, "distance", "v.distance + e.w", "min",
+        where="v.changed AND v.distance < double('Infinity')",
+        max_supersteps=max_supersteps, verbose=verbose,
     )
-    e.unpersist()
     return PregelRun(
         vertices=rebind(run.vertices.select("id", "distance"), home),
         supersteps=run.supersteps,
@@ -205,40 +172,19 @@ def multi_seed_distances(
         .repartition(num_partitions, "seed", "id")
     )
 
-    def step(vertices: DataFrame, superstep: int):
-        frontier = vertices.where("changed").select(
-            F.col("id").alias("src"), "seed", "dist"
-        )
-        msgs = e.join(frontier.hint("shuffle_hash"), "src").select(
-            "seed", "dst", (F.col("dist") + 1).alias("msg")
-        )
-        # min-combined per (seed, dst): the composite-key gather
-        gathered = msgs.groupBy("seed", "dst").agg(F.min("msg").alias("msg"))
-        new_state = (
-            vertices.join(
-                gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
-                ["seed", "id"],
-                "full_outer",
-            )
-            .select(
-                "seed",
-                "id",
-                F.coalesce("dist", "msg").alias("dist"),
-                F.col("dist").isNull().alias("changed"),  # newly reached pair
-            )
-            .persist()
-        )
-        return new_state, {"changed": materialize_count(new_state, "changed")}
-
-    run = run_supersteps(
-        spark,
-        state,
-        step,
-        max_supersteps=max_supersteps,
-        halt=lambda stats, i: stats["changed"] == 0,
-        verbose=verbose,
+    # min-combined per (seed, dst): the composite-key gather; the full
+    # outer join adds the newly reached pairs, which send next superstep
+    step_sql = "WITH " + gather_cte(
+        "msd_edges", "msd_state", "v.dist + 1", fn="min", where="v.changed", by=("seed",)
+    ) + """
+      SELECT /*+ SHUFFLE_HASH(g) */ coalesce(v.seed, g.seed) AS seed,
+             coalesce(v.id, g.dst) AS id,
+             coalesce(v.dist, g.msg) AS dist,
+             (v.dist IS NULL) AS changed
+      FROM msd_state v FULL OUTER JOIN g ON v.seed = g.seed AND v.id = g.dst"""
+    run = _until_unchanged(
+        spark, state, "msd", e, step_sql, max_supersteps=max_supersteps, verbose=verbose
     )
-    e.unpersist()
     return PregelRun(
         vertices=rebind(run.vertices.select("seed", "id", "dist"), home),
         supersteps=run.supersteps,

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, engine_session, gather_cte, rebind, run_sql_supersteps
+from giraph_spark.pregel import PregelRun, _relax, engine_session, rebind
 
 
 def connected_components(
@@ -65,7 +65,6 @@ def connected_components(
     spark, edges, init_components = engine_session(edges, init_components)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ev, sv, nv = "wcc_edges", "wcc_state", "wcc_new"
     if pre_partitioned:
         e = edges.select("src", "dst")
     else:
@@ -95,20 +94,9 @@ def connected_components(
         )
 
     # the changed-frontier gather (send-on-change) and a min update
-    step_sql = "WITH " + gather_cte(
-        ev, sv, "v.component", fn="min", where="v.changed", salt=salt
-    ) + f"""
-      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-             least(v.component, coalesce(g.msg, v.component)) AS component,
-             (coalesce(g.msg, v.component) < v.component) AS changed
-      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
-    count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
-
-    run = run_sql_supersteps(
-        spark, state, (sv, nv), {ev: e}, step_sql, count_sql,
-        lambda row, _: ({"changed": int(row["c"] or 0)}, {}),
+    run = _relax(
+        spark, state, "wcc", e, "component", "v.component", "min", salt=salt,
         max_supersteps=max_supersteps,
-        halt=lambda stats, i: stats["changed"] == 0,
         checkpoint_dir=checkpoint_dir,
         checkpoint_interval=checkpoint_interval,
         resume=resume,

@@ -198,17 +198,6 @@ def scatter_messages(
     return e.select("src", "dst").join(vm, "src").select("dst", "msg")
 
 
-def materialize_count(df: DataFrame, pred_col: str) -> int:
-    """ONE action that both materializes a just-``persist()``-ed state and
-    returns ``count(pred_col)`` — replaces the ``.where(pred).count()``
-    second job per superstep (the frontier-size aggregator); the scan that
-    fills the cache is the same scan that counts."""
-    row = df.agg(
-        F.sum(F.when(F.col(pred_col), 1).otherwise(0)).alias("c")
-    ).collect()[0]
-    return int(row["c"] or 0)
-
-
 # --- a private session per engine call -----------------------------------
 
 
@@ -485,7 +474,11 @@ def run_supersteps(
     un-cut derived plan, or a lazy cut the step's action never scanned)
     is cut eagerly here and the frame it cut is unpersisted. Either way
     the previous cut's blocks are then freed, the partition width is
-    bounded, and a snapshot is taken when due.
+    bounded, and a snapshot is taken when due. Every engine algorithm
+    issues its supersteps through :func:`run_sql_supersteps`, whose cuts
+    are always adopted; the eager cut serves only steps composed by
+    users (``blocks.run_block``, ``mutation.run_mutable_supersteps`` and
+    direct callers).
 
     The input follows the same rule: a ``vertices`` frame that is a cut
     already materialized (e.g. a lazy cut the caller's set-up aggregate
@@ -733,3 +726,57 @@ def run_sql_supersteps(
     finally:
         for df in edges.values():
             df.unpersist()
+
+
+def _until_unchanged(
+    spark: SparkSession,
+    state: DataFrame,
+    prefix: str,
+    edges: DataFrame,
+    step_sql: str,
+    **loop: Any,
+) -> PregelRun:
+    """:func:`run_sql_supersteps` for a step whose new state flags the
+    rows it ``changed``: the views are ``{prefix}_edges`` (``edges``),
+    ``{prefix}_state`` and ``{prefix}_new``, the aggregate counts the
+    changed rows, and the run halts once none changed (the master check
+    of ConnectedComponentsComputation.java:157-162)."""
+    return run_sql_supersteps(
+        spark, state, (f"{prefix}_state", f"{prefix}_new"), {f"{prefix}_edges": edges},
+        step_sql, f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {prefix}_new",
+        lambda row, _: ({"changed": int(row["c"] or 0)}, {}),
+        halt=lambda stats, i: stats["changed"] == 0,
+        **loop,
+    )
+
+
+def _relax(
+    spark: SparkSession,
+    state: DataFrame,
+    prefix: str,
+    edges: DataFrame,
+    col: str,
+    value: str,
+    fn: str,
+    where: str = "v.changed",
+    salt: int | None = None,
+    **loop: Any,
+) -> PregelRun:
+    """Send-on-change relaxation, the one vertex program of SSSP, WCC and
+    max-label (SimpleShortestPathsComputation.java:39-86,
+    ConnectedComponentsComputation.java:49-104, MaxComputation.java:30-47):
+    the state rows matching ``where`` (by default the ones that changed
+    last superstep) send ``value`` along their out-edges, each vertex
+    takes the ``fn`` (min or max) of its messages and its own ``col``,
+    and is ``changed`` when a message improved it. The state is (id,
+    ``col``, changed); views and halt are :func:`_until_unchanged`'s."""
+    pick, better = {"min": ("least", "<"), "max": ("greatest", ">")}[fn]
+    sv = f"{prefix}_state"
+    step_sql = "WITH " + gather_cte(
+        f"{prefix}_edges", sv, value, fn=fn, where=where, salt=salt
+    ) + f"""
+      SELECT /*+ SHUFFLE_HASH(g) */ v.id,
+             {pick}(v.{col}, coalesce(g.msg, v.{col})) AS {col},
+             (coalesce(g.msg, v.{col}) {better} v.{col}) AS changed
+      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
+    return _until_unchanged(spark, state, prefix, edges, step_sql, **loop)

@@ -361,8 +361,9 @@ _SQL_STEP_JOB_CALLS = {
 def test_engine_calls_setup_is_one_job(spark, tmp_path):
     """Each SQL-text engine call plans its set-up without AQE and folds it
     into one job: a 5-superstep PageRank issues at most 1 + 5 Spark jobs,
-    WCC, LPA and the power-iteration family (PPR, TrustRank, ppr_batch,
-    HITS, eigenvector, SALSA, Katz) at most one per superstep plus one. A
+    WCC, LPA, the power-iteration family (PPR, TrustRank, ppr_batch,
+    HITS, eigenvector, SALSA, Katz), SSSP, BFS, the multi-seed BFS and
+    the densest-subgraph peel at most one per superstep plus one. A
     snapshot is one write job: snapshotting every 3 supersteps adds 2 (at
     3 and the final 5), and the resume to superstep 7 is at most 7 jobs."""
     from giraph_spark.algorithms import label_propagation, max_label_propagation
@@ -398,6 +399,11 @@ def test_engine_calls_setup_is_one_job(spark, tmp_path):
     for name, call in _SQL_STEP_JOB_CALLS.items():
         run, n = jobs(f"jobs-{name}", lambda: call(spark, edges))
         assert run.supersteps == 5 and n <= run.supersteps + 1, (name, n, run.supersteps)
+    # the send-on-change and peel callers converge before 5 supersteps
+    for name in ("sssp", "bfs", "multi_seed", "densest"):
+        run, n = jobs(f"jobs-{name}", lambda: _SQL_STEP_CALLERS[name](spark, edges))
+        steps = run.rounds if name == "densest" else run.supersteps
+        assert n <= steps + 1, (name, n, steps)
 
 
 def test_engine_calls_restore_callers_aqe(spark):
@@ -587,6 +593,10 @@ _SQL_STEP_CALLERS = {
     "eigenvector": lambda s, e: _alg("hits").eigenvector_centrality(s, e, max_supersteps=5),
     "salsa": lambda s, e: _alg("hits").salsa(s, e, max_supersteps=5),
     "katz": lambda s, e: _alg("hits").katz_centrality(s, e, max_supersteps=5),
+    "sssp": lambda s, e: _alg("paths").sssp(s, _weighted(e), 0),
+    "bfs": lambda s, e: _alg("paths").bfs(s, e, 0),
+    "multi_seed": lambda s, e: _alg("paths").multi_seed_distances(s, e, [0, 3, 7]),
+    "densest": lambda s, e: _alg("densest").densest_subgraph(s, e),
 }
 
 
@@ -604,6 +614,32 @@ def test_sql_step_caller_frees_its_cuts(spark, name):
     grown = _persistent_rdd_ids(sc) - before
     assert len(grown) <= 1, (name, sorted(grown))
     assert result.count() > 0
+
+
+@pytest.mark.parametrize("name", ["sssp", "densest"])
+def test_sql_step_caller_frees_its_cuts_when_the_loop_raises(spark, monkeypatch, name):
+    """A SQL-text superstep caller whose loop raises at superstep 1 leaves
+    no persistent RDD behind: its edge cache and cuts are freed on the
+    exception path too."""
+    from giraph_spark import pregel
+
+    run_supersteps = pregel.run_supersteps
+
+    def raising(spark, state, step, **loop):
+        def step_or_raise(vertices, superstep):
+            if superstep == 1:
+                raise RuntimeError("superstep 1 fails")
+            return step(vertices, superstep)
+
+        return run_supersteps(spark, state, step_or_raise, **loop)
+
+    monkeypatch.setattr(pregel, "run_supersteps", raising)
+    sc = spark.sparkContext
+    edges = _edges_df(spark, _random_digraph(11, 60, 240))
+    before = _persistent_rdd_ids(sc)
+    with pytest.raises(RuntimeError, match="superstep 1 fails"):
+        _SQL_STEP_CALLERS[name](spark, edges)
+    assert _persistent_rdd_ids(sc) == before
 
 
 @pytest.mark.parametrize("name", sorted(_HAND_ROLLED_LOOPS))

@@ -96,8 +96,16 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
+    # oracle_sql() measures the decomposition oracles' unroll bounds in
+    # DuckDB, for every entry, before the first query runs
+    t0 = time.time()
     qs = entry_mod.queries()
+    t_queries = time.time() - t0
+    t0 = time.time()
     oracles = entry_mod.oracle_sql()
+    print(
+        f"set-up: queries() {t_queries:.1f}s oracle_sql() {time.time() - t0:.1f}s", flush=True
+    )
 
     def check_one(name, fn, cursor) -> tuple[bool, str]:
         """Run one queries() entry against its oracle; returns

@@ -7,8 +7,9 @@ scale-critical properties the docs claim:
 - no CartesianProduct / BroadcastNestedLoopJoin anywhere in the hot set
 - the PageRank superstep joins are ShuffledHashJoin (static edge side
   never re-sorted), and the gather aggregate has a partial_ (map-side
-  combine) phase — also in the step texts the engine sends for pagerank
-  and for HITS's two-gather step
+  combine) phase — also in the step texts the engine sends for pagerank,
+  for HITS's two-gather step, for the SSSP relaxation and for the
+  densest peel round
 - the triangle wedge join is degeneracy-oriented (no raw sym self-join)
 - the PageRank set-up plan has no BroadcastExchange, and on a bucketed
   input no Exchange on the edge side
@@ -128,6 +129,25 @@ def main() -> None:
                    "partial_sum" in p, p))
     checks.append(("hits two-gather superstep: no nested-loop/cartesian",
                    "NestedLoop" not in p and "Cartesian" not in p, p))
+
+    # 2e. the send-on-change relaxation (SSSP) and the densest peel
+    # round (edges joined to the alive set on both ends, then the update)
+    from giraph_spark.algorithms.densest import densest_subgraph
+    from giraph_spark.algorithms.paths import sssp
+
+    for name, call, partial in (
+        ("sssp relaxation superstep", lambda: sssp(spark, edges, 0, weight_col=None,
+                                                   max_supersteps=1), "partial_min"),
+        ("densest peel round", lambda: densest_subgraph(spark, edges, max_rounds=1),
+         "partial_count"),
+    ):
+        p = engine_step_plan(call)
+        checks.append((f"{name}: every join ShuffledHashJoin",
+                       "ShuffledHashJoin" in p and "SortMergeJoin" not in p
+                       and "BroadcastHashJoin" not in p, p))
+        checks.append((f"{name}: map-side {partial} aggregate", partial in p, p))
+        checks.append((f"{name}: no nested-loop/cartesian",
+                       "NestedLoop" not in p and "Cartesian" not in p, p))
 
     # 2c. PageRank set-up: one job with no broadcast (the out-degree is a
     # window, the sink flag one groupBy), and a bucketed input's edge side
