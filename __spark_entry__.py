@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from giraph_spark.algorithms.lpa import label_propagation, max_label_propagation
 from giraph_spark.algorithms.pagerank import pagerank
 from giraph_spark.algorithms.paths import bfs, sssp
-from giraph_spark.algorithms.triangles import triangle_list, triangles_per_vertex
+from giraph_spark.algorithms.triangles import triangle_count, triangles_per_vertex
 from giraph_spark.algorithms.wcc import connected_components
 from giraph_spark.algorithms.mis import luby_priority_sql
 from giraph_spark.corpus import (
@@ -1760,8 +1760,9 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_triangle_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return triangle_list(demo_edges(spark, sf_dir)).agg(
-        F.count(F.lit(1)).alias("n_triangles")
+    # triangle_count frees its oriented-edge cache before it returns
+    return spark.createDataFrame(
+        [(triangle_count(demo_edges(spark, sf_dir)),)], "n_triangles long"
     )
 
 

@@ -66,7 +66,7 @@ def main() -> None:
     # warm-ups run CONCURRENTLY on separate driver threads and the phase
     # costs max(a, b) instead of a + b (measured 11.2 s -> ~6 s). The
     # pagerank thread turns AQE off in its own cloned session only
-    # (pregel.engine_session), so the corpus count plans with the
+    # (pregel.engine_call), so the corpus count plans with the
     # session's conf whatever the interleaving.
     import threading
 

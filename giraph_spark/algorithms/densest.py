@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import clean_symmetric
-from giraph_spark.pregel import engine_session, rebind, run_sql_supersteps
+from giraph_spark.pregel import engine_call, run_sql_supersteps
 
 
 @dataclass
@@ -56,6 +56,7 @@ class DensestResult:
     history: list[dict[str, float]]
 
 
+@engine_call
 def densest_subgraph(
     spark: SparkSession,
     edges: DataFrame,
@@ -67,8 +68,6 @@ def densest_subgraph(
     (symmetrized, self-loops dropped). Deterministic: the removal
     threshold factor ``2*(1+eps)`` is computed once in IEEE double and
     every engine replaying the same comparisons peels identically."""
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     factor = 2.0 * (1.0 + float(eps))
@@ -141,7 +140,7 @@ def densest_subgraph(
         ).alias("in_densest"),
     )
     return DensestResult(
-        vertices=rebind(out, home),
+        vertices=out,
         best_density=best_density,
         best_round=best_round,
         rounds=run.supersteps,

@@ -35,15 +35,16 @@ Spark shape per superstep (same scale discipline as pagerank.py):
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import dedup_edges, vertices_from_edges
 from giraph_spark.pregel import (
     PregelRun,
-    engine_session,
+    engine_call,
     gather_cte,
-    rebind,
     run_sql_supersteps,
 )
 
@@ -99,22 +100,15 @@ def _hub_auth_sql(name: str, salt: int | None, auth_msg: str, hub_msg: str, extr
       FROM a LEFT JOIN g_h ON a.id = g_h.dst"""
 
 
-def _normalized(
-    run: PregelRun, home: SparkSession, init: dict[str, float], cols: dict[str, str]
-) -> PregelRun:
+def _normalized(run: PregelRun, init: dict[str, float], cols: dict[str, str]) -> PregelRun:
     """The result: each raw column divided by the last superstep's norm
     (``cols`` maps column -> stats key; ``init`` before any superstep)."""
     last = run.last_stats or init
-    return PregelRun(
-        vertices=rebind(
-            run.vertices.select(
-                "id", *[(F.col(c) / F.lit(last[k])).alias(c) for c, k in cols.items()]
-            ),
-            home,
+    return replace(
+        run,
+        vertices=run.vertices.select(
+            "id", *[(F.col(c) / F.lit(last[k])).alias(c) for c, k in cols.items()]
         ),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
     )
 
 
@@ -124,6 +118,7 @@ def _delta_halt(tolerance: float | None):
     return lambda stats, i: stats["delta"] < tolerance
 
 
+@engine_call
 def hits(
     spark: SparkSession,
     edges: DataFrame,
@@ -141,8 +136,6 @@ def hits(
     the angular movement of the power iteration); otherwise exactly
     ``max_supersteps`` iterations run (RepeatBlock semantics).
     """
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e_fwd, e_rev = _edge_tables(edges, num_partitions, reverse=True, weighted=False)
@@ -150,7 +143,7 @@ def hits(
     if n == 0:
         e_fwd.unpersist()
         e_rev.unpersist()
-        return PregelRun(vertices=rebind(state, home), supersteps=0, converged=True)
+        return PregelRun(vertices=state, supersteps=0, converged=True)
     init = {"na": n ** 0.5, "nh": n ** 0.5}
 
     # both squared norms + dot products with the previous unit vectors
@@ -173,9 +166,10 @@ def hits(
         {"hits_edges": e_fwd, "hits_edges_rev": e_rev}, step_sql, agg_sql, update, init,
         max_supersteps=max_supersteps, halt=_delta_halt(tolerance), verbose=verbose,
     )
-    return _normalized(run, home, init, {"auth": "na", "hub": "nh"})
+    return _normalized(run, init, {"auth": "na", "hub": "nh"})
 
 
+@engine_call
 def eigenvector_centrality(
     spark: SparkSession,
     edges: DataFrame,
@@ -196,15 +190,13 @@ def eigenvector_centrality(
     action per superstep; ``tolerance`` halts on angular movement
     1 - cos(x', x).
     """
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e_fwd, _ = _edge_tables(edges, num_partitions, reverse=False, weighted=False)
     state, n = _setup(e_fwd, num_partitions, ["score"])
     if n == 0:
         e_fwd.unpersist()
-        return PregelRun(vertices=rebind(state, home), supersteps=0, converged=True)
+        return PregelRun(vertices=state, supersteps=0, converged=True)
     init = {"norm": n ** 0.5}
 
     step_sql = "WITH " + gather_cte("eig_edges", "eig_state", "v.score / {norm}", salt=salt) + """
@@ -222,9 +214,10 @@ def eigenvector_centrality(
         update, init, max_supersteps=max_supersteps, halt=_delta_halt(tolerance),
         verbose=verbose,
     )
-    return _normalized(run, home, init, {"score": "norm"})
+    return _normalized(run, init, {"score": "norm"})
 
 
+@engine_call
 def salsa(
     spark: SparkSession,
     edges: DataFrame,
@@ -250,8 +243,6 @@ def salsa(
     degree-weighted edges exchanged once per orientation, two algebraic
     saltable gathers + ONE action per superstep.
     """
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # the degree normalizations are folded INTO the cached edge tables:
@@ -261,7 +252,7 @@ def salsa(
     if n == 0:
         e_fwd.unpersist()
         e_rev.unpersist()
-        return PregelRun(vertices=rebind(state, home), supersteps=0, converged=True)
+        return PregelRun(vertices=state, supersteps=0, converged=True)
     init = {"na": float(n), "nh": float(n)}
 
     # both L1 masses + L1 movement vs the previous vectors
@@ -282,9 +273,10 @@ def salsa(
         {"salsa_edges": e_fwd, "salsa_edges_rev": e_rev}, step_sql, agg_sql, update, init,
         max_supersteps=max_supersteps, halt=_delta_halt(tolerance), verbose=verbose,
     )
-    return _normalized(run, home, init, {"auth": "na", "hub": "nh"})
+    return _normalized(run, init, {"auth": "na", "hub": "nh"})
 
 
+@engine_call
 def katz_centrality(
     spark: SparkSession,
     edges: DataFrame,
@@ -316,8 +308,6 @@ def katz_centrality(
     and the optional tolerance halt reuses the SAME driver action that
     materializes the state (L1 movement), so no extra job.
     """
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e_fwd, _ = _edge_tables(edges, num_partitions, reverse=False, weighted=False)
@@ -337,9 +327,4 @@ def katz_centrality(
         lambda row, _: ({"delta": float(row["d"] or 0.0)}, {}),
         max_supersteps=max_supersteps, halt=_delta_halt(tolerance), verbose=verbose,
     )
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "katz"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "katz"))

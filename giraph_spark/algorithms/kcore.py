@@ -16,14 +16,19 @@ a handful); the edge set only shrinks, so late rounds are cheap.
 from __future__ import annotations
 
 import logging
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import LineageCuts, bare_checkpoint, engine_session, rebind
+from giraph_spark.pregel import LineageCuts, bare_checkpoint, engine_call
 
 _log = logging.getLogger("giraph_spark")
+
+# trussness: a removed-edge frontier up to this many rows is broadcast
+# into the wedge probe; a larger one joins by shuffle
+_BROADCAST_FRONTIER_MAX = 1_000_000
 
 
 def k_core(
@@ -277,28 +282,13 @@ def coreness(
         return (tail if result is None else result.union(tail)).localCheckpoint(eager=True)
 
 
-def _hadoop_rm(spark: SparkSession, path: str) -> None:
-    """Recursively delete ``path`` through the Hadoop FileSystem API —
-    works for local paths AND shared filesystems (HDFS/S3A), unlike
-    ``shutil``. Best-effort: failures are swallowed (scratch cleanup)."""
-    try:
-        jvm = spark._jvm  # noqa: SLF001
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-        fs.delete(hpath, True)
-    except Exception:  # noqa: BLE001
-        pass
-
-
+@engine_call
 def trussness(
     spark: SparkSession,
     edges: DataFrame,
     symmetrize_input: bool = True,
     num_partitions: int | None = None,
     max_rounds: int = 4000,
-    deep_cut_interval: int = 0,
-    deep_cut_dir: str | None = None,
-    broadcast_frontier_max: int = 1_000_000,
     verbose: bool = False,
     orient_frontier: bool | None = None,
 ) -> DataFrame:
@@ -323,7 +313,7 @@ def trussness(
     Round shape: ``removed`` (support < k-2) is a small cascade
     frontier, so the wedge probe broadcasts it against the live edge
     set (narrow, no shuffle of the big side; falls back to a shuffle
-    join above ``broadcast_frontier_max`` rows), dedupes the affected
+    join above ``_BROADCAST_FRONTIER_MAX`` rows), dedupes the affected
     triangles on their sorted vertex triple, and applies the decrements
     with one (u, v)-keyed join. Triangle-free edges (support 0 — the
     bulk of a web graph at k=3) skip the probe entirely. The ONLY
@@ -346,18 +336,6 @@ def trussness(
     SizeInBytesOnlyStatsPlanVisitor from the same chain). The bare leaf
     keeps planning flat (~70 ms) at any peel depth.
 
-    ``deep_cut_interval``: optional belt-and-braces — every N peel
-    rounds the support table is additionally round-tripped through
-    parquet under ``deep_cut_dir`` and re-read as a file-backed leaf.
-    With the bare-leaf carrier nothing measurable accumulates, so the
-    default is 0 (disabled); set it for multi-thousand-round
-    decompositions as insurance against driver-side cache growth.
-    ``deep_cut_dir`` defaults to the SparkContext checkpoint dir when
-    one is set (required on a multi-machine cluster — executors cannot
-    read the driver's local disk) and otherwise to a driver-local temp
-    dir, which is correct only for local[*] / single-host runs; scratch
-    created here is removed on exit (success or failure).
-
     ``orient_frontier`` pivots each removed edge's wedge probe onto its
     lower-initial-degree endpoint via a STATIC (u, v, pivot) side table
     computed once up front — bounding per-edge wedge candidates by
@@ -373,11 +351,7 @@ def trussness(
     two measured graphs sit at ratios ~1100 and ~2). Pass True/False to
     force either probe.
     """
-    import os
-    import tempfile
-    import uuid
-
-    # the peel runs in the call's own session, AQE off (engine_session).
+    # the peel runs in the call's own session, AQE off (engine_call).
     # AQE is the root cause of the release-vs-read race observed in the
     # r4 sf0.1 sweep (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND): when a round's
     # frontier materializes EMPTY, AQE's empty-relation propagation
@@ -390,54 +364,10 @@ def trussness(
     # its tag is active — an orphaned query-stage job carries it too — and
     # the empty-frontier probe skip and the one-round deferral of each
     # support cut's free below are further layers.
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
+    from giraph_spark.algorithms.triangles import _oriented, _triangle_list_from
+
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    scratch_parent: str | None = None
-    if deep_cut_dir is None:
-        deep_cut_dir = spark.sparkContext.getCheckpointDir()
-    if deep_cut_dir is None:
-        deep_cut_dir = tempfile.mkdtemp(prefix="giraph_truss_deepcut_")
-        scratch_parent = deep_cut_dir  # we created it — we remove it
-    deep_dir = os.path.join(deep_cut_dir, f"truss_{uuid.uuid4().hex[:12]}")
-    try:
-        return rebind(
-            _trussness_peel(
-                spark,
-                edges,
-                symmetrize_input=symmetrize_input,
-                num_partitions=num_partitions,
-                max_rounds=max_rounds,
-                deep_cut_interval=deep_cut_interval,
-                deep_dir=deep_dir,
-                broadcast_frontier_max=broadcast_frontier_max,
-                verbose=verbose,
-                orient_frontier=orient_frontier,
-            ),
-            home,
-        )
-    finally:
-        _hadoop_rm(spark, scratch_parent if scratch_parent is not None else deep_dir)
-
-
-def _trussness_peel(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    symmetrize_input: bool,
-    num_partitions: int,
-    max_rounds: int,
-    deep_cut_interval: int,
-    deep_dir: str,
-    broadcast_frontier_max: int,
-    verbose: bool,
-    orient_frontier: bool | None = None,
-) -> DataFrame:
-    import os
-    import time
-
-    from giraph_spark.algorithms.triangles import _oriented, _triangle_list_from
 
     level = logging.INFO if verbose else logging.DEBUG
     with LineageCuts(spark.sparkContext) as cuts:
@@ -533,7 +463,6 @@ def _trussness_peel(
         parts: list[DataFrame] = []
         k = 2
         rounds = 0
-        next_deep_cut = deep_cut_interval if deep_cut_interval else None
 
         while n > 0:
             # every edge now has support >= the completed cascade's bound, so
@@ -546,17 +475,6 @@ def _trussness_peel(
                     raise RuntimeError(
                         "trussness: round budget exhausted; raise max_rounds"
                     )
-                if next_deep_cut is not None and rounds >= next_deep_cut:
-                    next_deep_cut += deep_cut_interval
-                    p_sup = os.path.join(deep_dir, f"sup_{rounds}")
-                    sup.write.mode("overwrite").parquet(p_sup)
-                    # file-backed; the slot rotation frees the cut it copies
-                    sup = spark.read.parquet(p_sup)
-                    # earlier intervals' dirs are NOT deleted mid-run: frames
-                    # from a parquet-backed round may still lazily reference
-                    # them (observed FAILED_READ_FILE under interval=1); the
-                    # whole scratch dir is removed once the result is
-                    # materialized below
                 _t0 = time.time()
                 # lazy cut + ONE agg that both materializes the frontier's
                 # checkpoint blocks and counts total + support>0 rows (the
@@ -583,7 +501,7 @@ def _trussness_peel(
                     )
                 )
                 rm_pairs = removed.select("u", "v")
-                rm_anti = F.broadcast(rm_pairs) if n_rm <= broadcast_frontier_max else rm_pairs
+                rm_anti = F.broadcast(rm_pairs) if n_rm <= _BROADCAST_FRONTIER_MAX else rm_pairs
                 if n_fr == 0:
                     # every removed edge has support 0 — no triangle passes
                     # through the frontier, so no decrements: the update is a
@@ -607,13 +525,13 @@ def _trussness_peel(
                         # (least/greatest), so correctness is unchanged
                         fk = (
                             F.broadcast(frontier)
-                            if n_fr <= broadcast_frontier_max
+                            if n_fr <= _BROADCAST_FRONTIER_MAX
                             else frontier
                         )
                         frontier = orient.join(fk, ["u", "v"]).select(
                             F.col("pu").alias("u"), F.col("pv").alias("v")
                         )
-                    fr = F.broadcast(frontier) if n_fr <= broadcast_frontier_max else frontier
+                    fr = F.broadcast(frontier) if n_fr <= _BROADCAST_FRONTIER_MAX else frontier
                     adj = sup.select(F.col("u"), F.col("v").alias("w")).union(
                         sup.select(F.col("v").alias("u"), F.col("u").alias("w"))
                     )

@@ -20,15 +20,17 @@ Two variants:
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, _relax, engine_session, gather_cte, rebind, run_sql_supersteps
+from giraph_spark.pregel import PregelRun, _relax, engine_call, gather_cte, run_sql_supersteps
 
 
+@engine_call
 def label_propagation(
     spark: SparkSession,
     edges: DataFrame,
@@ -71,8 +73,6 @@ def label_propagation(
     O(|E|). Costs a second dst-partitioned cached copy of the edge table
     (built lazily on first use). ``None`` disables (always full scatter).
     """
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ev, edv, sv, nv = "lpa_edges", "lpa_edges_dst", "lpa_state", "lpa_new"
@@ -164,14 +164,10 @@ def label_propagation(
         resume=resume,
         verbose=verbose,
     )
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "label"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "label"))
 
 
+@engine_call
 def max_label_propagation(
     spark: SparkSession,
     edges: DataFrame,
@@ -181,8 +177,6 @@ def max_label_propagation(
 ) -> PregelRun:
     """Max-label propagation (MaxComputation.java:30-47): every vertex
     converges to the max id reachable along edge direction; send-on-change."""
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select("src", "dst").repartition(num_partitions, "src").persist()
@@ -195,9 +189,4 @@ def max_label_propagation(
         spark, state, "maxlp", e, "label", "v.label", "max",
         max_supersteps=max_supersteps, verbose=verbose,
     )
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "label"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "label"))

@@ -28,7 +28,7 @@ master/MasterCompute.java:41-47) — one Spark job. ``ppr.py``'s
 personalized variants run the same step (``_rank_loop``).
 
 Set-up is ONE Spark job, planned with AQE off in the call's own session
-(``engine_session``; ``_init_piece``): the edge table is hash-partitioned
+(``pregel.engine_call``; ``_init_piece``): the edge table is hash-partitioned
 by src (a bucketed table already is) and cached, its weight a
 ``count(*) OVER (PARTITION BY src)`` window on that partitioning — no
 degree join; every vertex and its sink flag come from one ``groupBy(id)``
@@ -41,6 +41,7 @@ The initial state is a lazy ``localCheckpoint`` that the set-up aggregate
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -50,9 +51,8 @@ from giraph_spark.graph import normalize_edge_weights
 from giraph_spark.pregel import (
     LineageCuts,
     PregelRun,
-    engine_session,
+    engine_call,
     gather_cte,
-    rebind,
     run_sql_supersteps,
 )
 
@@ -107,6 +107,7 @@ def _init_piece(
     return e, state.repartition(num_partitions, "id")
 
 
+@engine_call
 def pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -141,8 +142,6 @@ def pagerank(
     """
     if convergence not in ("l1", "l1_mean", "linf", "rmse"):
         raise ValueError(f"unknown convergence type {convergence!r}")
-    home = edges.sparkSession
-    spark, edges, init_ranks = engine_session(edges, init_ranks)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e, setup_cut = _init_piece(
@@ -174,7 +173,7 @@ def pagerank(
             init_sink_sum = init_sink_sum * (n_vertices / total)
 
     return _rank_loop(
-        spark, home, e, setup_cut, state, n_vertices,
+        spark, e, setup_cut, state, n_vertices,
         None if resume else (float(n_vertices), init_sink_sum),
         damping=damping, salt=salt, tele=False, max_supersteps=max_supersteps,
         tolerance=tolerance, convergence=convergence, checkpoint_dir=checkpoint_dir,
@@ -197,7 +196,6 @@ def _setup_sums(setup_cut: DataFrame):
 
 def _rank_loop(
     spark: SparkSession,
-    home: SparkSession,
     e: DataFrame,
     setup_cut: DataFrame,
     state: DataFrame,
@@ -219,13 +217,10 @@ def _rank_loop(
     PageRank: the source preference), and the teleport mass is the unit
     probability mass. ``sums`` = (all_sum, sink_sum) of ``state``; None
     derives them from the first state the loop reads (a resumed
-    snapshot). Result ``vertices``: (id, rank) in ``home``."""
+    snapshot). Result ``vertices``: (id, rank)."""
     if n_vertices == 0:
         e.unpersist()
-        return PregelRun(
-            vertices=rebind(setup_cut.select("id", "rank"), home), supersteps=0,
-            converged=True,
-        )
+        return PregelRun(vertices=setup_cut.select("id", "rank"), supersteps=0, converged=True)
     d = float(damping)
     # the step's {base} slot is the teleport + sink mass of the previous
     # superstep. Join strategy hints: SHUFFLE_HASH(v) on the scatter join
@@ -279,12 +274,7 @@ def _rank_loop(
             spark, state, ("pr_state", "pr_new"), {"pr_edges": e}, step_sql, agg_sql,
             update, resumed if sums is None else scalars(*sums), halt=halt, **loop,
         )
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "rank"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "rank"))
 
 
 def pagerank_random_walk(
@@ -332,9 +322,6 @@ def pagerank_random_walk(
         verbose=verbose,
     )
     n = run.vertices.count()
-    return PregelRun(
-        vertices=run.vertices.select("id", (F.col("rank") / F.lit(max(n, 1))).alias("rank")),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
+    return replace(
+        run, vertices=run.vertices.select("id", (F.col("rank") / F.lit(max(n, 1))).alias("rank"))
     )

@@ -17,15 +17,18 @@ Spark job. The multi-seed BFS runs one SQL text per superstep too, over
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import vertices_from_edges
-from giraph_spark.pregel import PregelRun, _relax, _until_unchanged, engine_session, gather_cte, rebind
+from giraph_spark.pregel import PregelRun, _relax, _until_unchanged, engine_call, gather_cte
 
 _INF = float("inf")
 
 
+@engine_call
 def sssp(
     spark: SparkSession,
     edges: DataFrame,
@@ -49,8 +52,6 @@ def sssp(
     for an edge delta, pass ``delta.select("src")``: a decrease can only
     originate at a new edge's source, then cascades normally.
     """
-    home = edges.sparkSession
-    spark, edges, init_dists, init_frontier = engine_session(edges, init_dists, init_frontier)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sources = [source] if isinstance(source, int) else list(source)
@@ -94,12 +95,7 @@ def sssp(
         where="v.changed AND v.distance < double('Infinity')",
         max_supersteps=max_supersteps, verbose=verbose,
     )
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "distance"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "distance"))
 
 
 def bfs(
@@ -127,14 +123,10 @@ def bfs(
         .otherwise(F.col("distance").cast("long"))
         .alias("hops"),
     )
-    return PregelRun(
-        vertices=hops,
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=hops)
 
 
+@engine_call
 def multi_seed_distances(
     spark: SparkSession,
     edges: DataFrame,
@@ -153,8 +145,6 @@ def multi_seed_distances(
     would pay in time instead of space. Shared core of
     ``harmonic_centrality`` and ``eccentricity``.
     """
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select("src", "dst").repartition(num_partitions, "src").persist()
@@ -185,12 +175,7 @@ def multi_seed_distances(
     run = _until_unchanged(
         spark, state, "msd", e, step_sql, max_supersteps=max_supersteps, verbose=verbose
     )
-    return PregelRun(
-        vertices=rebind(run.vertices.select("seed", "id", "dist"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("seed", "id", "dist"))
 
 
 def harmonic_centrality(
@@ -229,12 +214,7 @@ def harmonic_centrality(
             F.coalesce("n_reached", F.lit(0)).cast("long").alias("n_reached"),
         )
     )
-    return PregelRun(
-        vertices=out,
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=out)
 
 
 def eccentricity(
@@ -262,12 +242,7 @@ def eccentricity(
         .cast("long")
         .alias("n_reached"),
     )
-    return PregelRun(
-        vertices=out,
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=out)
 
 
 def closeness_centrality(
@@ -301,12 +276,7 @@ def closeness_centrality(
     out = all_seeds.join(out, "seed", "left").select(
         "seed", "closeness", F.coalesce("n_reached", F.lit(0)).alias("n_reached")
     )
-    return PregelRun(
-        vertices=out,
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=out)
 
 
 def pointer_jump(

@@ -16,19 +16,21 @@ with ``d = 1 - t``; and pagerank's one-job set-up (``_init_piece``).
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from giraph_spark.algorithms.pagerank import _init_piece, _rank_loop, _setup_sums
 from giraph_spark.pregel import (
     PregelRun,
-    engine_session,
+    engine_call,
     gather_cte,
-    rebind,
     run_sql_supersteps,
 )
 
 
+@engine_call
 def personalized_pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -51,8 +53,6 @@ def personalized_pagerank(
     srcs = [sources] if isinstance(sources, int) else list(sources)
     if not srcs:
         raise ValueError("personalized_pagerank needs at least one source")
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # pagerank's set-up: window-normalized out-weights, one groupBy for
@@ -64,7 +64,7 @@ def personalized_pagerank(
     ).localCheckpoint(eager=False)
     srow = _setup_sums(setup_cut)
     return _rank_loop(
-        spark, home, e, setup_cut, setup_cut, int(srow["n"]),
+        spark, e, setup_cut, setup_cut, int(srow["n"]),
         (float(srow["mass"] or 0.0), float(srow["sink_mass"] or 0.0)),
         damping=1.0 - float(teleport), salt=salt, tele=True,
         max_supersteps=max_supersteps, tolerance=tolerance, convergence="l1",
@@ -99,14 +99,10 @@ def trustrank(
         max_supersteps=max_supersteps, tolerance=tolerance, salt=salt,
         num_partitions=num_partitions, weighted=weighted, verbose=verbose,
     )
-    return PregelRun(
-        vertices=run.vertices.select("id", F.col("rank").alias("trust")),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", F.col("rank").alias("trust")))
 
 
+@engine_call
 def ppr_batch(
     spark: SparkSession,
     edges: DataFrame,
@@ -136,8 +132,6 @@ def ppr_batch(
     """
     if not seeds:
         raise ValueError("ppr_batch needs at least one seed")
-    home = edges.sparkSession
-    spark, edges = engine_session(edges)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = 1.0 - float(teleport)
@@ -191,12 +185,7 @@ def ppr_batch(
         agg_sql, update, scalars(sinks), max_supersteps=max_supersteps, halt=halt,
         verbose=verbose,
     )
-    return PregelRun(
-        vertices=rebind(run.vertices.select("seed", "id", "rank"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("seed", "id", "rank"))
 
 
 def local_community(

@@ -45,27 +45,6 @@ def _oriented(edges: DataFrame, symmetrize_input: bool) -> DataFrame:
     return with_deg.where(keep).select("src", "dst")
 
 
-def triangle_list(edges: DataFrame, symmetrize_input: bool = True) -> DataFrame:
-    """All triangles (a, b, c), each exactly once.
-
-    wedge join: oriented e1(a,b) x e1(a,c) with b<c in orientation order
-    is closed by oriented edge (b,c).
-
-    The oriented table is scanned three times (both wedge legs + the
-    closing semi-join), so it is persisted eagerly — the symmetrize +
-    distinct + double degree-join pipeline behind it is far more
-    expensive than one cached scan. The release handle is attached to
-    the returned DataFrame as ``release_oriented`` — call it once the
-    result is consumed to free the cache; prefer
-    ``triangles_per_vertex`` / ``triangle_count``, which scope and
-    release it themselves.
-    """
-    o, release = _oriented_cached(edges, symmetrize_input)
-    out = _triangle_list_from(o)
-    out.release_oriented = release  # type: ignore[attr-defined]
-    return out
-
-
 def _oriented_cached(edges: DataFrame, symmetrize_input: bool):
     o = _oriented(edges, symmetrize_input).persist()
     o.count()  # materialize once; all three downstream scans hit the cache
@@ -73,6 +52,9 @@ def _oriented_cached(edges: DataFrame, symmetrize_input: bool):
 
 
 def _triangle_list_from(o: DataFrame) -> DataFrame:
+    """All triangles (a, b, c) of the oriented table ``o``, each exactly
+    once: a wedge o(a, b) x o(a, c) with b < c, closed by an oriented
+    edge between b and c. ``o`` is scanned three times: cache it."""
     e1 = o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e2 = o.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     wedges = e1.join(e2, "a").where(F.col("b") < F.col("c"))
@@ -179,7 +161,7 @@ def triangle_delta(old_edges: DataFrame, added_edges: DataFrame) -> DataFrame:
     Scale shape: every term touches only the DELTA joined against the
     new adjacency — cost O(|D| * avg_deg + |D-wedges|), not a recount
     of the full graph; the per-term joins are the same degree-bounded
-    relational shapes as :func:`triangle_list`. The crawl-over-crawl
+    relational shapes as :func:`triangle_count`. The crawl-over-crawl
     use: triangles gained between snapshots at the cost of the delta.
     """
     old_sym = clean_symmetric(old_edges)

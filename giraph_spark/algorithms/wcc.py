@@ -23,15 +23,17 @@ graph — the relational form of voteToHalt/wake-on-message
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, _relax, engine_session, rebind
+from giraph_spark.pregel import PregelRun, _relax, engine_call
 
 
+@engine_call
 def connected_components(
     spark: SparkSession,
     edges: DataFrame,
@@ -61,8 +63,6 @@ def connected_components(
     supersteps instead of O(diameter of the graph). Edge REMOVALS can
     split components and make old labels stale ids: recompute cold.
     """
-    home = edges.sparkSession
-    spark, edges, init_components = engine_session(edges, init_components)
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if pre_partitioned:
@@ -102,12 +102,7 @@ def connected_components(
         resume=resume,
         verbose=verbose,
     )
-    return PregelRun(
-        vertices=rebind(run.vertices.select("id", "component"), home),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "component"))
 
 
 def component_sizes(labels: DataFrame) -> DataFrame:

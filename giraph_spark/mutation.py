@@ -37,13 +37,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from giraph_spark.pregel import (
-    LineageCuts,
-    PregelRun,
-    engine_session,
-    rebind,
-    run_supersteps,
-)
+from giraph_spark.pregel import LineageCuts, PregelRun, engine_call, run_supersteps
 
 
 @dataclass
@@ -169,6 +163,7 @@ MutableStep = Callable[
 ]
 
 
+@engine_call
 def run_mutable_supersteps(
     spark: SparkSession,
     vertices: DataFrame,
@@ -192,8 +187,6 @@ def run_mutable_supersteps(
     :func:`run_supersteps` (which cuts the vertex state); the result's
     ``edges`` attribute is the final edge table.
     """
-    home = vertices.sparkSession
-    spark, vertices, edges = engine_session(vertices, edges)
     # box["slot"] names the live edge cut (made at that superstep);
     # box["stale"] the one it superseded
     box: dict[str, Any] = {"edges": edges.persist(), "slot": None, "stale": None}
@@ -241,6 +234,5 @@ def run_mutable_supersteps(
         )
         if box["slot"] is not None:
             cuts.forget(box["slot"])  # backs run.edges
-    run.vertices = rebind(run.vertices, home)
-    run.edges = rebind(box["edges"], home)  # type: ignore[attr-defined]
+    run.edges = box["edges"]  # type: ignore[attr-defined]
     return run

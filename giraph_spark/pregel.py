@@ -35,6 +35,8 @@ fan-in on mega-hubs.
 
 from __future__ import annotations
 
+import functools
+import inspect
 import logging
 import time
 import uuid
@@ -42,9 +44,10 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark import RDD, SparkContext
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.profiler import AccumulatorProfilerCollector
 
 from giraph_spark.checkpoint import CheckpointManager
 
@@ -198,10 +201,10 @@ def scatter_messages(
     return e.select("src", "dst").join(vm, "src").select("dst", "msg")
 
 
-# --- a private session per engine call -----------------------------------
+# --- one boundary per engine call -----------------------------------------
 
 
-def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+def _rebind(df: DataFrame, session: SparkSession) -> DataFrame:
     """``df`` as a frame of ``session``, with no job: its queries are then
     planned under ``session``'s conf. The ANALYZED plan crosses over, so
     views it read in the other session's catalog stay resolved."""
@@ -213,20 +216,19 @@ def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
     return DataFrame(jdf, session)
 
 
-def engine_session(*frames: DataFrame | None) -> tuple[Any, ...]:
-    """``(session, *frames)``: a private session for one engine call, and
-    ``frames`` (None passes through) rebound into it.
+def _engine_session(home: SparkSession) -> SparkSession:
+    """A private session for one engine call: a clone of ``home`` with AQE
+    off in the clone only.
 
-    The session is a clone of the first frame's session with AQE off in
-    the clone only. ``cloneSession`` keeps the caller's runtime confs
-    (``newSession`` would drop them) and shares the SparkContext, the
-    cache manager and the codegen cache, so a cached input is still hit
-    and the caller's job groups tag the call's jobs. The caller's conf is
-    never written, and the call's temp views live in the clone's catalog,
-    so concurrent calls on one session cannot see each other's. A frame
-    already in an engine session (a nested call: pagerank ->
-    run_supersteps) keeps that session. Results go back to the caller
-    with ``rebind(df, home)``.
+    ``cloneSession`` keeps the caller's runtime confs (``newSession``
+    would drop them) and shares the SparkContext, the cache manager and
+    the codegen cache, so a cached input is still hit and the caller's
+    job groups tag the call's jobs. The caller's conf is never written,
+    and the call's temp views live in the clone's catalog, so concurrent
+    calls on one session cannot see each other's. The Python wrapper is
+    built without the ``SparkSession`` constructor: that constructor
+    rebinds the class attribute ``RDD.toDF`` to the new session, so no
+    class attribute is read or written here.
 
     Why AQE is off: superstep plans are fixed-shape (explicit
     shuffle_hash hints, explicit partition counts, salting for skew), so
@@ -236,17 +238,49 @@ def engine_session(*frames: DataFrame | None) -> tuple[Any, ...]:
     ms/superstep) — and in set-up an adaptive plan runs the aggregate
     that fills a lazy cut, or a cache first read, as query-stage jobs of
     their own."""
-    home = frames[0].sparkSession
-    if getattr(home, "_engine_private", False):
-        spark = home
-    else:
-        # the SparkSession constructor rebinds RDD.toDF to the new session
-        to_df = RDD.toDF
-        spark = SparkSession(home.sparkContext, home._jsparkSession.cloneSession())  # noqa: SLF001
-        RDD.toDF = to_df
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark._engine_private = True  # type: ignore[attr-defined]
-    return (spark, *(None if f is None else rebind(f, spark) for f in frames))
+    spark = SparkSession.__new__(SparkSession)
+    spark._sc = home._sc  # noqa: SLF001
+    spark._jsc = home._jsc  # noqa: SLF001
+    spark._jvm = home._jvm  # noqa: SLF001
+    spark._jsparkSession = home._jsparkSession.cloneSession()  # noqa: SLF001
+    spark._profiler_collector = AccumulatorProfilerCollector()  # noqa: SLF001
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark._engine_private = True  # type: ignore[attr-defined]
+    return spark
+
+
+def engine_call(fn: Callable[..., Any]) -> Callable[..., Any]:
+    """The one boundary of an engine call (Giraph's GraphTaskManager:
+    every computation enters and leaves the job through it).
+
+    The home session is the first DataFrame argument's. The call runs in
+    a private session (:func:`_engine_session`) passed as its ``spark``
+    argument, with every DataFrame argument rebound into it; on return
+    the result, or every DataFrame attribute of it (``PregelRun.vertices``,
+    a mutable run's ``edges``), is rebound back into the home session. A
+    call made inside an engine session (pagerank -> run_supersteps,
+    run_mutable_supersteps -> run_supersteps) runs straight through in
+    that session."""
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def call(*args: Any, **kwargs: Any) -> Any:
+        bound = sig.bind(*args, **kwargs)
+        frames = {k: v for k, v in bound.arguments.items() if isinstance(v, DataFrame)}
+        home = next(iter(frames.values())).sparkSession
+        if getattr(home, "_engine_private", False):
+            return fn(*args, **kwargs)
+        spark = _engine_session(home)
+        bound.arguments.update({k: _rebind(v, spark) for k, v in frames.items()}, spark=spark)
+        result = fn(*bound.args, **bound.kwargs)
+        if isinstance(result, DataFrame):
+            return _rebind(result, home)
+        for k, v in vars(result).items():
+            if isinstance(v, DataFrame):
+                setattr(result, k, _rebind(v, home))
+        return result
+
+    return call
 
 
 def partition_width(df: DataFrame) -> int:
@@ -444,6 +478,7 @@ class PregelRun:
         return self.history[-1] if self.history else {}
 
 
+@engine_call
 def run_supersteps(
     spark: SparkSession,
     vertices: DataFrame,
@@ -512,23 +547,23 @@ def run_supersteps(
     the per-superstep local cut only bounds plan growth. local[*] runs
     can ignore this (one JVM = no partial loss).
 
-    Concurrency: the call runs in its own session (``engine_session``):
-    a clone of ``vertices``' session with AQE off in the clone only, or
-    the engine session ``vertices`` already belongs to. The caller's conf
-    is never written, so queries run concurrently on the same session
-    from other threads keep AQE; the result's ``vertices`` is rebound
-    into the session the input came from. ``step`` and the hooks receive
-    frames of the private session: a frame derived from one keeps it, and
-    a temp view made from one resolves through ``df.sparkSession.sql``,
-    not through the caller's session. The loop's jobs carry its owner's
-    job tag, and a free waits only for those: jobs that other threads run
-    at the same time never delay it, and never read this loop's cuts.
+    Concurrency: the call enters through :func:`engine_call`, so it runs
+    in a clone of ``vertices``' session with AQE off in the clone only,
+    or in the engine session ``vertices`` already belongs to. The
+    caller's conf and the class attribute ``RDD.toDF`` are never
+    written, so queries run concurrently on the same session from other
+    threads keep AQE and ``rdd.toDF()`` keeps its session; the result's
+    ``vertices`` is rebound into the session the input came from.
+    ``step`` and the hooks receive frames of the private session: a frame
+    derived from one keeps it, and a temp view made from one resolves
+    through ``df.sparkSession.sql``, not through the caller's session.
+    The loop's jobs carry its owner's job tag, and a free waits only for
+    those: jobs that other threads run at the same time never delay it,
+    and never read this loop's cuts.
 
     ``verbose=True`` logs each superstep's stats at INFO on the
     ``giraph_spark`` logger (DEBUG otherwise).
     """
-    home = vertices.sparkSession
-    spark, vertices = engine_session(vertices)
     ckpt = (
         CheckpointManager(spark, checkpoint_dir, checkpoint_interval)
         if checkpoint_dir
@@ -623,8 +658,7 @@ def run_supersteps(
             hooks.post_application(current)
         cuts.forget(str(superstep))  # the result's cut
     return PregelRun(
-        vertices=rebind(current, home), supersteps=superstep, converged=converged,
-        history=history,
+        vertices=current, supersteps=superstep, converged=converged, history=history
     )
 
 

@@ -318,6 +318,27 @@ def _persistent_rdd_ids(sc) -> set[int]:
     return {int(k) for k in sc._jsc.getPersistentRDDs()}  # noqa: SLF001
 
 
+def test_triangle_global_entry_frees_its_cache(spark, tmp_path):
+    """The triangle_global entry query counts the demo graph's triangles
+    and leaves no cached RDD behind: the persistent RDDs after collecting
+    it are the ones before the call."""
+    import __spark_entry__ as E
+    from tests.oracles import triangles_oracle
+
+    pairs = _random_digraph(17, 30, 150)
+    # a lineitem table whose demo edges are (7·s, 7·t): the demo edge
+    # is (orderkey, 131·partkey + 7·suppkey) mod 4096
+    spark.createDataFrame(
+        [(7 * s, 0, t) for s, t in pairs], "l_orderkey long, l_partkey long, l_suppkey long"
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    sc = spark.sparkContext
+    before = _persistent_rdd_ids(sc)
+    rows = E.q_triangle_global(spark, str(tmp_path)).collect()
+    assert _persistent_rdd_ids(sc) == before
+    want = sum(triangles_oracle(pairs).values()) // 3
+    assert want > 0 and [r["n_triangles"] for r in rows] == [want]
+
+
 def test_loop_adopts_materialized_input_cut(spark):
     """An input that is a materialized cut is adopted as superstep 0's
     cut: superstep 0 costs one job (no persist fill, no re-cut), and the
@@ -523,6 +544,67 @@ def test_engine_call_session_boundary(spark):
     finally:
         spark.catalog.dropTempView("boundary_ranks")
     assert n == run.vertices.count()
+
+
+def test_concurrent_engine_calls_leave_rdd_todf_bound(spark, monkeypatch):
+    """Two engine calls on one session, forced into the order that breaks
+    a per-call save and restore of the class attribute ``RDD.toDF``: call
+    A is parked in the ``SparkSession`` constructor right after the
+    constructor rebinds ``RDD.toDF`` (at ``install_exception_handler``),
+    call B starts, and A finishes before B goes on. Afterwards
+    ``rdd.toDF()`` still makes a frame of the caller's session. A call
+    that never runs the constructor is never parked."""
+    import threading
+
+    import pyspark.sql.session as session_mod
+    from pyspark import RDD
+
+    from giraph_spark.algorithms import label_propagation
+
+    monkeypatch.setattr(RDD, "toDF", RDD.toDF)  # put back at teardown
+    install = session_mod.install_exception_handler
+    a_parked, b_parked, a_done = threading.Event(), threading.Event(), threading.Event()
+    role: dict[int, str] = {}
+
+    def gated_install():
+        me = role.get(threading.get_ident())
+        if me == "a" and not a_parked.is_set():
+            a_parked.set()
+            b_parked.wait(60)  # until B has saved A's binding and made its own
+        elif me == "b" and not b_parked.is_set():
+            b_parked.set()
+            a_done.wait(120)  # A restores first
+        install()
+
+    monkeypatch.setattr(session_mod, "install_exception_handler", gated_install)
+    edges = _edges_df(spark, _random_digraph(16, 30, 90))
+    errors: list[str] = []
+
+    def run(name, call):
+        role[threading.get_ident()] = name
+        try:
+            call()
+        except Exception as exc:  # noqa: BLE001
+            errors.append(repr(exc))
+        finally:
+            if name == "a":
+                a_done.set()
+
+    a = threading.Thread(
+        target=run, args=("a", lambda: connected_components(spark, edges, max_supersteps=2))
+    )
+    b = threading.Thread(
+        target=run, args=("b", lambda: label_propagation(spark, edges, max_supersteps=2))
+    )
+    a.start()
+    while a.is_alive() and not a_parked.wait(0.05):
+        pass
+    b.start()
+    a.join(300)
+    b.join(300)
+    assert not a.is_alive() and not b.is_alive()
+    assert errors == []
+    assert spark.sparkContext.parallelize([(1,)]).toDF(["x"]).sparkSession is spark
 
 
 def test_pagerank_resume_frees_setup_cut(spark, tmp_path):

@@ -4,7 +4,10 @@ Runs every ``queries()`` entry against its ``oracle_sql()`` twin on the
 same sf dir (default sf0.01) and compares row counts + column-sorted
 value multisets. Usage::
 
-    python tools/check_entry.py [sf_dir] [query ...]
+    python tools/check_oracles.py [sf_dir] [--jobs N] [query ...]
+
+``--jobs N`` checks N entries at once on one Spark session (each thread
+with its own DuckDB cursor); timings are then contention-inflated.
 """
 
 from __future__ import annotations

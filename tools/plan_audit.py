@@ -156,10 +156,11 @@ def main() -> None:
 
     from giraph_spark import storage
     from giraph_spark.algorithms.pagerank import _init_piece
-    from giraph_spark.pregel import engine_session
+    from giraph_spark.pregel import _engine_session, _rebind
 
-    # planned as pagerank plans it: in an engine session, AQE off
-    priv, priv_edges = engine_session(edges)
+    # planned as pagerank plans it: in an engine call's session, AQE off
+    priv = _engine_session(edges.sparkSession)
+    priv_edges = _rebind(edges, priv)
     with tempfile.TemporaryDirectory(prefix="plan_audit_") as loc:
         storage.write_bucketed_edges(edges, "audit_bucketed", buckets=8, location=loc)
         e_setup, state = _init_piece(priv_edges, 8)
