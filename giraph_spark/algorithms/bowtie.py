@@ -14,10 +14,14 @@ which on a web-like graph sits in the giant SCC, then
     OTHER = the rest                   the seed, and vice versa)
 
 so the whole decomposition costs exactly TWO set-reachability closures
-(frontier BFS, no per-seed state) — the method Broder et al. used, and
-the only shape that survives 10^12 edges: each superstep is one scatter
-join against a static edge table + one anti-join + one count action,
-and the frontier only shrinks once the closure saturates.
+— the method Broder et al. used, and the only shape that survives
+10^12 edges. Each closure is a ``paths.bfs`` from the seed (over the
+edges, then over the reversed edges): the engine's send-on-change
+relaxation, one SQL text and one Spark job per superstep, where only
+the newly reached vertices scatter. A closure that has not converged
+within ``max_supersteps`` raises instead of mislabeling the vertices it
+did not reach. The budget counts the superstep that confirms nothing
+changed: a closure D edges deep needs D + 1 supersteps.
 """
 
 from __future__ import annotations
@@ -25,60 +29,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from giraph_spark.graph import vertices_from_edges
+from giraph_spark.algorithms.paths import bfs
 from giraph_spark.pregel import LineageCuts
-
-
-def _closure(
-    e: DataFrame,
-    seed_df: DataFrame,
-    cuts: LineageCuts,
-    slot: str,
-    num_partitions: int,
-    max_supersteps: int,
-) -> DataFrame:
-    """All vertices reachable from ``seed_df`` (id rows) following
-    ``e``'s (src -> dst) direction; includes the seeds."""
-    reached = cuts.cut(seed_df.select("id"), slot)
-    frontier = reached
-    for _ in range(max_supersteps):
-        nxt = (
-            e.join(
-                frontier.withColumnRenamed("id", "src").hint("shuffle_hash"),
-                "src",
-                "left_semi",
-            )
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(reached, "id", "left_anti")
-        )
-        frontier = cuts.cut(nxt, f"{slot}_frontier")
-        if frontier.count() == 0:
-            break
-        reached = cuts.cut(
-            reached.union(frontier).coalesce(num_partitions), slot
-        )
-    cuts.release(f"{slot}_frontier")
-    return reached
 
 
 def canonical_seed(edges: DataFrame) -> int:
     """The max-total-degree vertex, ties to the smallest id — the
     deterministic 'certainly in the giant SCC' pick."""
-    out_d = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("od")
-    )
-    in_d = edges.groupBy(F.col("dst").alias("id")).agg(
-        F.count(F.lit(1)).alias("idg")
+    ends = edges.select(
+        F.inline(F.array(F.struct(F.col("src").alias("id")), F.struct(F.col("dst").alias("id"))))
     )
     row = (
-        vertices_from_edges(edges)
-        .join(out_d, "id", "left")
-        .join(in_d, "id", "left")
-        .select(
-            "id",
-            (F.coalesce("od", F.lit(0)) + F.coalesce("idg", F.lit(0))).alias("d"),
-        )
+        ends.groupBy("id")
+        .agg(F.count(F.lit(1)).alias("d"))
         .orderBy(F.col("d").desc(), F.col("id").asc())
         .limit(1)
         .collect()
@@ -95,29 +58,33 @@ def bowtie_decomposition(
 ) -> DataFrame:
     """(id, region) for every vertex, region in CORE / IN / OUT / OTHER,
     relative to the SCC containing ``seed`` (default: the canonical
-    max-degree seed)."""
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    max-degree seed). Raises if either closure from the seed is deeper
+    than ``max_supersteps - 1`` edges."""
     if seed is None:
         seed = canonical_seed(edges)
     with LineageCuts(spark.sparkContext) as cuts:
-        e = cuts.cut(edges.select("src", "dst").repartition(num_partitions, "src"), "e")
+        e = cuts.cut(edges.select("src", "dst"), "e")
         rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        rev = cuts.cut(rev.repartition(num_partitions, "src"), "rev")
-        seed_df = spark.createDataFrame([(int(seed),)], "id long")
+        hops = {}
+        for slot, closure_edges in (("fwd", e), ("bwd", rev)):
+            run = bfs(spark, closure_edges, int(seed), max_supersteps, num_partitions)
+            hops[slot] = cuts.adopt(run.vertices, slot)
+            if not run.converged:
+                raise RuntimeError(
+                    f"bowtie_decomposition: the {slot} closure did not converge "
+                    f"in {max_supersteps} supersteps — raise max_supersteps"
+                )
 
-        fwd = _closure(e, seed_df, cuts, "fwd", num_partitions, max_supersteps)
-        bwd = _closure(rev, seed_df, cuts, "bwd", num_partitions, max_supersteps)
-
+        # both runs keep every vertex of e, unreached ones at hops -1
+        fwd, bwd = F.col("hops") >= 0, F.col("b") >= 0
         out = (
-            vertices_from_edges(e)
-            .join(fwd.withColumn("_f", F.lit(1)), "id", "left")
-            .join(bwd.withColumn("_b", F.lit(1)), "id", "left")
+            hops["fwd"]
+            .join(hops["bwd"].withColumnRenamed("hops", "b"), "id")
             .select(
                 "id",
-                F.when(F.col("_f").isNotNull() & F.col("_b").isNotNull(), "CORE")
-                .when(F.col("_b").isNotNull(), "IN")
-                .when(F.col("_f").isNotNull(), "OUT")
+                F.when(fwd & bwd, "CORE")
+                .when(bwd, "IN")
+                .when(fwd, "OUT")
                 .otherwise("OTHER")
                 .alias("region"),
             )

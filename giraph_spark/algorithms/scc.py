@@ -12,23 +12,29 @@ repeat until no active vertices:
      active subgraph form singleton SCCs (the reference's TRIMMING phase;
      iterated so chains/trees peel without paying a full color+backward
      round each)
-  2. color: forward max-label propagation — every active vertex learns
-     the max id that reaches it (FORWARD_TRAVERSAL)
-  3. backward: from each color root (id == color), propagate "member"
-     backwards along edges restricted to the same color
-     (BACKWARD_TRAVERSAL); members form one SCC labeled by the root
+  2. color: ``max_label_propagation`` over the active edges — every
+     active vertex learns the max id that reaches it (FORWARD_TRAVERSAL)
+  3. backward: BFS (``sssp`` with unit weights) from the color roots
+     (id == color) over the reversed edges whose endpoints share a color
+     (BACKWARD_TRAVERSAL); the vertices a root reaches, and the root,
+     form one SCC labeled by the root
   4. remove settled vertices and repeat on the remainder
 
 Result: (id, scc) with scc = the max vertex id inside the component
 (deterministic; the reference labels by traversal root the same way).
 
-Driver-action budget: ONE count per trim iteration / propagation step /
-peel (the count doubles as the halt check and reads the just-cut cache);
-no ``isEmpty`` probes. Superseded localCheckpoint blocks are released
-by the call's ``LineageCuts`` (``DataFrame.unpersist`` cannot free
-them), which frees every cut but the result's on exit; the settled set
-is itself checkpointed per round so earlier cuts never leak into the
-final result's lineage.
+Steps 2 and 3 are the engine's send-on-change relaxation
+(``pregel._relax``): one SQL text and one Spark job per superstep, in the
+call's private AQE-off session. A closure that has not converged within
+``max_iters`` supersteps raises: a partial closure would split SCCs.
+The budget counts the superstep that confirms nothing changed, so a
+closure D edges deep needs D + 1 supersteps.
+The trim and peel stay in the caller's session and AQE, with ONE count
+per trim iteration / peel (the count doubles as the halt check and
+reads the just-cut cache). Every cut, the two closures' results
+included, is owned by the call's ``LineageCuts``, which frees all but
+the result's on exit; the settled set is itself checkpointed per round
+so earlier cuts never leak into the final result's lineage.
 """
 
 from __future__ import annotations
@@ -36,52 +42,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from giraph_spark.algorithms.lpa import max_label_propagation
+from giraph_spark.algorithms.paths import sssp
 from giraph_spark.graph import vertices_from_edges
 from giraph_spark.pregel import LineageCuts as _Cuts
-
-
-def _propagate(
-    edges: DataFrame, seeds: DataFrame, cuts: _Cuts, slot: str, max_iters: int = 50
-) -> tuple[DataFrame, DataFrame]:
-    """Max-label frontier propagation along ``edges`` from ``seeds``
-    (id, lab); returns the fixpoint (id, lab) over reached vertices and
-    the persisted frame it reads, which the caller unpersists once a cut
-    has consumed the fixpoint. One action per iteration (the frontier
-    count doubles as the halt check); lineage cut every few
-    iterations."""
-    neg_inf = -(1 << 62)
-    state = seeds
-    frontier = seeds
-    prev = seeds
-    for it in range(max_iters):
-        msgs = (
-            edges.join(frontier.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.max("lab").alias("m"))
-        )
-        joined = state.withColumnRenamed("lab", "old").join(msgs, "id", "full")
-        combined = joined.select(
-            "id",
-            F.greatest(
-                F.coalesce("old", F.lit(neg_inf)), F.coalesce("m", F.lit(neg_inf))
-            ).alias("lab"),
-            (
-                F.col("old").isNull()
-                | (F.coalesce("m", F.lit(neg_inf)) > F.col("old"))
-            ).alias("_grew"),
-        ).persist()
-        if it % 3 == 2:
-            cut = cuts.cut(combined, slot)
-            combined.unpersist()
-            combined = cut
-        grew = combined.where("_grew").count()
-        prev.unpersist()  # the count above consumed prev's cache
-        prev = combined
-        state = combined.select("id", "lab")
-        frontier = combined.where("_grew").select("id", "lab")
-        if grew == 0:
-            break
-    return state, prev
 
 
 def strongly_connected_components(
@@ -90,8 +54,9 @@ def strongly_connected_components(
     max_rounds: int = 20,
     max_iters: int = 50,
 ) -> DataFrame:
-    """(id, scc) over the directed edge table; exact for any digraph
-    reachable within ``max_iters`` propagation steps per round."""
+    """(id, scc) over the directed edge table. Raises if a closure needs
+    more than ``max_iters`` supersteps (D + 1 for a closure D edges deep)
+    or the SCCs more than ``max_rounds`` rounds."""
     with _Cuts(spark.sparkContext) as cuts:
         p_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
         active_edges = cuts.cut(edges.select("src", "dst"), "edges")
@@ -137,31 +102,50 @@ def strongly_connected_components(
             if n_active == 0:
                 break
 
-            # 2. forward coloring: max id reaching each vertex
-            seeds = active.select("id", F.col("id").alias("lab"))
-            colors, colors_cache = _propagate(
-                active_edges, seeds, cuts, "fwd", max_iters=max_iters
-            )
+            # 2. forward coloring: max id reaching each vertex; after the
+            # trim every active vertex has an active edge, so the run's
+            # vertices are exactly the active ones
+            fwd = max_label_propagation(spark, active_edges, max_supersteps=max_iters)
+            colors = cuts.adopt(fwd.vertices, "fwd")
+            if not fwd.converged:
+                raise RuntimeError(
+                    f"strongly_connected_components: forward coloring did not "
+                    f"converge in {max_iters} supersteps — raise max_iters"
+                )
 
-            # 3. backward membership within equal color: reverse edges whose two
-            # endpoints share a color; propagate from roots (id == color)
-            ec = (
-                active_edges.join(colors.select(F.col("id").alias("src"), F.col("lab").alias("csrc")), "src")
-                .join(colors.select(F.col("id").alias("dst"), F.col("lab").alias("cdst")), "dst")
+            # 3. backward membership within equal color: BFS from the roots
+            # (id == color) over the reversed same-color edges. ec links only
+            # vertices of one color, so a root reaches exactly the vertices
+            # of its SCC; a root may have no same-color edge, so it joins as
+            # itself. ec is cut here, under the caller's AQE, not left for
+            # the backward call's AQE-off set-up to compute
+            ec = cuts.cut(
+                active_edges.join(colors.toDF("src", "csrc"), "src")
+                .join(colors.toDF("dst", "cdst"), "dst")
                 .where(F.col("csrc") == F.col("cdst"))
-                .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                .select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                "ec",
             )
-            roots = colors.where(F.col("id") == F.col("lab")).select("id", "lab")
-            members, members_cache = _propagate(ec, roots, cuts, "bwd", max_iters=max_iters)
+            roots = colors.where(F.col("id") == F.col("label")).select(
+                "id", F.lit(0.0).alias("distance")
+            )
+            bwd = sssp(
+                spark, ec, [], weight_col=None, max_supersteps=max_iters,
+                init_dists=roots, init_frontier=roots,
+            )
+            members = cuts.adopt(bwd.vertices, "bwd")
+            if not bwd.converged:
+                raise RuntimeError(
+                    f"strongly_connected_components: backward membership did "
+                    f"not converge in {max_iters} supersteps — raise max_iters"
+                )
             scc = (
-                members.join(colors.withColumnRenamed("lab", "color"), "id")
-                .where(F.col("lab") == F.col("color"))
-                .select("id", F.col("color").alias("scc"))
+                colors.join(members, "id", "left")
+                .where((F.col("id") == F.col("label")) | (F.col("distance") < float("inf")))
+                .select("id", F.col("label").alias("scc"))
             )
             settled = scc if settled is None else settled.union(scc).coalesce(p_max)
             settled = cuts.cut(settled, "settled")
-            colors_cache.unpersist()
-            members_cache.unpersist()
 
             # 4. peel — ONE count on the fresh cut is both the round's halt
             # check and next round's emptiness test
@@ -181,7 +165,7 @@ def strongly_connected_components(
         if n_active > 0:
             raise RuntimeError(
                 f"strongly_connected_components: round budget exhausted with "
-                f"{n_active} vertices unsettled — raise max_rounds/max_iters"
+                f"{n_active} vertices unsettled — raise max_rounds"
             )
         assert settled is not None
         cuts.forget("settled")  # the result — its blocks must outlive this call

@@ -161,6 +161,44 @@ def scc_oracle(edges: list[tuple[int, int]]) -> dict[int, int]:
     return comp
 
 
+def bowtie_oracle(
+    edges: list[tuple[int, int]], seed: int | None = None
+) -> dict[int, str]:
+    """Bow-tie regions relative to the SCC containing ``seed`` (default:
+    the max-total-degree vertex, ties to the smallest id), from the
+    forward and backward reachability sets of the seed."""
+    ids = sorted({v for e in edges for v in e})
+    if seed is None:
+        degree = {v: 0 for v in ids}
+        for a, b in edges:
+            degree[a] += 1
+            degree[b] += 1
+        seed = min(ids, key=lambda v: (-degree[v], v))
+
+    def reach(pairs: list[tuple[int, int]]) -> set[int]:
+        adj: dict[int, list[int]] = {}
+        for a, b in pairs:
+            adj.setdefault(a, []).append(b)
+        seen = {seed}
+        stack = [seed]
+        while stack:
+            for u in adj.get(stack.pop(), []):
+                if u not in seen:
+                    seen.add(u)
+                    stack.append(u)
+        return seen
+
+    fwd = reach(edges)
+    bwd = reach([(b, a) for a, b in edges])
+    return {
+        v: "CORE" if v in fwd and v in bwd
+        else "IN" if v in bwd
+        else "OUT" if v in fwd
+        else "OTHER"
+        for v in ids
+    }
+
+
 def is_independent_set(edges: list[tuple[int, int]], chosen: set[int]) -> bool:
     return not any(
         (a in chosen and b in chosen) and a != b for a, b in edges

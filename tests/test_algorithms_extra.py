@@ -3,10 +3,12 @@
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from giraph_spark.algorithms.bowtie import bowtie_decomposition
 from giraph_spark.algorithms.mis import maximal_independent_set
 from giraph_spark.algorithms.ppr import personalized_pagerank
 from giraph_spark.algorithms.scc import strongly_connected_components
@@ -21,6 +23,7 @@ from giraph_spark.blocks import (
 )
 from giraph_spark.reducers import arg_max, keyed_reduce, reducer, top_n
 from tests.oracles import (
+    bowtie_oracle,
     is_maximal_independent_set,
     ppr_oracle,
     scc_oracle,
@@ -53,6 +56,20 @@ def test_scc_random(spark):
     rng = random.Random(11)
     edges = list({(rng.randrange(30), rng.randrange(30)) for _ in range(70)})
     edges = [(a, b) for a, b in edges if a != b]
+    got = {
+        r.id: r.scc
+        for r in strongly_connected_components(spark, _edges_df(spark, edges)).collect()
+    }
+    assert got == scc_oracle(edges)
+
+
+def test_scc_long_path_inside_one_color(spark):
+    """SCC {0, 1000} beside a 60-vertex path 1 -> ... -> 60 <-> 61 that
+    1000 feeds: everything takes color 1000, and the backward closure
+    from the root 1000 is two edges deep, so the default ``max_iters``
+    suffices even though vertex 1 reaches 61 only 60 edges on."""
+    edges = [(0, 1000), (1000, 0), (60, 61), (61, 60)]
+    edges += [(1000, i) for i in range(1, 61)] + [(i, i + 1) for i in range(1, 60)]
     got = {
         r.id: r.scc
         for r in strongly_connected_components(spark, _edges_df(spark, edges)).collect()
@@ -925,7 +942,7 @@ def test_salsa_star_and_l1(spark):
 
 
 def test_bowtie_classic_shape(spark):
-    from giraph_spark.algorithms.bowtie import bowtie_decomposition, canonical_seed
+    from giraph_spark.algorithms.bowtie import canonical_seed
 
     # IN: 10->0; CORE: 0<->1 cycle (seed = max-degree vertex 0);
     # OUT: 1->20->21; OTHER: 30->31 disconnected
@@ -939,6 +956,47 @@ def test_bowtie_classic_shape(spark):
         0: "CORE", 1: "CORE", 10: "IN", 20: "OUT", 21: "OUT",
         30: "OTHER", 31: "OTHER",
     }
+
+
+@pytest.mark.parametrize(
+    "graph_seed, seed_in_small_scc", [(3, False), (17, False), (29, True)]
+)
+def test_bowtie_random_digraphs(spark, graph_seed, seed_in_small_scc):
+    """Against the reachability oracle, from the canonical seed or from an
+    explicit seed inside a 2-4 vertex SCC (then CORE is that SCC)."""
+    rng = random.Random(graph_seed)
+    edges = list({(rng.randrange(40), rng.randrange(40)) for _ in range(70)})
+    edges = [(a, b) for a, b in edges if a != b]
+    seed = None
+    if seed_in_small_scc:
+        sizes = Counter(scc_oracle(edges).values())
+        seed = min(label for label, size in sizes.items() if 2 <= size <= 4)
+    got = bowtie_decomposition(spark, _edges_df(spark, edges), seed=seed).collect()
+    want = bowtie_oracle(edges, seed=seed)
+    assert {r.id: r.region for r in got} == want
+    if seed_in_small_scc:
+        assert 2 <= list(want.values()).count("CORE") <= 4
+
+
+# cycle length -> a call whose propagation budget is too small for it
+_BUDGET_CASES = {
+    "scc": (12, lambda s, e: strongly_connected_components(s, e, max_iters=2)),
+    "bowtie": (31, lambda s, e: bowtie_decomposition(s, e, seed=0, max_supersteps=5)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BUDGET_CASES))
+def test_reachability_budget_exhausted_raises(spark, case):
+    """A closure that runs out of supersteps raises instead of returning a
+    partial answer (on a cycle, which is one SCC: singleton SCCs, or
+    IN/OUT/OTHER where every vertex is CORE), and frees its blocks."""
+    n, call = _BUDGET_CASES[case]
+    sc = spark.sparkContext
+    e = _edges_df(spark, [(i, (i + 1) % n) for i in range(n)])
+    before = set(sc._jsc.getPersistentRDDs())  # noqa: SLF001
+    with pytest.raises(RuntimeError, match="did not converge"):
+        call(spark, e)
+    assert set(sc._jsc.getPersistentRDDs()) <= before  # noqa: SLF001
 
 
 def test_coreness_k4_pendant_triangle(spark):

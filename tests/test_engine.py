@@ -320,8 +320,9 @@ def _persistent_rdd_ids(sc) -> set[int]:
 
 def test_triangle_global_entry_frees_its_cache(spark, tmp_path):
     """The triangle_global entry query counts the demo graph's triangles
-    and leaves no cached RDD behind: the persistent RDDs after collecting
-    it are the ones before the call."""
+    and leaves no cached RDD behind: no persistent RDD after collecting it
+    is new. (Earlier tests' leftovers may be freed by the context cleaner
+    meanwhile, so the set after may be smaller.)"""
     import __spark_entry__ as E
     from tests.oracles import triangles_oracle
 
@@ -334,7 +335,7 @@ def test_triangle_global_entry_frees_its_cache(spark, tmp_path):
     sc = spark.sparkContext
     before = _persistent_rdd_ids(sc)
     rows = E.q_triangle_global(spark, str(tmp_path)).collect()
-    assert _persistent_rdd_ids(sc) == before
+    assert _persistent_rdd_ids(sc) <= before
     want = sum(triangles_oracle(pairs).values()) // 3
     assert want > 0 and [r["n_triangles"] for r in rows] == [want]
 
