@@ -1828,8 +1828,8 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """20-core of the demo graph (5 peeling rounds at sf0.01) — iterative
-    degree-peel to fixpoint, one action per round."""
+    """20-core of the demo graph — iterative degree peel to fixpoint, one
+    Spark job per superstep."""
     from giraph_spark.algorithms.kcore import k_core
 
     return k_core(spark, demo_edges(spark, sf_dir), k=20, num_partitions=NP)
@@ -2148,8 +2148,8 @@ def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full k-core decomposition of the demo graph (coreness 8..20 at
-    sf0.01) — ascending-k sequential peel, each k from the previous
-    core's edge set."""
+    sf0.01) — ascending-k degree peel in one run, one Spark job per
+    superstep."""
     from giraph_spark.algorithms.kcore import coreness
 
     return coreness(spark, demo_edges(spark, sf_dir), num_partitions=NP)

@@ -9,7 +9,7 @@ degree 2*rho, each round deletes a constant fraction of S — O(log n /
 eps) rounds total — and the best surviving set is a 2(1+eps)
 approximation of the optimum. That round structure is exactly why the
 algorithm is THE web-scale densest-subgraph method: each round is one
-degree aggregation + one semi-join, no per-vertex sequential peel (the
+bulk degree update over the survivors, no per-vertex sequential peel (the
 exact Charikar peel removes ONE vertex per step — 8M rounds on an 8M-
 vertex graph — which no cluster survives).
 
@@ -17,12 +17,15 @@ Reference analog: none (the reference has no densest-subgraph app); the
 peel-by-threshold shape matches its k-core style of iterated filtering.
 
 Scale notes: the symmetric edge table is hash-partitioned on ``src``
-once and cached. The state (id, removal_round, deg) carries each alive
-vertex's degree inside the alive set. ONE set-up aggregate fills the
-initial lazy cut and gives round 1's (n, m); each round is then one SQL
-text: remove ``deg <= thr``, recount the survivors' degrees (edges
-joined to the alive set on both ends, shuffle-hash joins), and its
-aggregate — one Spark job per round — gives the next round's (n, m).
+once and cached. The round runs on the engine's degree peel
+(:func:`giraph_spark.pregel._peel`, shared with k-core and coreness):
+the state (id, deg, removal_round) carries each alive vertex's degree
+inside the alive set. ONE set-up aggregate fills the initial lazy cut
+and gives round 1's (n, m); each round is then one SQL text: remove
+``deg <= thr`` and decrement each survivor's degree by its removed
+neighbours (one gather over the removed vertices' edges, which streams
+the edge table with no exchange), and its aggregate — one Spark job per
+round — gives the next round's (n, m).
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import clean_symmetric
-from giraph_spark.pregel import engine_call, run_sql_supersteps
+from giraph_spark.pregel import _peel, engine_call
 
 
 @dataclass
@@ -73,55 +76,19 @@ def densest_subgraph(
     factor = 2.0 * (1.0 + float(eps))
 
     sym = clean_symmetric(edges).repartition(num_partitions, "src").persist()
-    # round 1's state: every vertex (a src of the symmetric table) alive
-    # with its full degree. The set-up aggregate fills this lazy cut and
-    # the edge cache under it, and gives round 1's n and 2m
-    state = (
-        sym.groupBy(F.col("src").alias("id"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select("id", F.lit(None).cast("int").alias("removal_round"), "deg")
-        .localCheckpoint(eager=False)
-    )
-    row = state.agg(F.count(F.lit(1)).alias("n"), F.sum("deg").alias("m2")).collect()[0]
 
-    def scalars(n: int, m2: int, rnd: int) -> dict[str, Any]:
-        rho = (m2 / 2) / n if n else 0.0
-        return {"round": rnd, "n": n, "m2": m2, "rho": rho, "thr": factor * rho}
+    def advance(row, sc: dict[str, Any]) -> dict[str, Any] | None:
+        n, m = int(row["n"]), int(row["m2"] or 0) // 2
+        if n == 0:
+            return None
+        rho = m / n
+        return {"round": sc.get("round", 0) + 1, "n": n, "m": m, "rho": rho, "thr": factor * rho}
 
-    # a round: remove deg <= thr (a D-suffixed literal compares as a
-    # double, as the Python replay does), then recount the degrees
-    # among the survivors
-    step_sql = """WITH a AS (
-        SELECT id,
-               CASE WHEN removal_round IS NULL AND deg <= {thr!r}D THEN {round}
-                    ELSE removal_round END AS removal_round
-        FROM ds_state
-      ),
-      s AS (SELECT id FROM a WHERE removal_round IS NULL),
-      d AS (
-        SELECT /*+ SHUFFLE_HASH(s), SHUFFLE_HASH(t) */ e.src AS id, count(1) AS deg
-        FROM ds_edges e JOIN s ON e.src = s.id JOIN s t ON e.dst = t.id
-        GROUP BY e.src
-      )
-      SELECT /*+ SHUFFLE_HASH(d) */ a.id, a.removal_round, coalesce(d.deg, 0) AS deg
-      FROM a LEFT JOIN d ON a.id = d.id"""
-    agg_sql = """SELECT count(CASE WHEN removal_round IS NULL THEN 1 END) AS n,
-      sum(deg) AS m2 FROM ds_new"""
-
-    def update(row, sc: dict[str, Any]) -> tuple[dict[str, Any], dict[str, Any]]:
-        alive = int(row["n"])
-        stats = {
-            "round": sc["round"], "n": sc["n"], "m": sc["m2"] // 2, "rho": sc["rho"],
-            "alive": alive,
-        }
-        return stats, scalars(alive, int(row["m2"] or 0), sc["round"] + 1)
-
-    first = scalars(int(row["n"]), int(row["m2"] or 0), 1)
-    run = run_sql_supersteps(
-        spark, state, ("ds_state", "ds_new"), {"ds_edges": sym}, step_sql, agg_sql, update,
-        first,
-        max_supersteps=max_rounds if first["n"] else 0,  # an empty graph has no round
-        halt=lambda stats, i: stats["alive"] == 0,
+    # a round removes deg <= thr (a D-suffixed literal compares as a
+    # double, as the Python replay does)
+    run = _peel(
+        spark, sym, "ds", "removal_round", "INT", "deg <= {thr!r}D", "{round}", advance,
+        max_rounds,
     )
 
     if run.history:

@@ -6,23 +6,30 @@ the symmetric graph — the standard hub/periphery split for web graphs
 (periphery pages peel away round by round; the core is where link
 authority concentrates).
 
-Shape: each round is ONE degree aggregate over the shrinking edge set
-plus two semi-joins (both shuffle-hash against the small keep set); the
-edge count that materializes the new cut doubles as the halt probe, so a
-round costs exactly one action. Rounds needed = peeling depth (typically
-a handful); the edge set only shrinks, so late rounds are cheap.
+Shape: ``k_core`` and ``coreness`` run the engine's degree peel
+(:func:`giraph_spark.pregel._peel`, shared with the densest-subgraph
+peel). The state keeps each vertex's degree in the alive set; a
+superstep is one SQL text that peels the matching alive vertices and
+lets only those send, so each survivor's degree drops by its number of
+newly peeled neighbours — one gather over the peeled vertices' edges,
+no degree recount. One set-up job, then one job per superstep: the
+aggregate that fills the superstep's cut gives the alive count and the
+min alive degree, which decide the next superstep or the halt.
+Supersteps needed = peeling depth (typically a handful).
 """
 
 from __future__ import annotations
 
 import logging
 import time
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import LineageCuts, bare_checkpoint, engine_call
+from giraph_spark.graph import reverse_edges, symmetrize
+from giraph_spark.pregel import LineageCuts, _peel, bare_checkpoint, engine_call
 
 _log = logging.getLogger("giraph_spark")
 
@@ -31,6 +38,39 @@ _log = logging.getLogger("giraph_spark")
 _BROADCAST_FRONTIER_MAX = 1_000_000
 
 
+def _core_peel(
+    spark: SparkSession,
+    edges: DataFrame,
+    symmetrize_input: bool,
+    num_partitions: int | None,
+    max_rounds: int,
+    name: str,
+    col: str,
+    dtype: str,
+    when: str,
+    label: str,
+    advance: Callable[[Any, dict[str, Any]], dict[str, Any] | None],
+) -> DataFrame:
+    """The final state of a degree peel (:func:`giraph_spark.pregel._peel`)
+    over the symmetrized ``edges``, or by out-degree over the table as
+    given; when the peel runs out of supersteps, its cut is freed and it
+    raises."""
+    if num_partitions is None:
+        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # the peel counts in-edges: out-degrees are the reversed table's
+    e = symmetrize(edges) if symmetrize_input else reverse_edges(edges.select("src", "dst"))
+    e = e.repartition(num_partitions, "src").persist()
+    run = _peel(spark, e, "kc", col, dtype, when, label, advance, max_rounds)
+    if not run.converged:
+        with LineageCuts(spark.sparkContext) as cuts:
+            cuts.adopt(run.vertices, "peel")
+        raise RuntimeError(
+            f"{name}: the peel did not converge in {max_rounds} supersteps — raise max_rounds"
+        )
+    return run.vertices
+
+
+@engine_call
 def k_core(
     spark: SparkSession,
     edges: DataFrame,
@@ -42,48 +82,17 @@ def k_core(
     """(id, in_core: long 0/1) over the input graph's vertices.
 
     ``in_core=1`` iff the vertex survives peeling: repeatedly drop
-    vertices whose degree in the current symmetric subgraph is < k.
+    vertices whose degree in the current subgraph is < k (out-degree
+    when ``symmetrize_input=False`` and the table is not symmetric).
+    Each superstep peels every alive vertex of degree < k at once;
+    ``max_rounds`` bounds the supersteps, and running out raises.
     """
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with LineageCuts(spark.sparkContext) as cuts:
-        e0 = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
-        e = cuts.cut(e0.repartition(num_partitions, "src"), "edges")
-        verts = cuts.cut(vertices_from_edges(e), "verts")
-        n_edges = e.count()
-
-        for _ in range(max_rounds):
-            if n_edges == 0:
-                break
-            keep = (
-                e.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("d"))
-                .where(F.col("d") >= k)
-                .select("src")
-            )
-            new_e = (
-                e.join(keep.hint("shuffle_hash"), "src", "left_semi")
-                .join(
-                    keep.withColumnRenamed("src", "dst").hint("shuffle_hash"),
-                    "dst",
-                    "left_semi",
-                )
-                .select("src", "dst")
-            )
-            new_e = cuts.cut(new_e, "edges")  # materializes BEFORE releasing prev
-            n_new = new_e.count()
-            e = new_e
-            if n_new == n_edges:
-                break
-            n_edges = n_new
-        else:
-            raise RuntimeError(f"k_core: no fixpoint within {max_rounds} rounds")
-
-        core = e.select(F.col("src").alias("id")).distinct()
-        out = verts.join(
-            core.withColumn("in_core", F.lit(1)), "id", "left"
-        ).select("id", F.coalesce("in_core", F.lit(0)).cast("long").alias("in_core"))
-        return out.localCheckpoint(eager=True)  # outlives the cuts freed on exit
+    k = int(k)
+    return _core_peel(
+        spark, edges, symmetrize_input, num_partitions, max_rounds, "k_core",
+        "peeled", "BOOLEAN", f"deg < {k}", "true",
+        lambda row, sc: None if row["n"] == 0 or row["dmin"] >= k else {},
+    ).select("id", F.col("peeled").isNull().cast("long").alias("in_core"))
 
 
 def k_truss(
@@ -193,6 +202,7 @@ def k_truss(
         return out
 
 
+@engine_call
 def coreness(
     spark: SparkSession,
     edges: DataFrame,
@@ -201,85 +211,26 @@ def coreness(
     max_rounds: int = 500,
 ) -> DataFrame:
     """Full k-core decomposition: (id, coreness) where coreness(v) is the
-    largest k such that v survives k-core peeling (0 for vertices that
-    start isolated — impossible here since vertices come from edges, so
-    the minimum emitted value is 1).
+    largest k such that v survives k-core peeling (0 for a vertex of
+    degree 0 — only a vertex without out-edges when
+    ``symmetrize_input=False``, since vertices come from edges).
 
-    Shape: ascending-k sequential peeling, each k starting from the
-    (k-1)-core's edge set (monotone containment), so total work is the
-    peel cascade itself — the standard distributed decomposition. Each
-    round costs one degree aggregate + two semi-joins + one count, and
-    for all k below the graph's minimum degree the round is a verified
-    no-op (one round each).
+    Shape: ascending-k peeling on one degree-peel run. A superstep at
+    level k peels every alive vertex of degree < k and labels it k - 1;
+    the level stays while some alive vertex has degree < k, else jumps
+    to the min alive degree + 1, so no superstep confirms a finished
+    cascade and no level below the min degree costs one. ``max_rounds``
+    bounds the supersteps, and running out raises.
     """
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with LineageCuts(spark.sparkContext) as cuts:
-        e0 = symmetrize(edges) if symmetrize_input else edges.select("src", "dst")
-        e = cuts.cut(e0.repartition(num_partitions, "src"), "edges")
-        prev_verts = cuts.cut(vertices_from_edges(e), "prev_verts")
-        n_edges = e.count()
-        result: DataFrame | None = None
-        k = 0
-        rounds_left = max_rounds
 
-        while n_edges > 0:
-            # after a completed fixpoint every surviving vertex has degree
-            # >= the current core's minimum degree, so all levels up to that
-            # minimum are verified no-ops — jump straight past them (also
-            # subsumes the old d_min fast-start on the first iteration); one
-            # tiny min-degree aggregate replaces one no-op cascade per
-            # skipped level
-            d_cur = int(
-                e.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("d"))
-                .agg(F.min("d"))
-                .collect()[0][0]
-            )
-            k = max(k + 1, d_cur + 1)
-            # peel e down to its k-core fixpoint
-            while True:
-                rounds_left -= 1
-                if rounds_left < 0:
-                    raise RuntimeError(
-                        "coreness: round budget exhausted; raise max_rounds"
-                    )
-                keep = (
-                    e.groupBy("src")
-                    .agg(F.count(F.lit(1)).alias("d"))
-                    .where(F.col("d") >= k)
-                    .select("src")
-                )
-                e2 = cuts.cut(
-                    e.join(keep, "src", "left_semi").join(
-                        keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
-                    ).select("src", "dst"),
-                    "edges",
-                )
-                n2 = e2.count()
-                e = e2
-                if n2 == n_edges:
-                    break
-                n_edges = n2
-            # survivors of the k-core; the symmetric edge set guarantees
-            # every member appears as a src
-            cur_verts = cuts.cut(e.select(F.col("src").alias("id")).distinct(), "cur_verts")
-            dropped = prev_verts.join(cur_verts, "id", "left_anti").select(
-                "id", F.lit(k - 1).cast("long").alias("coreness")
-            )
-            result = cuts.cut(
-                dropped
-                if result is None
-                else result.union(dropped).coalesce(num_partitions),
-                "result",
-            )
-            prev_verts = cuts.cut(cur_verts, "prev_verts")
-            cuts.release("cur_verts")
+    def level(row, sc: dict[str, Any]) -> dict[str, Any] | None:
+        k, dmin = sc.get("k", 0), row["dmin"]
+        return None if row["n"] == 0 else {"k": k if dmin < k else dmin + 1}
 
-        # the loop ends when the k-core is empty: remaining prev_verts peaked
-        # at k-1 (they survived the (k-1)-core but not the k-core)
-        tail = prev_verts.select("id", F.lit(max(k - 1, 0)).cast("long").alias("coreness"))
-        return (tail if result is None else result.union(tail)).localCheckpoint(eager=True)
+    return _core_peel(
+        spark, edges, symmetrize_input, num_partitions, max_rounds, "coreness",
+        "coreness", "BIGINT", "deg < {k}", "{k} - 1", level,
+    ).select("id", "coreness")
 
 
 @engine_call

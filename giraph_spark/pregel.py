@@ -814,3 +814,66 @@ def _relax(
              (coalesce(g.msg, v.{col}) {better} v.{col}) AS changed
       FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
     return _until_unchanged(spark, state, prefix, edges, step_sql, **loop)
+
+
+def _peel(
+    spark: SparkSession,
+    edges: DataFrame,
+    prefix: str,
+    col: str,
+    dtype: str,
+    when: str,
+    label: str,
+    advance: Callable[[Any, dict[str, Any]], dict[str, Any] | None],
+    max_supersteps: int,
+) -> PregelRun:
+    """Iterated degree filtering, the one vertex program of k-core,
+    coreness and the densest-subgraph peel. The state is (id, deg,
+    ``col``): a NULL ``col`` marks a vertex alive, and ``deg`` counts its
+    in-edges from alive vertices (on a symmetric table, its degree in
+    the alive set). Each superstep sets ``col`` to ``label`` on the alive
+    rows that match ``when`` (SQL over the state, both with ``{scalar}``
+    slots), and only those send (send-on-change): each edge u -> x from
+    a vertex u labelled in this superstep takes one off x's ``deg``. The
+    gather streams the cached edge table, partitioned by ``src``, with
+    no exchange; so a peel by out-degree is run on the reversed table.
+
+    One aggregate over the alive rows gives n, m2 (the sum of ``deg``)
+    and dmin (the min ``deg``). In set-up it fills the initial lazy cut
+    and the edge cache, one job; each superstep it fills that
+    superstep's cut. ``advance(row, scalars)`` maps it and the scalars
+    the superstep ran with ({} in set-up) to the next superstep's
+    scalars, or to None when no alive row would match: the run then
+    halts, ``converged``, or has no superstep at all. A superstep's
+    stats are its scalars and the ``alive`` count after it. Views are
+    ``{prefix}_edges`` (``edges``, cached; unpersisted at the end),
+    ``{prefix}_state`` and ``{prefix}_new``."""
+    sv, nv, ev = f"{prefix}_state", f"{prefix}_new", f"{prefix}_edges"
+    agg_sql = f"""SELECT count(1) AS n, sum(deg) AS m2, min(deg) AS dmin
+      FROM {{}} WHERE {col} IS NULL"""
+    edges.createOrReplaceTempView(ev)
+    state = spark.sql(f"""SELECT id, sum(d) AS deg, CAST(NULL AS {dtype}) AS {col}
+      FROM (SELECT dst AS id, 1 AS d FROM {ev} UNION ALL SELECT src AS id, 0 AS d FROM {ev})
+      GROUP BY id""").localCheckpoint(eager=False)
+    state.createOrReplaceTempView(sv)
+    nxt = advance(spark.sql(agg_sql.format(sv)).collect()[0], {})
+
+    def update(row: Any, sc: dict[str, Any]) -> tuple[dict[str, Any], dict[str, Any]]:
+        nonlocal nxt
+        nxt = advance(row, sc)
+        return {**sc, "alive": int(row["n"])}, nxt or {}
+
+    step_sql = f"""WITH a AS (
+        SELECT id, deg, {col}, {col} IS NULL AND {when} AS changed FROM {sv}
+      ),
+      """ + gather_cte(ev, "a", "1", where="v.changed") + f"""
+      SELECT /*+ SHUFFLE_HASH(g) */ a.id, a.deg - coalesce(g.msg, 0) AS deg,
+             CASE WHEN a.changed THEN {label} ELSE a.{col} END AS {col}
+      FROM a LEFT JOIN g ON a.id = g.dst"""
+    run = run_sql_supersteps(
+        spark, state, (sv, nv), {ev: edges}, step_sql, agg_sql.format(nv), update, nxt or {},
+        max_supersteps=max_supersteps if nxt is not None else 0,
+        halt=lambda stats, i: nxt is None,
+    )
+    run.converged = nxt is None
+    return run

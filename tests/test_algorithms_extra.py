@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from giraph_spark.algorithms.bowtie import bowtie_decomposition
+from giraph_spark.algorithms.kcore import coreness, k_core
 from giraph_spark.algorithms.mis import maximal_independent_set
 from giraph_spark.algorithms.ppr import personalized_pagerank
 from giraph_spark.algorithms.scc import strongly_connected_components
@@ -295,8 +296,6 @@ def test_matrix_and_vector_reduce(spark):
 
 
 def test_k_core_matches_python_peeling(spark):
-    from giraph_spark.algorithms.kcore import k_core
-
     n = 120
     rows = sorted({((i * 7 + 3) % n, (i * 11 + 5) % n) for i in range(400)})
     rows = [(a, b) for a, b in rows if a != b]
@@ -999,9 +998,55 @@ def test_reachability_budget_exhausted_raises(spark, case):
     assert set(sc._jsc.getPersistentRDDs()) <= before  # noqa: SLF001
 
 
-def test_coreness_k4_pendant_triangle(spark):
-    from giraph_spark.algorithms.kcore import coreness
+# a peel that runs out of supersteps: on the 31-vertex path the cascade
+# runs in from both ends, one vertex a superstep, so the middle vertex
+# goes in superstep 16 (in_core 0 at k=2, coreness 1 for every vertex)
+_PEEL_BUDGET_CASES = {
+    "k_core": (lambda s, e, r: k_core(s, e, 2, max_rounds=r), "in_core", 0),
+    "coreness": (lambda s, e, r: coreness(s, e, max_rounds=r), "coreness", 1),
+}
 
+
+@pytest.mark.parametrize("case", sorted(_PEEL_BUDGET_CASES))
+def test_peel_budget_exhausted_raises(spark, case):
+    """A degree peel one superstep short of its cascade raises instead of
+    returning a partial core, and frees its blocks; with the cascade's
+    16 supersteps it returns the answer."""
+    call, col, want = _PEEL_BUDGET_CASES[case]
+    sc = spark.sparkContext
+    e = _edges_df(spark, [(i, i + 1) for i in range(30)])
+    before = set(sc._jsc.getPersistentRDDs())  # noqa: SLF001
+    with pytest.raises(RuntimeError, match="did not converge"):
+        call(spark, e, 15)
+    assert set(sc._jsc.getPersistentRDDs()) <= before  # noqa: SLF001
+    assert {r[col] for r in call(spark, e, 16).collect()} == {want}
+
+
+def test_peel_asymmetric_table_counts_out_edges(spark):
+    """With ``symmetrize_input=False`` k_core and coreness peel by each
+    vertex's out-edges to alive vertices, as a Python peel does: vertex 8
+    has no out-edge, so it is in the 0-core only (in_core 1 at k=0,
+    coreness 0)."""
+    rows = [(1, 2), (2, 3), (3, 1), (1, 4), (4, 5), (2, 5), (5, 1), (3, 6), (6, 3),
+            (7, 1), (1, 8), (2, 8), (3, 8)]
+    verts = {v for r in rows for v in r}
+
+    def core(k):
+        alive = set(verts)
+        while drop := {v for v in alive if sum(a == v and b in alive for a, b in rows) < k}:
+            alive -= drop
+        return alive
+
+    e = _edges_df(spark, rows)
+    for k in range(4):
+        got = {r.id: r.in_core for r in k_core(spark, e, k, symmetrize_input=False).collect()}
+        assert got == {v: int(v in core(k)) for v in verts}, k
+    got = {r.id: r.coreness for r in coreness(spark, e, symmetrize_input=False).collect()}
+    assert got == {v: max(k for k in range(5) if v in core(k)) for v in verts}
+    assert got[8] == 0
+
+
+def test_coreness_k4_pendant_triangle(spark):
     # K4 (coreness 3) + pendant 9 off vertex 0 (coreness 1) + triangle
     # {5,6,7} (coreness 2) bridged to K4 by edge 5-0
     e = spark.createDataFrame(

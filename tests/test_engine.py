@@ -380,14 +380,15 @@ _SQL_STEP_JOB_CALLS = {
 }
 
 
-def test_engine_calls_setup_is_one_job(spark, tmp_path):
+def test_engine_calls_setup_is_one_job(spark, tmp_path, monkeypatch):
     """Each SQL-text engine call plans its set-up without AQE and folds it
     into one job: a 5-superstep PageRank issues at most 1 + 5 Spark jobs,
     WCC, LPA, the power-iteration family (PPR, TrustRank, ppr_batch,
     HITS, eigenvector, SALSA, Katz), SSSP, BFS, the multi-seed BFS and
-    the densest-subgraph peel at most one per superstep plus one. A
-    snapshot is one write job: snapshotting every 3 supersteps adds 2 (at
-    3 and the final 5), and the resume to superstep 7 is at most 7 jobs."""
+    the three degree peels (densest subgraph, k_core, coreness) at most
+    one per superstep plus one. A snapshot is one write job:
+    snapshotting every 3 supersteps adds 2 (at 3 and the final 5), and
+    the resume to superstep 7 is at most 7 jobs."""
     from giraph_spark.algorithms import label_propagation, max_label_propagation
 
     sc = spark.sparkContext
@@ -421,10 +422,22 @@ def test_engine_calls_setup_is_one_job(spark, tmp_path):
     for name, call in _SQL_STEP_JOB_CALLS.items():
         run, n = jobs(f"jobs-{name}", lambda: call(spark, edges))
         assert run.supersteps == 5 and n <= run.supersteps + 1, (name, n, run.supersteps)
-    # the send-on-change and peel callers converge before 5 supersteps
-    for name in ("sssp", "bfs", "multi_seed", "densest"):
-        run, n = jobs(f"jobs-{name}", lambda: _SQL_STEP_CALLERS[name](spark, edges))
-        steps = run.rounds if name == "densest" else run.supersteps
+    # the send-on-change and peel callers run to convergence; k_core and
+    # coreness return a frame, so each call's supersteps are read from
+    # the loop it ran
+    from giraph_spark import pregel
+
+    loops = []
+    run_supersteps = pregel.run_supersteps
+
+    def recording(*args, **kwargs):
+        loops.append(run_supersteps(*args, **kwargs))
+        return loops[-1]
+
+    monkeypatch.setattr(pregel, "run_supersteps", recording)
+    for name in ("sssp", "bfs", "multi_seed", "densest", "k_core", "coreness"):
+        _, n = jobs(f"jobs-{name}", lambda: _SQL_STEP_CALLERS[name](spark, edges))
+        steps = loops[-1].supersteps
         assert n <= steps + 1, (name, n, steps)
 
 
@@ -642,9 +655,7 @@ _HAND_ROLLED_LOOPS = {
     ),
     "anf_exact": (lambda s, e: _alg("anf").anf_exact(s, e, max_t=4), 0),
     "anf_hll": (lambda s, e: _alg("anf").anf_hll(s, e, max_t=4), 0),
-    "k_core": (lambda s, e: _alg("kcore").k_core(s, e, k=3), 1),
     "k_truss": (lambda s, e: _alg("kcore").k_truss(s, e, k=3), 1),
-    "coreness": (lambda s, e: _alg("kcore").coreness(s, e), 1),
     "louvain_move_phase": (lambda s, e: _alg("louvain").louvain_move_phase(s, e), 1),
     "wcc_star": (lambda s, e: _alg("wcc").connected_components_star(s, e).vertices, 1),
     "pointer_jump": (
@@ -680,6 +691,8 @@ _SQL_STEP_CALLERS = {
     "bfs": lambda s, e: _alg("paths").bfs(s, e, 0),
     "multi_seed": lambda s, e: _alg("paths").multi_seed_distances(s, e, [0, 3, 7]),
     "densest": lambda s, e: _alg("densest").densest_subgraph(s, e),
+    "k_core": lambda s, e: _alg("kcore").k_core(s, e, k=3),
+    "coreness": lambda s, e: _alg("kcore").coreness(s, e),
 }
 
 

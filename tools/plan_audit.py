@@ -9,7 +9,8 @@ scale-critical properties the docs claim:
   never re-sorted), and the gather aggregate has a partial_ (map-side
   combine) phase — also in the step texts the engine sends for pagerank,
   for HITS's two-gather step, for the SSSP relaxation and for the
-  densest peel round
+  degree peel (k_core, coreness, densest); the last two stream the
+  cached edge table with no exchange
 - the triangle wedge join is degeneracy-oriented (no raw sym self-join)
 - the PageRank set-up plan has no BroadcastExchange, and on a bucketed
   input no Exchange on the edge side
@@ -130,16 +131,19 @@ def main() -> None:
     checks.append(("hits two-gather superstep: no nested-loop/cartesian",
                    "NestedLoop" not in p and "Cartesian" not in p, p))
 
-    # 2e. the send-on-change relaxation (SSSP) and the densest peel
-    # round (edges joined to the alive set on both ends, then the update)
+    # 2e. the send-on-change relaxation (SSSP) and the degree-peel
+    # superstep (the peeled vertices' decrement gather, then the update)
+    # that k_core, coreness and the densest peel share
     from giraph_spark.algorithms.densest import densest_subgraph
+    from giraph_spark.algorithms.kcore import k_core
     from giraph_spark.algorithms.paths import sssp
 
     for name, call, partial in (
         ("sssp relaxation superstep", lambda: sssp(spark, edges, 0, weight_col=None,
                                                    max_supersteps=1), "partial_min"),
+        ("k-core peel superstep", lambda: k_core(spark, edges, 3), "partial_sum"),
         ("densest peel round", lambda: densest_subgraph(spark, edges, max_rounds=1),
-         "partial_count"),
+         "partial_sum"),
     ):
         p = engine_step_plan(call)
         checks.append((f"{name}: every join ShuffledHashJoin",
@@ -148,6 +152,11 @@ def main() -> None:
         checks.append((f"{name}: map-side {partial} aggregate", partial in p, p))
         checks.append((f"{name}: no nested-loop/cartesian",
                        "NestedLoop" not in p and "Cartesian" not in p, p))
+        # the operator tree's lines from the scatter join down to the
+        # cached edge table: the edges are streamed as partitioned
+        scatter = p.split("\n\n", 1)[0].split("ShuffledHashJoin Inner", 1)[-1]
+        checks.append((f"{name}: edge side streamed, no Exchange",
+                       "Exchange" not in scatter.split("InMemoryTableScan", 1)[0], p))
 
     # 2c. PageRank set-up: one job with no broadcast (the out-degree is a
     # window, the sink flag one groupBy), and a bucketed input's edge side
